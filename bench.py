@@ -316,10 +316,9 @@ def _clear_persisted(spark) -> None:
     bench relies on cross-leg caching (derived replication is parquet
     on disk)."""
     try:
-        from datahub_spark.operators.graph import _free_rdds, _persisted_ids
+        from datahub_spark import lifetime
 
-        _free_rdds(spark.sparkContext, _persisted_ids(spark.sparkContext))
-        spark.catalog.clearCache()
+        lifetime.clear(spark)
     except Exception as exc:  # cleanup must never kill the run
         print(f"  (clear_persisted failed: {exc!r})", file=sys.stderr)
 

@@ -419,13 +419,3 @@ def user_log(spark: SparkSession, sf_dir: str,
             t = t.filter(F.col("ts") <= _ts_bound(until_us, dtype))
         _USER_LOG_CACHE[key] = _user_entity(t)
     return _USER_LOG_CACHE[key]
-
-
-def all_entities(spark: SparkSession, sf_dir: str, datasets: list[str] | None = None) -> DataFrame:
-    """Union of requested dataset change-logs as one entity DataFrame."""
-    ds = tpch_entities(spark, sf_dir)
-    names = datasets or list(ds)
-    out = None
-    for name in names:
-        out = ds[name] if out is None else out.unionByName(ds[name])
-    return out

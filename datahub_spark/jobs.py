@@ -33,6 +33,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from datahub_spark import lifetime as LT
 from datahub_spark import uda
 from datahub_spark.store import EntityStore, changes, latest
 
@@ -58,10 +59,6 @@ class DatasetSource:
         re-execution of the job pipeline (Job.run reads this after the
         sink write so the source plan runs exactly once)."""
         row = self.store.log([self.name]).agg(F.max("recorded").alias("m")).collect()[0]
-        return int(row["m"] or 0)
-
-    def watermark_of(self, df: DataFrame) -> int:
-        row = df.agg(F.max("recorded").alias("m")).collect()[0]
         return int(row["m"] or 0)
 
 
@@ -179,18 +176,6 @@ class MultiSource:
             row = self.store.log([ds]).agg(F.max("recorded")).collect()[0]
             out[ds] = int(row[0] or 0)
         return out
-
-    @classmethod
-    def from_config(cls, store: EntityStore, name: str,
-                    dependencies_config=None, transform_code: str | None = None,
-                    latest_only: bool = True) -> "MultiSource":
-        """Build a MultiSource from a job config: explicit dependency
-        JSON and/or a transform whose ``track_queries`` registrations
-        declare the query hops (multi_source_dep_builder.go
-        ParseDependencies)."""
-        deps = parse_multi_source_dependencies(
-            name, dependencies_config, transform_code)
-        return cls(store, name, deps, latest_only=latest_only)
 
 
 class DependencyRegistry:
@@ -853,7 +838,7 @@ class Job:
                 txn_cached = None
                 if getattr(self.transform, "may_stage_transactions", False) \
                         and "dataset" in df.columns:
-                    txn_cached = df.persist()
+                    txn_cached = LT.cached(df)
                     is_txn = F.col("dataset").startswith("@txn:")
                     txn_df = txn_cached.filter(is_txn)
                     df = txn_cached.filter(~F.coalesce(is_txn, F.lit(False)))
@@ -867,7 +852,7 @@ class Job:
                 cached = None
                 if self.job_type == "incremental" and not store_wm \
                         and not wm_from_read and "recorded" in df.columns:
-                    cached = df.persist()
+                    cached = LT.cached(df)
                     df = cached
                 try:
                     if txn_df is not None:
@@ -911,10 +896,7 @@ class Job:
                         if pre_dep_tokens is not None:
                             state.set_dep_tokens(self.job_id, pre_dep_tokens)
                 finally:
-                    if cached is not None:
-                        cached.unpersist()
-                    if txn_cached is not None:
-                        txn_cached.unpersist()
+                    LT.free(cached, txn_cached)
                 for d in drained:  # requeue datasets processed: retire them
                     rq_store.delete_dataset(d)
                 result = {"id": self.job_id, "attempts": attempts, "token": wm}

@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from datahub_spark import lifetime as LT
+
 END = "</w>"  # end-of-word marker (Sennrich §3.2)
 
 
@@ -100,24 +102,27 @@ def train_bpe(df: DataFrame, text_col: str = "text", n_merges: int = 50,
     """Learn ``n_merges`` BPE merges from the corpus. Returns the
     ordered merge table ``[{"a", "b", "merged", "count"}, ...]`` —
     stops early when no adjacent pair reaches ``min_pair_count``."""
-    vocab = _word_vocab(df, text_col).localCheckpoint(eager=True)
+    vocab = LT.checkpoint(_word_vocab(df, text_col))
     merges: list[dict] = []
-    for _ in range(n_merges):
-        best = (vocab
-                .select(F.explode(_adjacent_pairs(F.col("symbols")))
-                        .alias("p"), "n")
-                .groupBy("p.a", "p.b")
-                .agg(F.sum("n").alias("cnt"))
-                .orderBy(F.desc("cnt"), F.asc("a"), F.asc("b"))
-                .limit(1)
-                .collect())
-        if not best or best[0]["cnt"] < min_pair_count:
-            break
-        a, b, cnt = best[0]["a"], best[0]["b"], int(best[0]["cnt"])
-        merges.append({"a": a, "b": b, "merged": a + b, "count": cnt})
-        vocab = vocab.select(
-            _merge_pair(F.col("symbols"), a, b).alias("symbols"), "n"
-        ).localCheckpoint(eager=True)
+    try:
+        for _ in range(n_merges):
+            best = (vocab
+                    .select(F.explode(_adjacent_pairs(F.col("symbols")))
+                            .alias("p"), "n")
+                    .groupBy("p.a", "p.b")
+                    .agg(F.sum("n").alias("cnt"))
+                    .orderBy(F.desc("cnt"), F.asc("a"), F.asc("b"))
+                    .limit(1)
+                    .collect())
+            if not best or best[0]["cnt"] < min_pair_count:
+                break
+            a, b, cnt = best[0]["a"], best[0]["b"], int(best[0]["cnt"])
+            merges.append({"a": a, "b": b, "merged": a + b, "count": cnt})
+            prev, vocab = vocab, LT.checkpoint(vocab.select(
+                _merge_pair(F.col("symbols"), a, b).alias("symbols"), "n"))
+            LT.free(prev)
+    finally:
+        LT.free(vocab)
     return merges
 
 

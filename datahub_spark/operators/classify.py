@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from datahub_spark import lifetime as LT
 from datahub_spark.operators.text import words
 
 E4 = 10_000
@@ -56,13 +57,12 @@ def train_quality_classifier(positive: DataFrame, negative: DataFrame,
               .groupBy("token")
               .agg(F.sum("label").cast("long").alias("pc"),
                    F.sum(1 - F.col("label")).cast("long").alias("nc")))
-    counts = (counts.orderBy(F.desc(F.col("pc") + F.col("nc")),
-                             F.asc("token"))
-              .limit(int(vocab_size))
-              # the top-k result is small; one partition keeps every
-              # downstream read of the model a single-task scan
-              .coalesce(1)
-              .localCheckpoint(eager=True))
+    counts = LT.checkpoint(
+        counts.orderBy(F.desc(F.col("pc") + F.col("nc")), F.asc("token"))
+        .limit(int(vocab_size))
+        # the top-k result is small; one partition keeps every
+        # downstream read of the model a single-task scan
+        .coalesce(1))
     tot = counts.agg(F.sum("pc").alias("P"), F.sum("nc").alias("N"),
                      F.count(F.lit(1)).alias("V")).first()
     a = int(alpha)

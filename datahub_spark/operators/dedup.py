@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from datahub_spark import lifetime as LT
 from datahub_spark.operators.text import normalize
 
 
@@ -423,27 +424,28 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b
     self-join only engages once a graph proves deeper than that
     (scale_smoke's 1M-doc leg pays nothing for the chain insurance).
 
-    localCheckpoint truncates the growing lineage per round; convergence
-    is checked with a limit(1) probe (no data collected to the driver).
+    Each round's labels are checkpointed (truncating the lineage) and
+    the convergence count is the action that materializes them.
+
+    Lifetimes: the edge checkpoint and every superseded round's labels
+    are freed inside the call; on success only the returned labels'
+    checkpoint stays, the caller's to free. Every other exit (the
+    non-convergence raise, a failed round) frees all it marked. The
+    input ``pairs`` is never freed here, even when it is a checkpoint.
 
     Returns (id, component) where component = min id in the cluster;
     singleton nodes are included with component = their own id."""
-    from datahub_spark.operators.graph import _ckpt_tracked, _free_rdds
-
-    sc = pairs.sparkSession.sparkContext
-    edges, edge_ids = _ckpt_tracked(
+    # materialize the edges ONCE: they join every round, and `pairs` is
+    # usually an unmaterialized candidate pipeline (shingle explode ->
+    # minhash agg -> band join) that would otherwise re-execute per
+    # round
+    edges = LT.checkpoint(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
-        # materialize ONCE: edges join every iteration, and `pairs` is
-        # usually an unmaterialized candidate pipeline (shingle explode →
-        # minhash agg → band join) that would otherwise re-execute per
-        # round — the dominant cost of the loop, not the tiny label join
-    )
+        .distinct())
     labels = edges.select(F.col("src").alias("id")).distinct() \
         .withColumn("component", F.col("id"))
-    prev_ids: set = set()
-    converged = False
+    prev = marked = None  # the last two rounds' label checkpoints
     try:
         for iteration in range(max_iterations):
             neighbor_min = (
@@ -471,50 +473,25 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b
                             F.coalesce("_cc", "component")
                             .alias("component"))
                 )
-            # convergence flag rides the SAME materialization (r15): the
-            # old label is already in hand when the new one is computed,
-            # so the per-round check is a filter over the checkpointed
-            # partitions — the previous new-vs-old JOIN re-shuffled both
-            # label frames and cost a second full job per round.
-            # r16: the checkpoint is marked LAZY and the changed-count
-            # below is the materializing action — ONE job per round
-            # where eager-checkpoint + probe cost two. The count is a
-            # full scan (no limit), so every partition is computed and
-            # stored by the checkpoint mark in that one pass; at the
-            # candidate-graph sizes CC sees (matched pair sets) the
-            # loop is job-latency-bound, not data-bound, and halving
-            # the job count halves the loop.
-            new_labels, new_ids = _ckpt_tracked(propagated.select(
+            # the changed flag rides the round's own checkpoint, and
+            # the lazy mark is materialized by the full-scan count: one
+            # job per round. The loop is job-latency-bound at candidate
+            # graph sizes, so the job count is the loop's cost.
+            prev, marked = marked, LT.checkpoint(propagated.select(
                 "id", "component",
                 (F.col("component") != F.col("_old")).alias("_changed"),
             ), eager=False)
-            changed = new_labels.filter("_changed").count()
-            # free the superseded round's label blocks only AFTER the
-            # count above materialized the lazy checkpoint (r15 freed
-            # before the probe, which was safe only while the
-            # checkpoint was eager: the new round's lineage READS the
-            # previous round's local-checkpoint blocks, which cannot
-            # be recomputed once unpersisted — freeing first raced the
-            # async unpersist and could kill the job with
-            # CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). Checkpoint blocks
-            # are MEMORY_AND_DISK storage that otherwise stay pinned
-            # until session shutdown — at scale each round pins a full
-            # label set, and across a many-query session the leak
-            # squeezes later queries' execution memory.
-            _free_rdds(sc, prev_ids)
-            prev_ids = new_ids
-            labels = new_labels.select("id", "component")
+            changed = marked.filter("_changed").count()
+            # only now: this round read the previous round's blocks,
+            # which cannot be recomputed once freed
+            # (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)
+            LT.free(prev)
+            labels = marked.select("id", "component")
             if changed == 0:
-                converged = True
+                marked = None  # the returned labels read it
                 return labels
     finally:
-        # the returned labels ride prev_ids' blocks — only the scratch
-        # edge frame is freed on success; every other exit (the
-        # non-convergence raise below, a mid-round executor failure)
-        # must also release the last round's label blocks or they stay
-        # pinned for the session (ADVICE r15: the raise path leaked
-        # edge_ids + prev_ids)
-        _free_rdds(sc, edge_ids if converged else edge_ids | prev_ids)
+        LT.free(edges, prev, marked)
     raise RuntimeError(
         f"connected_components did not converge in {max_iterations} "
         "rounds — with pointer jumping this means a component of depth "
@@ -552,19 +529,17 @@ def embedding_near_dup_lsh(df: DataFrame, threshold_fp: int,
     from datahub_spark.operators import similarity as SIM
 
     planes = SIM.planes_fixed(dim, bands * rows_per_band, seed)
-    # r15 optimization round: band keys and pair dots run as vectorized
-    # Arrow kernels (SIM.banded_buckets / SIM.pair_dots) instead of
-    # per-row interpreted HOFs — values bit-identical (exact int64
-    # GEMM/einsum over the same JVM-rounded fixed vectors); the
-    # (band, key) equi-join shape is unchanged
+    # band keys and pair dots run as vectorized Arrow kernels
+    # (SIM.banded_buckets / SIM.pair_dots): exact int64 GEMM/einsum
+    # over the same JVM-rounded fixed vectors
     banded = SIM.banded_buckets(df, planes, bands, rows_per_band,
                                 id_col, vec_col, key_name="key")
-    # materialize the banded frame ONCE (r15): it feeds BOTH sides of
-    # the (band, key) self-join, and an unmaterialized subplan would
+    # materialize the banded frame ONCE: it feeds BOTH sides of the
+    # (band, key) self-join, and an unmaterialized subplan would
     # execute the scan -> fixed_vec -> bucket kernel twice (Spark does
     # not share duplicate subtrees). This is the in-memory form of the
-    # persisted LSH index the docstring describes; values unchanged.
-    banded = banded.localCheckpoint(eager=True)
+    # persisted LSH index the docstring describes.
+    banded = LT.checkpoint(banded)
     l = banded.select(F.col(id_col).alias("id_a"),
                       F.col("fx").alias("_fa"), "band", "key")
     r = banded.select(F.col(id_col).alias("id_b"),
@@ -796,7 +771,7 @@ def semantic_dedup(corpus: DataFrame, threshold_fp: int,
         "spark.sql.shuffle.partitions", "32"))
     members = members.repartition(n_part, "cl")
     if checkpoint:
-        members = members.localCheckpoint(eager=True)
+        members = LT.checkpoint(members)
     # l is removed when a higher-priority (lower affinity) clustermate r
     # sits within the threshold. Two probe strategies, identical output:
     #
@@ -854,12 +829,18 @@ def semantic_dedup(corpus: DataFrame, threshold_fp: int,
         )
     )
     # the pair probe is the expensive stage and the verdict frame is
-    # slim (id, cluster, affinity, flag): lazily checkpoint it so
-    # multiple downstream actions (count + filter + join in a cleaning
-    # pipeline) run the probe once — at scale this is the persisted
-    # dedup verdict table. checkpoint=False keeps the plan fully lazy
-    # (and inspectable — the perf plan pin uses it).
-    return out.localCheckpoint(eager=False) if checkpoint else out
+    # slim (id, cluster, affinity, flag): checkpoint it so multiple
+    # downstream actions (count + filter + join in a cleaning pipeline)
+    # run the probe once — at scale this is the persisted dedup verdict
+    # table. Eager, so the members checkpoint it reads is scratch by the
+    # time it is freed. checkpoint=False keeps the plan fully lazy (and
+    # inspectable — the perf plan pin uses it).
+    if not checkpoint:
+        return out
+    try:
+        return LT.checkpoint(out)
+    finally:
+        LT.free(members)
 
 
 def semantic_dedup_oracle(threshold_fp: int, n_clusters: int = 16,
@@ -946,8 +927,9 @@ def filter_novel(new_docs: DataFrame, index_path: str, k: int = 12,
     spark = new_docs.sparkSession
     sig = minhash_signature(new_docs, k=k, n=n, text_col=text_col,
                             id_col=id_col)
-    batch_bands = _band_keys(sig, bands, rows_per_band, id_col) \
-        .localCheckpoint(eager=True)  # signature pipeline runs ONCE
+    # the signature pipeline runs ONCE
+    batch_bands = LT.checkpoint(_band_keys(sig, bands, rows_per_band,
+                                           id_col))
     index = spark.read.parquet(index_path).select("band", "key")
     vs_corpus = (batch_bands.join(index, ["band", "key"], "left_semi")
                  .select("id").distinct())
@@ -968,7 +950,7 @@ def filter_novel(new_docs: DataFrame, index_path: str, k: int = 12,
 
 def compact_minhash_index(spark: SparkSession, index_path: str,
                           dedupe: bool = True) -> dict:
-    """Maintenance twin of save_minhash_index (r14): every
+    """Maintenance twin of save_minhash_index: every
     filter_novel(update_index=True) batch APPENDS one parquet file
     per band partition, so a long-running incremental corpus build
     accumulates thousands of tiny files — each probe then pays file
@@ -1001,17 +983,17 @@ def compact_minhash_index(spark: SparkSession, index_path: str,
     idx = spark.read.parquet(index_path)
     if dedupe:
         idx = idx.distinct()
-    # persist so the returned row count and the rewrite share ONE read
-    # of the old index (r14 review: a post-write count re-scanned the
-    # whole compacted table just for the stat)
-    compacted = (idx.repartition("band")
-                 .sortWithinPartitions("band", "key")).persist()
+    # cache so the returned row count and the rewrite share ONE read of
+    # the old index (a post-write count would re-scan the whole
+    # compacted table just for the stat)
+    compacted = LT.cached(idx.repartition("band")
+                         .sortWithinPartitions("band", "key"))
     try:
         rows = compacted.count()
         fsio.parquet_atomic_overwrite(compacted, index_path,
                                       partition_by=["band"])
     finally:
-        compacted.unpersist()
+        LT.free(compacted)
     after = _count_part_files()
     return {"files_before": before, "files_after": after, "rows": rows}
 

@@ -28,6 +28,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from datahub_spark import lifetime as LT
 from datahub_spark.operators.text import words
 
 
@@ -88,13 +89,16 @@ def dsir_weights(raw: DataFrame, target: DataFrame,
     aggregate over array_sort — the BM25 fold recipe; the default
     plain SUM is cheaper (one aggregate) but its float addition order
     follows the shuffle schedule."""
-    # persist the (<= buckets)-row models: each corpus is featurized and
-    # scanned exactly ONCE — the totals below are sums over the models
-    # (every n-gram lands in some bucket), not extra full-corpus passes
-    tgt = bucket_model(target, text_col, n, buckets) \
-        .select("bucket", F.col("count").alias("tc")).persist()
-    rawm = bucket_model(raw, text_col, n, buckets) \
-        .select("bucket", F.col("count").alias("rc")).persist()
+    # checkpoint the (<= buckets)-row models, stored by the totals
+    # below: each corpus is featurized and scanned exactly ONCE — the
+    # totals are sums over the models (every n-gram lands in some
+    # bucket), not extra full-corpus passes. The result reads both.
+    tgt = LT.checkpoint(bucket_model(target, text_col, n, buckets)
+                        .select("bucket", F.col("count").alias("tc")),
+                        eager=False)
+    rawm = LT.checkpoint(bucket_model(raw, text_col, n, buckets)
+                         .select("bucket", F.col("count").alias("rc")),
+                         eager=False)
     t_total = tgt.agg(F.sum("tc")).collect()[0][0] or 0
     r_total = rawm.agg(F.sum("rc")).collect()[0][0] or 0
     t_den = float(t_total + alpha * buckets)

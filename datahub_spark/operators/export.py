@@ -18,6 +18,7 @@ from pyspark.errors.exceptions.captured import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from datahub_spark import lifetime as LT
 from datahub_spark.operators.text import token_count_whitespace
 
 
@@ -166,8 +167,7 @@ def pack_sequences(df: DataFrame, max_tokens: int,
     # in different _pid ranges on the second run, silently shifting
     # sequences against the collected prefix offsets. Checkpointing
     # pins ONE partitioning for both reads.
-    local = keyed.withColumn("_cum", F.sum("_n").over(w)) \
-        .localCheckpoint(eager=True)
+    local = LT.checkpoint(keyed.withColumn("_cum", F.sum("_n").over(w)))
     totals = sorted(
         local.groupBy("_pid").agg(F.max("_cum").alias("t")).collect(),
         key=lambda r: r["_pid"])

@@ -18,72 +18,13 @@ hash-matches instead of agreeing "to within float noise".
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from datahub_spark import lifetime as LT
+
 RANK_ONE = 1_000_000_000  # fixed-point 1.0
 _BASE = 150_000_000       # (1 - d) with d = 0.85
-
-# Serializes the mark+snapshot-diff window of _ckpt_tracked across
-# driver threads (r16 optimization round, guide §2.6): overlapped query
-# branches materialize their checkpoints concurrently, and an unlocked
-# diff could capture a sibling thread's freshly-registered blocks —
-# which the tracker would later free while they are still live
-# (localCheckpoint blocks cannot be recomputed once unpersisted). The
-# lock is held only for the lazy MARK (no job), never for the
-# materialization, so concurrent threads still overlap the actual work.
-_MARK_LOCK = threading.Lock()
-
-
-def _persisted_ids(sc) -> set:
-    """Ids of every RDD currently persisted in the JVM (localCheckpoint
-    blocks included — they persist MEMORY_AND_DISK under the hood)."""
-    it = sc._jsc.getPersistentRDDs().keySet().iterator()
-    ids = set()
-    while it.hasNext():
-        ids.add(it.next())
-    return ids
-
-
-def _ckpt_tracked(df: DataFrame, eager: bool = True):
-    """localCheckpoint + return the persisted-RDD ids the call created,
-    so the caller can free them when the frame is superseded. The
-    snapshot-diff runs under _MARK_LOCK around the LAZY mark only (the
-    mark itself registers the RDD as persisted, no job runs), so
-    concurrent driver threads (overlapped query branches, guide §2.6)
-    each see exactly their own ids; ``eager=True`` then materializes
-    OUTSIDE the lock with a JVM-side count over the checkpoint RDD —
-    the same action Spark's own eager checkpoint runs — so long
-    materializations still overlap across threads. Without the
-    tracking, every pagerank invocation pins its edge frame and every
-    rank generation in JVM storage until session shutdown — the r9
-    bench OOM'd exactly this way (3 timed runs + warmup of the x100
-    leg = 4 pinned 15M-row edge frames). ``eager=False`` marks without
-    running a job: the caller's NEXT full-scan action materializes the
-    checkpoint as part of its own run — one job where eager + action
-    cost two (r16, the connected-components round)."""
-    sc = df.sparkSession.sparkContext
-    with _MARK_LOCK:
-        before = _persisted_ids(sc)
-        out = df.localCheckpoint(eager=False)
-        ids = _persisted_ids(sc) - before
-    if eager:
-        out._jdf.queryExecution().toRdd().count()
-    return out, ids
-
-
-def _free_rdds(sc, ids) -> None:
-    """Unpersist (non-blocking) the given persisted-RDD ids, if still
-    live. Safe on already-freed ids."""
-    if not ids:
-        return
-    jmap = sc._jsc.getPersistentRDDs()
-    for rid in ids:
-        jrdd = jmap.get(rid)
-        if jrdd is not None:
-            jrdd.unpersist(False)
 
 
 def pagerank(edges: DataFrame, rounds: int = 3,
@@ -109,76 +50,59 @@ def pagerank(edges: DataFrame, rounds: int = 3,
     integer arithmetic (one 1-value aggregate per round over the
     bounded rank frame).
 
-    Round structure (r16 optimization round, guide §2.4 "remove the
-    shuffle outright"): the edge frame is hash-partitioned by src ONCE
-    and cached (a cached plan keeps its outputPartitioning, where a
-    localCheckpoint scan reports UnknownPartitioning and forced the r15
-    shape to re-Exchange + re-Sort all the edges EVERY round — 20
-    Exchanges in the 3-round plan). Each round then carries the
-    per-node contribution sums ``s`` instead of a materialized rank
-    frame: rank(u) is recovered inline as base + (85*s(u)) div 100
-    inside the next round's join, so the per-round node-set left join
-    disappears and the ONLY per-round shuffle is the per-dst partial
-    aggregate of contributions — the first-principles minimum (the
-    re-keying src->dst is the one data movement a PageRank round
-    fundamentally needs). The rank-onto-edges join is a co-partitioned
-    shuffled-hash join: zero Exchange, zero Sort, no per-round
+    Round structure: the edge frame is hash-partitioned by src ONCE
+    and cached. A cached plan keeps its output partitioning, where a
+    checkpoint scan reports none and would re-Exchange and re-Sort all
+    the edges every round. Each round carries the per-node contribution
+    sums ``s`` instead of a materialized rank frame: rank(u) is
+    recovered inline as base + (85*s(u)) div 100 inside the next
+    round's join. The only per-round shuffle is then the per-dst
+    partial aggregate of contributions, the one re-keying (src -> dst)
+    a PageRank round needs. The rank-onto-edges join is a
+    co-partitioned shuffled-hash join: no Exchange, no Sort, no
     broadcast collect on the driver.
 
-    Iteration hygiene: every ``checkpoint_every`` rounds the full rank
-    frame is materialized (node set left-joined once) and
-    localCheckpointed, truncating the O(rounds)-deep lineage that would
-    otherwise cliff the planner past ~20 rounds; superseded checkpoint
-    blocks are freed immediately. ``tol_e9`` adds an early stop: at
-    each checkpoint the max per-node |delta| since the previous
-    checkpoint is probed (one bounded aggregate; no per-round action)
-    and iteration ends once it is <= ``tol_e9`` (e9 fixed-point units,
-    e.g. 1000 = 1e-6). ``redistribute_dangling`` needs the dangling
+    Lifetimes: every ``checkpoint_every`` rounds the full rank frame is
+    checkpointed, truncating the lineage that would otherwise cliff the
+    planner past ~20 rounds, and the superseded rank checkpoint is
+    freed. ``tol_e9`` adds an early stop: at each checkpoint the max
+    per-node |delta| since the previous checkpoint is probed (one
+    bounded aggregate) and iteration ends once it is <= ``tol_e9`` (e9
+    fixed-point units, e.g. 1000 = 1e-6); the previous checkpoint lives
+    until that probe has read it. On every exit the cached edge and
+    node frames are freed; only the returned checkpoint stays, the
+    caller's to free. ``redistribute_dangling`` needs the dangling
     slice of the CURRENT rank frame every round, so it keeps the
     materialized-ranks loop (not a graded/bench path)."""
     if redistribute_dangling:
         return _pagerank_materialized(edges, rounds, src, dst,
                                       checkpoint_every, tol_e9, True)
     spark = edges.sparkSession
-    sc = spark.sparkContext
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     # one partitioning pass: hash by src, out-degree via a window over
-    # the co-partitioned data (no deg groupBy + join-back: that cost a
-    # second full Exchange of the edges). persist (NOT localCheckpoint)
-    # so every round's join sees hashpartitioning(src, n_part) and
-    # plans exchange-free; unpersisted in the finally below. The cached
-    # subtrees compile with AQE OFF (plan-time toggle, restored
-    # immediately): an adaptive cached plan reports unknown output
-    # partitioning, which put an Exchange back over EVERY InMemory scan
-    # — measured on this plan; the fixed REPARTITION_BY_NUM exchange
-    # needs none of AQE's runtime re-planning anyway.
+    # the co-partitioned data (a deg groupBy + join-back costs a second
+    # full Exchange of the edges). Cached with AQE off: an adaptive
+    # cached plan reports unknown output partitioning, which puts an
+    # Exchange back over every InMemory scan; the fixed
+    # REPARTITION_BY_NUM exchange needs no runtime re-planning.
     from pyspark.sql import Window
-    aqe_key = "spark.sql.adaptive.enabled"
-    aqe_was = spark.conf.get(aqe_key)
-    spark.conf.set(aqe_key, "false")
-    try:
-        ed = (e.repartition(n_part, "src")
-              .withColumn("_d",
-                          F.count(F.lit(1)).over(Window.partitionBy("src")))
-              .persist())
-        # node set: derived from the cached edges, consumed once per
-        # checkpoint/final (not per round) — lazily cached for the
-        # many-round tol path, released in the finally.
-        nodes = (ed.select(F.col("src").alias("id"))
-                 .unionByName(ed.select(F.col("dst").alias("id")))
-                 .distinct()).persist()
-    finally:
-        spark.conf.set(aqe_key, aqe_was)
+    with LT.aqe_off(spark):
+        ed = LT.cached(
+            e.repartition(n_part, "src")
+            .withColumn("_d",
+                        F.count(F.lit(1)).over(Window.partitionBy("src"))))
+        # node set: read once per checkpoint/final, not per round
+        nodes = LT.cached(ed.select(F.col("src").alias("id"))
+                         .unionByName(ed.select(F.col("dst").alias("id")))
+                         .distinct())
     rank_from_s = (F.lit(_BASE)
                    + F.expr("(85 * (coalesce(_s, 0L) + 0)) div 100")
                    ).cast("long")
     ck = max(1, int(checkpoint_every))
-    prev_ck = None
-    prev_ck_ids: set = set()
-    cur_ids: set = set()
-    ranks = None   # set at checkpoints / final
-    s = None       # contribution-sum frame (id, _s) between checkpoints
+    prev_ck = None  # the tol baseline: the previous rank checkpoint
+    ranks = None    # set at checkpoints / final
+    s = None        # contribution-sum frame (id, _s) between checkpoints
     try:
         for i in range(int(rounds)):
             if i == 0:
@@ -206,12 +130,13 @@ def pagerank(edges: DataFrame, rounds: int = 3,
                  .withColumnRenamed("dst", "id"))
             last = i == int(rounds) - 1
             if (i + 1) % ck == 0 or last:
-                ranks = nodes.join(s.hint("shuffle_hash"), "id", "left") \
-                    .select("id", rank_from_s.alias("rank_e9"))
-                old_ids = cur_ids
-                ranks, cur_ids = _ckpt_tracked(ranks)
+                old = ranks
+                ranks = LT.checkpoint(
+                    nodes.join(s.hint("shuffle_hash"), "id", "left")
+                    .select("id", rank_from_s.alias("rank_e9")))
                 s = None
-                _free_rdds(sc, old_ids - prev_ck_ids)
+                if old is not prev_ck:
+                    LT.free(old)
                 if tol_e9 is not None and not last:
                     if prev_ck is not None:
                         delta = (ranks.alias("n")
@@ -219,22 +144,18 @@ def pagerank(edges: DataFrame, rounds: int = 3,
                                  .agg(F.max(F.abs(F.col("n.rank_e9")
                                                   - F.col("o.rank_e9"))))
                                  .collect()[0][0])
-                        _free_rdds(sc, prev_ck_ids - cur_ids)
+                        LT.free(prev_ck)
                         if delta is not None and delta <= int(tol_e9):
                             return ranks
                     prev_ck = ranks
-                    prev_ck_ids = cur_ids
         if ranks is None:  # rounds == 0: init ranks, never iterated
-            ranks, cur_ids = _ckpt_tracked(
+            ranks = LT.checkpoint(
                 nodes.withColumn("rank_e9", F.lit(RANK_ONE).cast("long")))
         return ranks
     finally:
-        # the returned frame rides its own checkpoint blocks; the
-        # cached edge/node scratch and any stale tol baseline are
-        # releasable on EVERY exit (including failures)
-        ed.unpersist(False)
-        nodes.unpersist(False)
-        _free_rdds(sc, prev_ck_ids - cur_ids)
+        LT.free(ed, nodes)
+        if prev_ck is not ranks:
+            LT.free(prev_ck)
 
 
 def _pagerank_materialized(edges: DataFrame, rounds: int,
@@ -242,74 +163,72 @@ def _pagerank_materialized(edges: DataFrame, rounds: int,
                            checkpoint_every: int,
                            tol_e9: int | None,
                            redistribute_dangling: bool) -> DataFrame:
-    """The pre-r16 loop: materializes the full rank frame every round
-    (node set left join). Kept for redistribute_dangling, whose
-    per-round dangling-pool aggregate reads the current rank frame."""
-    sc = edges.sparkSession.sparkContext
+    """The loop that materializes the full rank frame every round (node
+    set left join). Kept for redistribute_dangling, whose per-round
+    dangling-pool aggregate reads the current rank frame. Lifetimes as
+    in pagerank: the edge and node checkpoints are freed on every exit,
+    once the result no longer reads them."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     nodes = (e.select(F.col("src").alias("id"))
              .unionByName(e.select(F.col("dst").alias("id")))
              .distinct())
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("_d"))
-    ed, ed_ids = _ckpt_tracked(e.join(deg, "src"))
-    nodes, node_ids = _ckpt_tracked(nodes)
-    scratch_ids = ed_ids | node_ids  # freed once the result no longer
-    # depends on them (after its own checkpoint materializes)
-    n_nodes = nodes.count() if redistribute_dangling else 0
-    ranks = nodes.withColumn("rank_e9", F.lit(RANK_ONE).cast("long"))
+    ed = LT.checkpoint(e.join(deg, "src"))
+    nodes = LT.checkpoint(nodes)
     ck = max(1, int(checkpoint_every))
-    prev_ck = None
-    prev_ck_ids: set = set()
-    cur_ids: set = set()
-    for i in range(int(rounds)):
-        contrib = (
-            ed.join(ranks.withColumnRenamed("id", "src"), "src")
-            .select("dst", F.expr("rank_e9 div _d").alias("_c"))
-            .groupBy("dst").agg(F.sum("_c").alias("_s"))
-        )
-        if redistribute_dangling:
-            # dangling pool: total rank minus rank held by nodes WITH
-            # out-edges; each node receives dangling div N pre-damping
-            dang = (ranks.join(deg.withColumnRenamed("src", "id"),
-                               "id", "left_anti")
-                    .agg(F.sum("rank_e9")).collect()[0][0]) or 0
-            share = int(dang) // int(n_nodes)
-        else:
-            share = 0
-        ranks = (
-            nodes.join(contrib.withColumnRenamed("dst", "id"), "id", "left")
-            .select("id",
-                    (F.lit(_BASE)
-                     + F.expr(f"(85 * (coalesce(_s, 0L) + {share})) div 100"))
-                    .cast("long").alias("rank_e9"))
-        )
-        last = i == int(rounds) - 1
-        if (i + 1) % ck == 0 or last:
-            old_ids = cur_ids
-            ranks, cur_ids = _ckpt_tracked(ranks)
-            # the new checkpoint is materialized (eager): the previous
-            # rank generation's blocks are garbage, except the tol
-            # baseline which the next delta probe still reads
-            _free_rdds(sc, old_ids - prev_ck_ids)
-            if tol_e9 is not None and not last:
-                if prev_ck is not None:
-                    delta = (ranks.alias("n")
-                             .join(prev_ck.alias("o"), "id")
-                             .agg(F.max(F.abs(F.col("n.rank_e9")
-                                              - F.col("o.rank_e9"))))
-                             .collect()[0][0])
-                    _free_rdds(sc, prev_ck_ids - cur_ids)
-                    if delta is not None and delta <= int(tol_e9):
-                        _free_rdds(sc, scratch_ids)
-                        return ranks
-                prev_ck = ranks
-                prev_ck_ids = cur_ids
-    # the result is checkpointed, so the edge/node scratch frames and
-    # any stale tol baseline are unreachable — only the returned rank
-    # blocks stay pinned (the caller's to consume; bench clears between
-    # legs)
-    _free_rdds(sc, scratch_ids | (prev_ck_ids - cur_ids))
-    return ranks
+    prev_ck = None  # the tol baseline
+    cur = None      # the latest rank checkpoint
+    try:
+        n_nodes = nodes.count() if redistribute_dangling else 0
+        ranks = nodes.withColumn("rank_e9", F.lit(RANK_ONE).cast("long"))
+        for i in range(int(rounds)):
+            contrib = (
+                ed.join(ranks.withColumnRenamed("id", "src"), "src")
+                .select("dst", F.expr("rank_e9 div _d").alias("_c"))
+                .groupBy("dst").agg(F.sum("_c").alias("_s"))
+            )
+            if redistribute_dangling:
+                # dangling pool: total rank minus rank held by nodes WITH
+                # out-edges; each node receives dangling div N pre-damping
+                dang = (ranks.join(deg.withColumnRenamed("src", "id"),
+                                   "id", "left_anti")
+                        .agg(F.sum("rank_e9")).collect()[0][0]) or 0
+                share = int(dang) // int(n_nodes)
+            else:
+                share = 0
+            ranks = (
+                nodes.join(contrib.withColumnRenamed("dst", "id"), "id",
+                           "left")
+                .select("id",
+                        (F.lit(_BASE)
+                         + F.expr(f"(85 * (coalesce(_s, 0L) + {share}))"
+                                  " div 100"))
+                        .cast("long").alias("rank_e9"))
+            )
+            last = i == int(rounds) - 1
+            if (i + 1) % ck == 0 or last:
+                old, cur = cur, LT.checkpoint(ranks)
+                ranks = cur
+                if old is not prev_ck:
+                    LT.free(old)
+                if tol_e9 is not None and not last:
+                    if prev_ck is not None:
+                        delta = (ranks.alias("n")
+                                 .join(prev_ck.alias("o"), "id")
+                                 .agg(F.max(F.abs(F.col("n.rank_e9")
+                                                  - F.col("o.rank_e9"))))
+                                 .collect()[0][0])
+                        LT.free(prev_ck)
+                        if delta is not None and delta <= int(tol_e9):
+                            return ranks
+                    prev_ck = ranks
+        if cur is None:  # rounds == 0: the result must not read nodes
+            cur = ranks = LT.checkpoint(ranks)
+        return ranks
+    finally:
+        LT.free(ed, nodes)
+        if prev_ck is not cur:
+            LT.free(prev_ck)
 
 
 def pagerank_oracle_sql(rounds: int = 3,

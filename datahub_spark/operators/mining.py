@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from datahub_spark import lifetime as LT
+
 
 def mine_contrastive_pairs(docs: DataFrame, embeddings: DataFrame,
                            k_neg: int = 4, n_probe_rank: int = 16,
@@ -53,18 +55,16 @@ def mine_contrastive_pairs(docs: DataFrame, embeddings: DataFrame,
                                text_col=text_col, id_col=id_col)
     pairs = DD.lsh_candidates(sig, bands=bands,
                               rows_per_band=rows_per_band, id_col=id_col)
-    pos = (pairs.select(F.col("id_a").alias("anchor_id"),
-                        F.col("id_b").alias("positive_id"))
-           .unionByName(
-               pairs.select(F.col("id_b").alias("anchor_id"),
-                            F.col("id_a").alias("positive_id")))
-           # materialize ONCE (r15 optimization round, guide §5): three
-           # consumers (the ANN anchor set, the positive-exclusion
-           # anti-join, the final assembly) would each re-execute the
-           # whole shingle -> minhash -> banding pipeline behind this
-           # small pair table; the checkpointed frame is two longs per
-           # mined pair
-           .localCheckpoint(eager=True))
+    # materialize ONCE: three consumers (the ANN anchor set, the
+    # positive-exclusion anti-join, the final assembly) would each
+    # re-execute the whole shingle -> minhash -> banding pipeline
+    # behind this small pair table (two longs per mined pair)
+    pos = LT.checkpoint(
+        pairs.select(F.col("id_a").alias("anchor_id"),
+                     F.col("id_b").alias("positive_id"))
+        .unionByName(
+            pairs.select(F.col("id_b").alias("anchor_id"),
+                         F.col("id_a").alias("positive_id"))))
 
     anchors = pos.select(F.col("anchor_id").alias(vec_id_col)).distinct() \
         .join(embeddings, vec_id_col)

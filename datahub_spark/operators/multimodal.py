@@ -110,6 +110,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from datahub_spark import lifetime as LT
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -729,12 +731,6 @@ def frame_sample(media: DataFrame, every_n: int = 10, max_frames: int = 8) -> Da
             yield pd.DataFrame({"doc_id": ids, "frame_index": idxs, "frame": frames})
 
     return media.mapInPandas(run, schema=FRAME_SCHEMA)
-
-
-def resize_stub(media: DataFrame, width: int = 224, height: int = 224) -> DataFrame:
-    """Backwards-compatible alias: real resize exists for BMP payloads
-    (``resize_bmp``); anything else still gates on the absent libs."""
-    return resize_bmp(media, width, height)
 
 
 # --- PNG (real stdlib decode: zlib + struct) --------------------------------
@@ -2382,27 +2378,26 @@ def dedup_images(media: DataFrame, max_hamming: int = 3,
     doc_id == keeper survive. Images whose payloads differ byte-wise
     but show the SAME picture (format conversions, JPEG recompression)
     land in one cluster. ``max_bucket``/``with_overflow`` pass through
-    to dhash_candidates (r11, ADVICE): cap degenerate hash buckets /
-    get the overflow accounting frame back as a second return value.
+    to dhash_candidates: cap degenerate hash buckets / get the
+    overflow accounting frame back as a second return value.
 
-    The signature table persists only WITHIN the call (r12, ADVICE):
-    the plan consumes it twice (candidate generation + the final id
-    spine), and without the persist each consumer re-decodes the
-    whole corpus — at scale the decode IS the cost, while (id, hash)
-    is 16 bytes/row. The keeper output is materialized eagerly
-    (localCheckpoint) and the signature cache released before
-    returning, so repeated calls in a long-lived session do not
-    accumulate cached tables; the checkpointed result is two longs
-    per row and its blocks free with the returned handle."""
+    The signature table is cached only WITHIN the call: the plan
+    consumes it twice (candidate generation + the final id spine), and
+    without the cache each consumer re-decodes the whole corpus — at
+    scale the decode IS the cost, while (id, hash) is 16 bytes/row.
+    The keeper output is checkpointed eagerly and the signature cache
+    and component labels freed before returning, so repeated calls in
+    a long-lived session do not accumulate state; the checkpointed
+    result is two longs per row, the caller's to free."""
     from datahub_spark.operators.dedup import connected_components
 
-    sig = image_dhash(media).persist()
+    sig = LT.cached(image_dhash(media))
     if not with_overflow:
-        out = _keepers_via_reps(
+        out, comp = _keepers_via_reps(
             sig, id_col, "dhash",
             lambda reps: dhash_candidates(reps, max_hamming, id_col,
                                           max_bucket=max_bucket))
-        out, _ = _release_signature(sig, out)
+        out, _ = _release_signature(sig, comp, out)
         return out
     # with_overflow: keep the full-membership path — the accounting
     # frame must count every DOC in each bucket, not one rep per
@@ -2415,17 +2410,16 @@ def dedup_images(media: DataFrame, max_hamming: int = 3,
            .join(comp.withColumnRenamed("id", id_col), id_col, "left")
            .select(id_col,
                    F.coalesce("component", F.col(id_col)).alias("keeper")))
-    out, overflow = _release_signature(sig, out, overflow)
+    out, overflow = _release_signature(sig, comp, out, overflow)
     return out, overflow
 
 
 def _keepers_via_reps(sig, id_col, sig_col, candidate_pairs):
     """(id, keeper) clustering through one representative per EXACT
-    signature (r15 optimization round, guide §2: shuffle fewer bytes /
-    don't generate redundant pairs). Rows with identical signatures
-    are exact perceptual duplicates: an identical hash lands in
-    identical band buckets and pairs at distance 0, so a signature
-    group is one cluster by construction — candidate generation and
+    signature (shuffle fewer bytes, don't generate redundant pairs).
+    Rows with identical signatures are exact perceptual duplicates: an
+    identical hash lands in identical band buckets and pairs at
+    distance 0, so a signature group is one cluster by construction — candidate generation and
     connected components need only the MIN-ID representative of each
     distinct signature. The keeper algebra is unchanged: the rep is
     the min id of its signature group and the component label is the
@@ -2438,9 +2432,10 @@ def _keepers_via_reps(sig, id_col, sig_col, candidate_pairs):
     scale exact-duplicate perceptual signatures are the COMMON case
     (uniform/black images hash to one constant), so this is the
     scale-limiting term. ``candidate_pairs(reps)`` builds the
-    (id_a, id_b) frame from the rep slice of ``sig``.
+    (id_a, id_b) frame from the rep slice of ``sig``. Returns the
+    keeper frame and the component labels it reads.
 
-    Capping caveat (ADVICE r15): ``max_bucket`` inside
+    Capping caveat: ``max_bucket`` inside
     ``candidate_pairs`` now applies at REP granularity — a bucket only
     overflows past max_bucket DISTINCT signatures, where the old
     full-membership graph capped on total members. The label
@@ -2458,21 +2453,24 @@ def _keepers_via_reps(sig, id_col, sig_col, candidate_pairs):
                   .select(sig_col,
                           F.coalesce("component", F.col(id_col))
                           .alias("keeper")))
-    return sig.join(rep_keeper, sig_col).select(id_col, "keeper")
+    return sig.join(rep_keeper, sig_col).select(id_col, "keeper"), comp
 
 
-def _release_signature(sig, out, overflow=None):
-    """Materialize the keeper output (and the overflow accounting
-    frame, if any) via eager localCheckpoint, then unpersist the
-    signature table — the decode-once contract holds inside the call
-    without leaking session-lifetime cache entries (ADVICE r11).
-    localCheckpoint trades re-computability for truncation, which is
-    exactly right here: recomputing WOULD re-decode the corpus."""
-    out = out.localCheckpoint(eager=True)
-    if overflow is not None:
-        overflow = overflow.localCheckpoint(eager=True)
-    sig.unpersist(blocking=False)
-    return out, overflow
+def _release_signature(sig, comp, out, overflow=None):
+    """Checkpoint the keeper output (and the overflow accounting
+    frame, if any), then free the signature cache and the component
+    labels' checkpoint: the decode-once contract holds inside the call
+    and only the returned checkpoints outlive it. A checkpoint trades
+    re-computability for truncation, which is right here: recomputing
+    WOULD re-decode the corpus."""
+    try:
+        out = LT.checkpoint(out)
+        if overflow is not None:
+            overflow = LT.checkpoint(overflow)
+        return out, overflow
+    finally:
+        LT.free(sig)
+        LT.release(comp)
 
 
 def video_dhash(media: DataFrame, every_n: int = 2,
@@ -2530,19 +2528,18 @@ def dedup_videos(media: DataFrame, max_hamming: int = 3,
     zip_with expressions per pair — no extra shuffle."""
     from datahub_spark.operators.dedup import connected_components
 
-    # persisted within the call, for the same reason as dedup_images:
+    # cached within the call, for the same reason as dedup_images:
     # three consumers (banding, the pair verify's two sides, the id
-    # spine) must not re-decode the video corpus; released before
-    # returning (ADVICE r11)
-    sig = video_dhash(media, every_n, max_frames).persist()
-    # r15 optimization round: candidate generation + verify + CC run
-    # over one min-id rep per distinct frame-hash SEQUENCE (identical
+    # spine) must not re-decode the video corpus; freed before
+    # returning
+    sig = LT.cached(video_dhash(media, every_n, max_frames))
+    # candidate generation + verify + CC run over one min-id rep per distinct frame-hash SEQUENCE (identical
     # sequences are exact dups: shift 0 aligns them at worst distance
     # 0) — see _keepers_via_reps for the keeper-algebra argument. The
     # with_overflow path keeps full membership for the accounting
     # frame.
     # EMPTY signatures (zero sampled/decodable frames) are routed AROUND
-    # the rep grouping (ADVICE r15): "identical signature => exact dup"
+    # the rep grouping: "identical signature => exact dup"
     # holds only when there are frames to compare — the full-membership
     # path generates no candidate pairs for frameless videos and leaves
     # each as its own keeper, so collapsing them into one cluster under
@@ -2601,13 +2598,13 @@ def dedup_videos(media: DataFrame, max_hamming: int = 3,
                    # full-membership path labels them
                    sig.filter(F.size("frame_hashes") == 0)
                    .select(F.col(id_col), F.col(id_col).alias("keeper"))))
-        out, _ = _release_signature(sig, out)
+        out, _ = _release_signature(sig, comp, out)
         return out
     out = (sig.select(id_col)
            .join(comp.withColumnRenamed("id", id_col), id_col, "left")
            .select(id_col,
                    F.coalesce("component", F.col(id_col)).alias("keeper")))
-    out, overflow = _release_signature(sig, out, overflow)
+    out, overflow = _release_signature(sig, comp, out, overflow)
     return out, overflow
 
 
@@ -2689,12 +2686,12 @@ def dedup_audio(media: DataFrame, max_hamming: int = 3,
     candidates -> connected components -> min-id keeper. Returns
     (doc_id, keeper); gain-scaled or re-encoded copies of one clip
     cluster together."""
-    # persisted within the call: candidates + id spine must not
-    # re-decode the corpus; released before returning (ADVICE r11)
-    sig = audio_fingerprint(media).persist()
-    out = _keepers_via_reps(
+    # cached within the call: candidates + id spine must not
+    # re-decode the corpus; freed before returning
+    sig = LT.cached(audio_fingerprint(media))
+    out, comp = _keepers_via_reps(
         sig, id_col, "afp",
         lambda reps: dhash_candidates(reps, max_hamming, id_col,
                                       hash_col="afp"))
-    out, _ = _release_signature(sig, out)
+    out, _ = _release_signature(sig, comp, out)
     return out

@@ -23,6 +23,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from datahub_spark import lifetime as LT
 from datahub_spark.fsio import parquet_atomic_overwrite
 from datahub_spark.operators.text import words
 
@@ -469,16 +470,15 @@ def compact_text_index(spark, path: str) -> dict:
     carried = [f"_includes-{bk}-{ck}" for bk, ck in sorted(folded.items())]
 
     merged = _read_postings(spark, path)
-    compacted = (merged.repartition("bucket")
-                 .sortWithinPartitions("bucket", "term", "doc_id")
-                 ).persist()
+    compacted = LT.cached(merged.repartition("bucket")
+                         .sortWithinPartitions("bucket", "term", "doc_id"))
     try:
         rows = compacted.count()
         fsio.parquet_atomic_overwrite(compacted, f"{path}/postings",
                                       partition_by=["bucket"],
                                       markers=carried + new_marks)
     finally:
-        compacted.unpersist()
+        LT.free(compacted)
     for d in deltas:
         fs.delete(Path(d), True)
     after = _count_part_files()

@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from datahub_spark import lifetime as LT
+
 
 FIXED_POINT_SCALE = 10_000_000  # 1e7: elements to ~1e-7, dots to ~1e-14
 
@@ -1026,37 +1028,38 @@ def train_pq(corpus: DataFrame, m: int = 8, ksub: int = 16,
     if ksub > 128:
         raise ValueError("ksub > 128 does not fit tinyint codes")
     dsub = dim // m
-    fx = corpus.select(F.col(id_col).alias("cid"),
-                       fixed_vec(F.col(vec_col)).alias("cv")).cache()
+    fx = LT.cached(corpus.select(F.col(id_col).alias("cid"),
+                                fixed_vec(F.col(vec_col)).alias("cv")))
+    try:
+        init = fx.orderBy("cid").limit(ksub).collect()
+        books = np.array(
+            [[r["cv"][s * dsub:(s + 1) * dsub] for r in init] for s in range(m)],
+            dtype=np.int64)  # (m, ksub, dsub)
+        if books.shape[1] < ksub:
+            raise ValueError(f"corpus smaller than ksub={ksub}")
 
-    init = fx.orderBy("cid").limit(ksub).collect()
-    books = np.array(
-        [[r["cv"][s * dsub:(s + 1) * dsub] for r in init] for s in range(m)],
-        dtype=np.int64)  # (m, ksub, dsub)
-    if books.shape[1] < ksub:
-        raise ValueError(f"corpus smaller than ksub={ksub}")
-
-    sub_exprs = [
-        F.struct(F.lit(s).alias("s"),
-                 F.col("codes")[s].cast("int").alias("code"),
-                 F.slice("cv", s * dsub + 1, dsub).alias("sv"))
-        for s in range(m)
-    ]
-    for _ in range(lloyd_rounds):
-        assigned = _pq_assign_codes(fx, books, keep_cv=True)
-        sums = (
-            assigned.select(F.explode(F.array(*sub_exprs)).alias("e"))
-            .select("e.s", "e.code", "e.sv")
-            .groupBy("s", "code")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 *[F.sum(F.col("sv")[i]).alias(f"s{i}") for i in range(dsub)])
-        ).collect()
-        nxt = books.copy()
-        for r in sums:
-            nxt[r["s"], r["code"]] = [
-                _pq_int_mean(r[f"s{i}"], r["n"]) for i in range(dsub)]
-        books = nxt
-    fx.unpersist()
+        sub_exprs = [
+            F.struct(F.lit(s).alias("s"),
+                     F.col("codes")[s].cast("int").alias("code"),
+                     F.slice("cv", s * dsub + 1, dsub).alias("sv"))
+            for s in range(m)
+        ]
+        for _ in range(lloyd_rounds):
+            assigned = _pq_assign_codes(fx, books, keep_cv=True)
+            sums = (
+                assigned.select(F.explode(F.array(*sub_exprs)).alias("e"))
+                .select("e.s", "e.code", "e.sv")
+                .groupBy("s", "code")
+                .agg(F.count(F.lit(1)).alias("n"),
+                     *[F.sum(F.col("sv")[i]).alias(f"s{i}") for i in range(dsub)])
+            ).collect()
+            nxt = books.copy()
+            for r in sums:
+                nxt[r["s"], r["code"]] = [
+                    _pq_int_mean(r[f"s{i}"], r["n"]) for i in range(dsub)]
+            books = nxt
+    finally:
+        LT.free(fx)
     return [[list(map(int, c)) for c in book] for book in books]
 
 

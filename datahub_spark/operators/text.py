@@ -54,30 +54,12 @@ def token_count_bpe_ish(col: Column) -> Column:
     return F.length(collapsed)
 
 
-def _count_marker(col: Column, marker: str) -> Column:
-    """Occurrences of a whole-word marker in normalized text, via the
-    length-difference trick (portable to any SQL dialect)."""
-    padded = F.concat(F.lit(" "), normalize(col), F.lit(" "))
-    needle = f" {marker} "
-    return (
-        (F.length(padded) - F.length(F.replace(padded, F.lit(needle), F.lit(" "))))
-        / (len(needle) - 1)
-    ).cast("long")
-
-
 def _count_in_padded(padded: Column, marker: str) -> Column:
     needle = f" {marker} "
     return (
         (F.length(padded) - F.length(F.replace(padded, F.lit(needle), F.lit(" "))))
         / (len(needle) - 1)
     ).cast("long")
-
-
-def lang_scores(col: Column) -> dict[str, Column]:
-    return {
-        lang: sum((_count_marker(col, m) for m in markers), F.lit(0).cast("long"))
-        for lang, markers in LANG_MARKERS.items()
-    }
 
 
 def lang_id_table(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -108,6 +90,13 @@ def lang_id_table(df: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     return st2.select(id_col, pred.alias("lang_pred"))
 
 
+# every column quality_features creates, lower-cased (Spark resolves
+# names case-insensitively)
+_QUALITY_COLS = frozenset({
+    "doc_id", "_t", "_p", "_w", "n_tokens", "_tc", "stopword_hits",
+    "n_punct", "_n", "_d", "mean_token_len_e4", "quality_score_centi"})
+
+
 def quality_features(df: DataFrame, text_col: str = "text",
                      keep_cols: list[str] | None = None) -> DataFrame:
     """Quality-scoring features: token count, mean token length (fixed-point
@@ -121,12 +110,18 @@ def quality_features(df: DataFrame, text_col: str = "text",
     over common denominator D = 5*nt*nc:
     N = 4*min(nt,50)*nt*nc + 5*nc*min(150*sh,30*nt) + 5*nt*max(30*nc-300*np,0)
 
-    ``keep_cols`` names input columns to carry through unchanged (r16:
-    lets a caller compute the score AND another per-row derivation —
-    e.g. the content digest — in ONE corpus scan instead of joining
-    two scans on doc_id).
+    ``keep_cols`` names input columns to carry through unchanged, so a
+    caller computes the score AND another per-row derivation (e.g. the
+    content digest) in ONE corpus scan instead of joining two scans on
+    doc_id. Any name is taken literally (spaces, dots); a name that
+    collides with an internal or output column raises ValueError.
     """
-    keep = [F.col(c) for c in (keep_cols or [])]
+    for c in keep_cols or []:
+        if c.lower() in _QUALITY_COLS:
+            raise ValueError(f"quality_features: keep_cols name {c!r} "
+                             "collides with an internal column")
+    keep = [F.col("`" + c.replace("`", "``") + "`")
+            for c in keep_cols or []]
     # stage normalization once (see lang_id_table on the 64 KB codegen limit)
     df = df.select(
         F.col("doc_id"),
@@ -148,29 +143,26 @@ def quality_features(df: DataFrame, text_col: str = "text",
         + nt * 5 * F.greatest(nc * 30 - np_ * 300, F.lit(0).cast("long"))
     )
     den = nt * nc * 5
-    kept_names = list(keep_cols or [])
     return df.select(
         F.col("doc_id"),
-        *[F.col(c) for c in kept_names],
+        *keep,
         nt.alias("n_tokens"),
         tc.alias("_tc"),
         sh.alias("stopword_hits"),
         np_.alias("n_punct"),
         num.alias("_n"),
         den.alias("_d"),
-    ).selectExpr(
+    ).select(
         "doc_id",
-        *kept_names,
+        *keep,
         "n_tokens",
         # round-half-up(1e4 * tc / nt) in pure integer arithmetic
-        "(20000 * _tc + n_tokens) div (2 * n_tokens) as mean_token_len_e4",
+        F.expr("(20000 * _tc + n_tokens) div (2 * n_tokens)")
+        .alias("mean_token_len_e4"),
         "stopword_hits",
         "n_punct",
         # round-half-up(100 * N / D)
-        "(200 * _n + _d) div (2 * _d) as quality_score_centi",
-    ).select(
-        "doc_id", *kept_names, "n_tokens", "mean_token_len_e4",
-        "stopword_hits", "n_punct", "quality_score_centi",
+        F.expr("(200 * _n + _d) div (2 * _d)").alias("quality_score_centi"),
     )
 
 

@@ -40,6 +40,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from datahub_spark import lifetime as LT
+
 
 def _word_vocab(df: DataFrame, text_col: str) -> DataFrame:
     """corpus -> (word, n) weighted distinct-word table."""
@@ -139,28 +141,30 @@ def train_unigram(df: DataFrame, text_col: str = "text",
     candidate table between seeding and pruning."""
     if seed_size is None:
         seed_size = 4 * int(vocab_size)
-    words_df = _word_vocab(df, text_col).localCheckpoint(eager=True)
+    words_df = LT.checkpoint(_word_vocab(df, text_col))
+    try:
+        # -- seed: most frequent substrings (chars always kept) --------
+        subs = _substring_counts(words_df, max_piece_len)
+        top = (subs.orderBy(F.desc("cnt"), F.asc("piece"))
+               .limit(int(seed_size)).collect())
+        chars = subs.filter(F.length("piece") == 1).collect()
+        counts = {r["piece"]: int(r["cnt"]) for r in top}
+        for r in chars:
+            counts.setdefault(r["piece"], int(r["cnt"]))
+        logp = _to_logp(counts)
 
-    # -- seed: most frequent substrings (chars always kept) ------------
-    subs = _substring_counts(words_df, max_piece_len)
-    top = (subs.orderBy(F.desc("cnt"), F.asc("piece"))
-           .limit(int(seed_size)).collect())
-    chars = subs.filter(F.length("piece") == 1).collect()
-    counts = {r["piece"]: int(r["cnt"]) for r in top}
-    for r in chars:
-        counts.setdefault(r["piece"], int(r["cnt"]))
-    logp = _to_logp(counts)
-
-    # -- hard-EM rounds ------------------------------------------------
-    char_counts = {r["piece"]: int(r["cnt"]) for r in chars}
-    for _ in range(int(em_rounds)):
-        seg = _segment_counts(words_df, logp, max_piece_len).collect()
-        counts = {r["piece"]: int(r["cnt"]) for r in seg}
-        # characters the Viterbi path stopped using stay at epsilon
-        # weight so unknown-free encodability is preserved
-        for c, cc in char_counts.items():
-            counts.setdefault(c, 0)
-        logp = _to_logp({p: max(c, 1) for p, c in counts.items()})
+        # -- hard-EM rounds --------------------------------------------
+        char_counts = {r["piece"]: int(r["cnt"]) for r in chars}
+        for _ in range(int(em_rounds)):
+            seg = _segment_counts(words_df, logp, max_piece_len).collect()
+            counts = {r["piece"]: int(r["cnt"]) for r in seg}
+            # characters the Viterbi path stopped using stay at epsilon
+            # weight so unknown-free encodability is preserved
+            for c, cc in char_counts.items():
+                counts.setdefault(c, 0)
+            logp = _to_logp({p: max(c, 1) for p, c in counts.items()})
+    finally:
+        LT.free(words_df)
 
     # -- prune to vocab_size: top by count, chars protected ------------
     ranked = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))

@@ -15,10 +15,13 @@ Portability rules (so the driver's value-hash compare is exact):
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datahub_spark import ingest
+from datahub_spark import lifetime as LT
 from datahub_spark import query as Q
 from datahub_spark import store as S
 from datahub_spark import transforms as TR
@@ -41,13 +44,41 @@ ORACLES: dict[str, str] = {}
 
 
 def register(name: str, oracle: str | None = None):
+    """Add ``fn`` to the graded registry under ``name``. A registry call
+    first releases the key's previous result (every checkpoint it
+    reads), so a key pins at most one result in a session; calls of
+    one key must not overlap. Direct calls of ``fn`` keep their
+    results' state."""
     def deco(fn):
-        QUERIES[name] = fn
+        last: list[DataFrame] = []
+
+        @functools.wraps(fn)
+        def graded(spark, sf_dir):
+            if last:
+                LT.release(last.pop())
+            out = fn(spark, sf_dir)
+            last.append(out)
+            return out
+
+        QUERIES[name] = graded
         if oracle is not None:
             ORACLES[name] = oracle
         return fn
 
     return deco
+
+
+def _overlap(spark, *fns):
+    """Run the fns in threads, each inheriting the caller's job group,
+    local properties and tags; return their results in order."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(b))
+                   for b in fns]
+        return [f.result() for f in futures]
 
 
 def _ds(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -1239,10 +1270,8 @@ def _cc_oracle() -> str:
 )
 def q_dedup_pairs(spark, sf_dir):
     """The text duplicate-pair generators, one graded key (§2 rows
-    35+36+37+38; minhash/ngram/simhash merged in the r10 window
-    rotation, exact merged r12 — each graded standalone for many
-    rounds and all four fully computed here; the mode-tagged union is
-    only the grading surface):
+    35+36+37+38+47; all five fully computed here, the mode-tagged
+    union is only the grading surface):
 
     * minhash — shingle -> md5-keyed 60-bit minhash -> LSH bands ->
       bucket equi-join (metric = -1: candidates carry no score);
@@ -1255,29 +1284,19 @@ def q_dedup_pairs(spark, sf_dir):
       corpus has no byte-identical texts, so every tenth document is
       re-planted under a shifted id — the hash-aggregate and the
       group join are exercised on real collisions;
-    * cluster (§2 row 47, merged r13 — graded standalone r1-r12):
-      connected components (iterative min-label pointer jumping) over
+    * cluster: connected components (iterative min-label pointer jumping) over
       the minhash candidate graph; id_a=member, id_b=component root,
       metric=-1. The oracle resolves the same graph via a recursive
       transitive closure."""
-    # r15 optimization round: the minhash branch and the cluster
-    # branch consume the IDENTICAL candidate pipeline (same shingle ->
-    # signature -> band join, same k/n/bands params); materialize the
-    # pair set once so connected_components' eager edge checkpoint and
-    # the minhash output rows both read the checkpointed pairs instead
-    # of each re-executing the whole signature pipeline. Values are
-    # unchanged — localCheckpoint is a pure materialization.
-    # r16: the mark is LAZY — connected_components' eager edge-set
-    # materialization scans `pairs` first, so the candidate pipeline
-    # runs (and its blocks store) inside THAT job; a separate eager
-    # pairs job paid one extra full pass over the pipeline output.
-    # (A ThreadPoolExecutor overlap of all five branches was measured
-    # and REJECTED here: the union action already runs the four bulk
-    # branches as concurrent stages of one job, and checkpointing them
-    # from threads added storage round-trips while CC's latency-bound
-    # round loop queued behind the bulk stages — totals went 8.1-10.6s
-    # -> 10.0-11.5s at sf0.1. See OPTIMIZATION_r16.md.)
-    pairs = q_dedup_minhash(spark, sf_dir).localCheckpoint(eager=False)
+    # the minhash branch and the cluster branch consume the IDENTICAL
+    # candidate pipeline: checkpoint the pair set once so both read it
+    # instead of each re-executing the signature pipeline. The mark is
+    # lazy: connected_components' eager edge checkpoint scans `pairs`
+    # first, so the pipeline runs (and its blocks store) inside that
+    # job. The branches are deliberately not overlapped in threads: the
+    # union action already runs the four bulk branches as concurrent
+    # stages of one job (see OPTIMIZATION_r16.md).
+    pairs = LT.checkpoint(q_dedup_minhash(spark, sf_dir), eager=False)
     mh = pairs.select(
         F.lit("minhash").alias("mode"), "id_a", "id_b",
         F.lit(-1).cast("long").alias("metric"))
@@ -1386,10 +1405,8 @@ def q_dedup_embedding(spark, sf_dir):
     SELECT qid AS query_id, CAST(rnk AS BIGINT) AS rank, nid AS neighbor_id, d AS dot_fp
     FROM ranked WHERE rnk <= 5)""")
 def q_ann_bucketed(spark, sf_dir):
-    """The ANN tier, one graded key (§2 rows 41+41b merged r7, row 40
-    brute-force folded in r9 to free grading-window slots — same
-    output schema, tagged by method; every piece individually
-    hash-green in prior rounds):
+    """The ANN tier, one graded key (§2 rows 40+41+41b+41h; one
+    output schema, tagged by method):
 
     * brute — exact top-k by fixed-point dot product, query side
       broadcast, the small-query-set baseline the bucketed paths are
@@ -1402,8 +1419,7 @@ def q_ann_bucketed(spark, sf_dir):
       id — the persisted-index scale path; exact integer
       assignment/means make index construction oracle-verifiable
       bit-for-bit;
-    * two_stage (§2 row 41h, merged r13 — graded standalone r11-r12):
-      the production FAISS/ScaNN shape — quantized persisted IVF index
+    * two_stage: the production FAISS/ScaNN shape — quantized persisted IVF index
       (int8 codes + per-vector scale, parquet partitioned by cluster)
       serves the coarse probe, exact fixed-point rerank on the
       shortlist only. The oracle reproduces kmeans, quantization,
@@ -1412,61 +1428,38 @@ def q_ann_bucketed(spark, sf_dir):
 
     emb = ingest.load_tables(spark, sf_dir)["embeddings"]
     q = emb.filter(F.col("vec_id") < 10)
-    # r15 optimization round: the ivf leg and the two_stage leg's
-    # persisted index use the SAME coarse quantizer (same corpus,
-    # n_clusters, lloyd_rounds) — train it once and share the model
-    # instead of paying the eager Lloyd rounds twice; the model is
-    # deterministic, so per-leg results are bit-identical
+    # the ivf leg and the two_stage leg's persisted index use the SAME
+    # coarse quantizer: train it once and share the deterministic model
     model = SIM.kmeans_inverted(emb, n_clusters=16, lloyd_rounds=2,
                                 dim=64)
 
-    # r16 optimization round (guide §2.6 "overlap independent jobs"):
-    # the graded persisted-index WRITE (inside q_ann_two_stage) is a
-    # bulk job that follows the model, and the lsh/brute branches are
-    # independent of it — the pre-r16 shape paid write-then-probe
-    # serially. The lsh and brute branches now materialize (eager
-    # checkpoints of their TINY k-per-query outputs — storage cost is
-    # nil, unlike the measured-and-rejected dedup_pairs branch
-    # checkpoints) in driver threads overlapped with the index write.
-    # Training stays SOLO before the overlap: its three sequential
-    # bounded collects are latency-bound and queueing them behind bulk
-    # stages is the measured CC-loop pathology. Values unchanged —
-    # each branch's plan is byte-identical, only the wall overlaps.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from datahub_spark.operators.graph import _ckpt_tracked
-
+    # the persisted-index WRITE (inside q_ann_two_stage) is a bulk job
+    # independent of the lsh/brute branches, so those materialize
+    # (eager checkpoints of their tiny k-per-query outputs) in threads
+    # overlapped with it. Training stays solo before the
+    # overlap: its sequential bounded collects are latency-bound and
+    # would queue behind bulk stages.
     def _mk_two():
         return q_ann_two_stage(spark, sf_dir, model=model).withColumn(
             "method", F.lit("two_stage"))
 
     def _mk_lsh():
-        return _ckpt_tracked(
+        return LT.checkpoint(
             SIM.ann_lsh(q, emb, k=5, n_planes=6, dim=64)
-            .withColumn("method", F.lit("lsh")))[0]
+            .withColumn("method", F.lit("lsh")))
 
     def _mk_brute():
-        # r15: one int64 GEMM per Arrow batch instead of n_queries x N
-        # interpreted HOF dots (see SIM.brute_scores — bit-identical
-        # values, the leg was 100% dot evaluation).
-        # r16: the kernel emits only each batch's per-query top-5 under
-        # the same (dot desc, id) order — nq*5 rows per batch across
-        # the boundary instead of nq*batch; the window below finishes
-        # the global top-5 over per-batch winners, selecting IDENTICAL
-        # rows (value-hash parity verified old-vs-new).
+        # the kernel emits each Arrow batch's per-query top-5; the
+        # window finishes the global top-5 over the batch winners
         scored = SIM.brute_scores(q, emb, top_k=5, exclude_self=True)
         w = Window.partitionBy("query_id").orderBy(
             F.col("dot_fp").desc(), F.col("neighbor_id"))
-        return _ckpt_tracked(
+        return LT.checkpoint(
             scored.withColumn("rank", F.row_number().over(w).cast("long"))
             .filter(F.col("rank") <= 5)
-            .withColumn("method", F.lit("brute")))[0]
+            .withColumn("method", F.lit("brute")))
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_two = pool.submit(_mk_two)
-        f_lsh = pool.submit(_mk_lsh)
-        f_brute = pool.submit(_mk_brute)
-        two, lsh, brute = f_two.result(), f_lsh.result(), f_brute.result()
+    two, lsh, brute = _overlap(spark, _mk_two, _mk_lsh, _mk_brute)
     ivf = SIM.ann_ivf(q, emb, k=5, n_clusters=16, n_probe=4,
                       lloyd_rounds=2, dim=64, model=model) \
         .withColumn("method", F.lit("ivf"))
@@ -2532,8 +2525,7 @@ def _filter_novel_oracle() -> str:
 )
 def q_corpus_diff(spark, sf_dir):
     """Corpus evolution, BOTH shapes in one graded key (SURVEY rows
-    36d + 36b; filter_novel merged r11 — each individually hash-green
-    since r10):
+    36d + 36b + decontamination):
 
     * mode='diff' (dedup.corpus_diff): the audit step between
       incremental builds — old generation = ids % 10 != 0 (text
@@ -2546,25 +2538,16 @@ def q_corpus_diff(spark, sf_dir):
       documents colliding with NEITHER the index NOR a lower-id batch
       member — one signature pass over the batch, a pruned (band,
       key) equi-join against the index; linear in batch size.
-    * mode='decon' (dedup.decontaminate, merged r12 — graded
-      standalone r1-r11): benchmark decontamination, every 50th
+    * mode='decon' (dedup.decontaminate): benchmark decontamination, every 50th
       document playing the held-out eval set; training docs sharing
       >= 2 word 3-grams are flagged. Hit counts + verdicts ride in
       the status string ('h<N>:dup' / 'h<N>:ok')."""
     docs = ingest.load_tables(spark, sf_dir)["documents"]
 
-    # r16 optimization round (guide §2.6, the ann_bucketed pattern):
     # the novel branch's persisted-index WRITE is the one eager job in
-    # construction (3.5-4.6s at sf0.1) and the diff/decon branches are
-    # independent of it — they now materialize (eager checkpoints of
-    # their narrow per-doc outputs) in driver threads overlapped with
-    # the write, instead of running serially inside the union action
-    # afterwards (2.7-3.8s). Values unchanged: each branch's plan is
-    # byte-identical, localCheckpoint is a pure materialization.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from datahub_spark.operators.graph import _ckpt_tracked
-
+    # construction, and the diff/decon branches are independent of it:
+    # they materialize (eager checkpoints of their narrow per-doc
+    # outputs) in threads overlapped with the write.
     def _mk_index_then_novel():
         corpus = docs.filter(F.col("doc_id") % 2 == 0)
         batch = docs.filter(F.col("doc_id") % 2 == 1)
@@ -2583,23 +2566,19 @@ def q_corpus_diff(spark, sf_dir):
                    F.concat(F.col("text"), F.lit(" corpusdiffmark")))
             .otherwise(F.col("text")))
         new = docs.filter(F.col("doc_id") % 13 != 0)
-        return _ckpt_tracked(DD.corpus_diff(old, new).select(
-            F.lit("diff").alias("mode"), "doc_id", "status"))[0]
+        return LT.checkpoint(DD.corpus_diff(old, new).select(
+            F.lit("diff").alias("mode"), "doc_id", "status"))
 
     def _mk_decon():
-        return _ckpt_tracked(q_decontaminate(spark, sf_dir).select(
+        return LT.checkpoint(q_decontaminate(spark, sf_dir).select(
             F.lit("decon").alias("mode"),
             F.col("id").alias("doc_id"),
             F.concat(F.lit("h"), F.col("n_hits").cast("string"),
                      F.when(F.col("contaminated"), F.lit(":dup"))
-                     .otherwise(F.lit(":ok"))).alias("status")))[0]
+                     .otherwise(F.lit(":ok"))).alias("status")))
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_novel = pool.submit(_mk_index_then_novel)
-        f_diff = pool.submit(_mk_diff)
-        f_decon = pool.submit(_mk_decon)
-        novel, diff, decon = (f_novel.result(), f_diff.result(),
-                              f_decon.result())
+    novel, diff, decon = _overlap(spark, _mk_index_then_novel, _mk_diff,
+                                  _mk_decon)
     return diff.unionByName(novel).unionByName(decon)
 
 

@@ -13,13 +13,9 @@ values to list on parse, like the reference's parser does.
 
 from __future__ import annotations
 
-import json
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from datahub_spark.namespaces import NamespaceManager
 
 _WIRE_SCHEMA = T.StructType(
     [
@@ -58,10 +54,6 @@ def to_uda_json(df: DataFrame, extra_cols: list[str] | None = None) -> DataFrame
         F.coalesce(F.col("refs"), empty).alias("refs"),
     )
     return df.select(F.to_json(obj).alias("json"), *(extra_cols or []))
-
-
-def context_object(nsmgr: NamespaceManager) -> str:
-    return json.dumps({"id": "@context", "namespaces": nsmgr.context()})
 
 
 def from_uda_json(json_df: DataFrame, dataset: str, json_col: str = "json") -> DataFrame:

@@ -8,6 +8,11 @@ SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
 
+def persisted_ids(spark) -> set:
+    """Ids of every RDD persisted in the JVM, checkpoints included."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("datahub-spark-tests")

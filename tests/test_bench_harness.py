@@ -6,7 +6,7 @@ the whole run before the JSON line was emitted."""
 from __future__ import annotations
 
 import bench
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, persisted_ids
 
 
 def _good(spark, sf_dir):
@@ -76,7 +76,7 @@ def test_clear_persisted_between_legs(spark):
     run) cannot stack blocks against later legs."""
     from pyspark.sql import functions as F
 
-    from datahub_spark.operators.graph import _persisted_ids, pagerank
+    from datahub_spark.operators.graph import pagerank
 
     def _pr(spark, sf_dir):
         edges = spark.range(500).select(
@@ -86,7 +86,7 @@ def test_clear_persisted_between_legs(spark):
     timings, _, errors, _, _ = bench.run_legs(
         spark, SF_SMALL, ["pr"], {"pr": _pr}, runs=2)
     assert not errors and "pr" in timings
-    assert _persisted_ids(spark.sparkContext) == set()
+    assert persisted_ids(spark) == set()
 
 
 def test_x100_child_merge_carries_every_field():

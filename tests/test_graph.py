@@ -5,6 +5,7 @@ from __future__ import annotations
 import duckdb
 
 from datahub_spark.operators import graph as G
+from tests.conftest import persisted_ids
 
 
 def _edges(spark):
@@ -108,27 +109,25 @@ def test_pagerank_dangling_redistribution(spark):
 
 
 def test_pagerank_frees_intermediate_checkpoints(spark):
-    """r10 (bench OOM): pagerank must not leave its edge/node scratch
-    frames or superseded rank generations pinned in JVM storage — only
-    the RETURNED checkpoint's blocks may remain (the r9 x100 bench leg
-    accumulated 4 full edge-frame checkpoints per leg and OOM'd the
-    8g driver JVM). Run twice: persisted-RDD count must not grow."""
+    """pagerank must not leave its edge/node scratch frames or
+    superseded rank generations pinned in JVM storage: only the
+    RETURNED checkpoint's blocks may remain, the caller's to free. Run
+    twice: the persisted-RDD count must not grow."""
     from pyspark.sql import functions as F
 
-    from datahub_spark.operators.graph import (_free_rdds, _persisted_ids,
-                                               pagerank)
+    from datahub_spark import lifetime
+    from datahub_spark.operators.graph import pagerank
 
-    sc = spark.sparkContext
-    _free_rdds(sc, _persisted_ids(sc))  # clean slate
+    lifetime.clear(spark)  # clean slate
 
     edges = spark.range(2000).select(
         (F.col("id") % 97).alias("src"), (F.col("id") % 53).alias("dst"))
     r1 = pagerank(edges, rounds=12, checkpoint_every=3)
     r1.count()
-    after_one = _persisted_ids(sc)
+    after_one = persisted_ids(spark)
     r2 = pagerank(edges, rounds=12, checkpoint_every=3)
     r2.count()
-    after_two = _persisted_ids(sc)
+    after_two = persisted_ids(spark)
     # each call leaks at most its OWN returned checkpoint (scratch,
     # superseded generations, tol baselines all freed)
     assert len(after_two) - len(after_one) <= len(after_one) or \
@@ -137,9 +136,9 @@ def test_pagerank_frees_intermediate_checkpoints(spark):
     # the tol early-stop path frees the same way
     r3 = pagerank(edges, rounds=40, checkpoint_every=2, tol_e9=10**9)
     r3.count()
-    after_three = _persisted_ids(sc)
+    after_three = persisted_ids(spark)
     assert len(after_three) <= len(after_two) + 2, after_three
     # results still correct after all the freeing
     assert r1.collect() == r2.collect() != []
-    _free_rdds(sc, _persisted_ids(sc))
-    assert _persisted_ids(sc) == set()
+    lifetime.clear(spark)
+    assert persisted_ids(spark) == set()

@@ -62,6 +62,22 @@ def test_quality_score_half_tie_rounds_up(spark):
     assert r["quality_score_centi"] == 6498
 
 
+def test_quality_features_keep_cols_literal_names_and_collisions(spark):
+    """keep_cols names are taken literally (a space or a dot is part of
+    the name, not SQL or a struct path); a name that collides with an
+    internal alias raises ValueError naming it."""
+    df = spark.createDataFrame(
+        [(1, "a bb cc dd ee ff gg hh ii jj", "x", 7)],
+        "doc_id long, text string, `my col` string, `a.b` long")
+    r = TX.quality_features(df, keep_cols=["my col", "a.b"]).collect()[0]
+    assert r["my col"] == "x" and r["a.b"] == 7
+    assert r["quality_score_centi"] == 5300
+    for name in ("_t", "_N", "n_tokens", "doc_id"):
+        with pytest.raises(ValueError, match=repr(name)):
+            TX.quality_features(df.withColumn(name, F.lit(0)),
+                                keep_cols=[name])
+
+
 def test_fingerprint_is_normalization_invariant(spark):
     df = _docs(spark, [(1, "Some  TEXT here"), (2, "some text HERE")])
     fps = [r["fp"] for r in df.select(TX.fingerprint(F.col("text")).alias("fp")).collect()]
