@@ -513,8 +513,8 @@ class HttpDatasetSource:
                 break  # no continuation advancement: feed drained
             token = next_token
         self._watermark = max_recorded
-        json_df = self.spark.createDataFrame([(o,) for o in objs] or [("",)], "json string")
-        return uda.from_uda_json(json_df.filter(F.col("json") != ""), self.dataset)
+        json_df = self.spark.createDataFrame([(o,) for o in objs], "json string")
+        return uda.from_uda_json(json_df, self.dataset)
 
     def current_watermark(self) -> int:
         return self._watermark
@@ -555,7 +555,9 @@ def make_http_transform(url: str, token_provider=None,
     """HttpTransform (transform.go:676-760): POST each batch of entities
     as a JSON array (``{id, recorded, deleted, props, refs}`` objects,
     optionally with the ``@context`` head when SupportContext) to a
-    remote service; the response array IS the transformed batch.
+    remote service; the response array IS the transformed batch. The
+    request is encoded by ``uda.to_uda_json`` and the response decoded
+    by ``uda.decode_entities``.
 
     Runs inside ``mapInPandas`` so every executor posts its own
     partitions concurrently — the distributed analogue of the
@@ -565,7 +567,7 @@ def make_http_transform(url: str, token_provider=None,
     HTTP sink: a retried task reposts its partition — the remote service
     must be idempotent per entity id, which the reference's contract
     already demands."""
-    ctx = context or {"id": "@context", "namespaces": {}}
+    ctx = json.dumps(context or {"id": "@context", "namespaces": {}})
 
     def transform(df: DataFrame) -> DataFrame:
         if not allow_network:
@@ -573,9 +575,10 @@ def make_http_transform(url: str, token_provider=None,
                 "network post disabled: pass allow_network=True, or use "
                 "make_script_transform / python_transform for local "
                 "batch logic")
-        from datahub_spark.script import SCRIPT_OUTPUT_SCHEMA, _as_dict
+        from datahub_spark.script import SCRIPT_OUTPUT_SCHEMA
 
         token = token_provider() if token_provider is not None else None
+        columns = [f.name for f in SCRIPT_OUTPUT_SCHEMA.fields]
 
         def run(batches):
             import urllib.request
@@ -583,48 +586,20 @@ def make_http_transform(url: str, token_provider=None,
             import pandas as pd
 
             for pdf in batches:
-                objs = []
-                for r in pdf.to_dict("records"):
-                    rec = r.get("recorded")
-                    seq = r.get("seq")
-                    objs.append({
-                        "id": r.get("id"),
-                        "recorded": None if pd.isna(rec) else int(rec),
-                        "seq": None if pd.isna(seq) else int(seq),
-                        "deleted": bool(r.get("deleted") or False),
-                        "props": _as_dict(r.get("props")),
-                        "refs": {k: list(v) for k, v in
-                                 _as_dict(r.get("refs")).items()},
-                    })
-                payload = [ctx] + objs if support_context else objs
+                objs = ([ctx] if support_context else []) + list(pdf["json"])
                 req = urllib.request.Request(
-                    url, data=json.dumps(payload).encode("utf-8"),
+                    url, data=("[" + ",".join(objs) + "]").encode("utf-8"),
                     method="POST",
                     headers={"Content-Type": "application/json"})
                 if token is not None:
                     req.add_header("Authorization", f"Bearer {token}")
                 with urllib.request.urlopen(req, timeout=timeout_s) as resp:
                     back = json.loads(resp.read().decode("utf-8"))
-                rows = []
-                for obj in back:
-                    if obj.get("id") in ("@context", "@continuation"):
-                        continue
-                    rows.append({
-                        "id": obj.get("id"),
-                        "recorded": obj.get("recorded"),
-                        "seq": obj.get("seq"),
-                        "deleted": bool(obj.get("deleted") or False),
-                        "props": {k: (None if v is None else str(v))
-                                  for k, v in (obj.get("props") or {}).items()},
-                        "refs": {k: ([str(x) for x in v]
-                                     if isinstance(v, list) else [str(v)])
-                                 for k, v in (obj.get("refs") or {}).items()},
-                        "dataset": obj.get("dataset"),
-                    })
                 yield pd.DataFrame(
-                    rows, columns=[f.name for f in SCRIPT_OUTPUT_SCHEMA.fields])
+                    [row + (None,) for row in uda.decode_entities(back)],
+                    columns=columns)
 
-        return df.mapInPandas(run, schema=SCRIPT_OUTPUT_SCHEMA)
+        return uda.to_uda_json(df).mapInPandas(run, schema=SCRIPT_OUTPUT_SCHEMA)
 
     return transform
 

@@ -46,7 +46,6 @@ from pyspark.sql import functions as F
 from datahub_spark import store as S
 from datahub_spark import uda
 from datahub_spark.namespaces import NamespaceManager
-from datahub_spark.script import SCRIPT_OUTPUT_SCHEMA
 
 
 # one element may legitimately be large (a fat props map), but a parser
@@ -240,8 +239,8 @@ class UdaServer:
         # on high-frequency small writes. Visibility: pending rows are
         # folded into ONE store transaction when (a) the pending count
         # reaches wal_flush_entities, (b) the dataset is read over HTTP
-        # (read-your-writes), (c) a fullsync starts, or (d) the server
-        # stops. Durability is per-POST either way.
+        # or any /query runs (read-your-writes), (c) a fullsync starts,
+        # or (d) the server stops. Durability is per-POST either way.
         self.wal_writes = bool(wal_writes)
         self.wal_flush_entities = int(wal_flush_entities)
         self._wals: dict[str, object] = {}
@@ -262,7 +261,11 @@ class UdaServer:
         self._httpd: ThreadingHTTPServer | None = None
         self._thread: threading.Thread | None = None
         self._host, self._port = host, port
-        self._index: dict | None = None  # /query lookup, built lazily
+        # /query lookup index as (generation it was built at, index);
+        # every store commit advances the generation
+        self._index: tuple[int, dict | None] = (-1, None)
+        self._index_gen = 0
+        store.add_listener(lambda _ds, _rec: self.invalidate_query_index())
         # jobs API (jobshandler.go / joboperationhandler.go): attach a
         # jobs.Scheduler to serve /jobs CRUD + /job/{id} operations
         self.scheduler = scheduler
@@ -341,8 +344,6 @@ class UdaServer:
                 self._wal_pending[name] = 0
             if recorded is not None:
                 out[name] = recorded
-        if out:
-            self.invalidate_query_index()
         return out
 
     def _ensure_visible(self, ds: str) -> None:
@@ -836,7 +837,6 @@ class UdaServer:
                     r["dataset"], strategy="deduplicate",
                     gc_horizon=int(gc_h) if gc_h is not None else None,
                     clean_deleted_entities=bool(r.get("cleanDeleted")))
-                self.invalidate_query_index()
                 return self._reply(rq, 200, {})
             self._error(rq, 404, "not found")
         except Exception as exc:
@@ -1078,7 +1078,6 @@ class UdaServer:
                     self.store.rename_dataset(ds, new_name)
                 except (KeyError, ValueError) as exc:
                     return self._error(rq, 400, str(exc))
-                self.invalidate_query_index()
                 return self._reply(rq, 200, {})
             self._error(rq, 404, "not found")
         except Exception as exc:
@@ -1120,13 +1119,11 @@ class UdaServer:
                 if self.store.dataset_config(ds) is None:
                     return self._error(rq, 400, f"dataset {ds} not found")
                 self.store.delete_dataset(ds)
-                self.invalidate_query_index()
                 return self._reply(rq, 200, {})
             if parts == ["datasets"]:
                 # deleteAllDatasets (datasethandler.go:237-244)
                 for ds in self.store.list_datasets():
                     self.store.delete_dataset(ds)
-                self.invalidate_query_index()
                 return self._reply(rq, 200, {})
             self._error(rq, 404, "not found")
         except Exception as exc:
@@ -1245,7 +1242,6 @@ class UdaServer:
                         if r.get("id") == job_id and r.get("error")), None)
             if err:
                 return self._error(rq, 500, err)
-            self.invalidate_query_index()
         else:
             return self._error(rq, 404, f"unknown operation {op}")
         self._reply(rq, 200, {"id": job_id, "operation": op})
@@ -1259,49 +1255,52 @@ class UdaServer:
         payload = json.loads(rq.rfile.read(n).decode()) if n else {}
         if not isinstance(payload, dict):
             return self._error(rq, 400, "transaction body must be an object")
-        spark = self.store.spark
         dataset_entities = {}
         for ds, objs in payload.items():
             if ds == "@context":
                 continue
-            rows = []
-            for obj in objs or []:
-                refs = {k: (v if isinstance(v, list) else [v])
-                        for k, v in (obj.get("refs") or {}).items()}
-                props = {k: (None if v is None else str(v))
-                         for k, v in (obj.get("props") or {}).items()}
-                rows.append((obj.get("id"), obj.get("recorded"),
-                             obj.get("seq", 0),
-                             bool(obj.get("deleted", False)),
-                             props, refs, None))
+            try:
+                rows = list(uda.decode_entities(objs or []))
+            except ValueError as exc:
+                return self._error(rq, 400, f"malformed entity batch: {exc}")
             if rows:
-                dataset_entities[ds] = spark.createDataFrame(
-                    rows, SCRIPT_OUTPUT_SCHEMA).drop("dataset")
+                dataset_entities[ds] = self.store.spark.createDataFrame(
+                    rows, uda.ROW_SCHEMA)
         if dataset_entities:
             self.store.execute_transaction(dataset_entities)
-            self.invalidate_query_index()
         self._reply(rq, 200, {})
 
     # -- /query (queryhandler.go) -----------------------------------------
 
-    def _query_index(self) -> dict:
+    def _query_index(self, datasets: list[str] | None = None) -> dict:
         """Broadcast-style lookup index over the store's datasets for the
         graph-query endpoint — the analogue of the reference resolving
         queries against its local Badger store (queryhandler.go's
         GetManyRelatedEntitiesBatch). Bounded by the script-surface row
         cap: interactive graph queries are dimension-scale by
         construction; set-oriented querying over big data belongs in the
-        engine's query operators, not an HTTP endpoint."""
-        from datahub_spark.script import build_lookup_index
+        engine's query operators, not an HTTP endpoint.
 
-        if self._index is None:
-            frames = [self.store.log([d]) for d in
-                      sorted(self.store.list_datasets())]
-            self._index = build_lookup_index(*frames)
-        return self._index
+        The whole-store index serves until the store's next commit;
+        ``datasets`` scopes an index to those datasets' logs, built per
+        call."""
+        from datahub_spark import script
+
+        if datasets:
+            return script.build_lookup_index(
+                *[self.store.log([d]) for d in sorted(set(datasets))])
+        built_at, index = self._index
+        if built_at != self._index_gen:
+            # a commit during the build advances the generation, so an
+            # index that may have missed it is rebuilt on the next call
+            built_at = self._index_gen
+            index = script.build_lookup_index(
+                *[self.store.log([d]) for d in sorted(self.store.list_datasets())])
+            self._index = (built_at, index)
+        return index
 
     def invalidate_query_index(self) -> None:
-        self._index = None
+        self._index_gen += 1
 
     def _wire_entity(self, ent: dict | None, eid: str) -> dict:
         if ent is None:
@@ -1322,6 +1321,8 @@ class UdaServer:
         n = int(rq.headers.get("Content-Length", "0"))
         body = rq.rfile.read(n).decode() if n else "{}"
         ctype = rq.headers.get("Content-Type", "")
+        if self.wal_writes:
+            self.flush_wal()
         if "application/x-javascript-query" in ctype:
             from datahub_spark import script as SC
 
@@ -1359,7 +1360,7 @@ class UdaServer:
             offset = resume["off"]
             limit = int(q.get("limit") or 0)
         env = make_builtins(dict(self.nsmgr.context()),
-                            self._query_index())
+                            self._query_index(q.get("datasets")))
         triples = env["Query"](q.get("startingEntities") or [],
                                q.get("predicate"),
                                bool(q.get("inverse", False)),
@@ -1380,45 +1381,20 @@ class UdaServer:
     # LocalRelation before the next is accumulated
     BODY_CHUNK_ROWS = 10_000
 
-    def _iter_entities(self, rq):
-        """Streamed body -> iterator of normalized entity dicts
-        (@context/@continuation skipped, refs listified, props
-        stringified) — shared by the DataFrame and the WAL write
-        paths."""
+    def _body_chunks(self, rq):
+        """Streamed body -> lists of at most BODY_CHUNK_ROWS parsed wire
+        objects. The server process never holds the whole body, the
+        whole decoded object tree, or the whole row list — the
+        reference's streamparser.go contract."""
         n = int(rq.headers.get("Content-Length", "0"))
+        chunk: list = []
         for obj in iter_json_array(rq.rfile, n):
-            oid = obj.get("id") if isinstance(obj, dict) else None
-            if oid in ("@context", "@continuation") or oid is None:
-                continue
-            yield {
-                "id": oid,
-                "recorded": obj.get("recorded"),
-                "seq": obj.get("seq", 0),
-                "deleted": bool(obj.get("deleted", False)),
-                "props": {k: (None if v is None else str(v))
-                          for k, v in (obj.get("props") or {}).items()},
-                "refs": {k: (v if isinstance(v, list) else [v])
-                         for k, v in (obj.get("refs") or {}).items()},
-            }
-
-    def _parse_body(self, rq):
-        """Streamed body -> iterator of DataFrame chunks (each at most
-        BODY_CHUNK_ROWS rows). The server process never holds the whole
-        body, the whole decoded object tree, or the whole row list —
-        the reference's streamparser.go contract."""
-        spark = self.store.spark
-        rows = []
-        for e in self._iter_entities(rq):
-            rows.append((e["id"], e["recorded"], e["seq"], e["deleted"],
-                         e["props"], e["refs"], None))
-            if len(rows) >= self.BODY_CHUNK_ROWS:
-                # nullable schema: recorded left NULL by the wire is
-                # stamped at commit (store_entities), like the
-                # script-sink contract
-                yield spark.createDataFrame(rows, SCRIPT_OUTPUT_SCHEMA)
-                rows = []
-        if rows:
-            yield spark.createDataFrame(rows, SCRIPT_OUTPUT_SCHEMA)
+            chunk.append(obj)
+            if len(chunk) >= self.BODY_CHUNK_ROWS:
+                yield chunk
+                chunk = []
+        if chunk:
+            yield chunk
 
     def _post_entities(self, rq, ds: str) -> None:
         from datahub_spark.jobs import FullSyncSession
@@ -1455,23 +1431,15 @@ class UdaServer:
                 # dataset_benchmark_test.go)
                 wal = self._wal_for(ds)
                 count = 0
-                batch: list = []
                 try:
-                    for e in self._iter_entities(rq):
-                        batch.append(e)
-                        if len(batch) >= self.BODY_CHUNK_ROWS:
-                            wal.append(batch)
-                            count += len(batch)
-                            batch = []
+                    for objs in self._body_chunks(rq):
+                        count += wal.append(objs)
                 except ValueError as exc:
                     # whole-request atomicity is per-flush; a malformed
                     # tail leaves prior chunks spooled but unflushed —
                     # same at-least-once contract as WAL crash replay
                     return self._error(
                         rq, 400, f"malformed entity batch: {exc}")
-                if batch:
-                    wal.append(batch)
-                    count += len(batch)
                 with self._wal_lock:
                     self._wal_pending[ds] = \
                         self._wal_pending.get(ds, 0) + count
@@ -1481,15 +1449,19 @@ class UdaServer:
                 return self._reply(rq, 200, {})
             # streamed chunks: a fullsync session appends each chunk as
             # it parses (its complete() unions them); a plain write
-            # unions the chunk plans and commits ONCE — same atomicity
-            # as before, flat parse memory
+            # unions the chunk plans and commits ONCE — one atomic
+            # commit, flat parse memory; NULL recorded is stamped then
             plain: list = []
             try:
-                for chunk in self._parse_body(rq):
+                for objs in self._body_chunks(rq):
+                    rows = list(uda.decode_entities(objs))
+                    if not rows:
+                        continue
+                    chunk = self.store.spark.createDataFrame(rows, uda.ROW_SCHEMA)
                     if session is not None:
-                        session.append(chunk.drop("dataset"))
+                        session.append(chunk)
                     else:
-                        plain.append(chunk.drop("dataset"))
+                        plain.append(chunk)
             except ValueError as exc:
                 # malformed body mid-stream: a lease we just started
                 # must not survive the failed request
@@ -1501,11 +1473,9 @@ class UdaServer:
                 for b in plain[1:]:
                     batch = batch.unionByName(b)
                 self.store.store_entities(ds, batch)
-                self.invalidate_query_index()
             if fs_end:
                 session = self.leases.release(ds, fs_id)
                 session.complete()
-                self.invalidate_query_index()
             self._reply(rq, 200, {})
         except ConflictError as exc:
             self._error(rq, 409, str(exc))

@@ -40,6 +40,7 @@ except ImportError:  # pragma: no cover
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from datahub_spark import uda
 from datahub_spark.model import ENTITY_COLUMNS, ENTITY_SCHEMA
 
 # per-store-root in-process locks (threads sharing a driver); see
@@ -804,6 +805,8 @@ class EntityStore:
             os.replace(old, part)  # roll back
             raise
         shutil.rmtree(old, ignore_errors=True)
+        # no version is added: listeners get the store's current tick
+        self._emit([dataset], self._read_meta()["counter"])
 
     def backup(self, dest: str) -> None:
         """Backup (internal/server/backup.go analogue): the store is an
@@ -830,13 +833,12 @@ class WalIngest:
     The engine's transactional append pays Spark's fixed per-job cost,
     which makes the reference's OLTP loop shape (a 1000-entity commit
     every few ms, dataset_benchmark_test.go) ~100x slower than its
-    design-point bulk path — the standing write-path gap since r3. The
-    WAL closes it the way every LSM does: ``append()`` makes a batch
-    DURABLE in milliseconds (fsync'd JSON-lines spool under the store
-    root), ``flush()`` folds everything pending into ONE atomic Spark
-    transaction that makes it QUERYABLE. Durability is per-append;
-    visibility is per-flush; the caller picks the flush cadence (count,
-    time, or job boundary).
+    design-point bulk path. The WAL closes it the way every LSM does:
+    ``append()`` makes a batch DURABLE in milliseconds (fsync'd
+    JSON-lines spool under the store root), ``flush()`` folds everything
+    pending into ONE atomic Spark transaction that makes it QUERYABLE.
+    Durability is per-append; visibility is per-flush; the caller picks
+    the flush cadence (count, time, or job boundary).
 
     Crash behavior: an un-flushed spool (or a ``.flushing`` file left
     by a crash mid-flush) is picked up by the next ``flush()`` on ANY
@@ -844,9 +846,6 @@ class WalIngest:
     commit and spool removal, where ``store_entities``'s write-time
     payload dedup (skip_unchanged) collapses the replay to a no-op.
     """
-
-    _SCHEMA = ("id string, seq long, deleted boolean, "
-               "props map<string,string>, refs map<string,array<string>>")
 
     def __init__(self, store: "EntityStore", dataset: str):
         self.store, self.dataset = store, dataset
@@ -864,24 +863,27 @@ class WalIngest:
         # read-your-writes flush racing the autoflush threshold)
         self._flush_mu = threading.Lock()
 
-    def append(self, entities: list[dict]) -> None:
-        """Durably append a batch: one buffered write + one fsync.
-        Entity dicts carry ``id`` and optional ``deleted``/``props``/
-        ``refs`` (the UDA shape)."""
+    def append(self, entities: list[dict]) -> int:
+        """Durably append a batch of UDA wire objects: one buffered
+        write + one fsync. Objects are decoded here (uda.decode_entities)
+        so the spool holds entity rows; ``seq`` is the append order, so
+        within one flush a later append of an id wins. Returns the
+        number of rows appended."""
+        rows = list(uda.decode_entities(entities))
+        if not rows:
+            return 0
         with self._mu:
             lines = []
-            for e in entities:
+            for eid, recorded, _seq, deleted, props, refs in rows:
                 lines.append(json.dumps({
-                    "id": e["id"],
-                    "seq": self._seq,
-                    "deleted": bool(e.get("deleted", False)),
-                    "props": e.get("props") or {},
-                    "refs": e.get("refs") or {},
+                    "id": eid, "recorded": recorded, "seq": self._seq,
+                    "deleted": deleted, "props": props, "refs": refs,
                 }, separators=(",", ":")))
                 self._seq += 1
             self._fh.write("\n".join(lines) + "\n")
             self._fh.flush()
             os.fsync(self._fh.fileno())
+        return len(rows)
 
     def flush(self, skip_unchanged: bool = True) -> int | None:
         """Fold the pending spool (plus any crash-left ``.flushing``
@@ -921,9 +923,7 @@ class WalIngest:
             self._fh = open(self.path, "a", encoding="utf-8")
         if not paths:
             return None
-        df = (self.store.spark.read.schema(self._SCHEMA).json(paths)
-              .withColumn("recorded", F.lit(None).cast("long"))
-              .select("id", "recorded", "seq", "deleted", "props", "refs"))
+        df = self.store.spark.read.schema(uda.ROW_SCHEMA).json(paths)
         recorded = self.store.store_entities(
             self.dataset, df, skip_unchanged=skip_unchanged)
         for p in paths:

@@ -283,3 +283,45 @@ def test_statistics_cached_endpoint_serves_snapshot(spark, tmp_path):
         assert status == 404
     finally:
         srv.stop()
+
+
+def test_tick_job_write_reaches_served_query(spark, tmp_path):
+    """A cron job run by tick() commits through DatasetSink without the
+    server's involvement; the next /query traversal sees its refs."""
+    from pyspark.sql import functions as F
+
+    cfg = Config(store_location=str(tmp_path / "hub"), port=0)
+    inst = DatahubInstance(cfg, spark=spark)
+    inst.store.store_entities("people", spark.createDataFrame(
+        [("e:1", None, 0, False, {"p:a": "1"}, None, None),
+         ("e:2", None, 1, False, {"p:a": "2"}, None, None)],
+        SCRIPT_OUTPUT_SCHEMA).drop("dataset"))
+
+    def link(df):  # new versions, stamped by the commit
+        return df.withColumn(
+            "refs", F.create_map(F.lit("p:knows"), F.array(F.lit("e:2")))
+        ).withColumn("recorded", F.lit(None).cast("long"))
+
+    inst.scheduler.register(
+        J.Job("link", J.DatasetSource(inst.store, "people"),
+              J.DatasetSink(inst.store, "people"), transform=link),
+        schedule="* * * * *")
+    walk = json.dumps({"startingEntities": ["e:1"],
+                       "predicate": "p:knows"}).encode()
+    url = inst.server.start()  # no clock thread: tick() is driven here
+
+    def query():
+        req = urllib.request.Request(
+            f"{url}/query", data=walk, method="POST",
+            headers={"Content-Type": "application/json"})
+        with urllib.request.urlopen(req, timeout=30) as resp:
+            return [(s, p, e["id"]) for s, p, e in json.loads(resp.read())[1]]
+
+    try:
+        assert query() == []  # builds and caches the index
+        results = inst.tick(datetime(2026, 8, 14, 12, 0, 5))
+        assert [r["id"] for r in results] == ["link"]
+        assert "error" not in results[0]
+        assert query() == [("e:1", "p:knows", "e:2")]
+    finally:
+        inst.server.stop()

@@ -563,6 +563,9 @@ def test_streamed_post_malformed_is_400_and_releases_lease(served):
     assert code == 200
     code, _ = _post(url, _uda_batch(), _fs_headers("syncY", end=True))
     assert code == 200
+    # well-formed JSON whose props is not an object: rejected by name
+    code, body = _post(url, _uda_batch({"id": "e:9", "props": ["x"]}))
+    assert code == 400 and "'e:9': props" in body["message"]
 
 
 # -- JSON-LD content negotiation (datasethandler.go:246-340,492-530) -------
@@ -1077,3 +1080,73 @@ def test_query_get_and_post_same_protocol(served):
     assert via_get == via_post
     assert any(e.get("id") == "e:1" for e in via_get
                if isinstance(e, dict))
+
+
+def _triples(body):
+    return sorted((s, p, e["id"], tuple(sorted((e.get("props") or {}).items())))
+                  for s, p, e in body[1])
+
+
+def test_query_sees_pending_wal_rows(spark, tmp_path):
+    """With wal_writes=True a /query lookup and traversal flush the
+    spooled POSTs first, like a dataset GET does."""
+    store = S.EntityStore(spark, str(tmp_path / "walq"))
+    store.store_entities("d", _entities(spark, [
+        ("e:1", None, 0, False, {"p:name": "one"}, None, None),
+    ]).drop("dataset"))
+    srv = UdaServer(store, wal_writes=True, wal_flush_entities=10_000)
+    base = srv.start()
+    try:
+        walk = {"startingEntities": ["e:1"], "predicate": "p:link",
+                "inverse": True}
+        assert _post(f"{base}/query", walk)[1][1] == []  # index built
+        assert _post(f"{base}/datasets/d/entities", _uda_batch(
+            {"id": "e:2", "props": {"p:name": "two"},
+             "refs": {"p:link": "e:1"}}))[0] == 200
+        code, body = _post(f"{base}/query", {"entityId": "e:2"})
+        assert code == 200 and body[1]["props"] == {"p:name": "two"}
+        code, body = _post(f"{base}/query", walk)
+        assert [(s, p, e["id"]) for s, p, e in body[1]] == \
+            [("e:1", "p:link", "e:2")]
+    finally:
+        srv.stop()
+
+
+def test_query_traversal_honors_datasets(spark, tmp_path):
+    """A scoped /query traversal answers from the requested datasets
+    only, like query.related(..., datasets=...)."""
+    from datahub_spark import query as Q
+
+    store = S.EntityStore(spark, str(tmp_path / "scoped"))
+    store.store_entities("people", _entities(spark, [
+        ("p:1", None, 0, False, {"p:name": "ann"}, {"p:at": ["o:1"]}, None),
+        ("p:2", None, 1, False, {"p:name": "bob"}, {"p:at": ["o:2"]}, None),
+    ]).drop("dataset"))
+    store.store_entities("orgs", _entities(spark, [
+        ("o:1", None, 0, False, {"p:name": "acme"}, None, None),
+        ("o:2", None, 1, False, {"p:name": "beta"}, {"p:at": ["o:1"]}, None),
+    ]).drop("dataset"))
+    srv = UdaServer(store)
+    base = srv.start()
+    try:
+        for start, inverse in (("o:1", True), ("p:1", False), ("o:2", False)):
+            for scope in (None, ["people"], ["orgs"], ["people", "orgs"]):
+                req = {"startingEntities": [start], "predicate": "p:at",
+                       "inverse": inverse}
+                if scope:
+                    req["datasets"] = scope
+                code, body = _post(f"{base}/query", req)
+                assert code == 200
+                want = sorted(
+                    (r["start_id"], r["predicate"], r["related"]["id"],
+                     tuple(sorted((r["related"]["props"] or {}).items())))
+                    for r in Q.related(store.log(), [start], "p:at",
+                                       inverse=inverse, datasets=scope).collect())
+                assert _triples(body) == want, (start, inverse, scope)
+        # the scope changes the answer: o:2's edge lives in orgs
+        code, body = _post(f"{base}/query", {
+            "startingEntities": ["o:1"], "predicate": "p:at",
+            "inverse": True, "datasets": ["people"]})
+        assert [t[2] for t in _triples(body)] == ["p:1"]
+    finally:
+        srv.stop()

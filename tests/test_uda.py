@@ -1,10 +1,14 @@
 """UDA JSON wire format: refs must be REAL JSON arrays on the wire
-(streamparser.go list form), and the parser must accept both the list
-and the external scalar-CURIE form."""
+(streamparser.go list form), the parser must accept both the list and
+the external scalar-CURIE form, and every ingress decodes a body to the
+same rows."""
 
 from __future__ import annotations
 
 import json
+import threading
+import urllib.request
+from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import functions as F
 
@@ -50,3 +54,112 @@ def test_parser_accepts_external_scalar_refs(spark):
     got = uda.from_uda_json(wire, dataset="ext").collect()[0]
     assert got["refs"]["p:one"] == ["y:9"]
     assert got["refs"]["p:many"] == ["y:1", "y:2"]
+
+
+# one body through every ingress: the stored (or parsed) rows must match
+_PARITY_BODY = [
+    {"id": "@context", "namespaces": {}},
+    {"id": "w:1",
+     "props": {"p:s": "text", "p:t": True, "p:f": False, "p:i": 7,
+               "p:d": 12.25, "p:o": {"x": 1, "y": "z"}, "p:a": [1, "b"],
+               "p:n": None},
+     "refs": {"p:one": "w:2", "p:many": ["w:2", "w:3"]}},
+    {"id": "w:2", "deleted": "false", "props": {"p:s": "two"}},
+    {"id": "w:3", "deleted": True},
+    {"props": {"p:s": "element without an id"}},
+    {"id": "@continuation", "token": "t1"},
+]
+
+_PARITY_ROWS = {
+    ("w:1", False,
+     (("p:a", '[1,"b"]'), ("p:d", "12.25"), ("p:f", "false"), ("p:i", "7"),
+      ("p:n", None), ("p:o", '{"x":1,"y":"z"}'), ("p:s", "text"),
+      ("p:t", "true")),
+     (("p:many", ("w:2", "w:3")), ("p:one", ("w:2",)))),
+    ("w:2", False, (("p:s", "two"),), ()),
+    ("w:3", True, (), ()),
+}
+
+
+def _payload(rows):
+    """(id, deleted, props, refs) per row, maps as sorted tuples."""
+    return {(r["id"], r["deleted"],
+             tuple(sorted((r["props"] or {}).items())),
+             tuple(sorted((k, tuple(v)) for k, v in (r["refs"] or {}).items())))
+            for r in rows}
+
+
+class _FeedHandler(BaseHTTPRequestHandler):
+    """Serves _PARITY_BODY as the first /changes page, then a drained
+    page that keeps the token."""
+
+    def log_message(self, *a):
+        pass
+
+    def do_GET(self):
+        first = "since=0" in self.path
+        page = _PARITY_BODY if first else [
+            _PARITY_BODY[0], {"id": "@continuation", "token": "t1"}]
+        data = json.dumps(page).encode()
+        self.send_response(200)
+        self.send_header("Content-Length", str(len(data)))
+        self.end_headers()
+        self.wfile.write(data)
+
+
+def test_every_ingress_stores_the_same_rows(spark, tmp_path):
+    from datahub_spark import jobs as J
+    from datahub_spark import store as S
+    from datahub_spark.server import UdaServer
+
+    def post(url, payload, headers=None):
+        req = urllib.request.Request(
+            url, data=json.dumps(payload).encode(), method="POST",
+            headers={"Content-Type": "application/json", **(headers or {})})
+        with urllib.request.urlopen(req, timeout=30) as resp:
+            assert resp.status == 200
+
+    store = S.EntityStore(spark, str(tmp_path / "store"))
+    plain_srv, wal_srv = UdaServer(store), UdaServer(store, wal_writes=True)
+    plain, wal = plain_srv.start(), wal_srv.start()
+    feed = ThreadingHTTPServer(("127.0.0.1", 0), _FeedHandler)
+    threading.Thread(target=feed.serve_forever, daemon=True).start()
+    try:
+        post(f"{plain}/datasets/plain/entities", _PARITY_BODY)
+        post(f"{wal}/datasets/walpost/entities", _PARITY_BODY)
+        wal_srv.flush_wal()
+        fs = {"universal-data-api-full-sync-id": "s1"}
+        post(f"{plain}/datasets/fullsync/entities", _PARITY_BODY,
+             {**fs, "universal-data-api-full-sync-start": "true"})
+        post(f"{plain}/datasets/fullsync/entities", [],
+             {**fs, "universal-data-api-full-sync-end": "true"})
+        post(f"{plain}/transactions",
+             {"@context": {"namespaces": {}}, "txn": _PARITY_BODY})
+        direct = S.WalIngest(store, "waldirect")
+        direct.append(_PARITY_BODY)
+        direct.flush()
+        direct.close()
+        pulled = J.HttpDatasetSource(
+            spark, f"http://127.0.0.1:{feed.server_address[1]}",
+            dataset="pulled", allow_network=True).read(since=0).collect()
+    finally:
+        plain_srv.stop()
+        wal_srv.stop()
+        feed.shutdown()
+        feed.server_close()
+    wire = spark.createDataFrame(
+        [(json.dumps(o),) for o in _PARITY_BODY], "json string")
+    parsed = uda.from_uda_json(wire, dataset="parsed").collect()
+
+    stored = {ds: store.log([ds]).collect()
+              for ds in ("plain", "walpost", "fullsync", "txn", "waldirect")}
+    for name, rows in [*stored.items(), ("pulled", pulled), ("parsed", parsed)]:
+        assert _payload(rows) == _PARITY_ROWS, name
+    # the WAL stamps its append order as seq; every other ingress keeps
+    # the wire seq (absent -> 0)
+    for name in ("plain", "fullsync", "txn"):
+        assert {r["seq"] for r in stored[name]} == {0}, name
+    assert {r["seq"] for r in pulled + parsed} == {0}
+    # absent recorded stays NULL until a commit stamps its tick
+    assert all(r["recorded"] is None for r in pulled + parsed)
+    assert all(r["recorded"] is not None for rows in stored.values() for r in rows)
