@@ -218,9 +218,9 @@ def parse_multi_source_dependencies(
     each chain into joins, then add implicit dependencies for every
     intermediate hop dataset, then dedup).
 
-    ``transform_code`` is a script string in either supported language
-    (base64 accepted); a script without a ``track_queries`` function
-    contributes nothing, like the reference (scheduler.go:755-757)."""
+    ``transform_code`` is a JavaScript string (base64 accepted); a
+    script without a ``track_queries`` function contributes nothing,
+    like the reference (scheduler.go:755-757)."""
     import json as _json
 
     deps: list[Dependency] = []
@@ -282,8 +282,8 @@ def parse_job_config(store: EntityStore, config: dict | str, *,
     MultiSource (explicit Dependencies + track_queries derivation from
     the transform Code), SampleSource, HttpDatasetSource.
     Sink Types: DatasetSink, DevNullSink, ConsoleSink, HttpDatasetSink.
-    Transform Types: JavascriptTransform (base64 or raw Code, JS or
-    Python — script.compile_script; optional engine extension
+    Transform Types: JavascriptTransform (base64 or raw JavaScript
+    Code — script.load_entry; optional engine extension
     ``LookupDatasets`` names the store datasets backing Query/FindById),
     HttpTransform (Url, TimeOut, SupportContext).
 
@@ -397,20 +397,13 @@ def _track_queries_chains(transform_code: str) -> list:
     """Run the transform source far enough to call its ``track_queries``
     function with a DependencyRegistry; returns the registered chains.
     Driver-side, compile-time — no Spark work."""
-    from datahub_spark import js as _js
     from datahub_spark import script as _script
+    from datahub_spark.namespaces import DEFAULT_NAMESPACES
 
-    code = _script.maybe_b64_decode(transform_code)
-    env = dict(_script.make_builtins(
-        __import__("datahub_spark.namespaces", fromlist=["DEFAULT_NAMESPACES"]
-                   ).DEFAULT_NAMESPACES))
-    if _js.looks_like_js(code):
-        fns = _js.run_program(code, host=env)
-        fn = fns.get("track_queries")
-    else:
-        exec(compile(code, "<track_queries>", "exec"), env)
-        fn = env.get("track_queries")
-    if not callable(fn):
+    fn = _script.load_entry(transform_code, "track_queries",
+                            _script.make_builtins(DEFAULT_NAMESPACES),
+                            required=False)
+    if fn is None:
         return []
     reg = DependencyRegistry()
     fn(reg)

@@ -17,9 +17,9 @@ Array.isArray, console.log).
 Why an interpreter and not a JS runtime dependency: no JS engine exists
 in this container or JVM-side, and the transform dialect is tiny — the
 scale-relevant execution model is unchanged (scripts run batch-at-a-time
-inside mapInPandas, script.py). Entities stay the SAME Python dicts the
-Python-script path uses ({ID, Properties, References, ...}), so the host
-vocabulary (script.make_builtins) is shared verbatim: JS member access /
+inside mapInPandas, script.py). Entities are plain Python dicts
+({ID, Properties, References, ...}), so the host vocabulary
+(script.make_builtins) binds verbatim: JS member access /
 subscripting reads and mutates those dicts directly, which is exactly how
 goja exposes Go maps to user code.
 
@@ -1893,10 +1893,3 @@ def run_program(code: str, host: dict | None = None) -> dict:
         interp.globals.declare(k, _wrap_host(v))
     return out
 
-
-def looks_like_js(code: str) -> bool:
-    """Heuristic language sniff for script sources: JS transform bodies
-    always use `function name(...) {` / brace-blocks; Python never does."""
-    return bool(re.search(r"\bfunction\s+[A-Za-z_$][\w$]*\s*\(", code)) or \
-        bool(re.search(r"=>\s*[{(]", code)) or \
-        bool(re.search(r"\bfor\s*\(.*\bof\b", code))

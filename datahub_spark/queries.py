@@ -582,9 +582,8 @@ def q_js_transform(spark, sf_dir):
     (transform.go:236-263) executed by the bundled interpreter
     (datahub_spark.js) against the shared host vocabulary, batch-at-a-
     time inside mapInPandas — a reference job's JavascriptTransform Code
-    block runs verbatim (script.compile_script sniffs the language and
-    decodes the base64 wire format). The Python dialect of the same
-    surface is covered by tests/test_script.py."""
+    block runs verbatim (script.load_entry decodes the base64 wire
+    format)."""
     import datahub_spark.script as SC
 
     code = """
@@ -1076,15 +1075,6 @@ def q_sample_select(spark, sf_dir):
         F.lit(None).cast("string").alias("lang"))
     return strat.unionByName(weighted).unionByName(split) \
         .unionByName(dsir)
-
-
-def q_dedup_exact(spark, sf_dir):
-    """Exact dedup: one hash-aggregate on the content digest. (Graded
-    standalone r1-r11; merged into dedup_pairs mode='exact' in r12 —
-    the merged arm plants shifted-id duplicate payloads so the group
-    join has real pairs to surface.)"""
-    docs = ingest.load_tables(spark, sf_dir)["documents"]
-    return DD.dedup_exact(docs)
 
 
 _SHINGLE_SQL = r"""
@@ -1579,36 +1569,6 @@ def q_entity_details(spark, sf_dir):
 
 # (stream_stateful folded into the stream_agg graded key in r11 —
 # see q_stream_agg's mode='stateful' leg)
-
-
-def q_dedup_clusters(spark, sf_dir):
-    """Duplicate-cluster resolution: connected components (iterative
-    DataFrame min-label propagation) over the MinHash+LSH candidate
-    graph — candidate pairs become transitive duplicate groups.
-    (Graded standalone r1-r12; merged into dedup_pairs mode='cluster'
-    in the r13 window rotation.)"""
-    docs = ingest.load_tables(spark, sf_dir)["documents"]
-    sig = DD.minhash_signature(docs, k=12, n=3)
-    pairs = DD.lsh_candidates(sig, bands=4, rows_per_band=3)
-    return DD.connected_components(pairs)
-
-
-def q_semantic_dedup(spark, sf_dir):
-    """(Merged into dedup_embedding mode='semdedup' in the r14 window
-    rotation to free the slot for warc_ingest — the narrow query stays
-    for tests/bench reuse.)
-
-    SemDeDup (Abbas et al. 2023): semantic near-duplicate pruning
-    via embedding k-means — cluster with the deterministic coarse
-    quantizer, then within each cluster drop vectors with cosine >= tau
-    to a lower-centroid-affinity clustermate (keep = lowest affinity,
-    the paper's diversity-preserving rule). Pair probe is a cluster-id
-    equi-join (quadratic bounded by cluster size BY DESIGN), removal
-    one left-semi EXISTS; exact fixed-point end to end, so clustering,
-    affinities, and keep flags all hash-match the SQL oracle."""
-    emb = ingest.load_tables(spark, sf_dir)["embeddings"]
-    return DD.semantic_dedup(emb, int(0.93 * 10 ** 14), n_clusters=16,
-                             lloyd_rounds=2, dim=64)
 
 
 @register(
@@ -2417,24 +2377,6 @@ _PACK_SQL = """
            CAST(GREATEST(s, seq*1000) - seq*1000 AS BIGINT) AS seq_off
     FROM e
     """
-
-
-def q_pack_sequences(spark, sf_dir):
-    """Sequence packing (§2 row 43x, operators/export.py:pack_sequences).
-    Graded standalone r9-r11; merged into export_shards mode='packed'
-    in r12 — the no-global-sort running sum is unchanged."""
-    docs = ingest.load_tables(spark, sf_dir)["documents"]
-    return EX.pack_sequences(docs, 1000, count_col="n_chars", partitions=7)
-
-
-def q_data_splits(spark, sf_dir):
-    """Leakage-safe train/val/test assignment (§2 row 43w,
-    operators/text.py:assign_splits). Graded standalone r9-r11;
-    merged into sample_select mode='split' in r12."""
-    docs = ingest.load_tables(spark, sf_dir)["documents"]
-    return TX.assign_splits(
-        docs, {"train": 0.8, "val": 0.1, "test": 0.1},
-        seed=7, method="md5").select("doc_id", "split")
 
 
 # (domain_stats merged into the corpus_frequency graded key in r12 —

@@ -5,19 +5,15 @@ point for the jobs engine.
 
 The reference accepts base64 ES6 defining ``transform_entities(entities)``
 and executes it per batch in a goja sandbox with a fixed built-in
-vocabulary (GetId/SetProperty/Query/...). This engine accepts BOTH
-languages through one entry point (``compile_script``):
-
-- **JavaScript** — the reference's native transform language, so
-  existing job configs run verbatim (base64 or raw source). Scripts run
-  on a bundled interpreter for the transform dialect
-  (datahub_spark.js; no JS engine exists in this container or JVM-side)
-  over the same dict entities the Python path uses — host vocabulary
-  shared, zero conversion.
-- **Python** — the engine-idiomatic language, same entity JSON shape
-  (``{ID, Recorded, IsDeleted, Properties, References}``,
-  entity.go/DOCUMENTATION.md:47-107) and the same built-in names with
-  the same signatures.
+vocabulary (GetId/SetProperty/Query/...). This engine runs the same
+JavaScript, raw or base64, so existing job configs run verbatim. Scripts
+run on a bundled interpreter for the transform dialect (datahub_spark.js;
+no JS runtime ships with Spark or pyspark) over dict entities
+(``{ID, Recorded, IsDeleted, Properties, References}``,
+entity.go/DOCUMENTATION.md:47-107). Every script source — transforms,
+query scripts, virtual datasets and ``track_queries`` — goes through one
+loader, ``load_entry``. Python code plugs in as a callable instead
+(``transforms.python_transform``).
 
 Execution model (the 100 TB design):
 - The script runs ONCE per Arrow batch inside ``mapInPandas`` — batch
@@ -38,8 +34,8 @@ Execution model (the 100 TB design):
   sequential counter (store.go:289) — deterministic everywhere, stable
   across runs.
 
-Scripts are trusted code, same trust level as a ``python_transform``
-callable or the reference's sandbox-with-host-functions.
+Scripts reach the host only through the built-in vocabulary, like the
+reference's goja sandbox, so a script posted over HTTP cannot run Python.
 """
 
 from __future__ import annotations
@@ -153,6 +149,16 @@ def make_builtins(namespaces: dict[str, str], index: dict | None = None,
     by_id = (index or {}).get("by_id", {})
     inverse = (index or {}).get("inverse", {})
     changes = (index or {}).get("changes", {})
+    scoped: dict = {}
+
+    def _scope(datasets):
+        # (by_id, inverse) over only the named datasets' change rows —
+        # what build_lookup_index over those datasets' logs holds
+        key = tuple(sorted(set(datasets)))
+        if key not in scoped:
+            scoped[key] = _latest_and_inverse(
+                e for ds in key for e in changes.get(ds, []))
+        return scoped[key]
 
     def _key(prefix, name):
         return f"{prefix}:{name}"
@@ -325,28 +331,31 @@ def make_builtins(namespaces: dict[str, str], index: dict | None = None,
         the reference returns open-world URIs the same way). Inverse:
         entities whose refs[predicate] contains the start id. A predicate
         of ``"*"`` (or None) traverses EVERY predicate, like the
-        reference's Via ``*`` (store.go ToRelatedFrom)."""
+        reference's Via ``*`` (store.go ToRelatedFrom). ``datasets``
+        scopes both the start entities and the related ones to those
+        datasets, like the served traversal."""
+        ids, edges = _scope(datasets) if datasets else (by_id, inverse)
         wildcard = predicate in (None, "*")
         out = []
         for start in starting_entities:
             if inverse_flag:
                 if wildcard:
                     hits = sorted(
-                        (p, src) for (p, tgt), srcs in inverse.items()
+                        (p, src) for (p, tgt), srcs in edges.items()
                         if tgt == start for src in srcs)
                 else:
                     hits = [(predicate, src)
-                            for src in inverse.get((predicate, start), [])]
+                            for src in edges.get((predicate, start), [])]
                 for p, src in hits:
-                    out.append([start, p, _copy(by_id.get(src))])
+                    out.append([start, p, _copy(ids.get(src))])
             else:
-                ent = by_id.get(start)
+                ent = ids.get(start)
                 for p, targets in sorted(
                         (ent or {}).get("References", {}).items()):
                     if not wildcard and p != predicate:
                         continue
                     for target in targets:
-                        hit = by_id.get(target)
+                        hit = ids.get(target)
                         out.append([
                             start, p,
                             _copy(hit) if hit is not None else {
@@ -450,41 +459,34 @@ def maybe_b64_decode(code: str) -> str:
         return code
 
 
+def load_entry(code: str, name: str, host: dict, required: bool = True):
+    """The one script loader: decode ``code`` (raw or base64), run it on
+    the bundled JS interpreter with ``host`` bound as globals, and return
+    its top-level function ``name``. Raises ValueError naming the JS
+    error (a parse error or a top-level throw) or the missing entry
+    point; an absent entry that is not ``required`` returns None."""
+    from datahub_spark import js as _js
+
+    try:
+        fn = _js.run_program(maybe_b64_decode(code), host=host).get(name)
+    except _js.JSError as exc:
+        raise ValueError(f"script does not load as JavaScript: {exc}") from exc
+    if fn is None and required:
+        raise ValueError(f"script must define function {name}")
+    return fn
+
+
 def compile_script(code: str, namespaces: dict[str, str] | None = None,
                    index: dict | None = None, log_sink: list | None = None,
                    txn_sink: list | None = None,
-                   query_result_sink: list | None = None,
-                   language: str = "auto"):
-    """Compile ``code`` with the built-in vocabulary injected and return
-    its ``transform_entities`` callable. Raises on syntax errors or a
-    missing entry point — validation happens driver-side, before any
-    task runs.
-
-    ``language``: "python", "js", or "auto" (sniff). JS sources — the
-    reference's native transform language — run on the bundled
-    interpreter (datahub_spark.js) against the SAME dict entities and
-    the SAME host vocabulary, so reference transforms run verbatim;
-    base64-encoded sources (the job-config wire format) are decoded
-    first in either language."""
-    from datahub_spark import js as _js
-
-    code = maybe_b64_decode(code)
-    env: dict = dict(make_builtins(namespaces or DEFAULT_NAMESPACES, index,
-                                   log_sink, txn_sink, query_result_sink))
-    if language == "auto":
-        language = "js" if _js.looks_like_js(code) else "python"
-    if language in ("js", "javascript"):
-        fns = _js.run_program(code, host=env)
-        fn = fns.get("transform_entities")
-        if fn is None:
-            raise ValueError(
-                "script must define transform_entities(entities)")
-        return fn
-    exec(compile(code, "<transform_entities>", "exec"), env)
-    fn = env.get("transform_entities")
-    if not callable(fn):
-        raise ValueError("script must define transform_entities(entities)")
-    return fn
+                   query_result_sink: list | None = None):
+    """Load ``code`` with the built-in vocabulary bound and return its
+    ``transform_entities`` callable. Raises ValueError on a script that
+    does not load or lacks the entry point — validation happens
+    driver-side, before any task runs."""
+    return load_entry(code, "transform_entities", make_builtins(
+        namespaces or DEFAULT_NAMESPACES, index, log_sink, txn_sink,
+        query_result_sink))
 
 
 # Hard cap on the lookup index: Query/FindById indexes are collected to
@@ -502,8 +504,7 @@ def build_lookup_index(*frames: DataFrame,
     transforms.enrich_via, which shuffles properly. Enforced: more than
     ``max_rows`` total rows raises instead of silently OOMing the driver
     (the limit+1 probe never materializes the oversized frame)."""
-    by_id: dict = {}
-    inverse: dict = {}
+    ents: list = []
     changes: dict = {}
     remaining = max_rows
     for df in frames:
@@ -519,24 +520,38 @@ def build_lookup_index(*frames: DataFrame,
         remaining -= len(collected)
         for row in collected:
             ent = _row_to_entity(row.asDict())
+            ents.append(ent)
             changes.setdefault(ent["Dataset"], []).append(ent)
-            prev = by_id.get(ent["ID"])
-            if prev is None or (ent["Recorded"] or 0, ent["Seq"] or 0) >= (
-                    (prev["Recorded"] or 0), (prev["Seq"] or 0)):
-                by_id[ent["ID"]] = ent
+    by_id, inverse = _latest_and_inverse(ents)
+    for ds in changes:
+        changes[ds].sort(key=lambda e: (*_version(e), e["ID"] or ""))
+    return {"by_id": by_id, "inverse": inverse, "changes": changes}
+
+
+def _version(ent: dict) -> tuple:
+    return (ent["Recorded"] or 0, ent["Seq"] or 0)
+
+
+def _latest_and_inverse(ents) -> tuple[dict, dict]:
+    """Latest version per id (a later-seen tie wins) and the inverse
+    edges {(predicate, target): sorted source ids} over those versions."""
+    by_id: dict = {}
+    for ent in ents:
+        prev = by_id.get(ent["ID"])
+        if prev is None or _version(ent) >= _version(prev):
+            by_id[ent["ID"]] = ent
+    inverse: dict = {}
     for ent in by_id.values():
         for pred, targets in ent["References"].items():
             for t in targets:
                 inverse.setdefault((pred, t), []).append(ent["ID"])
     for k in inverse:
         inverse[k].sort()  # deterministic result order
-    for ds in changes:
-        changes[ds].sort(key=lambda e: (e["Recorded"] or 0, e["Seq"] or 0, e["ID"] or ""))
-    return {"by_id": by_id, "inverse": inverse, "changes": changes}
+    return by_id, inverse
 
 
 # Per-worker-process compiled-script cache: tasks in the same Python
-# worker reuse the compiled entry point instead of re-exec'ing the
+# worker reuse the loaded entry point instead of re-running the
 # source per batch-iterator. Keyed by a CONTENT hash of
 # (code, namespaces, index) — repeat script_transform calls with the
 # same binding hit the same entry (a uuid-per-call key grew one
@@ -567,6 +582,8 @@ def _index_digest(code: str, ns: dict, index: dict | None) -> str:
     if index is not None:
         h.update(repr(sorted(index["by_id"].items())).encode())
         h.update(repr(sorted(index["inverse"].items())).encode())
+        h.update(repr(sorted(index["changes"].items(),
+                             key=lambda kv: repr(kv[0]))).encode())
     return h.hexdigest()
 
 
@@ -616,8 +633,8 @@ def script_transform(df: DataFrame, code: str, *,
 def make_script_transform(code: str, *, lookup: list[DataFrame] | None = None,
                           namespaces: dict[str, str] | None = None):
     """A jobs-engine Transform (DataFrame -> DataFrame callable) from a
-    script string (JavaScript — raw or base64, the reference job-config
-    wire format — or Python; see compile_script) — the analogue of a job
+    JavaScript string (raw or base64, the reference job-config wire
+    format; see load_entry) — the analogue of a job
     config's ``{"Type": "JavascriptTransform", "Code": ...}`` block.
     Validates the script immediately (driver-side), not at first job
     run. The returned callable carries ``may_stage_transactions`` so
@@ -642,29 +659,17 @@ def run_query_script(spark: SparkSession, code: str, *,
     """Driver-side script-query runner — the reference's javascript
     query endpoint (transform.go:561 ExecuteQuery; WriteQueryResult
     writes objects to the response stream). The script defines
-    ``do_query()`` (any JS/Python body) and calls WriteQueryResult(obj)
+    ``do_query()`` and calls WriteQueryResult(obj)
     per result; returns the written objects in order. Runs DRIVER-side
     against the broadcast lookup index — built from ``lookup`` frames or
     passed pre-built via ``index`` (query scripts are interactive,
     bounded-output by construction); set-oriented querying over big data
     belongs in datahub_spark.query / queries."""
-    from datahub_spark import js as _js
-
-    code = maybe_b64_decode(code)
     results: list = []
     if index is None:
         index = build_lookup_index(*lookup) if lookup else None
-    env: dict = dict(make_builtins(namespaces or DEFAULT_NAMESPACES, index,
-                                   query_result_sink=results))
-    if _js.looks_like_js(code):
-        fns = _js.run_program(code, host=env)
-        fn = fns.get(entry)
-    else:
-        exec(compile(code, f"<{entry}>", "exec"), env)
-        fn = env.get(entry)
-    if not callable(fn):
-        raise ValueError(f"script must define {entry}()")
-    fn()
+    load_entry(code, entry, make_builtins(
+        namespaces or DEFAULT_NAMESPACES, index, query_result_sink=results))()
     return results
 
 
@@ -672,19 +677,6 @@ def run_query_script(spark: SparkSession, code: str, *,
 # script-built virtual datasets (BuildEntities + Emit host contract,
 # transform.go:578-600)
 # --------------------------------------------------------------------------
-
-def is_js_code(code: str) -> bool:
-    """True when a (possibly base64-encoded) script body is JavaScript.
-
-    The SERVED virtual-dataset path must only ever run the sandboxed JS
-    interpreter — the Python ``exec`` fallback in ScriptVirtualSource is
-    for trusted in-process use and would be remote code execution if
-    reachable from a stored dataset config (the reference confines
-    virtual-dataset transforms to goja, virtualdataset.go)."""
-    from datahub_spark import js as _js
-
-    return _js.looks_like_js(maybe_b64_decode(code))
-
 
 class ScriptVirtualSource:
     """A virtual dataset whose pages are produced by a user script
@@ -714,25 +706,10 @@ class ScriptVirtualSource:
         self.code = code
         self.params = params or {}
         self.dataset = dataset
-        from datahub_spark import js as _js
-
-        code = maybe_b64_decode(code)
-        env: dict = dict(make_builtins(namespaces or DEFAULT_NAMESPACES))
+        env = make_builtins(namespaces or DEFAULT_NAMESPACES)
         self._emitted: list[dict] = []
         env["Emit"] = self._emitted.append
-        if _js.looks_like_js(code):
-            # the reference's native virtual-dataset language
-            # (DOCUMENTATION.md:288-325): the JS build_entities runs
-            # VERBATIM on the bundled interpreter with the same host
-            # vocabulary (incl. Emit) the transforms get
-            fns = _js.run_program(code, host=env)
-            fn = fns.get("build_entities")
-        else:
-            exec(compile(code, "<build_entities>", "exec"), env)
-            fn = env.get("build_entities")
-        if not callable(fn):
-            raise ValueError("script must define build_entities(params, since, limit)")
-        self._fn = fn
+        self._fn = load_entry(code, "build_entities", env)
         self.last_token: object = None
 
     def read(self, since: int = 0, limit: int | None = None) -> DataFrame:

@@ -889,16 +889,9 @@ class UdaServer:
         optional JSON body on the GET (the reference forwards any
         request JSON as the params argument); ``since`` is forwarded
         verbatim."""
-        from datahub_spark.script import ScriptVirtualSource, is_js_code
+        from datahub_spark.script import ScriptVirtualSource
 
         code = vcfg.get("Transform") or vcfg.get("transform") or ""
-        # Served transforms run ONLY on the sandboxed JS interpreter —
-        # the Python exec path in ScriptVirtualSource is for trusted
-        # in-process use and must not be reachable from a stored config
-        # (the reference confines these to goja, virtualdataset.go).
-        if not is_js_code(code):
-            return self._error(
-                rq, 400, "virtual dataset transform must be javascript")
         n = int(rq.headers.get("Content-Length", "0"))
         try:
             params = json.loads(rq.rfile.read(n).decode()) if n else {}
@@ -913,6 +906,9 @@ class UdaServer:
         try:
             src = ScriptVirtualSource(self.store.spark, code,
                                       params=params, dataset=ds)
+        except ValueError as exc:
+            return self._error(rq, 400, f"virtual dataset script: {exc}")
+        try:
             page = src.read(since, limit)
         except Exception as exc:
             return self._error(rq, 500, f"virtual dataset script: {exc}")
@@ -941,18 +937,17 @@ class UdaServer:
                     rq, 400, "invalid proxy configuration provided")
             extra["ProxyDatasetConfig"] = pc
         elif cfg.get("VirtualDatasetConfig") is not None:
-            from datahub_spark.script import is_js_code
+            from datahub_spark.script import ScriptVirtualSource
 
             vc = cfg["VirtualDatasetConfig"]
             code = vc.get("Transform") or vc.get("transform")
             if not code:
                 return self._error(
                     rq, 400, "invalid virtual dataset configuration provided")
-            # reject non-JS at create time too — the served read path
-            # only runs the sandboxed JS interpreter
-            if not is_js_code(code):
-                return self._error(
-                    rq, 400, "virtual dataset transform must be javascript")
+            try:  # a transform that does not load is refused at create
+                ScriptVirtualSource(self.store.spark, code)
+            except ValueError as exc:
+                return self._error(rq, 400, f"virtual dataset script: {exc}")
             extra["VirtualDatasetConfig"] = vc
         self.store.create_dataset(
             ds, public_namespaces=cfg.get("publicNamespaces"),
@@ -1144,8 +1139,11 @@ class UdaServer:
         if sched is None:
             return
         n = int(rq.headers.get("Content-Length", "0"))
-        cfg = json.loads(rq.rfile.read(n).decode())
-        job = sched.register_config(self.store, cfg)
+        try:
+            cfg = json.loads(rq.rfile.read(n).decode())
+            job = sched.register_config(self.store, cfg)
+        except ValueError as exc:  # malformed config or a script that does not load
+            return self._error(rq, 400, f"invalid job configuration: {exc}")
         self._job_configs[job.job_id] = cfg
         self._reply(rq, 201, {"id": job.job_id})
 
@@ -1272,7 +1270,7 @@ class UdaServer:
 
     # -- /query (queryhandler.go) -----------------------------------------
 
-    def _query_index(self, datasets: list[str] | None = None) -> dict:
+    def _query_index(self) -> dict:
         """Broadcast-style lookup index over the store's datasets for the
         graph-query endpoint — the analogue of the reference resolving
         queries against its local Badger store (queryhandler.go's
@@ -1281,14 +1279,10 @@ class UdaServer:
         construction; set-oriented querying over big data belongs in the
         engine's query operators, not an HTTP endpoint.
 
-        The whole-store index serves until the store's next commit;
-        ``datasets`` scopes an index to those datasets' logs, built per
-        call."""
+        The index serves until the store's next commit; a traversal
+        scoped by ``datasets`` reads the same index through ``Query``."""
         from datahub_spark import script
 
-        if datasets:
-            return script.build_lookup_index(
-                *[self.store.log([d]) for d in sorted(set(datasets))])
         built_at, index = self._index
         if built_at != self._index_gen:
             # a commit during the build advances the generation, so an
@@ -1327,10 +1321,13 @@ class UdaServer:
             from datahub_spark import script as SC
 
             q = json.loads(body)
-            results = SC.run_query_script(
-                None, q.get("query", ""),
-                namespaces=dict(self.nsmgr.context()),
-                index=self._query_index())
+            index = self._query_index()
+            try:
+                results = SC.run_query_script(
+                    None, q.get("query", ""),
+                    namespaces=dict(self.nsmgr.context()), index=index)
+            except ValueError as exc:
+                return self._error(rq, 400, f"query script: {exc}")
             return self._reply(rq, 200, results)
 
         q = json.loads(body)
@@ -1359,8 +1356,7 @@ class UdaServer:
             q = resume["q"]
             offset = resume["off"]
             limit = int(q.get("limit") or 0)
-        env = make_builtins(dict(self.nsmgr.context()),
-                            self._query_index(q.get("datasets")))
+        env = make_builtins(dict(self.nsmgr.context()), self._query_index())
         triples = env["Query"](q.get("startingEntities") or [],
                                q.get("predicate"),
                                bool(q.get("inverse", False)),

@@ -8,7 +8,6 @@ import pytest
 
 from datahub_spark.js import (
     JSError, JSThrown, UNDEFINED, js_to_string, run_program,
-    looks_like_js,
 )
 
 
@@ -395,11 +394,3 @@ def test_undefined_to_host_becomes_none():
     run_program("function f() { Take(undefined); } ", host)["f"]()
     assert got == [None]
 
-
-# -- language sniff --------------------------------------------------------
-
-def test_looks_like_js():
-    assert looks_like_js("function transform_entities(entities) { }")
-    assert looks_like_js("const f = (e) => { return e; }")
-    assert not looks_like_js(
-        "def transform_entities(entities):\n    return entities")

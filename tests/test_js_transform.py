@@ -1,8 +1,8 @@
 """JavaScript transform conformance: the reference's OWN transform JS
 (verbatim from internal/jobs/transform_test.go, pipeline_test.go,
 transform.go helper functions) executed through this engine's
-script-transform surface (script.compile_script language=auto ->
-datahub_spark.js interpreter -> mapInPandas batches)."""
+script-transform surface (script.load_entry -> datahub_spark.js
+interpreter -> mapInPandas batches)."""
 
 from __future__ import annotations
 
@@ -352,13 +352,39 @@ def test_paged_query_stop_and_resume(spark):
     assert props["people:contAfterDrain"] == "cont:"
 
 
-def test_python_scripts_still_work(spark, people):
-    # the Python dialect keeps working through the same auto entry
+def test_python_scripts_are_rejected(spark, people):
+    # JavaScript is the only script language: a Python body fails to
+    # load, naming the JS parse error, before any task runs
     code = """
 def transform_entities(entities):
     for e in entities:
         SetProperty(e, "p", "lang", "python")
     return entities
 """
+    with pytest.raises(ValueError, match="does not load as JavaScript"):
+        SC.script_transform(people, code)
+
+
+def test_function_expression_entry_points(spark, people):
+    # `var name = function (...) {...}` binds an entry point like a
+    # function declaration does, on every loader
+    from datahub_spark.jobs import (
+        Dependency, Join, parse_multi_source_dependencies,
+    )
+
+    code = """
+var transform_entities = function (entities) {
+    for (var i = 0; i < entities.length; i++) {
+        SetProperty(entities[i], "p", "anon", "yes");
+    }
+    return entities;
+};
+var do_query = function () { WriteQueryResult({ok: 1}); };
+var track_queries = function (reg) { reg.hop("address", "home"); };
+"""
     out = SC.script_transform(people, code).collect()
-    assert all(r["props"]["p:lang"] == "python" for r in out)
+    assert sorted(r["props"]["p:anon"] for r in out) == ["yes", "yes"]
+    assert SC.run_query_script(spark, code) == [{"ok": 1}]
+    assert parse_multi_source_dependencies("person", None, code) == [
+        Dependency("address", [Join("person", "home", True)]),
+    ]

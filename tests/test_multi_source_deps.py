@@ -89,19 +89,6 @@ def test_script_without_track_queries_contributes_nothing():
     assert parse_multi_source_dependencies("person", None, code) == []
 
 
-def test_python_transform_can_register_too():
-    code = """
-def transform_entities(entities):
-    return entities
-
-def track_queries(reg):
-    reg.hop("address", "home")
-"""
-    assert parse_multi_source_dependencies("person", None, code) == [
-        Dependency("address", [Join("person", "home", True)]),
-    ]
-
-
 def test_base64_transform_code_accepted():
     import base64
 

@@ -136,7 +136,7 @@ def test_script_identity_roundtrips_arbitrary_entities(spark, rows):
 
     df = spark.createDataFrame(
         [(i, r, s, d, p, f, "ds") for (i, r, s, d, p, f) in rows], ENTITY_SCHEMA)
-    out = SC.script_transform(df, "def transform_entities(e):\n    return e\n")
+    out = SC.script_transform(df, "function transform_entities(e) { return e; }")
     got = {r["id"]: r for r in out.collect()}
     assert len(got) == len(rows)
     for (i, r, s, d, p, f) in rows:

@@ -33,13 +33,15 @@ def nations(spark):
 def test_property_ops_match_reference_helpers(spark, people):
     # SetProperty/RenameProperty/RemoveProperty — transform.go:46-129
     code = """
-def transform_entities(entities):
-    for e in entities:
-        SetProperty(e, "p", "upper", ToString(GetProperty(e, "p", "name", "")).upper())
-        RenameProperty(e, "p", "name", "p", "fullname")
-        RemoveProperty(e, "p", "tmp")
-        SetProperty(e, "p", "missing", GetProperty(e, "p", "nope", "dflt"))
-    return entities
+function transform_entities(entities) {
+    for (var e of entities) {
+        SetProperty(e, "p", "upper", ToString(GetProperty(e, "p", "name", "")).toUpperCase());
+        RenameProperty(e, "p", "name", "p", "fullname");
+        RemoveProperty(e, "p", "tmp");
+        SetProperty(e, "p", "missing", GetProperty(e, "p", "nope", "dflt"));
+    }
+    return entities;
+}
 """
     out = {r["id"]: r["props"] for r in SC.script_transform(people, code).collect()}
     assert out["p:1"] == {"p:upper": "ALICE", "p:fullname": "alice", "p:missing": "dflt"}
@@ -49,12 +51,14 @@ def transform_entities(entities):
 
 def test_refs_deleted_and_id_ops(spark, people):
     code = """
-def transform_entities(entities):
-    for e in entities:
-        AddReference(e, "p", "seen", [PrefixField("x", "1")])
-        SetDeleted(e, GetId(e) == "p:2")
-        SetId(e, GetId(e) + ":v2")
-    return entities
+function transform_entities(entities) {
+    for (var e of entities) {
+        AddReference(e, "p", "seen", [PrefixField("x", "1")]);
+        SetDeleted(e, GetId(e) == "p:2");
+        SetId(e, GetId(e) + ":v2");
+    }
+    return entities;
+}
 """
     rows = {r["id"]: r for r in SC.script_transform(people, code).collect()}
     assert rows["p:1:v2"]["refs"]["p:seen"] == ["x:1"]
@@ -64,18 +68,21 @@ def transform_entities(entities):
 def test_emit_and_drop_change_batch_size(spark, people):
     # returned list IS the batch: drop bob, emit a derived entity per row
     code = """
-def transform_entities(entities):
-    out = []
-    for e in entities:
-        if GetProperty(e, "p", "name") == "bob":
-            continue
-        out.append(e)
-        d = NewEntity()
-        SetId(d, "derived:" + GetId(e))
-        SetProperty(d, "p", "src", GetId(e))
-        d["Dataset"] = "derived"
-        out.append(d)
-    return out
+function transform_entities(entities) {
+    var out = [];
+    for (var e of entities) {
+        if (GetProperty(e, "p", "name") == "bob") {
+            continue;
+        }
+        out.push(e);
+        var d = NewEntity();
+        SetId(d, "derived:" + GetId(e));
+        SetProperty(d, "p", "src", GetId(e));
+        d["Dataset"] = "derived";
+        out.push(d);
+    }
+    return out;
+}
 """
     rows = SC.script_transform(people, code).collect()
     ids = sorted(r["id"] for r in rows)
@@ -87,13 +94,16 @@ def transform_entities(entities):
 def test_query_and_findbyid_via_broadcast_lookup(spark, people, nations):
     # the documented enrichment pattern (DOCUMENTATION.md:691-706)
     code = """
-def transform_entities(entities):
-    for e in entities:
-        for (start, pred, nat) in Query([GetId(e)], "p:nation", False):
-            SetProperty(e, "p", "nation_name", GetProperty(nat, "p", "name"))
-        direct = FindById("n:1")
-        SetProperty(e, "p", "via_find", GetProperty(direct, "p", "name"))
-    return entities
+function transform_entities(entities) {
+    for (var e of entities) {
+        for (var [start, pred, nat] of Query([GetId(e)], "p:nation", false)) {
+            SetProperty(e, "p", "nation_name", GetProperty(nat, "p", "name"));
+        }
+        var direct = FindById("n:1");
+        SetProperty(e, "p", "via_find", GetProperty(direct, "p", "name"));
+    }
+    return entities;
+}
 """
     out = {r["id"]: r["props"] for r in
            SC.script_transform(people, code, lookup=[people, nations]).collect()}
@@ -104,13 +114,16 @@ def transform_entities(entities):
 
 def test_inverse_query(spark, people, nations):
     code = """
-def transform_entities(entities):
-    for e in entities:
-        hits = Query([GetId(e)], "p:nation", True)
-        SetProperty(e, "p", "pop", ToString(len(hits)))
-        if hits:
-            SetProperty(e, "p", "first", GetId(hits[0][2]))
-    return entities
+function transform_entities(entities) {
+    for (var e of entities) {
+        var hits = Query([GetId(e)], "p:nation", true);
+        SetProperty(e, "p", "pop", ToString(hits.length));
+        if (hits.length > 0) {
+            SetProperty(e, "p", "first", GetId(hits[0][2]));
+        }
+    }
+    return entities;
+}
 """
     out = {r["id"]: r["props"] for r in
            SC.script_transform(nations, code, lookup=[people, nations]).collect()}
@@ -122,13 +135,15 @@ def test_namespace_builtins_deterministic(spark, people):
     # executor/run (divergence from the reference's sequential counter is
     # documented in script.py)
     code = """
-def transform_entities(entities):
-    known = GetNamespacePrefix("http://example.io/schema/")
-    new = AssertNamespacePrefix("http://other.example/x/")
-    for e in entities:
-        SetProperty(e, known, "ns1", known)
-        SetProperty(e, "p", "ns2", new)
-    return entities
+function transform_entities(entities) {
+    var known = GetNamespacePrefix("http://example.io/schema/");
+    var fresh = AssertNamespacePrefix("http://other.example/x/");
+    for (var e of entities) {
+        SetProperty(e, known, "ns1", known);
+        SetProperty(e, "p", "ns2", fresh);
+    }
+    return entities;
+}
 """
     a = {r["id"]: r["props"]["p:ns2"]
          for r in SC.script_transform(people.repartition(2), code).collect()}
@@ -139,10 +154,10 @@ def transform_entities(entities):
 
 
 def test_bad_scripts_fail_driver_side(spark, people):
-    with pytest.raises(SyntaxError):
-        SC.script_transform(people, "def transform_entities(e) return e")
+    with pytest.raises(ValueError, match="does not load as JavaScript"):
+        SC.script_transform(people, "function transform_entities(e) return e")
     with pytest.raises(ValueError, match="transform_entities"):
-        SC.script_transform(people, "x = 1")
+        SC.script_transform(people, "var x = 1;")
 
 
 def test_script_transform_in_job_pipeline(spark, tmp_path, people):
@@ -154,10 +169,12 @@ def test_script_transform_in_job_pipeline(spark, tmp_path, people):
     es = EntityStore(spark, str(tmp_path / "store"))
     es.store_entities("people", people.drop("dataset"))
     code = """
-def transform_entities(entities):
-    for e in entities:
-        SetProperty(e, "p", "greeting", "hi " + ToString(GetProperty(e, "p", "name", "")))
-    return entities
+function transform_entities(entities) {
+    for (var e of entities) {
+        SetProperty(e, "p", "greeting", "hi " + ToString(GetProperty(e, "p", "name", "")));
+    }
+    return entities;
+}
 """
     job = J.Job("greet", J.DatasetSource(es, "people"),
                 J.DatasetSink(es, "greeted"),
@@ -170,29 +187,32 @@ def transform_entities(entities):
 
 def test_make_script_transform_validates_eagerly(spark):
     with pytest.raises(ValueError, match="transform_entities"):
-        SC.make_script_transform("y = 2")
+        SC.make_script_transform("var y = 2;")
 
 
 def test_script_virtual_source_pages_with_emit_and_token(spark, tmp_path):
     # BuildEntities/Emit host contract (transform.go:578-600): the script
     # emits a page after `since` and returns the next continuation token
     code = """
-def build_entities(params, since, limit):
-    n = params["n"]
-    emitted = 0
-    last = since
-    for i in range(since, n):
-        if limit is not None and emitted >= limit:
-            break
-        e = NewEntity()
-        SetId(e, PrefixField("v", i))
-        SetProperty(e, "p", "i", ToString(i))
-        e["Recorded"] = i + 1
-        e["Seq"] = 0
-        Emit(e)
-        emitted += 1
-        last = i + 1
-    return last
+function build_entities(params, since, limit) {
+    var n = params["n"];
+    var emitted = 0;
+    var last = since;
+    for (var i = since; i < n; i++) {
+        if (limit !== null && emitted >= limit) {
+            break;
+        }
+        var e = NewEntity();
+        SetId(e, PrefixField("v", i));
+        SetProperty(e, "p", "i", ToString(i));
+        e["Recorded"] = i + 1;
+        e["Seq"] = 0;
+        Emit(e);
+        emitted += 1;
+        last = i + 1;
+    }
+    return last;
+}
 """
     src = SC.ScriptVirtualSource(spark, code, params={"n": 7}, dataset="virt")
     page1 = src.read(since=0, limit=3).collect()
@@ -218,7 +238,7 @@ def build_entities(params, since, limit):
     assert es.log(["virt"]).count() == 7  # no re-emission
 
     with pytest.raises(ValueError, match="build_entities"):
-        SC.ScriptVirtualSource(spark, "x=1")
+        SC.ScriptVirtualSource(spark, "var x = 1;")
 
 
 def test_get_dataset_changes_and_latest_wins_lookup(spark):
@@ -231,14 +251,16 @@ def test_get_dataset_changes_and_latest_wins_lookup(spark):
     ])
     probe = _entities(spark, [("q:1", 1, 0, False, None, None, "probe")])
     code = """
-def transform_entities(entities):
-    for e in entities:
-        SetProperty(e, "p", "latest", GetProperty(FindById("x:1"), "p", "v"))
-        ch = GetDatasetChanges("dim", since=1)
-        SetProperty(e, "p", "n_changes", ToString(len(ch)))
-        SetProperty(e, "p", "first_change", GetId(ch[0]))
-        SetProperty(e, "p", "limited", ToString(len(GetDatasetChanges("dim", 0, 2))))
-    return entities
+function transform_entities(entities) {
+    for (var e of entities) {
+        SetProperty(e, "p", "latest", GetProperty(FindById("x:1"), "p", "v"));
+        var ch = GetDatasetChanges("dim", 1);
+        SetProperty(e, "p", "n_changes", ToString(ch.length));
+        SetProperty(e, "p", "first_change", GetId(ch[0]));
+        SetProperty(e, "p", "limited", ToString(GetDatasetChanges("dim", 0, 2).length));
+    }
+    return entities;
+}
 """
     (row,) = SC.script_transform(probe, code, lookup=[log]).collect()
     assert row["props"] == {"p:latest": "new", "p:n_changes": "2",
@@ -249,16 +271,18 @@ def test_paged_query_callback_contract(spark, people, nations):
     # transform.go:462-534 PagedQuery(query, pageSize, forEach): pages go
     # to the callback; truthy return continues; fully drained returns []
     code = """
-def transform_entities(entities):
-    for e in entities:
-        pages = []
-        r = PagedQuery({"StartURIs": [GetId(e)], "Via": "p:nation",
-                        "Inverse": False}, 5,
-                       lambda ts: pages.append(ts) or True)
-        SetProperty(e, "p", "via_paged", GetProperty(pages[0][0][2], "p", "name"))
-        SetProperty(e, "p", "n_pages", ToString(len(pages)))
-        SetProperty(e, "p", "cont_len", ToString(len(r)))
-    return entities
+function transform_entities(entities) {
+    for (var e of entities) {
+        var pages = [];
+        var r = PagedQuery({"StartURIs": [GetId(e)], "Via": "p:nation",
+                            "Inverse": false}, 5,
+                           function (ts) { pages.push(ts); return true; });
+        SetProperty(e, "p", "via_paged", GetProperty(pages[0][0][2], "p", "name"));
+        SetProperty(e, "p", "n_pages", ToString(pages.length));
+        SetProperty(e, "p", "cont_len", ToString(r.length));
+    }
+    return entities;
+}
 """
     out = {r["id"]: r["props"] for r in
            SC.script_transform(people, code, lookup=[people, nations]).collect()}
@@ -287,7 +311,7 @@ def test_lookup_index_row_cap_raises_with_pointer(spark, people):
 def test_fn_cache_is_content_keyed_and_bounded(spark, people):
     # same (code, ns, index) binding -> same cache key (repeat calls
     # reuse the worker-side compiled env instead of growing the cache)
-    code = "def transform_entities(es):\n    return es\n"
+    code = "function transform_entities(es) { return es; }\n"
     k1 = SC._index_digest(code, {"p": "http://a/"}, None)
     k2 = SC._index_digest(code, {"p": "http://a/"}, None)
     k3 = SC._index_digest(code + " ", {"p": "http://a/"}, None)
@@ -299,3 +323,38 @@ def test_fn_cache_is_content_keyed_and_bounded(spark, people):
     assert len(SC._FN_CACHE) == SC._FN_CACHE_MAX
     assert "key0" not in SC._FN_CACHE
     SC._FN_CACHE.clear()
+
+
+def test_fn_cache_key_covers_dataset_changes():
+    # a scoped Query and GetDatasetChanges read the per-dataset change
+    # rows, so two indexes that differ only there must not share a key
+    ent = {"ID": "x:1", "Recorded": 2, "Seq": 0, "IsDeleted": False,
+           "Properties": {}, "References": {}, "Dataset": "a"}
+    old = dict(ent, Recorded=1)
+    one = {"by_id": {"x:1": ent}, "inverse": {}, "changes": {"a": [ent]}}
+    two = {"by_id": {"x:1": ent}, "inverse": {}, "changes": {"a": [old, ent]}}
+    code = "function transform_entities(es) { return es; }"
+    assert SC._index_digest(code, {}, one) != SC._index_digest(code, {}, two)
+
+
+def test_library_never_executes_python_source():
+    """Scripts are JavaScript only: no module under datahub_spark calls
+    the builtin exec, eval or compile (interpreter methods such as
+    ``Interpreter.exec`` and ``re.compile`` are attribute calls)."""
+    import ast
+    from pathlib import Path
+
+    root = Path(SC.__file__).parent
+    banned = {"exec", "eval", "compile"}
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            if isinstance(f, ast.Name) and f.id in banned or (
+                    isinstance(f, ast.Attribute) and f.attr in banned
+                    and isinstance(f.value, ast.Name)
+                    and f.value.id == "builtins"):
+                hits.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert hits == []

@@ -1150,3 +1150,122 @@ def test_query_traversal_honors_datasets(spark, tmp_path):
         assert [t[2] for t in _triples(body)] == ["p:1"]
     finally:
         srv.stop()
+
+
+def test_python_script_sources_are_400_and_never_run(spark, tmp_path):
+    """Scripts are JavaScript only: a Python source sent to /query, to
+    POST /jobs or as a virtual-dataset transform is a 400 naming the JS
+    parse error, and none of its Python runs."""
+    import base64
+
+    canary = tmp_path / "canary"
+    py = (f"import os\nopen({str(canary)!r}, 'w').write('ran')\n"
+          "def {entry}(*args):\n    return 0\n")
+
+    def b64(src):
+        return base64.b64encode(src.encode()).decode()
+
+    def named_parse_error(code, body):
+        return code == 400 and "unexpected token" in body["message"]
+
+    store = S.EntityStore(spark, str(tmp_path / "store"))
+    store.create_dataset("stored", config={"VirtualDatasetConfig": {
+        "Transform": b64(py.replace("{entry}", "build_entities"))}})
+    srv = UdaServer(store, scheduler=J.Scheduler(
+        J.JobState(str(tmp_path / "state.json"))))
+    base = srv.start()
+    try:
+        assert named_parse_error(*_post(
+            f"{base}/query", {"query": py.replace("{entry}", "do_query")},
+            headers={"Content-Type": "application/x-javascript-query"}))
+        assert named_parse_error(*_post(f"{base}/jobs", {
+            "id": "py-job",
+            "source": {"Type": "DatasetSource", "Name": "stored"},
+            "transform": {"Type": "JavascriptTransform", "Code": b64(
+                py.replace("{entry}", "transform_entities"))},
+            "sink": {"Type": "DevNullSink"}}))
+        assert named_parse_error(*_post(f"{base}/datasets/vx", {
+            "VirtualDatasetConfig": {"Transform": b64(
+                py.replace("{entry}", "build_entities"))}}))
+        try:
+            urllib.request.urlopen(f"{base}/datasets/stored/entities", timeout=30)
+            raise AssertionError("stored Python transform was served")
+        except urllib.error.HTTPError as exc:
+            assert named_parse_error(exc.code, json.loads(exc.read().decode()))
+    finally:
+        srv.stop()
+    assert not canary.exists()
+
+
+def test_script_query_scope_matches_served_traversal(spark, tmp_path):
+    """Query(..., datasets) inside a JS do_query and a JS transform
+    answers like the served scoped traversal, on the two-dataset
+    fixture of test_query_traversal_honors_datasets."""
+    import datahub_spark.script as SC
+
+    store = S.EntityStore(spark, str(tmp_path / "scoped"))
+    store.store_entities("people", _entities(spark, [
+        ("p:1", None, 0, False, {"p:name": "ann"}, {"p:at": ["o:1"]}, None),
+        ("p:2", None, 1, False, {"p:name": "bob"}, {"p:at": ["o:2"]}, None),
+    ]).drop("dataset"))
+    store.store_entities("orgs", _entities(spark, [
+        ("o:1", None, 0, False, {"p:name": "acme"}, None, None),
+        ("o:2", None, 1, False, {"p:name": "beta"}, {"p:at": ["o:1"]}, None),
+    ]).drop("dataset"))
+    cases = [(start, inverse, scope)
+             for start, inverse in (("o:1", True), ("p:1", False), ("o:2", False))
+             for scope in (None, ["people"], ["orgs"], ["people", "orgs"])]
+
+    def as_triples(hits):
+        return _triples([None, [[s, p, {"id": i, "props": props}]
+                                for s, p, i, props in hits]])
+
+    transform = """
+function transform_entities(entities) {
+    for (var e of entities) {
+        var hits = [];
+        for (var t of Query([GetProperty(e, "q", "start")], "p:at",
+                            GetProperty(e, "q", "inverse") == "1",
+                            JSON.parse(GetProperty(e, "q", "scope")))) {
+            hits.push([t[0], t[1], GetId(t[2]), t[2].Properties]);
+        }
+        SetProperty(e, "q", "hits", JSON.stringify(hits));
+    }
+    return entities;
+}"""
+    probes = _entities(spark, [
+        (f"q:{n}", 1, 0, False, {"q:start": start, "q:inverse": str(int(inverse)),
+                                 "q:scope": json.dumps(scope)}, None, "probe")
+        for n, (start, inverse, scope) in enumerate(cases)])
+    by_transform = {
+        r["id"]: as_triples(json.loads(r["props"]["q:hits"]))
+        for r in SC.script_transform(probes, transform,
+                                     lookup=[store.log()]).collect()}
+
+    srv = UdaServer(store)
+    base = srv.start()
+    try:
+        for n, (start, inverse, scope) in enumerate(cases):
+            req = {"startingEntities": [start], "predicate": "p:at",
+                   "inverse": inverse}
+            if scope:
+                req["datasets"] = scope
+            code, body = _post(f"{base}/query", req)
+            assert code == 200
+            served = _triples(body)
+            do_query = f"""function do_query() {{
+                for (var t of Query([{json.dumps(start)}], "p:at",
+                                    {json.dumps(inverse)}, {json.dumps(scope)})) {{
+                    WriteQueryResult([t[0], t[1], GetId(t[2]), t[2].Properties]);
+                }}
+            }}"""
+            code, hits = _post(
+                f"{base}/query", {"query": do_query},
+                headers={"Content-Type": "application/x-javascript-query"})
+            assert code == 200
+            assert as_triples(hits) == served, (start, inverse, scope)
+            assert by_transform[f"q:{n}"] == served, (start, inverse, scope)
+        # the scope changes the answer: o:2's edge lives in orgs
+        assert [t[2] for t in by_transform["q:1"]] == ["p:1"]
+    finally:
+        srv.stop()
