@@ -32,9 +32,11 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from datahub_spark import lifetime as LT
 from datahub_spark import uda
+from datahub_spark.session import local_frame
 from datahub_spark.store import EntityStore, changes, latest
 
 Transform = Callable[[DataFrame], DataFrame]
@@ -441,6 +443,9 @@ class SampleSource:
         )
 
 
+_JSON_SCHEMA = T.StructType([T.StructField("json", T.StringType())])
+
+
 class HttpDatasetSource:
     """jobs/source HttpDatasetSource: reads a remote dataset's UDA
     /changes feed (internal/jobs/source/http_dataset_source.go:1-182).
@@ -506,7 +511,7 @@ class HttpDatasetSource:
                 break  # no continuation advancement: feed drained
             token = next_token
         self._watermark = max_recorded
-        json_df = self.spark.createDataFrame([(o,) for o in objs], "json string")
+        json_df = local_frame(self.spark, [(o,) for o in objs], _JSON_SCHEMA)
         return uda.from_uda_json(json_df, self.dataset)
 
     def current_watermark(self) -> int:

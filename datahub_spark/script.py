@@ -54,6 +54,7 @@ from pyspark.sql import types as T
 
 from datahub_spark.model import ENTITY_COLUMNS, ENTITY_SCHEMA
 from datahub_spark.namespaces import DEFAULT_NAMESPACES
+from datahub_spark.session import local_frame
 
 # script output schema: entity columns, all nullable — NewEntity rows
 # carry NULL id-until-SetId and NULL (recorded, seq), which the sink
@@ -719,10 +720,9 @@ class ScriptVirtualSource:
         for r in rows:
             if r["dataset"] is None:
                 r["dataset"] = self.dataset
-        df = self.spark.createDataFrame(
-            [tuple(r[c] for c in ENTITY_COLUMNS) for r in rows],
+        return local_frame(
+            self.spark, [tuple(r[c] for c in ENTITY_COLUMNS) for r in rows],
             SCRIPT_OUTPUT_SCHEMA)
-        return df
 
     def current_watermark(self) -> int:
         """Integer continuation for the jobs engine (JobState tokens are

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from datahub_spark import store as S
 from datahub_spark import uda
 from datahub_spark.namespaces import NamespaceManager
+from datahub_spark.session import local_frame
 
 
 # one element may legitimately be large (a fat props map), but a parser
@@ -1262,8 +1263,8 @@ class UdaServer:
             except ValueError as exc:
                 return self._error(rq, 400, f"malformed entity batch: {exc}")
             if rows:
-                dataset_entities[ds] = self.store.spark.createDataFrame(
-                    rows, uda.ROW_SCHEMA)
+                dataset_entities[ds] = local_frame(
+                    self.store.spark, rows, uda.ROW_SCHEMA)
         if dataset_entities:
             self.store.execute_transaction(dataset_entities)
         self._reply(rq, 200, {})
@@ -1453,7 +1454,7 @@ class UdaServer:
                     rows = list(uda.decode_entities(objs))
                     if not rows:
                         continue
-                    chunk = self.store.spark.createDataFrame(rows, uda.ROW_SCHEMA)
+                    chunk = local_frame(self.store.spark, rows, uda.ROW_SCHEMA)
                     if session is not None:
                         session.append(chunk)
                     else:

@@ -4,13 +4,16 @@ Defaults chosen for the local[32] test harness but expressed so the same
 config is sane on a 1000-executor cluster: AQE on (runtime re-planning,
 skew-join handling, partition coalescing), broadcast threshold generous
 enough for dimension tables, Arrow enabled for the few pandas-UDF paths.
+``local_frame`` turns rows the driver holds into a LocalRelation.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 def get_spark(app_name: str = "datahub-spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -97,3 +100,33 @@ def get_spark(app_name: str = "datahub-spark", shuffle_partitions: int | None = 
     if frac:
         builder = builder.config("spark.memory.fraction", frac)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: list, schema: T.StructType) -> DataFrame:
+    """A list of rows held by the driver (tuples in ``schema`` field
+    order) -> a DataFrame that plans as a ``LocalRelation``.
+
+    The rows cross to the JVM once, as a ``pyarrow.Table`` typed by
+    ``schema``, so no Python worker runs for them; a
+    ``createDataFrame(rows, schema)`` frame is a pickled RDD that every
+    stage reading it evaluates in Python workers.
+
+    Arrow reads a NULL map whose values are nested (arrays, maps,
+    structs) back as an empty map, so such a NULL raises ValueError
+    naming the column instead of changing the row."""
+    # imported here: Python workers import the modules that import this
+    # one, and a worker without Arrow batches should not load pyarrow
+    import pyarrow as pa
+
+    arrow_schema = to_arrow_schema(schema)
+    columns = [pa.array([r[i] for r in rows], type=f.type)
+               for i, f in enumerate(arrow_schema)]
+    for field, column in zip(schema.fields, columns):
+        dt = field.dataType
+        if (isinstance(dt, T.MapType) and not isinstance(dt.valueType, T.AtomicType)
+                and column.null_count):
+            raise ValueError(
+                f"column {field.name!r}: a NULL {dt.simpleString()} would "
+                "read back as an empty map; pass {} instead")
+    table = pa.Table.from_arrays(columns, schema=arrow_schema)
+    return spark.createDataFrame(table, schema=schema)

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from datahub_spark import uda
 from datahub_spark.model import ENTITY_COLUMNS, ENTITY_SCHEMA
+from datahub_spark.session import local_frame
 
 # per-store-root in-process locks (threads sharing a driver); see
 # EntityStore._mutate_meta
@@ -572,9 +573,9 @@ class EntityStore:
             # converts the semi-join to broadcast when the batch id set
             # is small (the common incremental case) and keeps a shuffle
             # join for bulk loads where broadcasting the batch would be
-            # the mistake.
-            batch_ids = df.select("id").distinct()
-            scoped = self.log([dataset]).join(batch_ids, "id", "left_semi")
+            # the mistake. A semi-join emits each log row at most once,
+            # so a batch repeating an id needs no distinct first.
+            scoped = self.log([dataset]).join(df.select("id"), "id", "left_semi")
             current = latest(scoped, include_deleted=True).select(
                 "id", payload_digest().alias("_cur")
             )
@@ -676,7 +677,7 @@ class EntityStore:
                                "deleted": False,
                                "cfg": meta["datasets"][name]})
         rows = [_dataset_event_row(ev, i) for i, ev in enumerate(events)]
-        return self.spark.createDataFrame(rows, ENTITY_SCHEMA)
+        return local_frame(self.spark, rows, ENTITY_SCHEMA)
 
     def log(self, datasets: list[str] | None = None) -> DataFrame:
         # the meta-dataset is served from the registry's event list when

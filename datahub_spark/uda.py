@@ -22,7 +22,9 @@ responses); ``from_uda_json`` applies them in the JVM to a JSON-string
 column (``HttpDatasetSource``, ``ProxyDataset``). The two agree except
 on floats that Java prints in exponent form (below 1e-3, from 1e7 up):
 ``1e20`` becomes ``"1.0E20"`` through Spark and ``"1e+20"`` through
-Python ``json``. ``to_uda_json`` encodes (JVM ``to_json``).
+Python ``json``. ``to_uda_json`` encodes (JVM ``to_json``). Decoded
+rows become a frame through ``session.local_frame``: a LocalRelation
+built from an Arrow table, with no Python worker.
 """
 
 from __future__ import annotations

@@ -213,6 +213,25 @@ def test_store_entities_skips_unchanged(spark, tmp_path):
     assert es.log(["d"]).filter(F.col("id") == "x").count() == 2
 
 
+def test_store_entities_batch_repeating_an_id(spark, tmp_path):
+    """Each row of a batch that repeats an id is compared with the id's
+    one current version: unchanged copies drop, every changed copy is
+    appended, whatever the id's version history."""
+    schema = "id string, deleted boolean, props map<string,string>, refs map<string,array<string>>"
+    es = S.EntityStore(spark, str(tmp_path / "store"))
+    es.store_entities("d", spark.createDataFrame(
+        [("x", False, {"a": "0"}, {}), ("y", False, {"b": "2"}, {})], schema))
+    es.store_entities("d", spark.createDataFrame([("x", False, {"a": "1"}, {})], schema))
+    tick = es.store_entities("d", spark.createDataFrame(
+        [("x", False, {"a": "1"}, {}), ("x", False, {"a": "9"}, {}),
+         ("x", False, {"a": "9"}, {}), ("y", False, {"b": "2"}, {}),
+         ("y", False, {"b": "3"}, {})], schema))
+    added = es.log(["d"]).filter(F.col("recorded") == tick).collect()
+    assert sorted((r["id"], r["props"]["a" if r["id"] == "x" else "b"])
+                  for r in added) == [("x", "9"), ("x", "9"), ("y", "3")]
+    assert es.log(["d"]).count() == 6
+
+
 def test_null_seq_backfill_deterministic_and_above_explicit(spark, tmp_path):
     """ADVICE r2: monotonically_increasing_id backfill was nondeterministic
     across runs and its ~2^33-scale values beat every explicit seq in the
