@@ -32,7 +32,6 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from datahub_spark import lifetime as LT
 from datahub_spark import uda
@@ -443,9 +442,6 @@ class SampleSource:
         )
 
 
-_JSON_SCHEMA = T.StructType([T.StructField("json", T.StringType())])
-
-
 class HttpDatasetSource:
     """jobs/source HttpDatasetSource: reads a remote dataset's UDA
     /changes feed (internal/jobs/source/http_dataset_source.go:1-182).
@@ -453,11 +449,12 @@ class HttpDatasetSource:
     The wire is the UDA JSON array: an ``@context`` head, entity objects,
     and an optional ``@continuation`` tail whose token drives paging —
     pages are fetched until the server stops advancing the token (the
-    reference's readChanges loop). Parsing is the tested uda codec
-    (uda.from_uda_json), JVM-side; only the fetch is driver-side urllib,
-    mirroring the reference's single-reader pull. Gated behind
-    ``allow_network`` (this sandbox has loopback only); at scale, shard
-    the feed by page-range and fetch inside mapInPandas workers instead.
+    reference's readChanges loop). The fetched objects are decoded by
+    ``uda.decode_entities`` and enter Spark through ``local_frame``; the
+    fetch is driver-side urllib, mirroring the reference's single-reader
+    pull. Gated behind ``allow_network`` (this sandbox has loopback
+    only); at scale, shard the feed by page-range and fetch inside
+    mapInPandas workers instead.
     """
 
     # continuation tokens are an opaque SERVER contract; across job runs
@@ -489,7 +486,7 @@ class HttpDatasetSource:
         if not self.allow_network:
             raise NotImplementedError(
                 "network fetch disabled: pass allow_network=True, or feed "
-                "fetched payloads through uda.from_uda_json directly"
+                "fetched payloads through uda.decode_entities directly"
             )
         token, objs = since, []
         max_recorded = int(since or 0)
@@ -506,13 +503,17 @@ class HttpDatasetSource:
                 rec = obj.get("recorded")
                 if isinstance(rec, (int, float)):
                     max_recorded = max(max_recorded, int(rec))
-                objs.append(json.dumps(obj))
+                objs.append(obj)
             if next_token == token:
                 break  # no continuation advancement: feed drained
             token = next_token
         self._watermark = max_recorded
-        json_df = local_frame(self.spark, [(o,) for o in objs], _JSON_SCHEMA)
-        return uda.from_uda_json(json_df, self.dataset)
+        from datahub_spark.script import SCRIPT_OUTPUT_SCHEMA
+
+        return local_frame(
+            self.spark,
+            [row + (self.dataset,) for row in uda.decode_entities(objs)],
+            SCRIPT_OUTPUT_SCHEMA)
 
     def current_watermark(self) -> int:
         return self._watermark

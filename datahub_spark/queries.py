@@ -621,10 +621,10 @@ def q_uda_served_sync(spark, sf_dir):
     HttpDatasetSource (http_dataset_source.go shape) through multiple
     pages, and the synced mirror's latest view returned. Subsumes the
     former uda_codec entry: to_uda_json serializes on the serving side,
-    from_uda_json parses on the client side (refs surface as real JSON
-    arrays — checked via region_ref). The fetch loop is eager and
-    driver-side (pages land as local JSON before the server stops);
-    parsing is the JVM-side uda codec."""
+    uda.decode_entities decodes on the client side (refs surface as real
+    JSON arrays — checked via region_ref). The fetch and the decode are
+    eager and driver-side (pages land as decoded rows in a LocalRelation
+    before the server stops)."""
     import shutil
     import tempfile
 
@@ -643,7 +643,7 @@ def q_uda_served_sync(spark, sf_dir):
             src = J.HttpDatasetSource(
                 spark, f"{base}/datasets/nation", dataset="nation",
                 allow_network=True)
-            synced = src.read(since=0)  # eager fetch, lazy parse
+            synced = src.read(since=0)  # eager fetch and decode
         finally:
             srv.stop()
         return S.latest(synced).select(

@@ -18,19 +18,22 @@ middlewares/authorization.go doAclCheck semantics):
 
 Signature algorithms: the reference signs access tokens RS256 with a
 node keypair (manager.go:456-476, loaded-or-generated at boot from
-``node_key``/``node_key.pub`` PEM files, manager.go:204-257). That is
-now supported natively — attach a :class:`NodeKeys` (backed by the
-pure-python RSA in datahub_spark.rsa, openssl-interop-tested) and the
-manager signs/verifies RS256, registers client PUBLIC KEYS, honours
-the OAuth2 JWT-bearer ``client_assertion`` grant
-(ValidateClientJWTMakeJWTAccessToken, manager.go:428-477) and key
+``node_key``/``node_key.pub`` PEM files, manager.go:204-257). Attach a
+:class:`NodeKeys` and the manager signs/verifies RS256, registers
+client PUBLIC KEYS, honours the OAuth2 JWT-bearer ``client_assertion``
+grant (ValidateClientJWTMakeJWTAccessToken, manager.go:428-477) and key
 rotation (active pair = KeyPairs[0], manager.go:398-400; superseded
 public keys remain valid for verification so outstanding 15-minute
 tokens survive a rotation). Without node keys the manager falls back
 to JWS HS256 (HMAC-SHA256, stdlib ``hmac``) over the same claims
-shape — the zero-config embedded mode. In both modes the accepted
-algorithm is pinned by the VERIFIER's key material (alg is NOT
-attacker-chosen — the classic JWT confusion bug).
+shape — the zero-config embedded mode. One signing path
+(:func:`jwt_sign`) and one verify path (:func:`jwt_verify`) serve both
+algorithms; the accepted algorithm is pinned by the VERIFIER's key
+material (alg is NOT attacker-chosen — the classic JWT confusion bug).
+
+RSA keygen, PEM key files and PKCS#1 v1.5 SHA-256 signatures come from
+the ``cryptography`` package. It is imported inside the RSA code paths
+only, so a server without security never loads it.
 """
 
 from __future__ import annotations
@@ -61,19 +64,51 @@ class ForbiddenError(Exception):
     """403 — authenticated but not granted."""
 
 
-def jwt_sign(claims: dict, key: bytes) -> str:
+def _alg(key) -> str:
+    """The JWS algorithm a key pins: HMAC secret bytes are HS256, RSA key
+    material (a private key, or a list of public keys) is RS256."""
+    return "HS256" if isinstance(key, (bytes, bytearray)) else "RS256"
+
+
+def _pkcs1_sha256():
+    from cryptography.hazmat.primitives import hashes
+    from cryptography.hazmat.primitives.asymmetric import padding
+
+    return padding.PKCS1v15(), hashes.SHA256()
+
+
+def _rsa_verifies(public_key, sig: bytes, signing_input: bytes) -> bool:
+    from cryptography.exceptions import InvalidSignature
+
+    try:
+        public_key.verify(sig, signing_input, *_pkcs1_sha256())
+    except InvalidSignature:
+        return False
+    return True
+
+
+def jwt_sign(claims: dict, key) -> str:
+    """JWS compact token over ``claims``: HS256 (HMAC-SHA256) with secret
+    bytes, RS256 (jwt.SigningMethodRS256, manager.go:320,420,471) with an
+    RSA private key."""
+    alg = _alg(key)
     header = _b64url(json.dumps(
-        {"alg": "HS256", "typ": "JWT"}, separators=(",", ":")).encode())
+        {"alg": alg, "typ": "JWT"}, separators=(",", ":")).encode())
     payload = _b64url(json.dumps(claims, separators=(",", ":")).encode())
     signing_input = f"{header}.{payload}".encode()
-    sig = _b64url(hmac.new(key, signing_input, hashlib.sha256).digest())
-    return f"{header}.{payload}.{sig}"
+    if alg == "HS256":
+        sig = hmac.new(key, signing_input, hashlib.sha256).digest()
+    else:
+        sig = key.sign(signing_input, *_pkcs1_sha256())
+    return f"{header}.{payload}.{_b64url(sig)}"
 
 
-def jwt_verify(token: str, key: bytes, now: float | None = None) -> dict:
-    """Signature + exp check; pins HS256 (the alg header is untrusted
-    input — accepting attacker-chosen algorithms is the classic JWT
-    confusion bug)."""
+def jwt_verify(token: str, key, now: float | None = None) -> dict:
+    """Signature + exp check. The verifier's key pins the algorithm (the
+    alg header is untrusted input; accepting attacker-chosen algorithms
+    is the classic JWT confusion bug): secret bytes accept only HS256; a
+    list of RSA public keys accepts only RS256 signed by ANY of them, so
+    superseded node keys still validate outstanding tokens."""
     try:
         h64, p64, s64 = token.split(".")
         header = json.loads(_b64url_decode(h64))
@@ -81,10 +116,18 @@ def jwt_verify(token: str, key: bytes, now: float | None = None) -> dict:
         sig = _b64url_decode(s64)
     except (ValueError, json.JSONDecodeError) as exc:
         raise AuthError(f"malformed token: {exc}") from exc
-    if header.get("alg") != "HS256":
+    if not (isinstance(header, dict) and isinstance(payload, dict)):
+        raise AuthError("malformed token: header and payload must be objects")
+    alg = _alg(key)
+    if header.get("alg") != alg:
         raise AuthError("unsupported token algorithm")
-    expect = hmac.new(key, f"{h64}.{p64}".encode(), hashlib.sha256).digest()
-    if not hmac.compare_digest(sig, expect):
+    signing_input = f"{h64}.{p64}".encode()
+    if alg == "HS256":
+        expect = hmac.new(key, signing_input, hashlib.sha256).digest()
+        ok = hmac.compare_digest(sig, expect)
+    else:
+        ok = any(_rsa_verifies(pk, sig, signing_input) for pk in key)
+    if not ok:
         raise AuthError("bad token signature")
     exp = payload.get("exp")
     if exp is not None and (now if now is not None else time.time()) >= exp:
@@ -93,40 +136,13 @@ def jwt_verify(token: str, key: bytes, now: float | None = None) -> dict:
 
 
 def jwt_sign_rs256(claims: dict, private_key) -> str:
-    """RS256 JWS over the claims — jwt.SigningMethodRS256
-    (manager.go:320,420,471), via datahub_spark.rsa."""
-    from datahub_spark import rsa
-
-    header = _b64url(json.dumps(
-        {"alg": "RS256", "typ": "JWT"}, separators=(",", ":")).encode())
-    payload = _b64url(json.dumps(claims, separators=(",", ":")).encode())
-    signing_input = f"{header}.{payload}".encode()
-    sig = _b64url(rsa.sign_sha256(signing_input, private_key))
-    return f"{header}.{payload}.{sig}"
+    """:func:`jwt_sign` with an RSA private key."""
+    return jwt_sign(claims, private_key)
 
 
 def jwt_verify_rs256(token: str, public_keys, now: float | None = None) -> dict:
-    """Verify against ANY of ``public_keys`` (rotation: superseded node
-    keys still validate outstanding tokens); pins RS256."""
-    from datahub_spark import rsa
-
-    try:
-        h64, p64, s64 = token.split(".")
-        header = json.loads(_b64url_decode(h64))
-        payload = json.loads(_b64url_decode(p64))
-        sig = _b64url_decode(s64)
-    except (ValueError, json.JSONDecodeError) as exc:
-        raise AuthError(f"malformed token: {exc}") from exc
-    if header.get("alg") != "RS256":
-        raise AuthError("unsupported token algorithm")
-    signing_input = f"{h64}.{p64}".encode()
-    if not any(rsa.verify_sha256(signing_input, sig, pk)
-               for pk in public_keys):
-        raise AuthError("bad token signature")
-    exp = payload.get("exp")
-    if exp is not None and (now if now is not None else time.time()) >= exp:
-        raise AuthError("token expired")
-    return payload
+    """:func:`jwt_verify` against RSA public keys; pins RS256."""
+    return jwt_verify(token, list(public_keys), now)
 
 
 def jwt_unverified_claims(token: str) -> dict:
@@ -136,9 +152,71 @@ def jwt_unverified_claims(token: str) -> dict:
     Never authorize from this."""
     try:
         _, p64, _ = token.split(".")
-        return json.loads(_b64url_decode(p64))
+        payload = json.loads(_b64url_decode(p64))
     except (ValueError, json.JSONDecodeError) as exc:
         raise AuthError(f"malformed token: {exc}") from exc
+    if not isinstance(payload, dict):
+        raise AuthError("malformed token: payload must be an object")
+    return payload
+
+
+def _generate_private_key(bits: int):
+    """GenerateRsaKeyPair (manager.go:133; rsautils.go:28), e=65537."""
+    from cryptography.hazmat.primitives.asymmetric import rsa
+
+    return rsa.generate_private_key(65537, bits)
+
+
+def _private_key_from_pem(pem: bytes):
+    from cryptography.hazmat.primitives.asymmetric import rsa
+    from cryptography.hazmat.primitives.serialization import (
+        load_pem_private_key,
+    )
+
+    key = load_pem_private_key(pem, password=None)
+    if not isinstance(key, rsa.RSAPrivateKey):
+        raise ValueError("not an RSA private key")
+    return key
+
+
+def _public_key_from_pem(pem: str | bytes):
+    """An RSA public key from PEM: PKIX or PKCS#1 body, under either the
+    ``PUBLIC KEY`` or the reference's ``RSA PUBLIC KEY`` label. Raises
+    ValueError for anything else."""
+    from cryptography.exceptions import UnsupportedAlgorithm
+    from cryptography.hazmat.primitives.asymmetric import rsa
+    from cryptography.hazmat.primitives.serialization import (
+        load_pem_public_key,
+    )
+
+    try:
+        key = load_pem_public_key(
+            pem.encode() if isinstance(pem, str) else pem)
+    except UnsupportedAlgorithm as exc:
+        raise ValueError(f"not an RSA public key: {exc}") from exc
+    if not isinstance(key, rsa.RSAPublicKey):
+        raise ValueError("not an RSA public key")
+    return key
+
+
+def _private_key_pem(private_key) -> str:
+    """``RSA PRIVATE KEY`` PEM (PKCS#1), as x509.MarshalPKCS1PrivateKey
+    writes it (manager.go:235-249, rsautils.go:37-46)."""
+    from cryptography.hazmat.primitives import serialization as ser
+
+    return private_key.private_bytes(
+        ser.Encoding.PEM, ser.PrivateFormat.TraditionalOpenSSL,
+        ser.NoEncryption()).decode()
+
+
+def _public_key_pem(public_key) -> str:
+    """PKIX (SubjectPublicKeyInfo) bytes under the ``RSA PUBLIC KEY``
+    label, as the reference writes them (rsautils.go:50-58)."""
+    from cryptography.hazmat.primitives import serialization as ser
+
+    pem = public_key.public_bytes(
+        ser.Encoding.PEM, ser.PublicFormat.SubjectPublicKeyInfo).decode()
+    return pem.replace(" PUBLIC KEY-----", " RSA PUBLIC KEY-----")
 
 
 class NodeKeys:
@@ -153,32 +231,29 @@ class NodeKeys:
     before the rotation verify until their exp passes."""
 
     def __init__(self, location: str | None = None, bits: int = 2048):
-        from datahub_spark import rsa
-
         self._location = location
         self._old_pubs: list = []
         key_path = os.path.join(location, "node_key") if location else None
         if key_path and os.path.exists(key_path):
-            with open(key_path, encoding="utf-8") as f:
-                self._private = rsa.private_key_from_pem(f.read())
+            with open(key_path, "rb") as f:
+                self._private = _private_key_from_pem(f.read())
             pub_path = key_path + ".pub"
             if os.path.exists(pub_path):
-                with open(pub_path, encoding="utf-8") as f:
-                    self._public = rsa.public_key_from_pem(f.read())
+                with open(pub_path, "rb") as f:
+                    self._public = _public_key_from_pem(f.read())
             else:
-                self._public = self._private.public_key
+                self._public = self._private.public_key()
             idx = 1
             while os.path.exists(f"{pub_path}.{idx}"):
-                with open(f"{pub_path}.{idx}", encoding="utf-8") as f:
-                    self._old_pubs.append(rsa.public_key_from_pem(f.read()))
+                with open(f"{pub_path}.{idx}", "rb") as f:
+                    self._old_pubs.append(_public_key_from_pem(f.read()))
                 idx += 1
         else:
-            self._private, self._public = rsa.generate_keypair(bits)
+            self._private = _generate_private_key(bits)
+            self._public = self._private.public_key()
             self._persist()
 
     def _persist(self) -> None:
-        from datahub_spark import rsa
-
         if not self._location:
             return
         os.makedirs(self._location, exist_ok=True)
@@ -186,14 +261,14 @@ class NodeKeys:
         fd = os.open(key_path + ".tmp",
                      os.O_WRONLY | os.O_CREAT | os.O_TRUNC, 0o600)
         with os.fdopen(fd, "w", encoding="utf-8") as f:
-            f.write(rsa.private_key_to_pem(self._private))
+            f.write(_private_key_pem(self._private))
         os.replace(key_path + ".tmp", key_path)
         with open(key_path + ".pub.tmp", "w", encoding="utf-8") as f:
-            f.write(rsa.public_key_to_pem(self._public))
+            f.write(_public_key_pem(self._public))
         os.replace(key_path + ".pub.tmp", key_path + ".pub")
         for i, pub in enumerate(self._old_pubs, start=1):
             with open(f"{key_path}.pub.{i}", "w", encoding="utf-8") as f:
-                f.write(rsa.public_key_to_pem(pub))
+                f.write(_public_key_pem(pub))
 
     @property
     def private_key(self):
@@ -205,14 +280,12 @@ class NodeKeys:
         return [self._public, *self._old_pubs]
 
     def public_key_pem(self) -> str:
-        from datahub_spark import rsa
-        return rsa.public_key_to_pem(self._public)
+        return _public_key_pem(self._public)
 
     def rotate(self, bits: int = 2048) -> None:
-        from datahub_spark import rsa
-
         self._old_pubs.insert(0, self._public)
-        self._private, self._public = rsa.generate_keypair(bits)
+        self._private = _generate_private_key(bits)
+        self._public = self._private.public_key()
         self._persist()
 
 
@@ -261,17 +334,15 @@ class SecurityManager:
         self._admin_id = admin_client_id
         self._admin_secret = admin_client_secret or secrets.token_urlsafe(24)
 
-    # -- signing dispatch (RS256 with node keys, else HS256) ---------------
+    # -- token keys (RS256 with node keys, else HS256) ---------------------
 
     def _sign_claims(self, claims: dict) -> str:
-        if self.node_keys is not None:
-            return jwt_sign_rs256(claims, self.node_keys.private_key)
-        return jwt_sign(claims, self._key)
+        nk = self.node_keys
+        return jwt_sign(claims, self._key if nk is None else nk.private_key)
 
     def _verify_token(self, token: str) -> dict:
-        if self.node_keys is not None:
-            return jwt_verify_rs256(token, self.node_keys.public_keys)
-        return jwt_verify(token, self._key)
+        nk = self.node_keys
+        return jwt_verify(token, self._key if nk is None else nk.public_keys)
 
     @property
     def admin_secret(self) -> str:
@@ -302,8 +373,7 @@ class SecurityManager:
             return
         pem = info.get("PublicKey") or info.get("public_key") or ""
         if pem:
-            from datahub_spark import rsa
-            self._client_pubkeys[client_id] = rsa.public_key_from_pem(pem)
+            self._client_pubkeys[client_id] = _public_key_from_pem(pem)
         secret = info.get("ClientSecret") or info.get("client_secret") or ""
         if secret or not pem:
             self.add_client(client_id, secret)

@@ -835,7 +835,7 @@ class UdaServer:
                 # (garbagecollector.go Cleandeleted) in the same pass
                 gc_h = r.get("gcHorizon")
                 self.store.compact(
-                    r["dataset"], strategy="deduplicate",
+                    r["dataset"],
                     gc_horizon=int(gc_h) if gc_h is not None else None,
                     clean_deleted_entities=bool(r.get("cleanDeleted")))
                 return self._reply(rq, 200, {})

@@ -774,21 +774,18 @@ class EntityStore:
                     removed.append(path)
         return removed
 
-    def compact(self, dataset: str, strategy: str = "deduplicate",
-                gc_horizon: int | None = None,
+    def compact(self, dataset: str, gc_horizon: int | None = None,
                 clean_deleted_entities: bool = False) -> None:
-        """Physical compaction (DOCUMENTATION.md:2349): apply the strategy
-        view to the dataset's log and atomically swap the rewritten files
-        in. 'deduplicate' drops successive identical versions; a
-        gc_horizon additionally drops non-newest versions recorded at or
-        before the horizon; ``clean_deleted_entities`` additionally purges
-        every version of entities whose latest state is a tombstone
-        (garbagecollector.go Cleandeleted, run by the reference's
-        scheduled_gc). Readers are never exposed to partial state:
-        the new files are staged, then the partition directory is swapped
-        with two renames."""
-        if strategy != "deduplicate":
-            raise ValueError(f"unknown compaction strategy: {strategy}")
+        """Physical compaction (DOCUMENTATION.md:2349): apply the
+        'deduplicate' strategy view to the dataset's log and atomically
+        swap the rewritten files in. It drops successive identical
+        versions; a gc_horizon additionally drops non-newest versions
+        recorded at or before the horizon; ``clean_deleted_entities``
+        additionally purges every version of entities whose latest state
+        is a tombstone (garbagecollector.go Cleandeleted, run by the
+        reference's scheduled_gc). Readers are never exposed to partial
+        state: the new files are staged, then the partition directory is
+        swapped with two renames."""
         log = self.log([dataset])
         compacted = compact_deduplicate(log)
         if gc_horizon is not None:

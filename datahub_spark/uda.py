@@ -16,15 +16,12 @@ module. The decode rules:
   other value becomes its compact JSON text (``true``, ``1.5``,
   ``{"x":1}``, ``[1,2]``).
 
-``decode_entities`` applies them in Python to parsed wire objects
-(served POSTs, ``/transactions``, the WAL spool, HTTP transform
-responses); ``from_uda_json`` applies them in the JVM to a JSON-string
-column (``HttpDatasetSource``, ``ProxyDataset``). The two agree except
-on floats that Java prints in exponent form (below 1e-3, from 1e7 up):
-``1e20`` becomes ``"1.0E20"`` through Spark and ``"1e+20"`` through
-Python ``json``. ``to_uda_json`` encodes (JVM ``to_json``). Decoded
-rows become a frame through ``session.local_frame``: a LocalRelation
-built from an Arrow table, with no Python worker.
+``decode_entities`` applies them to parsed wire objects at every
+ingress: served POSTs, ``/transactions``, the WAL spool, HTTP transform
+responses, and the ``/changes`` pages ``HttpDatasetSource`` and
+``ProxyDataset`` pull. ``to_uda_json`` encodes (JVM ``to_json``).
+Decoded rows become a frame through ``session.local_frame``: a
+LocalRelation built from an Arrow table, with no Python worker.
 """
 
 from __future__ import annotations
@@ -46,13 +43,6 @@ ROW_SCHEMA = T.StructType(
         T.StructField("refs", T.MapType(T.StringType(), T.ArrayType(T.StringType()))),
     ]
 )
-
-# from_json's view of a wire object: a non-boolean ``deleted`` fails that
-# field alone (NULL -> alive); a string-typed prop or ref keeps a
-# non-string JSON value's text; a ref is parsed as text (one CURIE or a
-# list) and normalized in from_uda_json
-_WIRE_SCHEMA = T.StructType(
-    ROW_SCHEMA.fields[:-1] + [T.StructField("refs", T.MapType(T.StringType(), T.StringType()))])
 
 _SKIP_IDS = ("@context", "@continuation")
 
@@ -109,26 +99,3 @@ def to_uda_json(df: DataFrame, extra_cols: list[str] | None = None) -> DataFrame
         F.coalesce(F.col("refs"), empty).alias("refs"),
     )
     return df.select(F.to_json(obj).alias("json"), *(extra_cols or []))
-
-
-def from_uda_json(json_df: DataFrame, dataset: str, json_col: str = "json") -> DataFrame:
-    """Parse UDA JSON object strings into entity rows in the JVM,
-    following the module's decode rules."""
-    e = F.from_json(F.col(json_col), _WIRE_SCHEMA).alias("e")
-    parsed = json_df.select(e).filter(
-        F.col("e.id").isNotNull() & ~F.col("e.id").isin(*_SKIP_IDS))
-    refs = F.transform_values(
-        F.coalesce(F.col("e.refs"), F.create_map().cast("map<string,string>")),
-        # list form -> array (elements keep their text); scalar -> [value]
-        lambda _, v: F.when(v.startswith("["), F.from_json(v, "array<string>"))
-        .otherwise(F.array(v)),
-    )
-    return parsed.select(
-        F.col("e.id").alias("id"),
-        F.col("e.recorded").alias("recorded"),
-        F.coalesce(F.col("e.seq"), F.lit(0).cast("long")).alias("seq"),
-        F.coalesce(F.col("e.deleted"), F.lit(False)).alias("deleted"),
-        F.coalesce(F.col("e.props"), F.create_map().cast("map<string,string>")).alias("props"),
-        refs.alias("refs"),
-        F.lit(dataset).alias("dataset"),
-    )

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
+import sys
 import urllib.request
 from datetime import datetime
 
@@ -152,6 +154,45 @@ def test_instance_boot_serves_and_stops(spark, tmp_path):
         assert body == [{"Name": "people"}]
     finally:
         inst.stop()
+
+
+_NO_AUTH_SERVE = """
+import json, sys, urllib.request
+from datahub_spark.app import DatahubInstance
+from datahub_spark.config import load_config
+
+inst = DatahubInstance(load_config(env={"STORE_LOCATION": sys.argv[1],
+                                        "SERVER_PORT": "0"}))
+url = inst.start()
+try:
+    req = urllib.request.Request(
+        url + "/datasets/people/entities", method="POST",
+        data=json.dumps([{"id": "e:1", "props": {"p:a": "1"}}]).encode(),
+        headers={"Content-Type": "application/json"})
+    with urllib.request.urlopen(req, timeout=60) as resp:
+        assert resp.status == 200
+    with urllib.request.urlopen(url + "/datasets/people/entities",
+                                timeout=60) as resp:
+        assert "e:1" in [e.get("id") for e in json.loads(resp.read())]
+finally:
+    inst.stop()
+    inst.spark.stop()
+print(json.dumps(sorted(m for m in sys.modules
+                        if m.split(".")[0] == "cryptography")))
+"""
+
+
+def test_no_auth_server_never_loads_cryptography(tmp_path):
+    """The security code imports ``cryptography`` lazily: a fresh
+    process that boots the default (no-auth) instance, serves a write
+    and a read, and stops has not loaded it."""
+    env = dict(os.environ, SPARK_GRAFT_CPUS="1")
+    out = subprocess.run(
+        [sys.executable, "-c", _NO_AUTH_SERVE, str(tmp_path / "hub")],
+        capture_output=True, text=True, timeout=300, env=env,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert json.loads(out.stdout.strip().splitlines()[-1]) == []
 
 
 def test_instance_boot_with_local_security(spark, tmp_path):

@@ -1,5 +1,5 @@
 """UDA JSON wire format: refs must be REAL JSON arrays on the wire
-(streamparser.go list form), the parser must accept both the list and
+(streamparser.go list form), the decoder must accept both the list and
 the external scalar-CURIE form, and every ingress decodes a body to the
 same rows."""
 
@@ -9,8 +9,6 @@ import json
 import threading
 import urllib.request
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-
-from pyspark.sql import functions as F
 
 from datahub_spark import uda
 
@@ -35,34 +33,38 @@ def test_wire_refs_are_json_arrays(spark):
     assert objs["e:2"]["refs"] == {}
 
 
+def _decoded(objs):
+    """decode_entities rows keyed by id, as ROW_SCHEMA field dicts."""
+    names = uda.ROW_SCHEMA.fieldNames()
+    return {row[0]: dict(zip(names, row)) for row in uda.decode_entities(objs)}
+
+
 def test_roundtrip_through_own_parser(spark):
-    ent = _entities(spark)
-    back = uda.from_uda_json(uda.to_uda_json(ent), dataset="d")
-    got = {r["id"]: r for r in back.collect()}
+    wire = uda.to_uda_json(_entities(spark)).collect()
+    got = _decoded(json.loads(r["json"]) for r in wire)
     assert got["e:1"]["refs"]["p:friend"] == ["e:2", "e:3"]
     assert got["e:1"]["props"]["p:name"] == "a"
     assert got["e:2"]["recorded"] == 11
 
 
-def test_parser_accepts_external_scalar_refs(spark):
+def test_parser_accepts_external_scalar_refs():
     # external producers may emit the scalar CURIE form (valid UDA)
-    wire = spark.createDataFrame(
-        [('{"id":"x:1","recorded":5,"deleted":false,'
-          '"props":{"p:k":"v"},"refs":{"p:one":"y:9","p:many":["y:1","y:2"]}}',)],
-        "json string",
-    )
-    got = uda.from_uda_json(wire, dataset="ext").collect()[0]
+    wire = json.loads(
+        '[{"id":"x:1","recorded":5,"deleted":false,'
+        '"props":{"p:k":"v"},"refs":{"p:one":"y:9","p:many":["y:1","y:2"]}}]')
+    got = _decoded(wire)["x:1"]
     assert got["refs"]["p:one"] == ["y:9"]
     assert got["refs"]["p:many"] == ["y:1", "y:2"]
 
 
-# one body through every ingress: the stored (or parsed) rows must match
+# one body through every ingress: the stored (or pulled) rows must match
 _PARITY_BODY = [
     {"id": "@context", "namespaces": {}},
     {"id": "w:1",
      "props": {"p:s": "text", "p:t": True, "p:f": False, "p:i": 7,
-               "p:d": 12.25, "p:o": {"x": 1, "y": "z"}, "p:a": [1, "b"],
-               "p:n": None},
+               "p:d": 12.25, "p:e": 1e20, "p:o": {"x": 1, "y": "z"},
+               "p:nest": {"a": {"b": [1.5e-7, {"c": None}]}},
+               "p:a": [1, "b"], "p:n": None},
      "refs": {"p:one": "w:2", "p:many": ["w:2", "w:3"]}},
     {"id": "w:2", "deleted": "false", "props": {"p:s": "two"}},
     {"id": "w:3", "deleted": True},
@@ -72,9 +74,10 @@ _PARITY_BODY = [
 
 _PARITY_ROWS = {
     ("w:1", False,
-     (("p:a", '[1,"b"]'), ("p:d", "12.25"), ("p:f", "false"), ("p:i", "7"),
-      ("p:n", None), ("p:o", '{"x":1,"y":"z"}'), ("p:s", "text"),
-      ("p:t", "true")),
+     (("p:a", '[1,"b"]'), ("p:d", "12.25"), ("p:e", "1e+20"),
+      ("p:f", "false"), ("p:i", "7"), ("p:n", None),
+      ("p:nest", '{"a":{"b":[1.5e-07,{"c":null}]}}'),
+      ("p:o", '{"x":1,"y":"z"}'), ("p:s", "text"), ("p:t", "true")),
      (("p:many", ("w:2", "w:3")), ("p:one", ("w:2",)))),
     ("w:2", False, (("p:s", "two"),), ()),
     ("w:3", True, (), ()),
@@ -147,19 +150,16 @@ def test_every_ingress_stores_the_same_rows(spark, tmp_path):
         wal_srv.stop()
         feed.shutdown()
         feed.server_close()
-    wire = spark.createDataFrame(
-        [(json.dumps(o),) for o in _PARITY_BODY], "json string")
-    parsed = uda.from_uda_json(wire, dataset="parsed").collect()
 
     stored = {ds: store.log([ds]).collect()
               for ds in ("plain", "walpost", "fullsync", "txn", "waldirect")}
-    for name, rows in [*stored.items(), ("pulled", pulled), ("parsed", parsed)]:
+    for name, rows in [*stored.items(), ("pulled", pulled)]:
         assert _payload(rows) == _PARITY_ROWS, name
     # the WAL stamps its append order as seq; every other ingress keeps
     # the wire seq (absent -> 0)
     for name in ("plain", "fullsync", "txn"):
         assert {r["seq"] for r in stored[name]} == {0}, name
-    assert {r["seq"] for r in pulled + parsed} == {0}
+    assert {r["seq"] for r in pulled} == {0}
     # absent recorded stays NULL until a commit stamps its tick
-    assert all(r["recorded"] is None for r in pulled + parsed)
+    assert all(r["recorded"] is None for r in pulled)
     assert all(r["recorded"] is not None for rows in stored.values() for r in rows)
