@@ -1,11 +1,12 @@
 """Instance boot/wiring (app.go + cmd/datahub/main.go analogue).
 
 ``DatahubInstance`` composes the engine the way app.go:110-227 does:
-config -> store + namespace manager + job state/scheduler/runner +
-content service + optional security manager -> served UDA surface,
-plus the background clock (reference: jobs.Scheduler's cron runner and
-the BackupManager's schedule) and GC-on-startup. ``run`` is
-datahub.Run: build, start, block until SIGINT/SIGTERM, stop.
+config -> store + namespace manager + job state + scheduler (with its
+one raffle-gated runner) + content service + optional security manager
+-> served UDA surface, plus the background clock (reference:
+jobs.Scheduler's cron runner and the BackupManager's schedule) and
+GC-on-startup. ``run`` is datahub.Run: build, start, block until
+SIGINT/SIGTERM, stop.
 
 Differences from the reference, by design: the "database" is a
 SparkSession + parquet log, so boot also owns the SparkSession; the
@@ -28,7 +29,7 @@ from datahub_spark import store as S
 from datahub_spark.config import Config
 from datahub_spark.content import ContentService
 from datahub_spark.cron import CronSpec
-from datahub_spark.jobs import JobRunner, JobState, Raffle, Scheduler
+from datahub_spark.jobs import JobState, Raffle, Scheduler
 from datahub_spark.metrics import LoggingMetrics
 from datahub_spark.namespaces import NamespaceManager
 from datahub_spark.security import SecurityManager
@@ -102,12 +103,13 @@ class DatahubInstance:
         self.metrics = LoggingMetrics(self.logger)
         self.state = JobState(os.path.join(config.store_location,
                                            "jobstate.json"))
-        self.scheduler = Scheduler(self.state, metrics=self.metrics)
         # RunnerConfig pools (config.go:91-95): fullsync vs incremental
-        # ticket classes map onto the raffle's two ticket pools
-        self.runner = JobRunner(self.state, Raffle(
-            tickets_full=config.jobs_max_fullsync,
-            tickets_incr=config.jobs_max_incremental))
+        # ticket classes map onto the raffle's two ticket pools, which
+        # bound cron, onchange and served runs alike
+        self.scheduler = Scheduler(
+            self.state, metrics=self.metrics,
+            raffle=Raffle(tickets_full=config.jobs_max_fullsync,
+                          tickets_incr=config.jobs_max_incremental))
         self.content = ContentService(
             os.path.join(config.store_location, "content"))
         self.security = None
@@ -194,17 +196,17 @@ class DatahubInstance:
             self._ticker.join(timeout=5)
             self._ticker = None
         self.server.stop()
-        self.runner.join()
+        self.scheduler.runner.join()
         self.logger.info("datahub instance stopped")
 
     # -- clock -------------------------------------------------------------
 
     def tick(self, now: datetime) -> list[dict]:
-        """One clock tick: fire due cron jobs (through the runner's
-        raffle) and the backup schedule. Public and deterministic —
+        """One clock tick: fire due cron jobs (through the scheduler's
+        runner) and the backup schedule. Public and deterministic —
         tests drive it with an injected ``now``; the ticker thread
         drives it with the wall clock."""
-        results = self.scheduler.run_due(now, runner=self.runner)
+        results = self.scheduler.run_due(now)
         if self._backup_spec is not None:
             if self._backup_spec.due(now, self._backup_last):
                 self._backup_last = now.replace(second=0, microsecond=0)

@@ -22,12 +22,15 @@ filter on the log scan instead of re-reading history.
 
 from __future__ import annotations
 
+import itertools
 import json
+import logging
 import os
 import threading
 import time
 import uuid
 from collections.abc import Callable
+from concurrent.futures import Future
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -716,8 +719,9 @@ class Job:
     job_type: str = "incremental"  # or "fullsync"
     on_error: ErrorHandler = field(default_factory=ErrorHandler)
     paused: bool = False
-    # set by JobRunner.kill (KillJob, scheduler.go:402): a cancelled
-    # run must not retry through its reRun handler
+    # set by JobRunner.kill (KillJob, scheduler.go:402), cleared when
+    # the runner starts a run: a cancelled run must not retry through
+    # its reRun handler
     cancelled: bool = False
     # optional metrics.Metrics — jobs.count on start, jobs.success /
     # jobs.error with the run's wall-time on completion (job.go:114-144)
@@ -1044,47 +1048,78 @@ class FullSyncSession:
 
 
 class Scheduler:
-    """runner.go/scheduler.go analogue: lineage (topological) ordering,
-    state, and wall-clock cron triggering. A job registered with a
-    5-field cron ``schedule`` fires on matching minutes via
-    ``run_due(now)`` (the hosting system supplies the clock tick —
-    deterministic and testable, like scheduler.go's injected clock);
-    onchange triggering is wire_onchange / Structured Streaming
-    (datahub_spark.streaming)."""
+    """runner.go/scheduler.go analogue: jobs, lineage levels, state and
+    ``runner``, the one JobRunner every trigger runs a job through:
 
-    def __init__(self, state: "JobState", metrics=None):
+    - cron: a job registered with a 5-field ``schedule`` fires on
+      matching minutes via ``run_due(now)`` (the hosting system supplies
+      the clock tick — deterministic and testable, like scheduler.go's
+      injected clock);
+    - onchange: a commit to a dataset in ``watches`` notifies the runner
+      (wire_onchange; Structured Streaming drains are the other shape);
+    - on demand: the served ``PUT /job/{id}/run`` submits the job."""
+
+    def __init__(self, state: "JobState", metrics=None,
+                 raffle: "Raffle | None" = None):
         self.state = state
         self.jobs: dict[str, Job] = {}
         self.schedules: dict[str, "CronSpec"] = {}
+        # job_id -> datasets whose commits trigger it (onchange)
+        self.watches: dict[str, set[str]] = {}
         self._last_fired: dict[str, object] = {}
         # metrics.Metrics threaded onto every registered job (the
         # reference threads its statsd client through the runner into
         # each job, runner.go:55-70)
         self.metrics = metrics
+        self.runner = JobRunner(state, raffle)
 
     def register(self, job: Job, schedule: str | None = None) -> None:
+        """Register (or replace) ``job``; a replaced job's schedule and
+        watches are dropped with it."""
         from datahub_spark.cron import CronSpec
 
+        spec = CronSpec.parse(schedule) if schedule is not None else None
+        self.unregister(job.job_id)
         self.jobs[job.job_id] = job
         if job.metrics is None and self.metrics is not None:
             job.metrics = self.metrics
-        if schedule is not None:
-            self.schedules[job.job_id] = CronSpec.parse(schedule)
+        if spec is not None:
+            self.schedules[job.job_id] = spec
+
+    def unregister(self, job_id: str) -> None:
+        """Forget the job, its schedule and its watches."""
+        self.jobs.pop(job_id, None)
+        self.schedules.pop(job_id, None)
+        self.watches.pop(job_id, None)
 
     def register_config(self, store: EntityStore, config: dict | str,
                         allow_network: bool = False) -> Job:
         """Register a job from a reference JobConfiguration JSON
-        (parse_job_config); cron triggers schedule it, onchange triggers
-        are returned on the job as ``monitored_datasets`` for the caller
-        to wire (wire_onchange / streaming)."""
+        (parse_job_config): its cron trigger schedules it, and each
+        onchange trigger's ``monitoredDataset`` is watched on ``store``
+        (wire_onchange), so a commit there submits the job."""
         job, triggers = parse_job_config(store, config,
                                          allow_network=allow_network)
-        schedule = next(
-            (t.get("schedule") or t.get("Schedule") for t in triggers
-             if (t.get("triggerType") or t.get("TriggerType")) == "cron"
-             and (t.get("schedule") or t.get("Schedule"))), None)
-        self.register(job, schedule)
+
+        def pick(t: dict, key: str):  # json-tag or Go-marshalled spelling
+            return t.get(key) or t.get(key[0].upper() + key[1:])
+
+        kinds = [(pick(t, "triggerType"), t) for t in triggers]
+        self.register(job, next((s for k, t in kinds if k == "cron"
+                                 and (s := pick(t, "schedule"))), None))
+        wire_onchange(self, store, {ds: [job.job_id] for k, t in kinds
+                                    if k == "onchange"
+                                    and (ds := pick(t, "monitoredDataset"))})
         return job
+
+    def on_commit(self, dataset: str, recorded: int) -> None:
+        """Store listener (wire_onchange): notify the runner of every
+        unpaused job watching ``dataset``. Runs on the writer's thread
+        and never runs a job there."""
+        for job_id, datasets in list(self.watches.items()):
+            job = self.jobs.get(job_id)
+            if dataset in datasets and job is not None and not job.paused:
+                self.runner.notify(job)
 
     def due_jobs(self, now) -> list[Job]:
         """Unpaused jobs due at ``now`` in lineage order: grid specs
@@ -1092,68 +1127,44 @@ class Scheduler:
         specs fire when the full interval has elapsed since their last
         firing (CronSpec.due — robfig fixed-interval cadence, so
         ``@every 90m`` means 90 minutes, never "hourly")."""
-        due = []
-        for j in self._ordered():
-            spec = self.schedules.get(j.job_id)
-            if j.paused or spec is None:
-                continue
-            if not spec.due(now, self._last_fired.get(j.job_id)):
-                continue
-            due.append(j)
-        return due
+        levels = self._levels(self._dep_graph())
+        return [j for j in sorted(self.jobs.values(),
+                                  key=lambda j: (levels[j.job_id], j.job_id))
+                if not j.paused and j.job_id in self.schedules
+                and self.schedules[j.job_id].due(
+                    now, self._last_fired.get(j.job_id))]
 
-    def run_due(self, now, runner: "JobRunner | None" = None) -> list[dict]:
-        """One clock tick: run every due scheduled job once. Sequential
-        in lineage order by default; with a ``runner``, due jobs are
-        dispatched through its raffle instead (the reference runner's
-        shape — a job denied a ticket simply isn't marked fired and
-        retries on the next matching tick).
+    def run_due(self, now) -> list[dict]:
+        """One clock tick: submit every due scheduled job to the runner
+        and return the results of the runs its raffle granted; a denied
+        job isn't marked fired and retries on the next matching tick.
 
-        Concurrent dispatch honors lineage: due jobs are submitted in
-        topological LEVELS with a join barrier between levels, so a
+        Dispatch honors lineage: due jobs are submitted one lineage level
+        at a time, waiting on each level's runs before the next, so a
         consumer never scans its source dataset while this tick's
-        producer is still writing it. Jobs within a level have no
-        producer/consumer edge and run fully concurrent. (Token safety
-        does not depend on this — Job.run snapshots its watermark before
-        the scan — the barrier is what makes "consumers see this tick's
-        producer output" true.)"""
+        producer is still writing it; jobs within a level run
+        concurrently. (Token safety does not depend on this — Job.run
+        snapshots its watermark before the scan — the barrier is what
+        makes "consumers see this tick's producer output" true.)"""
         minute = now.replace(second=0, microsecond=0)
-        if runner is None:
-            results = []
-            for j in self.due_jobs(now):
-                self._last_fired[j.job_id] = minute
-                results.append(j.run(self.state))
-            return results
-        due = self.due_jobs(now)
-        due_ids = {j.job_id for j in due}
         deps = self._dep_graph()
-        depth: dict[str, int] = {}
-
-        def d_of(jid: str) -> int:
-            if jid not in depth:
-                depth[jid] = 1 + max(
-                    (d_of(p) for p in deps[jid] if p in due_ids), default=-1
-                )
-            return depth[jid]
-
+        levels = self._levels(deps)
         results: list[dict] = []
         starved: set[str] = set()
-        for level in sorted({d_of(j.job_id) for j in due}):
-            for j in due:
-                if d_of(j.job_id) != level:
-                    continue
-                if any(p in starved for p in deps[j.job_id] if p in due_ids):
-                    # the producer was denied a ticket this tick: running
-                    # the consumer now would scan a STALE source and mark
-                    # the run consumed. Leave it unfired so producer and
-                    # consumer retry together on the next matching tick.
+        for _, level in itertools.groupby(self.due_jobs(now),
+                                          key=lambda j: levels[j.job_id]):
+            runs = []
+            for j in level:
+                # a consumer whose producer was denied a ticket this tick
+                # would scan a STALE source and mark the run consumed:
+                # leave it unfired so both retry on the next matching tick
+                run = None if deps[j.job_id] & starved else self.runner.submit(j)
+                if run is None:
                     starved.add(j.job_id)
                     continue
-                if runner.submit(j):
-                    self._last_fired[j.job_id] = minute
-                else:
-                    starved.add(j.job_id)
-            results.extend(runner.join())
+                self._last_fired[j.job_id] = minute
+                runs.append(run)
+            results.extend(run.result() for run in runs)
         return results
 
     def _dep_graph(self) -> dict[str, set[str]]:
@@ -1177,29 +1188,25 @@ class Scheduler:
                     deps[j.job_id].add(produces[s])
         return deps
 
-    def _ordered(self) -> list[Job]:
-        # topo-sort on dataset lineage: producer jobs before consumers
-        deps = self._dep_graph()
-        ordered: list[Job] = []
-        seen: set[str] = set()
+    def _levels(self, deps: dict[str, set[str]]) -> dict[str, int]:
+        """job_id -> lineage level: 0 for a job that consumes no other
+        job's sink, else one more than its deepest producer. Raises
+        ValueError naming the path of a dependency cycle."""
+        levels: dict[str, int] = {}
 
-        def visit(jid: str, path: tuple[str, ...] = ()) -> None:
-            if jid in seen:
-                return
+        def visit(jid: str, path: tuple[str, ...] = ()) -> int:
+            if jid in levels:
+                return levels[jid]
             if jid in path:
-                raise ValueError(f"job dependency cycle: {' -> '.join(path + (jid,))}")
-            for d in sorted(deps[jid]):
-                visit(d, path + (jid,))
-            seen.add(jid)
-            ordered.append(self.jobs[jid])
+                raise ValueError(
+                    f"job dependency cycle: {' -> '.join(path + (jid,))}")
+            levels[jid] = 1 + max((visit(d, path + (jid,))
+                                   for d in sorted(deps[jid])), default=-1)
+            return levels[jid]
 
         for jid in sorted(self.jobs):
             visit(jid)
-        return ordered
-
-    def run_all(self) -> list[dict]:
-        """One scheduler tick: every unpaused job once, in lineage order."""
-        return [j.run(self.state) for j in self._ordered() if not j.paused]
+        return levels
 
 
 class Raffle:
@@ -1254,21 +1261,30 @@ class Raffle:
 
 
 class JobRunner:
-    """Concurrent job execution (runner.go + raffle.go): ``submit`` runs
-    a job on a worker thread iff the raffle grants a ticket. Concurrent
-    Spark actions from multiple Python threads are the supported
-    multi-job model — stages interleave on the shared executor pool
-    (pair with spark.scheduler.mode=FAIR so a long fullsync can't starve
-    incrementals). ``join`` waits for everything submitted and returns
-    per-job results/errors."""
+    """The one place a job runs (runner.go + raffle.go); each Scheduler
+    owns one. A run starts on a worker thread only when the raffle
+    grants the job a ticket:
+
+    - ``submit`` returns a Future for that run alone, resolving to its
+      result dict or ``{"id", "error"}``; None when the ticket is denied;
+    - ``notify`` (onchange) submits too, and when the job already holds
+      a ticket it queues exactly one more run after the current one, so
+      no event is lost;
+    - ``kill`` cancels a running job; ``join`` waits for every run.
+
+    Concurrent Spark actions from multiple Python threads are the
+    supported multi-job model — stages interleave on the shared executor
+    pool (pair with spark.scheduler.mode=FAIR so a long fullsync can't
+    starve incrementals)."""
 
     def __init__(self, state: "JobState", raffle: Raffle | None = None):
         self.state = state
         self.raffle = raffle or Raffle()
-        self._threads: list[threading.Thread] = []
-        self._results: list[dict] = []
         self._mu = threading.Lock()
-        self._running: dict[str, "Job"] = {}
+        # job_id -> (job, its worker thread), while it holds a ticket
+        self._running: dict[str, tuple[Job, threading.Thread]] = {}
+        # ids of running jobs owed one more run (notify)
+        self._again: set[str] = set()
 
     @staticmethod
     def _job_spark(job: "Job"):
@@ -1283,61 +1299,79 @@ class JobRunner:
                 return obj
         return None
 
-    def submit(self, job: "Job") -> bool:
-        if job.paused or not self.raffle.borrow(job):
-            return False
+    def submit(self, job: "Job") -> Future | None:
+        with self._mu:
+            return self._start(job)
 
-        def work():
-            # tag this worker thread's Spark actions with a per-job
-            # group so kill() can cancel them mid-run (PySpark pins
-            # Python threads to JVM threads, so the group is job-local)
-            spark = self._job_spark(job)
-            if spark is not None:
-                spark.sparkContext.setJobGroup(
-                    f"job-{job.job_id}", f"datahub job {job.job_id}", True)
-            with self._mu:
-                self._running[job.job_id] = job
+    def notify(self, job: "Job") -> None:
+        with self._mu:
+            if self._start(job) is None and job.job_id in self._running:
+                self._again.add(job.job_id)
+
+    def _start(self, job: "Job") -> Future | None:
+        if not self.raffle.borrow(job):
+            return None
+        job.cancelled = False
+        done: Future = Future()
+        t = threading.Thread(target=self._work, args=(job, done),
+                             name=f"job-{job.job_id}", daemon=True)
+        self._running[job.job_id] = (job, t)
+        t.start()
+        return done
+
+    def _work(self, job: "Job", done: Future) -> None:
+        # tag this worker thread's Spark actions with a per-job group so
+        # kill() can cancel them mid-run (PySpark pins Python threads to
+        # JVM threads, so the group is job-local)
+        spark = self._job_spark(job)
+        if spark is not None:
+            spark.sparkContext.setJobGroup(
+                f"job-{job.job_id}", f"datahub job {job.job_id}", True)
+        while True:
             try:
                 res = job.run(self.state)
-                with self._mu:
-                    self._results.append(res)
-            except Exception as e:  # noqa: BLE001 — reported via join()
-                with self._mu:
-                    self._results.append({"id": job.job_id, "error": f"{type(e).__name__}: {e}"})
-            finally:
-                with self._mu:
-                    self._running.pop(job.job_id, None)
-                self.raffle.give_back(job)
-
-        t = threading.Thread(target=work, name=f"job-{job.job_id}", daemon=True)
-        self._threads.append(t)
-        t.start()
-        return True
+            except Exception as e:  # noqa: BLE001 — reported on the future
+                res = {"id": job.job_id, "error": f"{type(e).__name__}: {e}"}
+                logging.getLogger("datahub").exception("job %s failed",
+                                                       job.job_id)
+            with self._mu:
+                again = job.job_id in self._again
+                if again:
+                    self._again.discard(job.job_id)
+                    job.cancelled = False
+                else:
+                    del self._running[job.job_id]
+                    self.raffle.give_back(job)
+            done.set_result(res)
+            if not again:
+                return
+            done = Future()  # the queued run has no caller waiting on it
 
     def kill(self, job_id: str) -> bool:
         """KillJob (scheduler.go:402): cancel a RUNNING job's Spark
-        actions via its job group; the interrupted action raises in the
-        worker thread and the run reports as errored (the cancelled
-        flag suppresses reRun retries). Returns False when the job is
-        not currently running — the reference returns 200 either way,
-        so callers treat this as best-effort."""
+        actions via its job group and drop its queued run; the
+        interrupted action raises in the worker thread and the run
+        reports as errored (the cancelled flag suppresses reRun
+        retries). Returns False when the job is not currently running —
+        the reference returns 200 either way, so callers treat this as
+        best-effort."""
         with self._mu:
-            job = self._running.get(job_id)
-        if job is None:
-            return False
-        job.cancelled = True
+            self._again.discard(job_id)
+            if job_id not in self._running:
+                return False
+            job, _ = self._running[job_id]
+            job.cancelled = True
         spark = self._job_spark(job)
         if spark is not None:
             spark.sparkContext.cancelJobGroup(f"job-{job_id}")
         return True
 
-    def join(self) -> list[dict]:
-        for t in self._threads:
-            t.join()
-        self._threads.clear()
+    def join(self) -> None:
+        """Wait for every run started so far, queued reruns included."""
         with self._mu:
-            out, self._results = self._results, []
-        return out
+            threads = [t for _, t in self._running.values()]
+        for t in threads:
+            t.join()
 
 
 def fullsync_tombstones(old_latest: DataFrame, new_snapshot: DataFrame) -> DataFrame:
@@ -1428,16 +1462,17 @@ class TabularSource:
 
 def wire_onchange(scheduler: Scheduler, store: EntityStore,
                   watched: dict[str, list[str]]) -> None:
-    """events_test.go analogue: register onchange triggering — a committed
-    write to a watched dataset immediately runs the listening jobs (in
-    registration order). ``watched`` maps dataset -> [job_id,...]."""
-    def on_write(dataset: str, recorded: int) -> None:
-        for job_id in watched.get(dataset, []):
-            job = scheduler.jobs.get(job_id)
-            if job is not None and not job.paused:
-                job.run(scheduler.state)
-
-    store.add_listener(on_write)
+    """events_test.go analogue: onchange triggering. ``watched`` maps
+    dataset -> [job_id, ...]; the jobs join ``scheduler.watches`` and
+    the scheduler listens to ``store``, so a committed write to a watched
+    dataset notifies its runner (Scheduler.on_commit). The job runs on a
+    worker thread, never on the writer's, so a job failure cannot escape
+    the committed write; an event that arrives during a run causes one
+    more run after it."""
+    for dataset, job_ids in watched.items():
+        for job_id in job_ids:
+            scheduler.watches.setdefault(job_id, set()).add(dataset)
+    store.add_listener(scheduler.on_commit)
 
 
 class TabularSink:

@@ -271,7 +271,6 @@ class UdaServer:
         # jobs.Scheduler to serve /jobs CRUD + /job/{id} operations
         self.scheduler = scheduler
         self._job_configs: dict[str, dict] = {}
-        self._runner = None
         # content API (contenthandler.go:44-48): attach a ContentService
         self.content = content
         # login providers for outgoing connections
@@ -1087,8 +1086,7 @@ class UdaServer:
             if len(parts) == 2 and parts[0] == "jobs":
                 if self.scheduler is None:
                     return self._error(rq, 503, "no job scheduler attached")
-                self.scheduler.jobs.pop(parts[1], None)
-                self.scheduler.schedules.pop(parts[1], None)
+                self.scheduler.unregister(parts[1])
                 self._job_configs.pop(parts[1], None)
                 return self._reply(rq, 200, {})
             if len(parts) == 2 and parts[0] == "content" \
@@ -1176,8 +1174,7 @@ class UdaServer:
         if parts == ["jobs", "_", "status"]:
             # jobsListStatus (jobshandler.go:109-111): JobStatus rows
             # for every currently-running job (scheduler.go:328-348)
-            running = self._runner.raffle.running_jobs() \
-                if self._runner is not None else {}
+            running = sched.runner.raffle.running_jobs()
             return self._reply(rq, 200, [
                 {"jobId": jid,
                  "jobTitle": (self._job_configs.get(jid) or {}).get(
@@ -1191,19 +1188,18 @@ class UdaServer:
                 return self._error(rq, 404, "no such job")
             return self._reply(rq, 200, cfg)
         if len(parts) == 3 and parts[0] == "job" and parts[2] == "status":
-            running = self._runner is not None and \
-                parts[1] in self._runner.raffle.running_jobs()
+            running = parts[1] in sched.runner.raffle.running_jobs()
             return self._reply(
                 rq, 200, {"state": "Running" if running else "Stopped"})
         self._error(rq, 404, "not found")
 
     def _job_operate(self, rq, job_id: str, op: str) -> None:
         """PUT /job/{id}/run|pause|resume|reset
-        (joboperationhandler.go:41-46). ``run`` executes through the
-        raffle-gated runner and waits for completion — deterministic for
-        callers; long pipelines belong on cron triggers."""
-        from datahub_spark.jobs import JobRunner
-
+        (joboperationhandler.go:41-46). ``run`` submits the job to the
+        scheduler's runner — the same raffle cron and onchange runs draw
+        tickets from — and waits on that run: 409 when no ticket is
+        granted, 500 with the error when the run fails. Long pipelines
+        belong on cron triggers."""
         sched = self._need_scheduler(rq)
         if sched is None:
             return
@@ -1225,20 +1221,13 @@ class UdaServer:
             # jobsKill (joboperationhandler.go:59): best-effort cancel
             # of a running job's Spark actions; 200 either way, like
             # the reference
-            if self._runner is not None:
-                self._runner.kill(job_id)
+            sched.runner.kill(job_id)
         elif op == "run":
-            if self._runner is None:
-                self._runner = JobRunner(sched.state)
-            was_paused, job.paused = job.paused, False
-            try:
-                if not self._runner.submit(job):
-                    return self._error(rq, 409, "job is already running")
-                results = self._runner.join()
-            finally:
-                job.paused = was_paused
-            err = next((r.get("error") for r in results
-                        if r.get("id") == job_id and r.get("error")), None)
+            run = sched.runner.submit(job)
+            if run is None:
+                return self._error(
+                    rq, 409, "job is already running or out of run tickets")
+            err = run.result().get("error")
             if err:
                 return self._error(rq, 500, err)
         else:

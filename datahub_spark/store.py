@@ -352,8 +352,10 @@ class EntityStore:
         self._listeners: list = []
 
     def add_listener(self, fn) -> None:
-        """Register fn(dataset: str, recorded: int), called after commit."""
-        self._listeners.append(fn)
+        """Register fn(dataset: str, recorded: int), called after commit;
+        registering an equal fn again is a no-op."""
+        if fn not in self._listeners:
+            self._listeners.append(fn)
 
     def _emit(self, datasets: list[str], recorded: int) -> None:
         for fn in list(self._listeners):

@@ -185,41 +185,3 @@ def python_transform(df: DataFrame, fn: Callable[[pd.DataFrame], pd.DataFrame],
             yield fn(pdf)
 
     return df.mapInPandas(run, schema=schema)
-
-
-class EnrichSpec:
-    """Declarative enrichment hop: the data the reference's track_queries
-    extracts from transform code (hop/iHop registrations). Declaring hops
-    as data lets the jobs engine derive MultiSource dependencies
-    automatically instead of hand-listing them."""
-
-    def __init__(self, predicate: str, source_prop: str, target_prop: str,
-                 via_dataset: str, inverse: bool = False):
-        self.predicate = predicate
-        self.source_prop = source_prop
-        self.target_prop = target_prop
-        self.via_dataset = via_dataset
-        self.inverse = inverse
-
-
-def make_tracked_transform(store, main_dataset: str, specs: list[EnrichSpec]):
-    """transform.go track_queries analogue: build (transform_fn,
-    dependencies) from declared enrichment hops. The transform applies
-    every hop via enrich_via; the dependencies list feeds MultiSource so
-    a change in any 'via' dataset re-processes the affected main
-    entities through the inverse of the registered hop."""
-    from datahub_spark.jobs import Dependency, Join
-
-    def transform(df: DataFrame) -> DataFrame:
-        out = df
-        for s in specs:
-            out = enrich_via(out, s.predicate, s.source_prop, s.target_prop,
-                             via=store.log([s.via_dataset]), inverse=s.inverse)
-        return out
-
-    deps = [
-        Dependency(s.via_dataset,
-                   [Join(main_dataset, s.predicate, inverse=not s.inverse)])
-        for s in specs
-    ]
-    return transform, deps

@@ -128,7 +128,7 @@ class TestContentService:
 
 
 def test_scheduler_dispatches_through_raffled_runner(spark, tmp_path):
-    """run_due(runner=...) submits due jobs through the raffle: granted
+    """run_due submits due jobs through the runner's raffle: granted
     jobs run concurrently and are marked fired; a denied job is NOT
     marked fired and retries on the next matching tick (runner.go)."""
     from datahub_spark.store import EntityStore
@@ -138,19 +138,18 @@ def test_scheduler_dispatches_through_raffled_runner(spark, tmp_path):
         [("a:1", False, {"p:v": "1"}, {})],
         "id string, deleted boolean, props map<string,string>, refs map<string,array<string>>"))
     state = J.JobState(str(tmp_path / "state.json"))
-    sched = J.Scheduler(state)
+    # only 2 incremental tickets: j2 is denied this tick
+    sched = J.Scheduler(state, raffle=J.Raffle(tickets_full=0, tickets_incr=2))
     for i in range(3):
         sched.register(J.Job(f"j{i}", J.DatasetSource(store, "src"),
                              J.DatasetSink(store, f"out{i}")), schedule="30 2 * * *")
 
-    # only 2 incremental tickets: j2 is denied this tick
-    runner = J.JobRunner(state, J.Raffle(tickets_full=0, tickets_incr=2))
-    ran = sched.run_due(t(2026, 8, 13, 2, 30, 5), runner=runner)
+    ran = sched.run_due(t(2026, 8, 13, 2, 30, 5))
     assert sorted(r["id"] for r in ran) == ["j0", "j1"]
     # denied job is still due the same minute and runs once a slot frees
-    ran2 = sched.run_due(t(2026, 8, 13, 2, 30, 40), runner=runner)
+    ran2 = sched.run_due(t(2026, 8, 13, 2, 30, 40))
     assert [r["id"] for r in ran2] == ["j2"]
-    assert sched.run_due(t(2026, 8, 13, 2, 30, 55), runner=runner) == []
+    assert sched.run_due(t(2026, 8, 13, 2, 30, 55)) == []
     for i in range(3):
         assert store.log([f"out{i}"]).count() == 1
 

@@ -259,25 +259,29 @@ def test_requeue_drains_and_retries_on_next_run(spark, store, tmp_path):
 
 
 def test_scheduler_runs_in_lineage_order(spark, store, tmp_path):
+    import datetime
+
     state = J.JobState(str(tmp_path / "state.json"))
     sched = J.Scheduler(state)
     # j2 consumes j1's sink: must run after it even though registered first
     sched.register(J.Job("j2-consume", J.DatasetSource(store, "stage1"),
-                         J.DatasetSink(store, "stage2")))
+                         J.DatasetSink(store, "stage2")), schedule="* * * * *")
     sched.register(J.Job("j1-produce", J.DatasetSource(store, "people"),
-                         J.DatasetSink(store, "stage1")))
-    results = sched.run_all()
+                         J.DatasetSink(store, "stage1")), schedule="* * * * *")
+    results = sched.run_due(datetime.datetime(2026, 1, 1, 12, 0))
     assert [r["id"] for r in results] == ["j1-produce", "j2-consume"]
     assert store.log(["stage2"]).count() == 4  # saw this tick's stage1 output
 
 
 def test_scheduler_detects_cycles(spark, store, tmp_path):
+    import datetime
+
     state = J.JobState(str(tmp_path / "state.json"))
     sched = J.Scheduler(state)
     sched.register(J.Job("a", J.DatasetSource(store, "y"), J.DatasetSink(store, "x")))
     sched.register(J.Job("b", J.DatasetSource(store, "x"), J.DatasetSink(store, "y")))
     with pytest.raises(ValueError, match="cycle"):
-        sched.run_all()
+        sched.run_due(datetime.datetime(2026, 1, 1, 12, 0))
 
 
 def test_tabular_source_reads_csv_into_entities(spark, store, tmp_path):
@@ -437,15 +441,17 @@ def test_onchange_listener_triggers_job_on_write(spark, store, tmp_path):
     sched.register(J.Job("watcher", J.DatasetSource(store, "inbox"),
                          J.DatasetSink(store, "outbox")))
     J.wire_onchange(sched, store, {"inbox": ["watcher"]})
-    # a committed write to 'inbox' runs the watcher immediately
+    # a committed write to 'inbox' submits the watcher to the runner
     store.store_entities("inbox", spark.createDataFrame(
         [("i:1", False, {"p:v": "1"}, {})],
         "id string, deleted boolean, props map<string,string>, refs map<string,array<string>>"))
+    sched.runner.join()
     assert store.log(["outbox"]).count() == 1
     # writes to unwatched datasets do not trigger it
     store.store_entities("other", spark.createDataFrame(
         [("o:1", False, {"p:v": "2"}, {})],
         "id string, deleted boolean, props map<string,string>, refs map<string,array<string>>"))
+    sched.runner.join()
     assert store.log(["outbox"]).count() == 1
 
 
@@ -471,8 +477,9 @@ def test_job_runner_runs_concurrently_and_collects_results(spark, store, tmp_pat
     runner = J.JobRunner(state, J.Raffle(tickets_full=1, tickets_incr=4))
     jobs = [J.Job(f"copy{i}", J.DatasetSource(store, "people"),
                   J.DatasetSink(store, f"out{i}")) for i in range(3)]
-    assert all(runner.submit(j) for j in jobs)
-    results = runner.join()
+    runs = [runner.submit(j) for j in jobs]
+    assert all(runs)
+    results = [run.result() for run in runs]
     assert sorted(r["id"] for r in results) == ["copy0", "copy1", "copy2"]
     assert all("error" not in r for r in results)
     for i in range(3):
@@ -488,13 +495,15 @@ def test_job_runner_reports_errors_and_frees_ticket(spark, store, tmp_path):
     state = J.JobState(str(tmp_path / "state.json"))
     runner = J.JobRunner(state, J.Raffle(tickets_full=0, tickets_incr=1))
     bad = J.Job("bad", J.DatasetSource(store, "people"), BoomSink())
-    assert runner.submit(bad) is True
-    (res,) = runner.join()
+    run = runner.submit(bad)
+    assert run is not None
+    res = run.result()
     assert res["id"] == "bad" and "RuntimeError: boom" in res["error"]
     # ticket returned despite the failure
     ok = J.Job("ok", J.DatasetSource(store, "people"), J.DevNullSink())
-    assert runner.submit(ok) is True
-    assert runner.join()[0]["id"] == "ok"
+    run = runner.submit(ok)
+    assert run is not None
+    assert run.result()["id"] == "ok"
 
 
 def test_token_snapshot_never_skips_concurrent_producer_writes(spark, store, tmp_path):
@@ -539,13 +548,12 @@ def test_run_due_with_runner_barriers_producer_before_consumer(spark, store, tmp
     import datetime
 
     state = J.JobState(str(tmp_path / "state.json"))
-    sched = J.Scheduler(state)
+    sched = J.Scheduler(state, raffle=J.Raffle(tickets_full=1, tickets_incr=4))
     sched.register(J.Job("consume", J.DatasetSource(store, "lvl1"),
                          J.DatasetSink(store, "lvl2")), schedule="* * * * *")
     sched.register(J.Job("produce", J.DatasetSource(store, "people"),
                          J.DatasetSink(store, "lvl1")), schedule="* * * * *")
-    runner = J.JobRunner(state, J.Raffle(tickets_full=1, tickets_incr=4))
-    results = sched.run_due(datetime.datetime(2026, 1, 1, 12, 0), runner=runner)
+    results = sched.run_due(datetime.datetime(2026, 1, 1, 12, 0))
     assert sorted(r["id"] for r in results) == ["consume", "produce"]
     assert store.log(["lvl2"]).count() == 4  # saw this tick's lvl1 rows
 
@@ -557,19 +565,18 @@ def test_run_due_starved_producer_defers_consumer(spark, store, tmp_path):
     import datetime
 
     state = J.JobState(str(tmp_path / "state.json"))
-    sched = J.Scheduler(state)
+    # zero incremental tickets: everything starves
+    sched = J.Scheduler(state, raffle=J.Raffle(tickets_full=1, tickets_incr=0))
     sched.register(J.Job("produce", J.DatasetSource(store, "people"),
                          J.DatasetSink(store, "lvl1")), schedule="* * * * *")
     sched.register(J.Job("consume", J.DatasetSource(store, "lvl1"),
                          J.DatasetSink(store, "lvl2")), schedule="* * * * *")
-    # zero incremental tickets: everything starves
-    runner = J.JobRunner(state, J.Raffle(tickets_full=1, tickets_incr=0))
     t0 = datetime.datetime(2026, 1, 1, 12, 0)
-    assert sched.run_due(t0, runner=runner) == []
+    assert sched.run_due(t0) == []
     assert not store.has_data("lvl2")  # consumer did NOT scan stale lvl1
     # tickets restored: the SAME minute retries both, in order
-    runner2 = J.JobRunner(state, J.Raffle(tickets_full=1, tickets_incr=4))
-    results = sched.run_due(t0, runner=runner2)
+    sched.runner.raffle = J.Raffle(tickets_full=1, tickets_incr=4)
+    results = sched.run_due(t0)
     assert sorted(r["id"] for r in results) == ["consume", "produce"]
     assert store.log(["lvl2"]).count() == 4
 
@@ -660,7 +667,8 @@ def test_job_runner_kill_cancels_running_spark_actions(spark, tmp_path):
     job = J.Job("slow", SlowSource(spark), CountSink(),
                 on_error=J.ErrorHandler(kind="reRun", max_retries=3))
     t0 = time.monotonic()
-    assert runner.submit(job)
+    run = runner.submit(job)
+    assert run
     # wait until the Spark action is actually RUNNING (cancelJobGroup
     # only cancels active jobs), then kill; a full run takes ~12s
     tracker = spark.sparkContext.statusTracker()
@@ -668,7 +676,7 @@ def test_job_runner_kill_cancels_running_spark_actions(spark, tmp_path):
     while time.monotonic() < deadline and not tracker.getActiveJobsIds():
         time.sleep(0.1)
     assert runner.kill("slow")
-    results = runner.join()
+    results = [run.result()]
     elapsed = time.monotonic() - t0
     assert elapsed < 9, elapsed
     assert len(results) == 1 and "error" in results[0]

@@ -341,12 +341,12 @@ def test_jobs_api_over_http(spark, tmp_path):
         # jobsListStatus (jobshandler.go:109): idle -> [], running ->
         # JobStatus rows {jobId, jobTitle, started}
         assert _get(f"{base}/jobs/_/status") == []
-        assert srv._runner.raffle.borrow(sched.jobs["wire-job"])
+        assert sched.runner.raffle.borrow(sched.jobs["wire-job"])
         try:
             (st,) = _get(f"{base}/jobs/_/status")
             assert st["jobId"] == "wire-job" and "started" in st
         finally:
-            srv._runner.raffle.give_back(sched.jobs["wire-job"])
+            sched.runner.raffle.give_back(sched.jobs["wire-job"])
         lin = _get(f"{base}/lineage")
         assert any(e.get("from") == "src" or e.get("source") == "src"
                    or "src" in json.dumps(e) for e in lin)
@@ -369,6 +369,35 @@ def test_jobs_api_over_http(spark, tmp_path):
         with urllib.request.urlopen(req, timeout=30) as resp:
             assert resp.status == 200
         assert _get(f"{base}/jobs") == []
+    finally:
+        srv.stop()
+
+
+def test_onchange_job_posted_over_http_fires_on_commit(spark, tmp_path):
+    """An onchange trigger posted to POST /jobs watches its
+    monitoredDataset: a served write there submits the job through the
+    scheduler's runner, and the run lands the entity in the sink."""
+    store = S.EntityStore(spark, str(tmp_path / "store"))
+    sched = J.Scheduler(J.JobState(str(tmp_path / "state.json")))
+    srv = UdaServer(store, scheduler=sched)
+    base = srv.start()
+    try:
+        cfg = {
+            "id": "on-inbox",
+            "triggers": [{"triggerType": "onchange", "jobType": "incremental",
+                          "monitoredDataset": "inbox"}],
+            "source": {"Type": "DatasetSource", "Name": "inbox"},
+            "sink": {"Type": "DatasetSink", "Name": "outbox"},
+        }
+        assert _post(f"{base}/jobs", cfg)[0] == 201
+        assert _get(f"{base}/jobs/_/schedules") == {}
+        code, _ = _post(f"{base}/datasets/inbox/entities", _uda_batch(
+            {"id": "i:1", "props": {"p:v": "1"}, "refs": {}}))
+        assert code == 200
+        sched.runner.join()
+        assert [r["id"] for r in S.latest(store.log(["outbox"])).collect()] \
+            == ["i:1"]
+        assert _get(f"{base}/jobs/_/history")["on-inbox"]
     finally:
         srv.stop()
 

@@ -60,27 +60,3 @@ def test_python_transform_mapinpandas(spark):
 
     out = T.python_transform(df, upper_names).collect()[0]
     assert out["props"]["p:name"] == "BOB"
-
-
-def test_tracked_transform_derives_multisource_deps(spark, tmp_path):
-    from datahub_spark.jobs import MultiSource
-    from datahub_spark.store import EntityStore
-    from tests.entity_fixtures import people_log
-
-    es = EntityStore(spark, str(tmp_path / "store"))
-    log = people_log(spark)
-    for ds in ["people", "city"]:
-        es.execute_transaction({ds: log.filter(F.col("dataset") == ds).drop("dataset")})
-
-    specs = [T.EnrichSpec("p:home", "p:name", "p:cityname", via_dataset="city")]
-    transform, deps = T.make_tracked_transform(es, "people", specs)
-
-    # the derived dependency finds people affected by city changes
-    ms = MultiSource(es, "people", deps)
-    affected = sorted(r["id"] for r in ms.affected_ids(since=0).collect())
-    assert affected == ["p:alice", "p:bob"]
-
-    # and the transform itself performs the enrichment hop
-    out = transform(es.entities("people"))
-    got = {r["id"]: r["props"].get("p:cityname") for r in out.collect()}
-    assert got["p:bob"] == "Oslo"
