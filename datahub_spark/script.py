@@ -157,8 +157,8 @@ def make_builtins(namespaces: dict[str, str], index: dict | None = None,
         # what build_lookup_index over those datasets' logs holds
         key = tuple(sorted(set(datasets)))
         if key not in scoped:
-            scoped[key] = _latest_and_inverse(
-                e for ds in key for e in changes.get(ds, []))
+            scoped[key] = _fold_latest(
+                {}, {}, (e for ds in key for e in changes.get(ds, [])))
         return scoped[key]
 
     def _key(prefix, name):
@@ -505,49 +505,91 @@ def build_lookup_index(*frames: DataFrame,
     transforms.enrich_via, which shuffles properly. Enforced: more than
     ``max_rows`` total rows raises instead of silently OOMing the driver
     (the limit+1 probe never materializes the oversized frame)."""
-    ents: list = []
-    changes: dict = {}
-    remaining = max_rows
+    rows: list = []
     for df in frames:
         cols = [c for c in ENTITY_COLUMNS if c in df.columns]
-        collected = df.select(*cols).limit(remaining + 1).collect()
-        if len(collected) > remaining:
-            raise ValueError(
-                f"lookup index exceeds {max_rows} rows: Query/FindById "
-                "lookups are for dimension-sized datasets only — join "
-                "large datasets with transforms.enrich_via (a distributed "
-                "shuffle join) instead, or raise max_rows explicitly"
-            )
-        remaining -= len(collected)
-        for row in collected:
-            ent = _row_to_entity(row.asDict())
-            ents.append(ent)
-            changes.setdefault(ent["Dataset"], []).append(ent)
-    by_id, inverse = _latest_and_inverse(ents)
-    for ds in changes:
-        changes[ds].sort(key=lambda e: (*_version(e), e["ID"] or ""))
+        collected = df.select(*cols).limit(max_rows - len(rows) + 1).collect()
+        rows.extend(row.asDict() for row in collected)
+        if len(rows) > max_rows:
+            raise _index_too_big(max_rows)
+    return fold_lookup_index({"by_id": {}, "inverse": {}, "changes": {}},
+                             rows, max_rows)
+
+
+def fold_lookup_index(index: dict, rows,
+                      max_rows: int = LOOKUP_INDEX_MAX_ROWS) -> dict:
+    """``index`` with the entity versions ``rows`` (dicts keyed by entity
+    column) folded in — equal to build_lookup_index over the rows
+    ``index`` came from plus ``rows``. Returns a new index and leaves
+    ``index`` as it is, so a reader still holding it sees no change;
+    untouched entities and edge lists are shared, not copied. The cap
+    counts the versions ``index`` already holds, and ``rows`` is read
+    no further than one row past it."""
+    remaining = max_rows - sum(len(v) for v in index["changes"].values())
+    ents: list = []
+    for row in rows:
+        if len(ents) >= remaining:
+            raise _index_too_big(max_rows)
+        ents.append(_row_to_entity(row))
+    added: dict = {}
+    for ent in ents:
+        added.setdefault(ent["Dataset"], []).append(ent)
+    changes = dict(index["changes"])
+    for ds, new in added.items():
+        changes[ds] = sorted(changes.get(ds, []) + new,
+                             key=lambda e: (*_version(e), e["ID"] or ""))
+    by_id, inverse = _fold_latest(index["by_id"], index["inverse"], ents)
     return {"by_id": by_id, "inverse": inverse, "changes": changes}
+
+
+def _index_too_big(max_rows: int) -> ValueError:
+    return ValueError(
+        f"lookup index exceeds {max_rows} rows: Query/FindById "
+        "lookups are for dimension-sized datasets only — join "
+        "large datasets with transforms.enrich_via (a distributed "
+        "shuffle join) instead, or raise max_rows explicitly"
+    )
 
 
 def _version(ent: dict) -> tuple:
     return (ent["Recorded"] or 0, ent["Seq"] or 0)
 
 
-def _latest_and_inverse(ents) -> tuple[dict, dict]:
-    """Latest version per id (a later-seen tie wins) and the inverse
-    edges {(predicate, target): sorted source ids} over those versions."""
-    by_id: dict = {}
+def _edges(ent: dict | None):
+    for pred, targets in ((ent or {}).get("References") or {}).items():
+        for t in targets:
+            yield (pred, t)
+
+
+def _fold_latest(by_id: dict, inverse: dict, ents) -> tuple[dict, dict]:
+    """``(by_id, inverse)`` with ``ents`` folded in, as new dicts. Per id
+    the version with the greatest (recorded, seq, dataset) wins — the
+    order store.merge_partials folds partials in — and a later ent wins
+    a full tie. ``inverse`` maps (predicate, target) to the sorted ids
+    whose winning version references the target."""
+    by_id = dict(by_id)
+    replaced: dict = {}
     for ent in ents:
         prev = by_id.get(ent["ID"])
-        if prev is None or _version(ent) >= _version(prev):
+        if prev is None or (*_version(ent), ent["Dataset"] or "") >= \
+                (*_version(prev), prev["Dataset"] or ""):
+            replaced.setdefault(ent["ID"], prev)
             by_id[ent["ID"]] = ent
-    inverse: dict = {}
-    for ent in by_id.values():
-        for pred, targets in ent["References"].items():
-            for t in targets:
-                inverse.setdefault((pred, t), []).append(ent["ID"])
-    for k in inverse:
-        inverse[k].sort()  # deterministic result order
+    added: dict = {}
+    touched = set()
+    for eid, prev in replaced.items():
+        touched.update(_edges(prev))
+        for edge in _edges(by_id[eid]):
+            added.setdefault(edge, []).append(eid)
+    touched.update(added)
+    inverse = dict(inverse)
+    for edge in touched:
+        srcs = [s for s in inverse.get(edge, ()) if s not in replaced]
+        srcs.extend(added.get(edge, ()))
+        if srcs:
+            inverse[edge] = sorted(srcs)  # deterministic result order
+        else:
+            inverse.pop(edge, None)
     return by_id, inverse
 
 

@@ -262,10 +262,13 @@ class UdaServer:
         self._httpd: ThreadingHTTPServer | None = None
         self._thread: threading.Thread | None = None
         self._host, self._port = host, port
-        # /query lookup index as (generation it was built at, index);
-        # every store commit advances the generation
-        self._index: tuple[int, dict | None] = (-1, None)
+        # /query lookup index as (store generation it covers, index, the
+        # log files it holds); every store event advances the generation
+        # under a lock of its own, so a writer never waits on a fold
+        self._index: tuple[int, dict, set[str]] | None = None
         self._index_gen = 0
+        self._gen_lock = threading.Lock()
+        self._index_lock = threading.Lock()  # one build or fold at a time
         store.add_listener(lambda _ds, _rec: self.invalidate_query_index())
         # jobs API (jobshandler.go / joboperationhandler.go): attach a
         # jobs.Scheduler to serve /jobs CRUD + /job/{id} operations
@@ -317,6 +320,8 @@ class UdaServer:
             for w in self._wals.values():
                 w.close()
             self._wals.clear()
+        with self._index_lock:
+            self._index = None
 
     # -- WAL-backed served writes ------------------------------------------
 
@@ -1269,22 +1274,46 @@ class UdaServer:
         construction; set-oriented querying over big data belongs in the
         engine's query operators, not an HTTP endpoint.
 
-        The index serves until the store's next commit; a traversal
-        scoped by ``datasets`` reads the same index through ``Query``."""
+        The index follows the store's commits the way the reference keeps
+        its reference indexes current at write time (store.go:870-1022),
+        but lazily: a commit only advances a generation, and the next
+        call lists the registered datasets' log files and folds the
+        rows of the files it has not read yet (script.fold_lookup_index),
+        read on the driver without a Spark job, so several commits fold
+        in one pass, commits from another writer on the same root
+        included. When a file it holds is gone (compaction, dataset
+        delete or rename) it builds afresh from one ``store.log`` frame
+        instead. One build or fold runs at a time; a traversal scoped by
+        ``datasets`` reads the same index through ``Query``."""
         from datahub_spark import script
 
-        built_at, index = self._index
-        if built_at != self._index_gen:
-            # a commit during the build advances the generation, so an
-            # index that may have missed it is rebuilt on the next call
-            built_at = self._index_gen
-            index = script.build_lookup_index(
-                *[self.store.log([d]) for d in sorted(self.store.list_datasets())])
-            self._index = (built_at, index)
-        return index
+        with self._index_lock:
+            gen = self._index_gen
+            if self._index is not None and self._index[0] == gen:
+                return self._index[1]
+            names = self.store.list_datasets()
+            if self._index is not None:
+                _, index, held = self._index
+                files = self.store.log_files(names)
+                if held <= files:
+                    if files != held:
+                        index = script.fold_lookup_index(
+                            index, self.store.log_rows(files - held))
+                    self._index = (gen, index, files)
+                    return index
+            frames, held = [], set()
+            if names:
+                # one task reads every file: the rows go to the driver
+                # anyway, and a single partition collects in one job
+                frame = self.store.log(names).coalesce(1)
+                frames, held = [frame], self.store.frame_files(frame, names)
+            index = script.build_lookup_index(*frames)
+            self._index = (gen, index, held)
+            return index
 
     def invalidate_query_index(self) -> None:
-        self._index_gen += 1
+        with self._gen_lock:
+            self._index_gen += 1
 
     def _wire_entity(self, ent: dict | None, eid: str) -> dict:
         if ent is None:

@@ -31,6 +31,7 @@ import re
 import shutil
 import threading
 import uuid
+from urllib.parse import unquote, urlparse
 
 try:  # POSIX cross-process lock; absent on some platforms
     import fcntl
@@ -697,6 +698,45 @@ class EntityStore:
         if datasets:
             df = df.filter(F.col("dataset").isin(datasets))  # partition pruning
         return df
+
+    def log_files(self, datasets: list[str]) -> set[str]:
+        """Absolute paths of the committed log files of ``datasets``, one
+        directory listing each. A commit only adds files; compaction,
+        delete and rename replace or remove them, so a path still listed
+        holds the rows it held when it was first read."""
+        out: set[str] = set()
+        for ds in datasets:
+            part = os.path.join(os.path.abspath(self.log_dir), f"dataset={ds}")
+            try:
+                names = os.listdir(part)
+            except FileNotFoundError:
+                continue
+            out.update(os.path.join(part, fn) for fn in names
+                       if fn.endswith(".parquet"))
+        return out
+
+    def log_rows(self, paths):
+        """The rows of exactly the log files ``paths`` (as log_files
+        returns them), read on the driver with pyarrow one file at a
+        time, as dicts keyed by entity column; ``dataset`` is the file's
+        partition. For driver-held indexes: a few new files read this
+        way cost less than a Spark job's fixed overhead."""
+        import pyarrow.parquet as pq
+
+        for path in sorted(paths):
+            ds = os.path.basename(os.path.dirname(path))[len("dataset="):]
+            for row in pq.ParquetFile(path).read().to_pylist():
+                row["dataset"] = ds
+                yield row
+
+    def frame_files(self, df: DataFrame, datasets: list[str]) -> set[str]:
+        """The files of ``datasets`` that ``df``, a frame over ``log()``,
+        reads: Spark lists them when the frame is made, so this is
+        exactly what collecting it returns, in log_files' form."""
+        dirs = {f"dataset={ds}" for ds in datasets}
+        paths = (unquote(urlparse(u).path) for u in df.inputFiles())
+        return {p for p in paths
+                if os.path.basename(os.path.dirname(p)) in dirs}
 
     def entities(self, dataset: str) -> DataFrame:
         return latest(self.log([dataset]))

@@ -80,3 +80,39 @@ def test_server_looks_hooks_up_per_call(spark, tmp_path, monkeypatch):
         srv.stop()
     assert seen == ["/query"]
     assert built == [0]
+
+
+def test_a_commit_then_a_traversal_folds_without_a_build(spark, tmp_path, monkeypatch):
+    """The traced run's ``script.index_builds`` counts full builds: after
+    the first traversal builds the index, a commit is folded into it by
+    the next traversal without a call to ``script.build_lookup_index``."""
+    es = store.EntityStore(spark, str(tmp_path / "s"))
+
+    def batch(eid):
+        return spark.createDataFrame(
+            [(eid, None, 0, False, {}, {"p:x": ["e:0"]})], uda.ROW_SCHEMA)
+
+    es.store_entities("d", batch("e:1"))
+    built = []
+    build = script.build_lookup_index
+    monkeypatch.setattr(script, "build_lookup_index",
+                        lambda *frames, **kw: built.append(len(frames)) or build(*frames, **kw))
+    srv = UdaServer(es)
+    base = srv.start()
+
+    def referrers():
+        req = urllib.request.Request(
+            f"{base}/query", method="POST",
+            data=json.dumps({"startingEntities": ["e:0"], "predicate": "p:x",
+                             "inverse": True}).encode(),
+            headers={"Content-Type": "application/json"})
+        with urllib.request.urlopen(req, timeout=30) as resp:
+            return sorted(e["id"] for _s, _p, e in json.loads(resp.read())[1])
+
+    try:
+        assert referrers() == ["e:1"]
+        es.store_entities("d", batch("e:2"))
+        assert referrers() == ["e:1", "e:2"]
+    finally:
+        srv.stop()
+    assert built == [1]

@@ -308,6 +308,39 @@ def test_lookup_index_row_cap_raises_with_pointer(spark, people):
     assert len(SC.build_lookup_index(big, max_rows=100)["by_id"]) == 50
 
 
+def test_lookup_index_fold_equals_build_and_keeps_the_cap(spark, people, nations):
+    """Folding rows into an index equals building over all of them,
+    leaves the folded-into index as it was, and counts the rows it
+    already holds toward the cap."""
+    moved = _entities(spark, [
+        ("p:2", 2, 0, False, {"p:name": "bob"}, {"p:nation": ["n:1"]}, "people"),
+        ("p:1", 2, 0, True, None, None, "people"),
+    ])
+    rows = [r.asDict() for r in moved.collect()]
+    base = SC.build_lookup_index(people, nations)
+    before = {k: dict(v) for k, v in base.items()}
+    folded = SC.fold_lookup_index(base, rows)
+    assert folded == SC.build_lookup_index(people, nations, moved)
+    assert folded["inverse"][("p:nation", "n:1")] == ["p:2"]
+    assert ("p:nation", "n:2") not in folded["inverse"]
+    assert base == before
+    with pytest.raises(ValueError, match="exceeds 5 rows.*enrich_via"):
+        SC.fold_lookup_index(base, rows, max_rows=5)
+    assert len(SC.fold_lookup_index(base, rows, max_rows=6)["changes"]["people"]) == 4
+
+
+def test_lookup_index_ties_break_by_dataset_not_frame_order(spark):
+    """Equal (recorded, seq) versions of one id in two datasets resolve
+    by dataset name, the order store.merge_partials folds partials in,
+    whatever order the frames come in."""
+    a = _entities(spark, [("x:1", 5, 1, False, {"p:v": "a"}, {"p:r": ["y:a"]}, "a")])
+    b = _entities(spark, [("x:1", 5, 1, False, {"p:v": "b"}, {"p:r": ["y:b"]}, "b")])
+    ab, ba = SC.build_lookup_index(a, b), SC.build_lookup_index(b, a)
+    assert ab["by_id"]["x:1"]["Properties"] == {"p:v": "b"}
+    assert ab["by_id"] == ba["by_id"] and ab["inverse"] == ba["inverse"]
+    assert list(ab["inverse"]) == [("p:r", "y:b")]
+
+
 def test_fn_cache_is_content_keyed_and_bounded(spark, people):
     # same (code, ns, index) binding -> same cache key (repeat calls
     # reuse the worker-side compiled env instead of growing the cache)
