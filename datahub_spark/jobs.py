@@ -14,14 +14,30 @@ Reference parity (internal/jobs/):
 
 Spark re-expression: a source yields a DataFrame (a declarative view of
 the store's change-log — nothing is materialized until the sink runs);
-transforms are DataFrame→DataFrame callables; sinks write. Incremental
-state is the max (recorded) watermark seen, persisted as JSON — the
-continuation-token model of the reference, which pushes down as a range
-filter on the log scan instead of re-reading history.
+transforms are DataFrame→DataFrame callables; sinks write.
+
+Continuation: each job keeps one token, a JSON value in JobState. Every
+source implements ``read(token) -> (frame, next_token)``, where ``token``
+is what the job stored last, or None on a fullsync or first run; an
+incremental run stores ``next_token`` after a successful write.
+  - log-backed sources (DatasetSource, UnionDatasetSource, MultiSource)
+    take ``next_token`` BEFORE building the frame, as the max
+    ``recorded`` in the log files' parquet footers (driver-side, no
+    Spark job); a producer committing during the run stays above it and
+    flows through the next run, where a re-delivered row dies in the
+    sink's write-time dedup. MultiSource's token is one watermark per
+    involved dataset. The range filter ``recorded > token`` pushes down
+    into the log scan instead of re-reading history;
+  - eager sources (HttpDatasetSource, script.ScriptVirtualSource) return
+    what their read produced: the max ``recorded`` fetched, or the
+    script's own return value, kept verbatim;
+  - log-less sources (VirtualDatasetSource, SampleSource, TabularSource)
+    hand back the token they were given.
 """
 
 from __future__ import annotations
 
+import functools
 import itertools
 import json
 import logging
@@ -54,16 +70,11 @@ class DatasetSource:
     def __init__(self, store: EntityStore, name: str, latest_only: bool = False):
         self.store, self.name, self.latest_only = store, name, latest_only
 
-    def read(self, since: int = 0) -> DataFrame:
-        return self.store.changes(self.name, since=since, latest_only=self.latest_only)
-
-    def current_watermark(self) -> int:
-        """Max recorded in the source's committed log — a pruned
-        single-partition agg answered from parquet column stats, NOT a
-        re-execution of the job pipeline (Job.run reads this after the
-        sink write so the source plan runs exactly once)."""
-        row = self.store.log([self.name]).agg(F.max("recorded").alias("m")).collect()[0]
-        return int(row["m"] or 0)
+    def read(self, token: int | None = None) -> tuple[DataFrame, int]:
+        since = token or 0
+        next_token = max(self.store.max_recorded([self.name]), since)
+        return (self.store.changes(self.name, since=since,
+                                   latest_only=self.latest_only), next_token)
 
 
 class UnionDatasetSource:
@@ -72,15 +83,10 @@ class UnionDatasetSource:
     def __init__(self, sources: list[DatasetSource]):
         self.sources = sources
 
-    def read(self, since: int = 0) -> DataFrame:
-        out = None
-        for s in self.sources:
-            df = s.read(since)
-            out = df if out is None else out.unionByName(df)
-        return out
-
-    def current_watermark(self) -> int:
-        return max(s.current_watermark() for s in self.sources)
+    def read(self, token: int | None = None) -> tuple[DataFrame, int]:
+        frames, tokens = zip(*(s.read(token) for s in self.sources))
+        return (functools.reduce(lambda a, b: a.unionByName(b), frames),
+                max(tokens))
 
 
 @dataclass
@@ -111,13 +117,9 @@ class MultiSource:
         self.store, self.name, self.dependencies = store, name, dependencies
         self.latest_only = latest_only
 
-    def affected_ids(self, since: int = 0) -> DataFrame:
-        """Ids of main-dataset entities needing reprocessing due to
-        dependency changes (single shared token form)."""
-        return self.affected_ids_with_tokens(
-            {dep.dataset: since for dep in self.dependencies})
-
-    def affected_ids_with_tokens(self, tokens: dict[str, int]) -> DataFrame:
+    def affected_ids(self, tokens: dict[str, int]) -> DataFrame:
+        """Ids of main-dataset entities needing reprocessing because a
+        dependency dataset changed after its entry in ``tokens``."""
         out = None
         for dep in self.dependencies:
             ids = (
@@ -143,14 +145,13 @@ class MultiSource:
             out = ids if out is None else out.unionByName(ids).distinct()
         return out
 
-    def read(self, since: int = 0) -> DataFrame:
-        return self.read_with_tokens({self.name: since})
-
-    def read_with_tokens(self, tokens: dict[str, int]) -> DataFrame:
-        """Per-dependency continuation (pipeline_test.go 'Should store
-        dependency watermarks...'): each dataset advances its own
-        watermark — essential when datasets use different `recorded`
-        scales (a shared token silently skips or re-reads changes).
+    def read(self, token: dict[str, int] | None = None
+             ) -> tuple[DataFrame, dict[str, int]]:
+        """The token is one watermark per involved dataset
+        (pipeline_test.go 'Should store dependency watermarks...'), as
+        datasets may use different ``recorded`` scales, where a shared
+        token silently skips or re-reads changes. Any other token reads
+        from the start.
 
         Reprocessed rows (emitted because a DEPENDENCY changed, not the
         entity itself) carry a NULL version key: the sink's transaction
@@ -159,9 +160,12 @@ class MultiSource:
         original (recorded, seq) would tie exactly with the previously
         sinked version and make latest()'s max_by pick the winner by row
         order — nondeterministic."""
+        tokens = token if isinstance(token, dict) else {}
+        next_token = {ds: max(self.store.max_recorded([ds]), tokens.get(ds, 0))
+                      for ds in [self.name] + [d.dataset for d in self.dependencies]}
         main = self.store.changes(self.name, since=tokens.get(self.name, 0),
                                   latest_only=self.latest_only)
-        affected = self.affected_ids_with_tokens(tokens)
+        affected = self.affected_ids(tokens)
         main_all = latest(self.store.log([self.name]), include_deleted=True)
         reprocess = (
             main_all.join(affected, "id")
@@ -170,16 +174,7 @@ class MultiSource:
             .withColumn("recorded", F.lit(None).cast("long"))
             .withColumn("seq", F.lit(None).cast("long"))
         )
-        return main.unionByName(reprocess)
-
-    def current_watermarks(self) -> dict[str, int]:
-        """Max recorded per involved dataset (read after a successful
-        sink write; one tiny agg per dataset on a pruned partition)."""
-        out = {}
-        for ds in [self.name] + [d.dataset for d in self.dependencies]:
-            row = self.store.log([ds]).agg(F.max("recorded")).collect()[0]
-            out[ds] = int(row[0] or 0)
-        return out
+        return main.unionByName(reprocess), next_token
 
 
 class DependencyRegistry:
@@ -303,28 +298,36 @@ def parse_job_config(store: EntityStore, config: dict | str, *,
     def _bool(v) -> bool:
         return v if isinstance(v, bool) else str(v).lower() == "true"
 
+    def need(d: dict, key: str):
+        if key not in d:
+            raise ValueError(f"{d.get('Type')} needs key {key!r}")
+        return d[key]
+
     # -- source -----------------------------------------------------------
     def parse_source(sc: dict):
         t = sc.get("Type")
         if t == "DatasetSource":
-            return DatasetSource(store, sc["Name"],
+            return DatasetSource(store, need(sc, "Name"),
                                  latest_only=_bool(sc.get("LatestOnly", False)))
         if t == "UnionDatasetSource":
             subs = [parse_source({**d, "Type": "DatasetSource"})
-                    for d in sc["DatasetSources"]]
+                    for d in need(sc, "DatasetSources")]
+            if not subs:
+                raise ValueError(f"{t} needs a non-empty 'DatasetSources'")
             return UnionDatasetSource(subs)
         if t == "MultiSource":
             tc = config.get("transform") or config.get("Transform") or {}
             code = tc.get("Code") \
                 if tc.get("Type") == "JavascriptTransform" else None
+            name = need(sc, "Name")
             deps = parse_multi_source_dependencies(
-                sc["Name"], sc.get("Dependencies"), code)
-            return MultiSource(store, sc["Name"], deps,
+                name, sc.get("Dependencies"), code)
+            return MultiSource(store, name, deps,
                                latest_only=_bool(sc.get("LatestOnly", True)))
         if t == "SampleSource":
             return SampleSource(spark, int(sc.get("NumberOfEntities", 10)))
         if t == "HttpDatasetSource":
-            return HttpDatasetSource(spark, sc["Url"],
+            return HttpDatasetSource(spark, need(sc, "Url"),
                                      allow_network=allow_network)
         raise ValueError(f"unknown source type: {t}")
 
@@ -332,13 +335,13 @@ def parse_job_config(store: EntityStore, config: dict | str, *,
     def parse_sink(sc: dict):
         t = sc.get("Type")
         if t == "DatasetSink":
-            return DatasetSink(store, sc["Name"])
+            return DatasetSink(store, need(sc, "Name"))
         if t == "DevNullSink":
             return DevNullSink()
         if t == "ConsoleSink":
             return ConsoleSink()
         if t == "HttpDatasetSink":
-            return HttpDatasetSink(sc["Url"], allow_network=allow_network)
+            return HttpDatasetSink(need(sc, "Url"), allow_network=allow_network)
         raise ValueError(f"unknown sink type: {t}")
 
     # -- transform --------------------------------------------------------
@@ -351,10 +354,10 @@ def parse_job_config(store: EntityStore, config: dict | str, *,
 
             lookup = [store.log([name])
                       for name in tc.get("LookupDatasets", [])] or None
-            return make_script_transform(tc["Code"], lookup=lookup)
+            return make_script_transform(need(tc, "Code"), lookup=lookup)
         if t == "HttpTransform":
             return make_http_transform(
-                tc["Url"], allow_network=allow_network,
+                need(tc, "Url"), allow_network=allow_network,
                 support_context=_bool(tc.get("SupportContext", False)),
                 timeout_s=float(tc.get("TimeOut") or 30.0))
         raise ValueError(f"unknown transform type: {t}")
@@ -417,23 +420,26 @@ def _track_queries_chains(transform_code: str) -> list:
 class VirtualDatasetSource:
     """internal/server/virtualdataset.go: a read-only dataset whose
     entities are produced by a script. Here: a python callable
-    (spark, params, since, limit) -> DataFrame."""
+    (spark, params, since, limit) -> DataFrame. It keeps no log, so a
+    read hands back the token it was given."""
 
     def __init__(self, spark, build_entities, params=None):
         self.spark, self.build_entities, self.params = spark, build_entities, params
 
-    def read(self, since: int = 0, limit: int | None = None) -> DataFrame:
-        return self.build_entities(self.spark, self.params, since, limit)
+    def read(self, token=None, limit: int | None = None) -> tuple[DataFrame, object]:
+        since = 0 if token is None else token
+        return self.build_entities(self.spark, self.params, since, limit), token
 
 
 class SampleSource:
     """jobs/source SampleSource: emits N generated sample entities (used
-    by the reference for wiring tests). Distributed via spark.range."""
+    by the reference for wiring tests). Distributed via spark.range; a
+    read hands back the token it was given."""
 
     def __init__(self, spark, n: int = 10):
         self.spark, self.n = spark, n
 
-    def read(self, since: int = 0) -> DataFrame:
+    def read(self, token=None) -> tuple[DataFrame, object]:
         return self.spark.range(self.n).select(
             F.concat(F.lit("sample:"), F.col("id")).alias("id"),
             F.lit(1).cast("long").alias("recorded"),
@@ -442,7 +448,7 @@ class SampleSource:
             F.create_map(F.lit("p:index"), F.col("id").cast("string")).alias("props"),
             F.lit(None).cast("map<string,array<string>>").alias("refs"),
             F.lit("sample").alias("dataset"),
-        )
+        ), token
 
 
 class HttpDatasetSource:
@@ -458,13 +464,12 @@ class HttpDatasetSource:
     pull. Gated behind ``allow_network`` (this sandbox has loopback
     only); at scale, shard the feed by page-range and fetch inside
     mapInPandas workers instead.
-    """
 
-    # continuation tokens are an opaque SERVER contract; across job runs
-    # the durable watermark is max(recorded) of the synced page (the
-    # engine-wide int convention JobState persists), announced via
-    # current_watermark after each read
-    watermark_from_read = True
+    The ``@continuation`` token is an opaque server contract used only
+    for paging within one read; the token a read returns is the max
+    ``recorded`` of the rows it fetched (or the one it was given), which
+    a later read passes back as ``since``.
+    """
 
     def __init__(self, spark, url: str, dataset: str = "remote",
                  token_provider=None, allow_network: bool = False,
@@ -474,7 +479,6 @@ class HttpDatasetSource:
         self.allow_network = allow_network
         self.max_pages = max_pages
         self.timeout_s = timeout_s
-        self._watermark = 0
 
     def _fetch(self, url: str) -> list:
         import urllib.request
@@ -485,41 +489,37 @@ class HttpDatasetSource:
         with urllib.request.urlopen(req, timeout=self.timeout_s) as resp:
             return json.loads(resp.read().decode("utf-8"))
 
-    def read(self, since: int = 0) -> DataFrame:
+    def read(self, token: int | None = None) -> tuple[DataFrame, int]:
         if not self.allow_network:
             raise NotImplementedError(
                 "network fetch disabled: pass allow_network=True, or feed "
                 "fetched payloads through uda.decode_entities directly"
             )
-        token, objs = since, []
-        max_recorded = int(since or 0)
+        max_recorded = cursor = token or 0
+        objs = []
         for _ in range(self.max_pages):
-            page = self._fetch(f"{self.url}/changes?since={token}")
-            next_token = token
+            page = self._fetch(f"{self.url}/changes?since={cursor}")
+            next_cursor = cursor
             for obj in page:
                 oid = obj.get("id")
                 if oid == "@context":
                     continue
                 if oid == "@continuation":
-                    next_token = obj.get("token", token)
+                    next_cursor = obj.get("token", cursor)
                     continue
                 rec = obj.get("recorded")
                 if isinstance(rec, (int, float)):
                     max_recorded = max(max_recorded, int(rec))
                 objs.append(obj)
-            if next_token == token:
+            if next_cursor == cursor:
                 break  # no continuation advancement: feed drained
-            token = next_token
-        self._watermark = max_recorded
+            cursor = next_cursor
         from datahub_spark.script import SCRIPT_OUTPUT_SCHEMA
 
         return local_frame(
             self.spark,
             [row + (self.dataset,) for row in uda.decode_entities(objs)],
-            SCRIPT_OUTPUT_SCHEMA)
-
-    def current_watermark(self) -> int:
-        return self._watermark
+            SCRIPT_OUTPUT_SCHEMA), max_recorded
 
 
 # --------------------------------------------------------------------------
@@ -686,7 +686,7 @@ class ProxyDataset:
         )
 
     def changes(self, since: int = 0) -> DataFrame:
-        return self._source.read(since=since)
+        return self._source.read(since)[0]
 
     def entities(self) -> DataFrame:
         return latest(self.changes(), include_deleted=False,
@@ -738,37 +738,19 @@ class Job:
                                 tags)
 
     def run(self, state: "JobState") -> dict:
-        """Execute once (the scheduler analogue triggers this)."""
-        since = state.token(self.job_id) if self.job_type == "incremental" else 0
+        """Execute once (the scheduler analogue triggers this). An
+        incremental run reads from the job's stored token and, after a
+        successful write, stores the token its source's read returned; a
+        fullsync run reads from None and stores nothing."""
+        incremental = self.job_type == "incremental"
+        token = state.token(self.job_id) if incremental else None
         attempts = 0
         started = time.perf_counter()
         self._metric("jobs.count")
         while True:
             attempts += 1
             try:
-                # Snapshot the continuation watermark BEFORE the source scan
-                # (the scan itself is lazy and runs at the sink write). A
-                # concurrent producer can commit to the source dataset at any
-                # point between here and the write; taking the token first
-                # means such rows are at worst REPROCESSED next run (they die
-                # in the sink's write-time dedup), never silently skipped —
-                # the post-write read had the opposite, unsafe direction.
-                # (Sources whose token IS the read's continuation value —
-                # watermark_from_read — are exempt: their watermark derives
-                # from the rows the read actually produced, so the post-read
-                # value is race-free by construction.)
-                wm_from_read = getattr(self.source, "watermark_from_read", False)
-                pre_wm: int | None = None
-                pre_dep_tokens: dict[str, int] | None = None
-                if self.job_type == "incremental" and not wm_from_read:
-                    if isinstance(self.source, MultiSource):
-                        pre_dep_tokens = self.source.current_watermarks()
-                    elif hasattr(self.source, "current_watermark"):
-                        pre_wm = self.source.current_watermark()
-                if isinstance(self.source, MultiSource) and self.job_type == "incremental":
-                    df = self.source.read_with_tokens(state.dep_tokens(self.job_id))
-                else:
-                    df = self.source.read(since=since)
+                df, next_token = self.source.read(token)
                 # reQueue drain (reQueue.go reQueuePrependingSource): every
                 # `<job>.errors.*` dataset written by a previous run is
                 # PREPENDED to the source stream so failed entities retry
@@ -820,18 +802,6 @@ class Job:
                     is_txn = F.col("dataset").startswith("@txn:")
                     txn_df = txn_cached.filter(is_txn)
                     df = txn_cached.filter(~F.coalesce(is_txn, F.lit(False)))
-                # Run the source+transform plan EXACTLY ONCE: the sink
-                # write is the single execution. The continuation token is
-                # the PRE-scan log watermark (a pruned stats-only agg taken
-                # above); sources without a backing log persist the frame so
-                # the write populates the cache and the watermark agg reads
-                # it back instead of re-running the pipeline.
-                store_wm = pre_wm is not None
-                cached = None
-                if self.job_type == "incremental" and not store_wm \
-                        and not wm_from_read and "recorded" in df.columns:
-                    cached = LT.cached(df)
-                    df = cached
                 try:
                     if txn_df is not None:
                         # commit transaction targets first — the reference
@@ -861,23 +831,14 @@ class Job:
                         fs.complete()
                     else:
                         self.sink.write(df)
-                    wm = since
-                    if self.job_type == "incremental":
-                        if store_wm:
-                            wm = max(pre_wm, since)
-                        elif wm_from_read and hasattr(self.source, "current_watermark"):
-                            wm = max(self.source.current_watermark(), since)
-                        elif cached is not None:
-                            row = cached.agg(F.max("recorded")).collect()[0]
-                            wm = max(int(row[0] or since), since)
-                        state.set_token(self.job_id, wm)
-                        if pre_dep_tokens is not None:
-                            state.set_dep_tokens(self.job_id, pre_dep_tokens)
                 finally:
-                    LT.free(cached, txn_cached)
+                    LT.free(txn_cached)
+                if incremental:
+                    state.set_token(self.job_id, next_token)
                 for d in drained:  # requeue datasets processed: retire them
                     rq_store.delete_dataset(d)
-                result = {"id": self.job_id, "attempts": attempts, "token": wm}
+                result = {"id": self.job_id, "attempts": attempts,
+                          "token": next_token if incremental else None}
                 state.record_run(self.job_id, result)
                 self._metric("jobs.success", started)
                 return result
@@ -951,38 +912,21 @@ class JobState:
             json.dump(d, f)
         os.replace(tmp, self.path)
 
-    def token(self, job_id: str) -> int:
+    def token(self, job_id: str):
+        """The job's continuation token as its source returned it (any
+        JSON value), or None before the job's first incremental run."""
         # reads hold the same lock as RMW writes: os.replace makes the
         # file swap atomic on POSIX, but a lock-free read interleaved
         # with set_token on another runner thread could still observe
         # the pre-RMW value and base a job run on a stale continuation
         with self._mu:
-            v = self._read().get(job_id, 0)
-        return int(v["token"] if isinstance(v, dict) else v)
-
-    def set_token(self, job_id: str, token: int) -> None:
-        with self._mu:
-            d = self._read()
-            cur = d.get(job_id)
-            if isinstance(cur, dict):
-                cur["token"] = int(token)
-            else:
-                d[job_id] = {"token": int(token), "history": []}
-            self._write(d)
-
-    def dep_tokens(self, job_id: str) -> dict[str, int]:
-        with self._mu:
             v = self._read().get(job_id)
-        return dict(v.get("deps", {})) if isinstance(v, dict) else {}
+        return v["token"] if isinstance(v, dict) else v
 
-    def set_dep_tokens(self, job_id: str, tokens: dict[str, int]) -> None:
+    def set_token(self, job_id: str, token) -> None:
         with self._mu:
             d = self._read()
-            cur = d.get(job_id)
-            if not isinstance(cur, dict):
-                cur = {"token": int(cur or 0), "history": []}
-                d[job_id] = cur
-            cur["deps"] = {k: int(v) for k, v in tokens.items()}
+            self._entry(d, job_id)["token"] = token
             self._write(d)
 
     def record_run(self, job_id: str, result: dict, keep: int = 50) -> None:
@@ -990,13 +934,17 @@ class JobState:
         capped at ``keep`` entries."""
         with self._mu:
             d = self._read()
-            cur = d.get(job_id)
-            if not isinstance(cur, dict):
-                cur = {"token": int(cur or 0), "history": []}
-                d[job_id] = cur
-            cur.setdefault("history", []).insert(0, result)
-            del cur["history"][keep:]
+            history = self._entry(d, job_id).setdefault("history", [])
+            history.insert(0, result)
+            del history[keep:]
             self._write(d)
+
+    @staticmethod
+    def _entry(d: dict, job_id: str) -> dict:
+        cur = d.get(job_id)
+        if not isinstance(cur, dict):  # absent, or a bare token
+            cur = d[job_id] = {"token": cur, "history": []}
+        return cur
 
     def history(self, job_id: str) -> list[dict]:
         with self._mu:
@@ -1143,8 +1091,8 @@ class Scheduler:
         at a time, waiting on each level's runs before the next, so a
         consumer never scans its source dataset while this tick's
         producer is still writing it; jobs within a level run
-        concurrently. (Token safety does not depend on this — Job.run
-        snapshots its watermark before the scan — the barrier is what
+        concurrently. (Token safety does not depend on this — log-backed
+        sources take their token before the scan — the barrier is what
         makes "consumers see this tick's producer output" true.)"""
         minute = now.replace(second=0, microsecond=0)
         deps = self._dep_graph()
@@ -1440,7 +1388,9 @@ class TabularSource:
         self.prop_cols, self.dataset = prop_cols, dataset
         self.reader_options = reader_options or {}
 
-    def read(self, since: int = 0) -> DataFrame:
+    def read(self, token=None) -> tuple[DataFrame, object]:
+        """A read hands back the token it was given: the format reader
+        has no change log to resume from."""
         reader = self.spark.read.format(self.fmt)
         for k, v in self.reader_options.items():
             reader = reader.option(k, v)
@@ -1457,7 +1407,7 @@ class TabularSource:
             F.create_map(*prop_items).alias("props"),
             F.lit(None).cast("map<string,array<string>>").alias("refs"),
             F.lit(self.dataset).alias("dataset"),
-        )
+        ), token
 
 
 def wire_onchange(scheduler: Scheduler, store: EntityStore,

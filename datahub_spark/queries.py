@@ -643,7 +643,7 @@ def q_uda_served_sync(spark, sf_dir):
             src = J.HttpDatasetSource(
                 spark, f"{base}/datasets/nation", dataset="nation",
                 allow_network=True)
-            synced = src.read(since=0)  # eager fetch and decode
+            synced, _ = src.read()  # eager fetch and decode
         finally:
             srv.stop()
         return S.latest(synced).select(
@@ -691,7 +691,7 @@ def q_virtual_dataset(spark, sf_dir):
             (F.col("id") * 2).cast("long").alias("value"),
         )
 
-    return VirtualDatasetSource(spark, build_entities, {"n": 100}).read()
+    return VirtualDatasetSource(spark, build_entities, {"n": 100}).read()[0]
 
 
 @register(

@@ -504,11 +504,15 @@ def build_lookup_index(*frames: DataFrame,
     local store. Enriching against a large dataset is a join — use
     transforms.enrich_via, which shuffles properly. Enforced: more than
     ``max_rows`` total rows raises instead of silently OOMing the driver
-    (the limit+1 probe never materializes the oversized frame)."""
+    (the limit+1 probe never materializes the oversized frame). Each
+    frame is read as one partition: the rows go to the driver anyway,
+    and a limit over many partitions scales its scan up one Spark job
+    at a time, where one partition collects in one job."""
     rows: list = []
     for df in frames:
         cols = [c for c in ENTITY_COLUMNS if c in df.columns]
-        collected = df.select(*cols).limit(max_rows - len(rows) + 1).collect()
+        collected = (df.select(*cols).coalesce(1)
+                     .limit(max_rows - len(rows) + 1).collect())
         rows.extend(row.asDict() for row in collected)
         if len(rows) > max_rows:
             raise _index_too_big(max_rows)
@@ -735,13 +739,11 @@ class ScriptVirtualSource:
     Generating a LARGE dataset belongs in VirtualDatasetSource with a
     distributed (spark.range-based) builder, not a per-entity Emit loop.
 
-    ``watermark_from_read``: the continuation token is the READ's return
-    value (not a log watermark), so the jobs engine reads it after the
-    sink write — race-free because it derives from the emitted page
-    itself.
+    A read returns the script's return value as the next token, verbatim
+    (a number, a string cursor, any JSON value; ``undefined`` becomes
+    None): it derives from the page the script emitted, so the jobs
+    engine stores it as is.
     """
-
-    watermark_from_read = True
 
     def __init__(self, spark: SparkSession, code: str, params: dict | None = None,
                  namespaces: dict[str, str] | None = None, dataset: str = "virtual"):
@@ -753,24 +755,16 @@ class ScriptVirtualSource:
         self._emitted: list[dict] = []
         env["Emit"] = self._emitted.append
         self._fn = load_entry(code, "build_entities", env)
-        self.last_token: object = None
 
-    def read(self, since: int = 0, limit: int | None = None) -> DataFrame:
+    def read(self, token=None, limit: int | None = None) -> tuple[DataFrame, object]:
+        from datahub_spark.js import UNDEFINED
+
         self._emitted.clear()
-        self.last_token = self._fn(self.params, since, limit)
+        next_token = self._fn(self.params, 0 if token is None else token, limit)
         rows = [_entity_to_row(e) for e in self._emitted]
         for r in rows:
             if r["dataset"] is None:
                 r["dataset"] = self.dataset
         return local_frame(
             self.spark, [tuple(r[c] for c in ENTITY_COLUMNS) for r in rows],
-            SCRIPT_OUTPUT_SCHEMA)
-
-    def current_watermark(self) -> int:
-        """Integer continuation for the jobs engine (JobState tokens are
-        ints); scripts returning non-numeric tokens keep their own state
-        in params."""
-        try:
-            return int(self.last_token)
-        except (TypeError, ValueError):
-            return 0
+            SCRIPT_OUTPUT_SCHEMA), None if next_token is UNDEFINED else next_token

@@ -914,11 +914,11 @@ class UdaServer:
         except ValueError as exc:
             return self._error(rq, 400, f"virtual dataset script: {exc}")
         try:
-            page = src.read(since, limit)
+            page, token = src.read(since, limit)
         except Exception as exc:
             return self._error(rq, 500, f"virtual dataset script: {exc}")
         objs = [r["json"] for r in uda.to_uda_json(page).collect()]
-        self._write_page(rq, ds, objs, src.last_token,
+        self._write_page(rq, ds, objs, token,
                          jsonld=self._wants_jsonld(rq, q))
 
     def _dataset_create(self, rq, ds: str, u) -> None:
@@ -1216,12 +1216,13 @@ class UdaServer:
         elif op == "resume":
             job.paused = False
         elif op == "reset":
-            sched.state.set_token(job_id, 0)
+            sched.state.set_token(job_id, None)
         elif op == "reset_meta":
             # jobsResetMeta (joboperationhandler.go:102): clear the
-            # job's tracked-dependency metadata; our analogue is the
-            # MultiSource per-dependency watermarks
-            sched.state.set_dep_tokens(job_id, {})
+            # job's tracked-dependency metadata; our analogue is a
+            # MultiSource job's per-dataset token
+            if isinstance(sched.state.token(job_id), dict):
+                sched.state.set_token(job_id, None)
         elif op == "kill":
             # jobsKill (joboperationhandler.go:59): best-effort cancel
             # of a running job's Spark actions; 200 either way, like
@@ -1303,9 +1304,7 @@ class UdaServer:
                     return index
             frames, held = [], set()
             if names:
-                # one task reads every file: the rows go to the driver
-                # anyway, and a single partition collects in one job
-                frame = self.store.log(names).coalesce(1)
+                frame = self.store.log(names)
                 frames, held = [frame], self.store.frame_files(frame, names)
             index = script.build_lookup_index(*frames)
             self._index = (gen, index, held)

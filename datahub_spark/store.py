@@ -729,6 +729,27 @@ class EntityStore:
                 row["dataset"] = ds
                 yield row
 
+    def max_recorded(self, datasets: list[str]) -> int:
+        """Highest ``recorded`` committed to ``datasets``, 0 when nothing
+        is: read on the driver from the column statistics in the log
+        files' parquet footers (``core.Dataset`` from the registry's
+        events), so it runs no Spark job. A row group written without
+        statistics counts as nothing, which can only lower the value."""
+        import pyarrow.parquet as pq
+
+        best = 0
+        if CORE_DATASET in datasets:
+            events = self._read_meta().get("dataset_events") or []
+            best = max((int(ev["recorded"]) for ev in events), default=0)
+        for path in self.log_files(datasets):
+            meta = pq.read_metadata(path)
+            col = meta.schema.names.index("recorded")
+            for i in range(meta.num_row_groups):
+                stats = meta.row_group(i).column(col).statistics
+                if stats is not None and stats.has_min_max:
+                    best = max(best, stats.max)
+        return best
+
     def frame_files(self, df: DataFrame, datasets: list[str]) -> set[str]:
         """The files of ``datasets`` that ``df``, a frame over ``log()``,
         reads: Spark lists them when the frame is made, so this is

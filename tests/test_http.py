@@ -72,7 +72,7 @@ def uda_server():
 
 def test_http_source_pages_through_changes(spark, uda_server):
     src = J.HttpDatasetSource(spark, uda_server, dataset="remote", allow_network=True)
-    rows = {r["id"]: r for r in src.read(since=0).collect()}
+    rows = {r["id"]: r for r in src.read(0)[0].collect()}
     assert set(rows) == {"e:1", "e:2", "e:3"}
     assert rows["e:1"]["props"]["p:name"] == "one"
     assert rows["e:1"]["refs"]["p:link"] == ["e:2"]
@@ -82,7 +82,7 @@ def test_http_source_pages_through_changes(spark, uda_server):
 
 def test_http_source_resumes_from_token(spark, uda_server):
     src = J.HttpDatasetSource(spark, uda_server, dataset="remote", allow_network=True)
-    rows = {r["id"] for r in src.read(since=11).collect()}
+    rows = {r["id"] for r in src.read(11)[0].collect()}
     assert rows == {"e:3"}  # only the second page
 
 

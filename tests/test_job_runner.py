@@ -42,12 +42,12 @@ class HeldSource:
             self.release.set()
         self.reads = 0
 
-    def read(self, since: int = 0) -> _Frame:
+    def read(self, token=None) -> tuple[_Frame, None]:
         self.reads += 1
         self.entered.set()
         if not self.release.wait(WAIT_S):
             raise TimeoutError("source was never released")
-        return _Frame()
+        return _Frame(), token
 
 
 class NullSink:
@@ -215,7 +215,7 @@ def test_notify_stress_never_overlaps_runs_or_loses_an_event(tmp_path):
             self.overlapped = False
             self.last_start = -1
 
-        def read(self, since: int = 0) -> _Frame:
+        def read(self, token=None) -> tuple[_Frame, None]:
             with self.started:
                 self.active += 1
                 self.overlapped |= self.active > 1
@@ -224,7 +224,7 @@ def test_notify_stress_never_overlaps_runs_or_loses_an_event(tmp_path):
             sum(range(1000))  # stay inside the run across thread switches
             with self.started:
                 self.active -= 1
-            return _Frame()
+            return _Frame(), token
 
     runner = J.JobRunner(J.JobState(str(tmp_path / "state.json")),
                          J.Raffle(tickets_full=0, tickets_incr=4))

@@ -39,7 +39,7 @@ def test_incremental_job_advances_token_and_is_idempotent(spark, store, tmp_path
 def test_union_source_concatenates(spark, store):
     u = J.UnionDatasetSource([J.DatasetSource(store, "people"),
                               J.DatasetSource(store, "city")])
-    assert u.read().count() == 5
+    assert u.read()[0].count() == 5
 
 
 def test_multisource_dependency_tracking(spark, store):
@@ -48,11 +48,11 @@ def test_multisource_dependency_tracking(spark, store):
     ms = J.MultiSource(store, "people", [
         J.Dependency("city", [J.Join("people", "p:home", inverse=True)]),
     ])
-    affected = sorted(r["id"] for r in ms.affected_ids(since=0).collect())
+    affected = sorted(r["id"] for r in ms.affected_ids({}).collect())
     assert affected == ["p:alice", "p:bob"]
     # nothing changed since the city write -> empty affected set
     wm = store.changes("city").agg(F.max("recorded")).collect()[0][0]
-    assert ms.affected_ids(since=wm).count() == 0
+    assert ms.affected_ids({"city": wm}).count() == 0
 
 
 def test_error_handler_rerun_retries_then_succeeds(spark, store, tmp_path):
@@ -141,8 +141,8 @@ def test_virtual_dataset_source(spark):
         )
 
     v = J.VirtualDatasetSource(spark, build, {"n": 5})
-    assert v.read().count() == 5
-    assert v.read(limit=2).count() == 2
+    assert v.read()[0].count() == 5
+    assert v.read(limit=2)[0].count() == 2
 
 
 def test_lineage_edges(spark, store):
@@ -160,7 +160,7 @@ def test_lineage_edges(spark, store):
 
 def test_sample_source(spark):
     s = J.SampleSource(spark, n=7)
-    rows = s.read().collect()
+    rows = s.read()[0].collect()
     assert len(rows) == 7
     assert rows[0]["dataset"] == "sample"
 
@@ -360,7 +360,7 @@ def test_multisource_job_advances_per_dependency_watermarks(spark, store, tmp_pa
 
     job = J.Job("ms", ms, J.DatasetSink(store, "ms_out"), transform=enrich)
     job.run(state)
-    toks = state.dep_tokens("ms")
+    toks = state.token("ms")
     assert set(toks) == {"people", "city"} and all(v > 0 for v in toks.values())
     n1 = store.log(["ms_out"]).count()
 
@@ -375,11 +375,39 @@ def test_multisource_job_advances_per_dependency_watermarks(spark, store, tmp_pa
     enriched = {r["id"]: r["props"].get("p:cityname")
                 for r in store.entities("ms_out").collect()}
     assert enriched["p:bob"] == "Oslo2"
-    assert state.dep_tokens("ms")["city"] > toks["city"]
+    assert state.token("ms")["city"] > toks["city"]
 
     # a third run with no changes anywhere emits nothing new
     job.run(state)
     assert store.log(["ms_out"]).count() == n2
+
+
+def test_incremental_multisource_run_persists_nothing(spark, store, tmp_path,
+                                                      monkeypatch):
+    """The MultiSource token is taken from the log files' footers, so an
+    incremental run neither caches its output nor leaves anything
+    persisted."""
+    from datahub_spark import lifetime as LT
+    from tests.conftest import persisted_ids
+
+    def no_cache(df):
+        raise AssertionError("Job.run cached a frame")
+
+    monkeypatch.setattr(LT, "cached", no_cache)
+    state = J.JobState(str(tmp_path / "state.json"))
+    job = J.Job("ms-nocache", J.MultiSource(store, "people", [
+        J.Dependency("city", [J.Join("people", "p:home", inverse=True)])]),
+        J.DatasetSink(store, "ms_nocache_out"))
+    before = persisted_ids(spark)
+    job.run(state)
+    assert store.log(["ms_nocache_out"]).count() > 0
+    store.store_entities("city", spark.createDataFrame(
+        [("c:oslo", False, {"p:name": "Oslo3"}, {})],
+        "id string, deleted boolean, props map<string,string>, refs map<string,array<string>>"))
+    job.run(state)
+    assert persisted_ids(spark) == before
+    assert state.token("ms-nocache")["city"] == store.log(["city"]).agg(
+        F.max("recorded")).collect()[0][0]
 
 
 def _counting_transform(spark, counter):
@@ -416,8 +444,8 @@ def test_job_run_executes_source_plan_exactly_once_store_source(spark, store, tm
 
 
 def test_job_run_executes_source_plan_exactly_once_sample_source(spark, store, tmp_path):
-    """Sources with no backing log take the persist path: the sink write
-    populates the cache, the watermark agg reads it back."""
+    """A source with no backing log hands back its token, so nothing
+    re-reads the written output for one."""
     state = J.JobState(str(tmp_path / "state.json"))
     acc = spark.sparkContext.accumulator(0)
     job = J.Job("once-s", J.SampleSource(spark, n=7),
@@ -639,23 +667,27 @@ def test_job_runner_kill_cancels_running_spark_actions(spark, tmp_path):
     """KillJob (scheduler.go:402): kill() cancels the running job's
     Spark job group mid-action; the run errors promptly instead of
     finishing, and the cancelled flag suppresses reRun retries."""
+    import os
     import time
 
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
 
+    started = str(tmp_path / "udf-started")
+
     class SlowSource:
         def __init__(self, spark):
             self.spark = spark
 
-        def read(self, since=0):
+        def read(self, token=None):
             @F.udf(LongType())
             def slow(x):
+                open(started, "a").close()  # the slow stage is running
                 time.sleep(0.25)
                 return x
 
             return (self.spark.range(400).repartition(8)
-                    .select(slow("id").alias("id")))
+                    .select(slow("id").alias("id"))), token
 
     class CountSink:
         def write(self, df):
@@ -666,17 +698,22 @@ def test_job_runner_kill_cancels_running_spark_actions(spark, tmp_path):
     runner = J.JobRunner(state)
     job = J.Job("slow", SlowSource(spark), CountSink(),
                 on_error=J.ErrorHandler(kind="reRun", max_retries=3))
-    t0 = time.monotonic()
     run = runner.submit(job)
     assert run
-    # wait until the Spark action is actually RUNNING (cancelJobGroup
-    # only cancels active jobs), then kill; a full run takes ~12s
+    # cancelJobGroup only cancels active jobs: kill once a task of the
+    # slow stage has started and the job group has an active job (an
+    # uncancelled run takes ~25 s on 4 cores)
     tracker = spark.sparkContext.statusTracker()
-    deadline = time.monotonic() + 10
-    while time.monotonic() < deadline and not tracker.getActiveJobsIds():
-        time.sleep(0.1)
+    deadline = time.monotonic() + 120
+    while not (os.path.exists(started)
+               and set(tracker.getJobIdsForGroup("job-slow"))
+               & set(tracker.getActiveJobsIds())):
+        if time.monotonic() > deadline:
+            pytest.fail("job group job-slow never started its slow Spark action")
+        time.sleep(0.05)
+    t0 = time.monotonic()
     assert runner.kill("slow")
-    results = [run.result()]
+    results = [run.result(timeout=120)]
     elapsed = time.monotonic() - t0
     assert elapsed < 9, elapsed
     assert len(results) == 1 and "error" in results[0]

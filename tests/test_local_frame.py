@@ -105,7 +105,7 @@ def test_no_served_ingress_builds_a_pickled_rdd(spark, tmp_path, monkeypatch):
 
         pulled = J.HttpDatasetSource(
             spark, f"http://127.0.0.1:{feed.server_address[1]}",
-            dataset="pulled", allow_network=True).read(since=0).collect()
+            dataset="pulled", allow_network=True).read(0)[0].collect()
     finally:
         srv.stop()
         feed.shutdown()

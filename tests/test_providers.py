@@ -268,7 +268,7 @@ def test_secured_node_to_node_sync_via_provider(secured, spark):
         spark, f"{base}/datasets/d", dataset="d",
         token_provider=providers.token_callable("nodeB"),
         allow_network=True)
-    rows = src.read(since=0).collect()
+    rows = src.read(0)[0].collect()
     assert len(rows) == 1 and rows[0]["id"] == "e:1"
 
     # without the provider the same pull is rejected by the ACL layer
@@ -276,4 +276,4 @@ def test_secured_node_to_node_sync_via_provider(secured, spark):
                              allow_network=True)
     import urllib.error
     with pytest.raises(urllib.error.HTTPError):
-        bare.read(since=0).collect()
+        bare.read(0)[0].collect()

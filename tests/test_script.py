@@ -215,10 +215,10 @@ function build_entities(params, since, limit) {
 }
 """
     src = SC.ScriptVirtualSource(spark, code, params={"n": 7}, dataset="virt")
-    page1 = src.read(since=0, limit=3).collect()
-    assert [r["id"] for r in page1] == ["v:0", "v:1", "v:2"]
-    assert src.current_watermark() == 3
-    page2 = src.read(since=src.current_watermark()).collect()
+    page1, token = src.read(0, limit=3)
+    assert [r["id"] for r in page1.collect()] == ["v:0", "v:1", "v:2"]
+    assert token == 3
+    page2 = src.read(token)[0].collect()
     assert [r["id"] for r in page2] == ["v:3", "v:4", "v:5", "v:6"]
     assert all(r["dataset"] == "virt" for r in page2)
 
@@ -239,6 +239,39 @@ function build_entities(params, since, limit) {
 
     with pytest.raises(ValueError, match="build_entities"):
         SC.ScriptVirtualSource(spark, "var x = 1;")
+
+
+def test_script_virtual_source_job_resumes_from_string_token(spark, tmp_path):
+    """A script's continuation token is stored verbatim: a string cursor
+    comes back to the script on the next incremental run."""
+    from datahub_spark import jobs as J
+    from datahub_spark.store import EntityStore
+
+    code = """
+function build_entities(params, since, limit) {
+    var start = since === 0 ? 0 : parseInt(since.substring(7));
+    for (var i = start; i < params.n; i++) {
+        var e = NewEntity();
+        SetId(e, PrefixField("v", i));
+        SetProperty(e, "p", "since", ToString(since));
+        Emit(e);
+    }
+    return "cursor-" + params.n;
+}
+"""
+    es = EntityStore(spark, str(tmp_path / "store"))
+    state = J.JobState(str(tmp_path / "state.json"))
+    params = {"n": 3}
+    job = J.Job("cursor-sync", SC.ScriptVirtualSource(spark, code, params=params),
+                J.DatasetSink(es, "virt"))
+    job.run(state)
+    assert state.token("cursor-sync") == "cursor-3"
+    params["n"] = 5
+    job.run(state)
+    assert state.token("cursor-sync") == "cursor-5"
+    since = {r["id"]: r["props"]["p:since"] for r in es.log(["virt"]).collect()}
+    assert since == {"v:0": "0", "v:1": "0", "v:2": "0",
+                     "v:3": "cursor-3", "v:4": "cursor-3"}
 
 
 def test_get_dataset_changes_and_latest_wins_lookup(spark):
@@ -339,6 +372,32 @@ def test_lookup_index_ties_break_by_dataset_not_frame_order(spark):
     assert ab["by_id"]["x:1"]["Properties"] == {"p:v": "b"}
     assert ab["by_id"] == ba["by_id"] and ab["inverse"] == ba["inverse"]
     assert list(ab["inverse"]) == [("p:r", "y:b")]
+
+
+def test_lookup_index_build_over_many_files_runs_one_spark_job(spark, tmp_path):
+    """The cap probe reads a multi-file frame as one partition, so a
+    build collects in one Spark job instead of scaling a limit up over
+    the frame's partitions one job at a time."""
+    path = str(tmp_path / "many")
+    (spark.range(0, 96, numPartitions=96).select(
+        F.concat(F.lit("m:"), F.col("id").cast("string")).alias("id"),
+        F.col("id").alias("recorded"), F.lit(0).cast("long").alias("seq"),
+        F.lit(False).alias("deleted"),
+        F.create_map(F.lit("p:n"), F.col("id").cast("string")).alias("props"),
+        F.lit(None).cast("map<string,array<string>>").alias("refs"),
+        F.lit("many").alias("dataset"),
+    ).write.parquet(path))
+    frame = spark.read.schema(ENTITY_SCHEMA).parquet(path)
+    assert len(frame.inputFiles()) == 96 and frame.rdd.getNumPartitions() > 1
+    sc = spark.sparkContext
+    sc.setJobGroup("lookup-index-build", "build_lookup_index over 96 files")
+    try:
+        index = SC.build_lookup_index(frame)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(index["by_id"]) == 96
+    assert len(sc.statusTracker().getJobIdsForGroup("lookup-index-build")) == 1
 
 
 def test_fn_cache_is_content_keyed_and_bounded(spark, people):

@@ -153,9 +153,8 @@ def test_http_source_syncs_out_incrementally(served, spark, tmp_path):
     src = J.HttpDatasetSource(
         spark, f"{base}/datasets/d", dataset="d", allow_network=True)
 
-    first = src.read(since=0)
+    first, wm = src.read(0)
     mirror.store_entities("d", first.drop("dataset"))
-    wm = src.current_watermark()
     assert wm > 0
     a = {r["id"]: r["props"] for r in
          S.latest(store.log(["d"])).collect()}
@@ -169,7 +168,7 @@ def test_http_source_syncs_out_incrementally(served, spark, tmp_path):
         ("e:5", None, 1, True, {}, None, None),
     ]).drop("dataset"))
 
-    delta = src.read(since=wm)
+    delta, delta_wm = src.read(wm)
     rows = delta.collect()
     assert sorted(r["id"] for r in rows) == ["e:5", "e:6"]  # only the delta
     mirror.store_entities("d", delta.drop("dataset"))
@@ -178,7 +177,7 @@ def test_http_source_syncs_out_incrementally(served, spark, tmp_path):
     b = {r["id"]: dict(r["props"]) for r in
          S.latest(mirror.log(["d"])).collect()}
     assert a == b and "e:5" not in a and "e:6" in a
-    assert src.current_watermark() > wm
+    assert delta_wm > wm
 
 
 def test_proxy_dataset_reads_through_served_endpoint(served, spark):
@@ -355,12 +354,12 @@ def test_jobs_api_over_http(spark, tmp_path):
         assert sched.jobs["wire-job"].paused is True
         _put(f"{base}/job/wire-job/resume")
         _put(f"{base}/job/wire-job/reset")
-        assert state.token("wire-job") == 0
+        assert state.token("wire-job") is None
         # reset_meta clears MultiSource dependency watermarks
         # (joboperationhandler.go:102 ResetJobMeta analogue)
-        state.set_dep_tokens("wire-job", {"dep": 7})
+        state.set_token("wire-job", {"dep": 7})
         assert _put(f"{base}/job/wire-job/reset_meta")[0] == 200
-        assert state.dep_tokens("wire-job") == {}
+        assert state.token("wire-job") is None
         # kill on a non-running job is 200 (best-effort, like KillJob)
         assert _put(f"{base}/job/wire-job/kill")[0] == 200
         # delete unregisters
@@ -398,6 +397,80 @@ def test_onchange_job_posted_over_http_fires_on_commit(spark, tmp_path):
         assert [r["id"] for r in S.latest(store.log(["outbox"])).collect()] \
             == ["i:1"]
         assert _get(f"{base}/jobs/_/history")["on-inbox"]
+    finally:
+        srv.stop()
+
+
+def test_multisource_job_redelivers_every_row_after_reset(spark, tmp_path):
+    """PUT /job/{id}/reset clears a MultiSource job's whole token, so the
+    next run delivers every row again; reset_meta does the same for its
+    per-dataset token and leaves any other job's token alone."""
+    store = S.EntityStore(spark, str(tmp_path / "store"))
+    store.store_entities("city", _entities(spark, [
+        ("c:1", None, 0, False, {"p:name": "Oslo"}, None, None),
+    ]).drop("dataset"))
+    store.store_entities("people", _entities(spark, [
+        ("p:1", None, 0, False, {"p:name": "a"}, {"p:home": ["c:1"]}, None),
+        ("p:2", None, 1, False, {"p:name": "b"}, {"p:home": ["c:1"]}, None),
+    ]).drop("dataset"))
+
+    class CollectSink:
+        def __init__(self):
+            self.runs = []
+
+        def write(self, df):
+            self.runs.append(sorted(r["id"] for r in df.collect()))
+
+    state = J.JobState(str(tmp_path / "state.json"))
+    sched = J.Scheduler(state)
+    sink = CollectSink()
+    sched.register(J.Job("ms", J.MultiSource(store, "people", [
+        J.Dependency("city", [J.Join("people", "p:home", inverse=True)])]),
+        sink))
+    srv = UdaServer(store, scheduler=sched)
+    base = srv.start()
+    try:
+        for op in ("run", "run", "reset", "run", "reset_meta", "run"):
+            assert _put(f"{base}/job/ms/{op}")[0] == 200
+        assert sink.runs == [["p:1", "p:2"], [], ["p:1", "p:2"], ["p:1", "p:2"]]
+        state.set_token("ms", 5)
+        assert _put(f"{base}/job/ms/reset_meta")[0] == 200
+        assert state.token("ms") == 5
+    finally:
+        srv.stop()
+
+
+def test_jobs_post_missing_required_key_is_400(spark, tmp_path):
+    """POST /jobs answers 400 naming a missing required key (or an empty
+    DatasetSources list) and registers nothing."""
+    store = S.EntityStore(spark, str(tmp_path / "store"))
+    srv = UdaServer(store, scheduler=J.Scheduler(
+        J.JobState(str(tmp_path / "state.json"))))
+    base = srv.start()
+    ds = {"Type": "DatasetSource", "Name": "src"}
+    sink = {"Type": "DevNullSink"}
+    cases = [
+        ({"source": {"Type": "DatasetSource"}, "sink": sink}, "'Name'"),
+        ({"source": {"Type": "MultiSource"}, "sink": sink}, "'Name'"),
+        ({"source": ds, "sink": {"Type": "DatasetSink"}}, "'Name'"),
+        ({"source": {"Type": "HttpDatasetSource"}, "sink": sink}, "'Url'"),
+        ({"source": ds, "sink": {"Type": "HttpDatasetSink"}}, "'Url'"),
+        ({"source": ds, "sink": sink,
+          "transform": {"Type": "JavascriptTransform"}}, "'Code'"),
+        ({"source": ds, "sink": sink,
+          "transform": {"Type": "HttpTransform"}}, "'Url'"),
+        ({"source": {"Type": "UnionDatasetSource"}, "sink": sink},
+         "'DatasetSources'"),
+        ({"source": {"Type": "UnionDatasetSource", "DatasetSources": []},
+          "sink": sink}, "'DatasetSources'"),
+        ({"source": {"Type": "UnionDatasetSource", "DatasetSources": [{}]},
+          "sink": sink}, "'Name'"),
+    ]
+    try:
+        for cfg, key in cases:
+            code, body = _post(f"{base}/jobs", {"id": "bad", **cfg})
+            assert code == 400 and key in json.dumps(body), (cfg, code, body)
+        assert _get(f"{base}/jobs") == []
     finally:
         srv.stop()
 

@@ -652,9 +652,9 @@ def test_core_dataset_as_job_source(spark, tmp_path):
     es.create_dataset("a")
     es.create_dataset("b")
     src = J.DatasetSource(es, S.CORE_DATASET)
-    first = src.read(since=0)
+    first, _ = src.read(0)
     assert {r["id"] for r in first.collect()} == {"core:a", "core:b"}
     wm = first.agg(F.max("recorded")).collect()[0][0]
     es.create_dataset("c")
-    incr = src.read(since=wm)
+    incr, _ = src.read(wm)
     assert {r["id"] for r in incr.collect()} == {"core:c"}

@@ -144,7 +144,7 @@ def test_every_ingress_stores_the_same_rows(spark, tmp_path):
         direct.close()
         pulled = J.HttpDatasetSource(
             spark, f"http://127.0.0.1:{feed.server_address[1]}",
-            dataset="pulled", allow_network=True).read(since=0).collect()
+            dataset="pulled", allow_network=True).read(0)[0].collect()
     finally:
         plain_srv.stop()
         wal_srv.stop()
