@@ -70,9 +70,17 @@ class DatasetSource:
     def __init__(self, store: EntityStore, name: str, latest_only: bool = False):
         self.store, self.name, self.latest_only = store, name, latest_only
 
+    @property
+    def dataset_reads(self) -> list[tuple[str, bool]]:
+        """(dataset, read through a dependency join) for each dataset the
+        source reads: what its token covers, what lineage names and what
+        orders the scheduler's levels."""
+        return [(self.name, False)]
+
     def read(self, token: int | None = None) -> tuple[DataFrame, int]:
         since = token or 0
-        next_token = max(self.store.max_recorded([self.name]), since)
+        next_token = max(self.store.max_recorded(
+            [ds for ds, _hop in self.dataset_reads]), since)
         return (self.store.changes(self.name, since=since,
                                    latest_only=self.latest_only), next_token)
 
@@ -82,6 +90,10 @@ class UnionDatasetSource:
 
     def __init__(self, sources: list[DatasetSource]):
         self.sources = sources
+
+    @property
+    def dataset_reads(self) -> list[tuple[str, bool]]:
+        return [r for s in self.sources for r in s.dataset_reads]
 
     def read(self, token: int | None = None) -> tuple[DataFrame, int]:
         frames, tokens = zip(*(s.read(token) for s in self.sources))
@@ -116,6 +128,11 @@ class MultiSource:
                  latest_only: bool = True):
         self.store, self.name, self.dependencies = store, name, dependencies
         self.latest_only = latest_only
+
+    @property
+    def dataset_reads(self) -> list[tuple[str, bool]]:
+        return [(self.name, False)] + [(d.dataset, True)
+                                       for d in self.dependencies]
 
     def affected_ids(self, tokens: dict[str, int]) -> DataFrame:
         """Ids of main-dataset entities needing reprocessing because a
@@ -162,7 +179,7 @@ class MultiSource:
         order — nondeterministic."""
         tokens = token if isinstance(token, dict) else {}
         next_token = {ds: max(self.store.max_recorded([ds]), tokens.get(ds, 0))
-                      for ds in [self.name] + [d.dataset for d in self.dependencies]}
+                      for ds, _hop in self.dataset_reads}
         main = self.store.changes(self.name, since=tokens.get(self.name, 0),
                                   latest_only=self.latest_only)
         affected = self.affected_ids(tokens)
@@ -229,10 +246,19 @@ def parse_multi_source_dependencies(
     if isinstance(cfg, str):
         cfg = _json.loads(cfg)
     for dep in cfg or []:
+        if not isinstance(dep, dict) or "dataset" not in dep:
+            raise ValueError("MultiSource 'Dependencies' entries need key "
+                             "'dataset'")
+        joins = dep.get("joins", [])
+        if not all(isinstance(j, dict) and {"dataset", "predicate",
+                                            "inverse"} <= j.keys()
+                   for j in joins):
+            raise ValueError("MultiSource dependency 'joins' entries need "
+                             "keys 'dataset', 'predicate' and 'inverse'")
         deps.append(Dependency(
             dataset=dep["dataset"],
             joins=[Join(j["dataset"], j["predicate"], bool(j["inverse"]))
-                   for j in dep.get("joins", [])]))
+                   for j in joins]))
 
     # 2. track_queries registrations from the transform source
     if transform_code is not None:
@@ -310,10 +336,13 @@ def parse_job_config(store: EntityStore, config: dict | str, *,
             return DatasetSource(store, need(sc, "Name"),
                                  latest_only=_bool(sc.get("LatestOnly", False)))
         if t == "UnionDatasetSource":
+            entries = need(sc, "DatasetSources")
+            if not entries or not isinstance(entries, list) \
+                    or not all(isinstance(d, dict) for d in entries):
+                raise ValueError(
+                    f"{t} needs 'DatasetSources': a non-empty list of objects")
             subs = [parse_source({**d, "Type": "DatasetSource"})
-                    for d in need(sc, "DatasetSources")]
-            if not subs:
-                raise ValueError(f"{t} needs a non-empty 'DatasetSources'")
+                    for d in entries]
             return UnionDatasetSource(subs)
         if t == "MultiSource":
             tc = config.get("transform") or config.get("Transform") or {}
@@ -1124,16 +1153,9 @@ class Scheduler:
                 produces[sink_name] = j.job_id
         deps: dict[str, set[str]] = {jid: set() for jid in self.jobs}
         for j in self.jobs.values():
-            srcs = []
-            if isinstance(j.source, DatasetSource):
-                srcs = [j.source.name]
-            elif isinstance(j.source, UnionDatasetSource):
-                srcs = [s.name for s in j.source.sources]
-            elif isinstance(j.source, MultiSource):
-                srcs = [j.source.name] + [d.dataset for d in j.source.dependencies]
-            for s in srcs:
-                if s in produces and produces[s] != j.job_id:
-                    deps[j.job_id].add(produces[s])
+            for ds, _hop in getattr(j.source, "dataset_reads", ()):
+                if ds in produces and produces[ds] != j.job_id:
+                    deps[j.job_id].add(produces[ds])
         return deps
 
     def _levels(self, deps: dict[str, set[str]]) -> dict[str, int]:
@@ -1347,17 +1369,9 @@ def lineage(jobs: list[Job]) -> list[dict]:
         if sink_name is None:
             continue
         kind = "transform" if j.transform is not None else "copy"
-        srcs: list[str] = []
-        if isinstance(j.source, DatasetSource):
-            srcs = [j.source.name]
-        elif isinstance(j.source, UnionDatasetSource):
-            srcs = [s.name for s in j.source.sources]
-        elif isinstance(j.source, MultiSource):
-            srcs = [j.source.name]
-            for dep in j.source.dependencies:
-                edges.append({"From": dep.dataset, "To": sink_name, "Type": "transform-hop"})
-        for s in srcs:
-            edges.append({"From": s, "To": sink_name, "Type": kind})
+        edges.extend({"From": ds, "To": sink_name,
+                      "Type": "transform-hop" if hop else kind}
+                     for ds, hop in getattr(j.source, "dataset_reads", ()))
     edges.sort(key=lambda e: (e["From"], e["To"], e["Type"]))
     return edges
 

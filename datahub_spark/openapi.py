@@ -2,32 +2,27 @@
 
 The reference ships a hand-written document (api/datahub.oas3.yml:
 20 paths, 16 component schemas) as a repo file; this engine GENERATES
-the equivalent document from a route inventory that mirrors
-server.py's dispatch tables and serves it at ``GET /api`` — the
-machine-readable form a client generator actually wants. Optional
-modules contribute their paths only when the corresponding service is
-attached to the UdaServer (scheduler -> /jobs*, content -> /content*,
-security -> /security*, providers -> /provider*), so the document
-always describes exactly the routes that dispatch on THIS server
-instance, never a superset.
+the equivalent document from the server's route table (server.ROUTES,
+the same table ``UdaServer`` dispatches every request by) and serves
+it at ``GET /api`` — the machine-readable form a client generator
+actually wants. A route that needs an optional service contributes its
+path only when that service is attached to the UdaServer (scheduler ->
+/jobs*, content -> /content*, security -> /security*, providers ->
+/provider*), so the document always describes exactly the routes that
+dispatch on THIS server instance, never a superset.
 
 Schema names follow the reference document (ServiceInfo, Entity,
 Query, QueryResponse, Job, Content, LoginProvider, ...) with the wire
 shapes this server actually emits (UDA pages are JSON arrays
 ``[@context, entity..., @continuation]``; see server.py).
-
-``validate_oas3`` is a structural validator for the subset of the
-OAS 3.0 spec the document uses (required info/paths fields, semver
-version string, path templating vs declared parameters, resolvable
-local $refs, non-empty responses per operation) — it backs the
-test_server.py schema check without needing an external validator
-package.
 """
 
 from __future__ import annotations
 
 import re
 from typing import Any
+
+from datahub_spark.server import ROUTES
 
 # ---------------------------------------------------------------------------
 # component schemas (names per api/datahub.oas3.yml:components.schemas)
@@ -190,162 +185,32 @@ SCHEMAS: dict[str, dict] = {
     },
 }
 
-# ---------------------------------------------------------------------------
-# route inventory: (condition, method, path, tag, summary,
-#                   request schema name | None, response schema name | None)
-# condition: attribute of UdaServer that must be non-None, or "" = always.
-
-_R: list[tuple[str, str, str, str, str, str | None, str | None]] = [
-    ("", "get", "/", "server", "ServiceInfo", None, "ServiceInfo"),
-    ("", "get", "/health", "server", "Liveness (plain 'UP', no auth)",
-     None, None),
-    ("", "get", "/api", "server", "This OpenAPI document", None, None),
-    ("", "get", "/namespaces", "namespaces", "Namespace context",
-     None, "Context"),
-    ("", "get", "/query/namespace", "namespaces",
-     "Prefix for an expansion URI (?expansion=)", None, None),
-    ("", "post", "/query", "query", "Entity lookup / graph traversal",
-     "Query", "QueryResponse"),
-    ("", "get", "/query", "query",
-     "Entity lookup / graph traversal (same protocol as POST — the "
-     "reference registers one handler for both verbs)",
-     "Query", "QueryResponse"),
-    ("", "get", "/datasets", "dataset", "List datasets", None, "Datasets"),
-    ("", "get", "/datasets/{dataset}", "dataset", "Dataset info",
-     None, "DatasetInfo"),
-    ("", "post", "/datasets/{dataset}", "dataset",
-     "Create dataset (?proxy=true / virtual via body)", None, None),
-    ("", "patch", "/datasets/{dataset}", "dataset", "Rename dataset",
-     None, None),
-    ("", "delete", "/datasets/{dataset}", "dataset", "Delete dataset",
-     None, None),
-    ("", "delete", "/datasets", "dataset", "Delete ALL datasets",
-     None, None),
-    ("", "get", "/datasets/{dataset}/entities", "dataset",
-     "UDA entities page (?from=&limit=)", None, "Entities"),
-    ("", "post", "/datasets/{dataset}/entities", "dataset",
-     "Append entity batch (fullsync via universal-data-api headers)",
-     "Entities", None),
-    ("", "get", "/datasets/{dataset}/changes", "dataset",
-     "UDA changes page (?since=&limit=&latestOnly=&reverse=)",
-     None, "Entities"),
-    ("", "post", "/transactions", "dataset",
-     "Multi-dataset atomic write", "TransactionRequest", None),
-    ("", "post", "/compact", "operations",
-     "Compact a dataset (deduplication strategy)",
-     "CompactionRequest", None),
-    ("", "get", "/statistics", "server", "Store statistics",
-     None, "Statistics"),
-    ("", "get", "/statistics/{dataset}", "server",
-     "Per-dataset statistics", None, "Statistics"),
-    # jobs engine (scheduler attached)
-    ("scheduler", "get", "/jobs", "jobs", "List job configurations",
-     None, "Jobs"),
-    ("scheduler", "post", "/jobs", "jobs", "Add or update a job",
-     "Job", "JobResponse"),
-    ("scheduler", "get", "/jobs/{jobid}", "jobs", "Job configuration",
-     None, "Job"),
-    ("scheduler", "delete", "/jobs/{jobid}", "jobs", "Delete job",
-     None, None),
-    ("scheduler", "get", "/jobs/_/schedules", "jobs", "Trigger schedules",
-     None, None),
-    ("scheduler", "get", "/jobs/_/history", "jobs", "Run history",
-     None, None),
-    ("scheduler", "get", "/jobs/_/status", "jobs", "Running jobs",
-     None, None),
-    ("scheduler", "get", "/job/{jobid}/status", "operations",
-     "Running/Stopped state", None, "JobStatus"),
-    ("scheduler", "put", "/job/{jobid}/run", "operations",
-     "Run now (waits for completion)", None, None),
-    ("scheduler", "put", "/job/{jobid}/pause", "operations", "Pause",
-     None, None),
-    ("scheduler", "put", "/job/{jobid}/resume", "operations", "Resume",
-     None, None),
-    ("scheduler", "put", "/job/{jobid}/reset", "operations",
-     "Reset continuation token", None, None),
-    ("scheduler", "put", "/job/{jobid}/reset_meta", "operations",
-     "Reset tracked-dependency watermarks", None, None),
-    ("scheduler", "put", "/job/{jobid}/kill", "operations",
-     "Cancel a running job", None, None),
-    ("scheduler", "get", "/lineage", "jobs", "Dataset lineage graph",
-     None, None),
-    ("scheduler", "get", "/lineage/{dataset}", "jobs",
-     "Per-dataset lineage view (edges touching the dataset)",
-     None, None),
-    # content objects
-    ("content", "get", "/content", "content", "List content objects",
-     None, "Contents"),
-    ("content", "post", "/content", "content", "Add content object",
-     "Content", None),
-    ("content", "get", "/content/{contentId}", "content", "Content object",
-     None, "Content"),
-    ("content", "put", "/content/{contentId}", "content",
-     "Upsert content object", "Content", None),
-    ("content", "delete", "/content/{contentId}", "content",
-     "Delete content object", None, None),
-    # security management (security attached)
-    ("security", "post", "/security/token", "security",
-     "OAuth2 client-credentials / JWT-bearer token grant (no auth)",
-     None, None),
-    ("security", "get", "/security/clients", "security",
-     "Registered node clients", None, None),
-    ("security", "post", "/security/clients", "security",
-     "Register node client (public key)", None, None),
-    ("security", "get", "/security/clients/{clientid}/acl", "security",
-     "Client ACL", None, None),
-    ("security", "post", "/security/clients/{clientid}/acl", "security",
-     "Set client ACL", None, None),
-    ("security", "delete", "/security/clients/{clientid}/acl", "security",
-     "Clear client ACL", None, None),
-    ("security", "post", "/security/clientclaims", "security",
-     "Legacy admin-gated alias: set client ACL (client named in body)",
-     None, None),
-    ("security", "post", "/security/clientacl", "security",
-     "Legacy admin-gated alias: set client ACL (client named in body)",
-     None, None),
-    # login providers for outgoing connections
-    ("providers", "get", "/provider/logins", "providers",
-     "List login providers (secrets masked)", None, "LoginProviders"),
-    ("providers", "post", "/provider/logins", "providers",
-     "Add login provider", "LoginProvider", None),
-    ("providers", "get", "/provider/login/{providerName}", "providers",
-     "Login provider", None, "LoginProvider"),
-    ("providers", "post", "/provider/login/{providerName}", "providers",
-     "Update login provider", "LoginProvider", None),
-    ("providers", "delete", "/provider/login/{providerName}", "providers",
-     "Delete login provider", None, None),
-]
-
-_NO_AUTH = {("get", "/health"), ("post", "/security/token")}
-
-
-def _operation(server, method: str, path: str, tag: str, summary: str,
-               req: str | None, resp: str | None) -> dict:
+def _operation(route, secured: bool) -> dict:
     op: dict[str, Any] = {
-        "summary": summary,
-        "tags": [tag],
+        "summary": route.summary,
+        "tags": [route.tag],
         "responses": {"200": {"description": "OK"}},
     }
     params = [{"name": m, "in": "path", "required": True,
                "schema": {"type": "string"}}
-              for m in re.findall(r"\{([^}]+)\}", path)]
+              for m in re.findall(r"\{([^}]+)\}", route.path)]
     if params:
         op["parameters"] = params
         op["responses"]["404"] = {
             "description": "no such resource",
             "content": {"application/json": {
                 "schema": {"$ref": "#/components/schemas/Error"}}}}
-    if req is not None:
+    if route.request is not None:
         op["requestBody"] = {
             "required": True,
             "content": {"application/json": {
-                "schema": {"$ref": f"#/components/schemas/{req}"}}}}
-    if resp is not None:
+                "schema": {"$ref": f"#/components/schemas/{route.request}"}}}}
+    if route.response is not None:
         op["responses"]["200"] = {
             "description": "OK",
             "content": {"application/json": {
-                "schema": {"$ref": f"#/components/schemas/{resp}"}}}}
-    if server.security is not None and (method, path) not in _NO_AUTH:
+                "schema": {"$ref": f"#/components/schemas/{route.response}"}}}}
+    if secured and not route.open:
         op["security"] = [{"BearerAuth": []}]
     return op
 
@@ -354,11 +219,11 @@ def openapi_document(server) -> dict:
     """OAS 3.0.3 document for exactly the routes that dispatch on this
     UdaServer instance (api/datahub.oas3.yml is the reference shape)."""
     paths: dict[str, dict] = {}
-    for cond, method, path, tag, summary, req, resp in _R:
-        if cond and getattr(server, cond, None) is None:
+    for route in ROUTES:
+        if route.service and getattr(server, route.service) is None:
             continue
-        paths.setdefault(path, {})[method] = _operation(
-            server, method, path, tag, summary, req, resp)
+        paths.setdefault(route.path, {})[route.method.lower()] = _operation(
+            route, server.security is not None)
     port = server._httpd.server_address[1] if server._httpd else 0
     doc: dict[str, Any] = {
         "openapi": "3.0.3",
@@ -378,77 +243,3 @@ def openapi_document(server) -> dict:
             "BearerAuth": {"type": "http", "scheme": "bearer",
                            "bearerFormat": "JWT"}}
     return doc
-
-
-# ---------------------------------------------------------------------------
-# structural validation (the subset of OAS 3.0 this document uses)
-
-def _refs(node) -> list[str]:
-    if isinstance(node, dict):
-        out = [v for k, v in node.items() if k == "$ref"]
-        for v in node.values():
-            out.extend(_refs(v))
-        return out
-    if isinstance(node, list):
-        out = []
-        for v in node:
-            out.extend(_refs(v))
-        return out
-    return []
-
-
-_METHODS = {"get", "put", "post", "delete", "options", "head",
-            "patch", "trace"}
-
-
-def validate_oas3(doc: dict) -> None:
-    """Raise ValueError on structural OAS 3.0 violations: version /
-    info requirements, path templating vs declared parameters,
-    operations without responses, unresolvable local $refs."""
-    if not re.fullmatch(r"3\.\d+\.\d+", str(doc.get("openapi", ""))):
-        raise ValueError(f"bad openapi version: {doc.get('openapi')!r}")
-    info = doc.get("info")
-    if not isinstance(info, dict) or not info.get("title") \
-            or not info.get("version"):
-        raise ValueError("info.title and info.version are required")
-    paths = doc.get("paths")
-    if not isinstance(paths, dict) or not paths:
-        raise ValueError("paths object is required")
-    for path, item in paths.items():
-        if not path.startswith("/"):
-            raise ValueError(f"path must start with '/': {path}")
-        tmpl = re.findall(r"\{([^}]+)\}", path)
-        if len(tmpl) != len(set(tmpl)):
-            raise ValueError(f"duplicate template variable in {path}")
-        ops = {m: o for m, o in item.items() if m in _METHODS}
-        if not ops:
-            raise ValueError(f"no operations under {path}")
-        for method, op in ops.items():
-            where = f"{method.upper()} {path}"
-            resp = op.get("responses")
-            if not isinstance(resp, dict) or not resp:
-                raise ValueError(f"{where}: responses is required")
-            for code, robj in resp.items():
-                if not re.fullmatch(r"[1-5]XX|[1-5]\d\d|default",
-                                    str(code)):
-                    raise ValueError(f"{where}: bad response code {code}")
-                if "description" not in robj:
-                    raise ValueError(
-                        f"{where} {code}: description required")
-            declared = {p["name"] for p in op.get("parameters", [])
-                        if p.get("in") == "path"}
-            for p in op.get("parameters", []):
-                if p.get("in") == "path" and not p.get("required"):
-                    raise ValueError(
-                        f"{where}: path param {p['name']} must be "
-                        "required")
-            if set(tmpl) != declared:
-                raise ValueError(
-                    f"{where}: template vars {sorted(tmpl)} != declared "
-                    f"path params {sorted(declared)}")
-    schemas = doc.get("components", {}).get("schemas", {})
-    for ref in _refs(doc):
-        if not ref.startswith("#/components/schemas/"):
-            raise ValueError(f"non-local $ref: {ref}")
-        if ref.rsplit("/", 1)[1] not in schemas:
-            raise ValueError(f"unresolvable $ref: {ref}")

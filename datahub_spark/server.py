@@ -37,8 +37,11 @@ import json
 import os
 import threading
 import time
+from dataclasses import dataclass, field
 from datetime import datetime, timezone
+from functools import partial
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from typing import Callable
 from urllib.parse import parse_qs, unquote, urlparse
 
 from pyspark.sql import functions as F
@@ -157,6 +160,11 @@ def _parse_acls(raw):
             str(a.get("Action", a.get("action", "read"))),
             bool(a.get("Deny", a.get("deny", False)))))
     return out
+
+
+def _query(rq) -> dict[str, str]:
+    """The request's query-string parameters, first value each."""
+    return {k: v[0] for k, v in parse_qs(urlparse(rq.path).query).items()}
 
 
 class FullSyncLease:
@@ -290,19 +298,19 @@ class UdaServer:
                 pass
 
             def do_GET(self):
-                outer._observed(self, outer._route_get)
+                outer._observed(self, outer._dispatch)
 
             def do_POST(self):
-                outer._observed(self, outer._route_post)
+                outer._observed(self, outer._dispatch)
 
             def do_PUT(self):
-                outer._observed(self, outer._route_put)
+                outer._observed(self, outer._dispatch)
 
             def do_DELETE(self):
-                outer._observed(self, outer._route_delete)
+                outer._observed(self, outer._dispatch)
 
             def do_PATCH(self):
-                outer._observed(self, outer._route_patch)
+                outer._observed(self, outer._dispatch)
 
         self._httpd = ThreadingHTTPServer((self._host, self._port), Handler)
         self._thread = threading.Thread(
@@ -373,7 +381,7 @@ class UdaServer:
     def _collect_json(self, df) -> list[str]:
         return [r["json"] for r in uda.to_uda_json(df).collect()]
 
-    # -- GET --------------------------------------------------------------
+    # -- routing ----------------------------------------------------------
 
     def _observed(self, rq, dispatch) -> None:
         """Per-request telemetry (loggerfilter.go:64-74): http.count +
@@ -429,169 +437,144 @@ class UdaServer:
             self._error(rq, 403, str(exc))
             return False
 
-    def _route_get(self, rq) -> None:
-        u = urlparse(rq.path)
-        parts = [p for p in u.path.split("/") if p]
-        if parts == ["health"]:
-            # NewStatusHandler (web.go:136): plain "UP", and the auth
-            # middleware skips /health (middleware.go:43-44)
-            data = b"UP"
-            rq.send_response(200)
-            rq.send_header("Content-Type", "text/plain")
-            rq.send_header("Content-Length", str(len(data)))
-            rq.end_headers()
-            rq.wfile.write(data)
+    def _dispatch(self, rq) -> None:
+        """Serve ``rq`` by the first ROUTES entry that matches its method
+        and path. Every request but an auth-exempt route's passes the
+        Bearer-token gate first, a route miss included, so a secured
+        server answers 401 before 404. A route whose service is not
+        attached answers 503 (scheduler, providers) or the route-miss
+        404 (content, security); a handler that raises answers 500."""
+        segments = [p for p in urlparse(rq.path).path.split("/") if p]
+        for route in ROUTES:
+            params = route.match(rq.command, segments)
+            if params is not None:
+                break
+        else:
+            route = None
+        if not (route and route.open) and not self._authorize(rq):
             return
-        if not self._authorize(rq):
-            return
+        if route is None:
+            return self._error(rq, 404, "not found")
+        if route.service and getattr(self, route.service) is None:
+            return self._error(rq, *_DETACHED.get(route.service,
+                                                  (404, "not found")))
         try:
-            q = {k: v[0] for k, v in parse_qs(u.query).items()}
-            if not parts:
-                # ServiceInfo (web.go:139-143)
-                port = self._httpd.server_address[1] if self._httpd else 0
-                return self._reply(rq, 200, {
-                    "name": "DataHub", "location": f"server:{port}"})
-            if parts == ["api"]:
-                # machine-readable API description: the reference
-                # publishes api/datahub.oas3.yml in-repo; serving the
-                # generated equivalent makes it discoverable
-                from datahub_spark.openapi import openapi_document
-
-                return self._reply(rq, 200, openapi_document(self))
-            if parts == ["query"]:
-                # the reference registers the SAME queryHandler for
-                # GET and POST (queryhandler.go:89-90) — a GET /query
-                # carries the same body/content-type protocol
-                return self._post_query(rq)
-            if parts == ["query", "namespace"]:
-                # queryNamespacePrefix (queryhandler.go:94-109):
-                # expansion URI -> its registered prefix, 404 when absent
-                expansion = q.get("expansion", "")
-                try:
-                    prefix = self.nsmgr.get_prefix(expansion)
-                except Exception:
-                    return self._error(
-                        rq, 404, "problem mapping namespace prefix")
-                return self._reply(rq, 200, {
-                    "prefix": prefix, "expansion": expansion})
-            if parts == ["datasets"]:
-                names = sorted(self.store.list_datasets())
-                return self._reply(rq, 200, [{"Name": n} for n in names])
-            if len(parts) == 2 and parts[0] == "datasets":
-                # datasethandler.go:212-225 GetDatasetDetails: the
-                # dataset's core registry entity (items = entity count)
-                ds = unquote(parts[1])
-                self._ensure_visible(ds)
-                cfg = self.store.dataset_config(ds)
-                if cfg is None:
-                    return self._error(rq, 404, f"dataset {ds} not found")
-                n_items = S.latest(self.store.log([ds])).count() \
-                    if self.store.has_data(ds) else 0
-                return self._reply(rq, 200, {
-                    "id": f"core:{ds}",
-                    "props": {"core:name": ds, "core:items": n_items},
-                    "refs": {},
-                })
-            if parts == ["namespaces"]:
-                # namespacehandler.go:37 — prefix -> expansion map
-                return self._reply(rq, 200, self.nsmgr.context())
-            if parts and parts[0] == "statistics" and len(parts) <= 2:
-                # statisticshandler.go:14-18 — per-dataset counts.
-                # ?cached=true serves the maintenance updater's snapshot
-                # (statistics_update.go caches its walk under a store
-                # meta key; here it is statistics.json in the store
-                # root, refreshed at 02:00 + instance start) — no Spark
-                # job, storage-level numbers
-                if q.get("cached", "false").lower() in ("1", "true"):
-                    snap_path = os.path.join(self.store.root,
-                                             "statistics.json")
-                    try:
-                        with open(snap_path) as f:
-                            snap = json.load(f)
-                    except FileNotFoundError:
-                        return self._error(
-                            rq, 404,
-                            "no cached statistics snapshot yet — the "
-                            "updater writes one at start and on its "
-                            "schedule")
-                    if len(parts) == 2:
-                        ds_snap = snap.get("datasets", {}).get(parts[1])
-                        if ds_snap is None:
-                            return self._error(
-                                rq, 404, f"dataset {parts[1]} not found")
-                        return self._reply(rq, 200, {parts[1]: ds_snap})
-                    return self._reply(rq, 200, snap)
-                log = self.store.log([parts[1]] if len(parts) == 2 else None)
-                rows = S.dataset_stats(log).collect()
-                return self._reply(rq, 200, {
-                    r["dataset"]: {"changes": r["n_changes"],
-                                   "entities": r["n_entities"]}
-                    for r in rows})
-            if parts and parts[0] in ("jobs", "job", "lineage"):
-                return self._jobs_get(rq, parts)
-            if parts == ["security", "clients"] and self.security is not None:
-                # securityhandler.go:80-83
-                return self._reply(rq, 200, self.security.list_clients())
-            if len(parts) == 4 and parts[:2] == ["security", "clients"] \
-                    and parts[3] == "acl" and self.security is not None:
-                # securityhandler.go:134-140
-                cid = unquote(parts[2])
-                return self._reply(rq, 200, [
-                    {"Resource": a.resource, "Action": a.action,
-                     "Deny": a.deny}
-                    for a in self.security.get_acls(cid)])
-            if parts == ["provider", "logins"] and self.providers is not None:
-                # providerhandler.go:81-94 (secrets masked)
-                return self._reply(rq, 200, self.providers.list(mask=True))
-            if len(parts) == 2 and parts[0] == "provider" \
-                    and self.providers is None:
-                return self._error(rq, 503, "no provider store attached")
-            if len(parts) == 3 and parts[:2] == ["provider", "login"] \
-                    and self.providers is not None:
-                # providerhandler.go:104-114
-                try:
-                    cfg = self.providers.get_config(unquote(parts[2]),
-                                                    mask=True)
-                except KeyError:
-                    return self._error(rq, 404, "no such login provider")
-                return self._reply(rq, 200, cfg)
-            if parts and parts[0] == "content" and self.content is not None:
-                if len(parts) == 1:
-                    return self._reply(rq, 200, self.content.list())
-                item = self.content.get(parts[1])
-                if item is None:
-                    return self._error(rq, 404, "no such content")
-                return self._reply(rq, 200, item)
-            if len(parts) == 3 and parts[0] == "datasets":
-                ds, verb = parts[1], parts[2]
-                # read-your-writes: commit any pending WAL spool first
-                # (also registers a dataset whose first writes are
-                # still WAL-only)
-                self._ensure_visible(ds)
-                if ds not in self.store.list_datasets() \
-                        and ds != S.CORE_DATASET:
-                    return self._error(rq, 404, f"dataset {ds} not found")
-                cfg = self.store.dataset_config(ds) or {}
-                if "ProxyDatasetConfig" in cfg and verb in ("entities",
-                                                            "changes"):
-                    return self._proxy_read(rq, cfg["ProxyDatasetConfig"],
-                                            verb, q)
-                if "VirtualDatasetConfig" in cfg and verb in ("entities",
-                                                              "changes"):
-                    return self._virtual_read(
-                        rq, ds, cfg["VirtualDatasetConfig"], q)
-                if verb == "entities":
-                    if "since" in q:
-                        # datasethandler.go:283
-                        return self._error(
-                            rq, 400,
-                            "since parameter only supported for changes")
-                    return self._get_entities(rq, ds, q)
-                if verb == "changes":
-                    return self._get_changes(rq, ds, q)
-            self._error(rq, 404, "not found")
+            route.handler(self, rq, *params)
         except Exception as exc:  # a handler bug must not kill the server
             self._error(rq, 500, str(exc))
+
+    # -- server, namespaces, statistics -----------------------------------
+
+    def _health(self, rq) -> None:
+        # NewStatusHandler (web.go:136): plain "UP", and the auth
+        # middleware skips /health (middleware.go:43-44)
+        data = b"UP"
+        rq.send_response(200)
+        rq.send_header("Content-Type", "text/plain")
+        rq.send_header("Content-Length", str(len(data)))
+        rq.end_headers()
+        rq.wfile.write(data)
+
+    def _service_info(self, rq) -> None:
+        # ServiceInfo (web.go:139-143)
+        port = self._httpd.server_address[1] if self._httpd else 0
+        self._reply(rq, 200, {"name": "DataHub", "location": f"server:{port}"})
+
+    def _api(self, rq) -> None:
+        # machine-readable API description: the reference publishes
+        # api/datahub.oas3.yml in-repo; serving the generated equivalent
+        # makes it discoverable
+        from datahub_spark.openapi import openapi_document
+
+        self._reply(rq, 200, openapi_document(self))
+
+    def _namespace_prefix(self, rq) -> None:
+        # queryNamespacePrefix (queryhandler.go:94-109): expansion URI ->
+        # its registered prefix, 404 when absent
+        expansion = _query(rq).get("expansion", "")
+        try:
+            prefix = self.nsmgr.get_prefix(expansion)
+        except Exception:
+            return self._error(rq, 404, "problem mapping namespace prefix")
+        self._reply(rq, 200, {"prefix": prefix, "expansion": expansion})
+
+    def _namespaces(self, rq) -> None:
+        # namespacehandler.go:37 — prefix -> expansion map
+        self._reply(rq, 200, self.nsmgr.context())
+
+    def _statistics(self, rq, ds: str | None = None) -> None:
+        """statisticshandler.go:14-18 — per-dataset counts. ?cached=true
+        serves the maintenance updater's snapshot (statistics_update.go
+        caches its walk under a store meta key; here it is
+        statistics.json in the store root, refreshed at 02:00 + instance
+        start) — no Spark job, storage-level numbers."""
+        if _query(rq).get("cached", "false").lower() in ("1", "true"):
+            snap_path = os.path.join(self.store.root, "statistics.json")
+            try:
+                with open(snap_path) as f:
+                    snap = json.load(f)
+            except FileNotFoundError:
+                return self._error(
+                    rq, 404,
+                    "no cached statistics snapshot yet — the "
+                    "updater writes one at start and on its "
+                    "schedule")
+            if ds is not None:
+                ds_snap = snap.get("datasets", {}).get(ds)
+                if ds_snap is None:
+                    return self._error(rq, 404, f"dataset {ds} not found")
+                return self._reply(rq, 200, {ds: ds_snap})
+            return self._reply(rq, 200, snap)
+        log = self.store.log([ds] if ds is not None else None)
+        rows = S.dataset_stats(log).collect()
+        self._reply(rq, 200, {
+            r["dataset"]: {"changes": r["n_changes"],
+                           "entities": r["n_entities"]}
+            for r in rows})
+
+    # -- datasets (datasethandler.go) --------------------------------------
+
+    def _list_datasets(self, rq) -> None:
+        names = sorted(self.store.list_datasets())
+        self._reply(rq, 200, [{"Name": n} for n in names])
+
+    def _dataset_info(self, rq, ds: str) -> None:
+        # datasethandler.go:212-225 GetDatasetDetails: the dataset's core
+        # registry entity (items = entity count)
+        self._ensure_visible(ds)
+        cfg = self.store.dataset_config(ds)
+        if cfg is None:
+            return self._error(rq, 404, f"dataset {ds} not found")
+        n_items = S.latest(self.store.log([ds])).count() \
+            if self.store.has_data(ds) else 0
+        self._reply(rq, 200, {
+            "id": f"core:{ds}",
+            "props": {"core:name": ds, "core:items": n_items},
+            "refs": {},
+        })
+
+    def _read_page(self, rq, ds: str, verb: str) -> None:
+        """GET /datasets/{ds}/entities | /changes: a UDA page, read
+        through for proxy datasets and built by the script for virtual
+        ones."""
+        q = _query(rq)
+        # read-your-writes: commit any pending WAL spool first (also
+        # registers a dataset whose first writes are still WAL-only)
+        self._ensure_visible(ds)
+        if ds not in self.store.list_datasets() and ds != S.CORE_DATASET:
+            return self._error(rq, 404, f"dataset {ds} not found")
+        cfg = self.store.dataset_config(ds) or {}
+        if "ProxyDatasetConfig" in cfg:
+            return self._proxy_read(rq, cfg["ProxyDatasetConfig"], verb, q)
+        if "VirtualDatasetConfig" in cfg:
+            return self._virtual_read(rq, ds, cfg["VirtualDatasetConfig"], q)
+        if verb == "changes":
+            return self._get_changes(rq, ds, q)
+        if "since" in q:
+            # datasethandler.go:283
+            return self._error(
+                rq, 400, "since parameter only supported for changes")
+        self._get_entities(rq, ds, q)
 
     def _context(self, ds: str) -> dict:
         return self.store.dataset_context(ds, self.nsmgr)
@@ -740,112 +723,30 @@ class UdaServer:
         rq.end_headers()
         rq.wfile.write(data)
 
-    # -- POST (store + fullsync lease + /query) ---------------------------
-
-    def _route_post(self, rq) -> None:
-        u = urlparse(rq.path)
-        parts = [p for p in u.path.split("/") if p]
-        # the token exchange is the one unauthenticated endpoint
-        # (clients bootstrap their Bearer token here, manager.go:430)
-        if parts == ["security", "token"] and self.security is not None:
-            return self._post_token(rq)
-        if not self._authorize(rq):
-            return
-        try:
-            if len(parts) == 3 and parts[0] == "datasets" \
-                    and parts[2] == "entities":
-                return self._post_entities(rq, parts[1])
-            if len(parts) == 2 and parts[0] == "datasets":
-                return self._dataset_create(rq, unquote(parts[1]), u)
-            if parts == ["query"]:
-                return self._post_query(rq)
-            if parts == ["transactions"]:
-                return self._post_transaction(rq)
-            if parts == ["jobs"]:
-                return self._jobs_add(rq)
-            if parts == ["security", "clients"] and self.security is not None:
-                # securityhandler.go:118-132 client registration
-                n = int(rq.headers.get("Content-Length", "0"))
-                info = json.loads(rq.rfile.read(n).decode()) if n else {}
-                try:
-                    self.security.register_client(info)
-                except ValueError as exc:
-                    return self._error(rq, 400, str(exc))
-                return self._reply(rq, 200, {})
-            if len(parts) == 4 and parts[:2] == ["security", "clients"] \
-                    and parts[3] == "acl" and self.security is not None:
-                # securityhandler.go:151-168 set client ACLs
-                n = int(rq.headers.get("Content-Length", "0") or 0)
-                acls = _parse_acls(
-                    json.loads(rq.rfile.read(n).decode()) if n else [])
-                if acls is None:
-                    return self._error(rq, 400, "malformed ACL list")
-                self.security.set_acls(unquote(parts[2]), acls)
-                return self._reply(rq, 200, {})
-            if parts in (["security", "clientclaims"],
-                         ["security", "clientacl"]) \
-                    and self.security is not None:
-                return self._post_legacy_client_acl(rq)
-            if parts == ["provider", "logins"] and self.providers is not None:
-                # providerhandler.go:51-62 create
-                from datahub_spark.providers import ProviderConfig
-                n = int(rq.headers.get("Content-Length", "0"))
-                obj = json.loads(rq.rfile.read(n).decode()) if n else {}
-                try:
-                    self.providers.add(ProviderConfig.from_json(obj))
-                except ValueError as exc:
-                    return self._error(rq, 400, str(exc))
-                return self._reply(rq, 200, {})
-            if len(parts) == 3 and parts[:2] == ["provider", "login"] \
-                    and self.providers is not None:
-                # providerhandler.go:64-79 update (path name wins)
-                from datahub_spark.providers import ProviderConfig
-                n = int(rq.headers.get("Content-Length", "0"))
-                obj = json.loads(rq.rfile.read(n).decode()) if n else {}
-                obj.setdefault("name", unquote(parts[2]))  # path name wins
-                try:
-                    self.providers.update(unquote(parts[2]),
-                                          ProviderConfig.from_json(obj))
-                except KeyError:
-                    return self._error(rq, 404, "no such login provider")
-                except ValueError as exc:
-                    return self._error(rq, 400, str(exc))
-                return self._reply(rq, 200, {})
-            if parts == ["content"] and self.content is not None:
-                n = int(rq.headers.get("Content-Length", "0"))
-                data = json.loads(rq.rfile.read(n).decode())
-                cid = data.get("id")
-                if not cid:
-                    return self._error(rq, 400, "content needs an id")
-                return self._reply(
-                    rq, 201, self.content.upsert(cid, data.get("data", {})))
-            if parts == ["compact"]:
-                # compactionhandler.go:22-45
-                n = int(rq.headers.get("Content-Length", "0"))
-                r = json.loads(rq.rfile.read(n).decode()) if n else {}
-                if not r.get("dataset"):
-                    return self._error(rq, 400, "dataset not provided")
-                if not r.get("strategy"):
-                    return self._error(rq, 400, "strategy not provided")
-                if r["strategy"] not in ("deduplication", "deduplicate"):
-                    return self._error(
-                        rq, 400, "strategy not supported. allowed "
-                        "values: deduplication")
-                if r["dataset"] not in self.store.list_datasets():
-                    return self._error(rq, 404, "no such dataset")
-                # engine extras beyond the reference's single strategy:
-                # gcHorizon folds retention GC into the rewrite,
-                # cleanDeleted purges latest-tombstoned entities
-                # (garbagecollector.go Cleandeleted) in the same pass
-                gc_h = r.get("gcHorizon")
-                self.store.compact(
-                    r["dataset"],
-                    gc_horizon=int(gc_h) if gc_h is not None else None,
-                    clean_deleted_entities=bool(r.get("cleanDeleted")))
-                return self._reply(rq, 200, {})
-            self._error(rq, 404, "not found")
-        except Exception as exc:
-            self._error(rq, 500, str(exc))
+    def _compact(self, rq) -> None:
+        # compactionhandler.go:22-45
+        n = int(rq.headers.get("Content-Length", "0"))
+        r = json.loads(rq.rfile.read(n).decode()) if n else {}
+        if not r.get("dataset"):
+            return self._error(rq, 400, "dataset not provided")
+        if not r.get("strategy"):
+            return self._error(rq, 400, "strategy not provided")
+        if r["strategy"] not in ("deduplication", "deduplicate"):
+            return self._error(
+                rq, 400, "strategy not supported. allowed "
+                "values: deduplication")
+        if r["dataset"] not in self.store.list_datasets():
+            return self._error(rq, 404, "no such dataset")
+        # engine extras beyond the reference's single strategy:
+        # gcHorizon folds retention GC into the rewrite,
+        # cleanDeleted purges latest-tombstoned entities
+        # (garbagecollector.go Cleandeleted) in the same pass
+        gc_h = r.get("gcHorizon")
+        self.store.compact(
+            r["dataset"],
+            gc_horizon=int(gc_h) if gc_h is not None else None,
+            clean_deleted_entities=bool(r.get("cleanDeleted")))
+        self._reply(rq, 200, {})
 
     def _proxy_read(self, rq, proxy_cfg: dict, verb: str, q: dict) -> None:
         """Read-through for proxy datasets (proxydataset.go:200-300 +
@@ -921,14 +822,14 @@ class UdaServer:
         self._write_page(rq, ds, objs, token,
                          jsonld=self._wants_jsonld(rq, q))
 
-    def _dataset_create(self, rq, ds: str, u) -> None:
+    def _dataset_create(self, rq, ds: str) -> None:
         """datasetCreate (datasethandler.go:256-300): 400 on existing
         name; ?proxy=true requires a ProxyDatasetConfig with remoteUrl;
         a VirtualDatasetConfig requires a transform; the config rides in
         the registry entry (CreateDatasetConfig, dsmanager.go:102-106)."""
         if ds in self.store.list_datasets():
             return self._error(rq, 400, "Dataset already exist")
-        q = {k: v[0] for k, v in parse_qs(u.query).items()}
+        q = _query(rq)
         n = int(rq.headers.get("Content-Length", "0"))
         try:
             cfg = json.loads(rq.rfile.read(n).decode()) if n else {}
@@ -954,10 +855,111 @@ class UdaServer:
             except ValueError as exc:
                 return self._error(rq, 400, f"virtual dataset script: {exc}")
             extra["VirtualDatasetConfig"] = vc
-        self.store.create_dataset(
-            ds, public_namespaces=cfg.get("publicNamespaces"),
-            config=extra or None)
+        try:
+            self.store.create_dataset(
+                ds, public_namespaces=cfg.get("publicNamespaces"),
+                config=extra or None)
+        except ValueError as exc:  # a name the store refuses
+            return self._error(rq, 400, str(exc))
         return self._reply(rq, 200, {})
+
+    def _rename_dataset(self, rq, ds: str) -> None:
+        """PATCH /datasets/{name} = datasetUpdate (datasethandler.go:
+        the UpdateDatasetConfig carries the new ID/name)."""
+        if self.store.dataset_config(ds) is None:
+            return self._error(rq, 400, "Dataset does not exist")
+        n = int(rq.headers.get("Content-Length", "0"))
+        try:
+            cfg = json.loads(rq.rfile.read(n).decode()) if n else {}
+        except json.JSONDecodeError:
+            return self._error(
+                rq, 400, "Could not parse update dataset payload")
+        new_name = cfg.get("ID") or cfg.get("id")
+        if not new_name:
+            return self._error(
+                rq, 400, "update dataset request without payload")
+        try:
+            self.store.rename_dataset(ds, new_name)
+        except (KeyError, ValueError) as exc:
+            return self._error(rq, 400, str(exc))
+        self._reply(rq, 200, {})
+
+    def _delete_dataset(self, rq, ds: str) -> None:
+        # deleteDatasetHandler (datasethandler.go:227-235)
+        if self.store.dataset_config(ds) is None:
+            return self._error(rq, 400, f"dataset {ds} not found")
+        self.store.delete_dataset(ds)
+        self._reply(rq, 200, {})
+
+    def _delete_datasets(self, rq) -> None:
+        # deleteAllDatasets (datasethandler.go:237-244)
+        for ds in self.store.list_datasets():
+            self.store.delete_dataset(ds)
+        self._reply(rq, 200, {})
+
+    def _post_transaction(self, rq) -> None:
+        """POST /transactions (txnhandler.go:54; wire format
+        streamparser.go:53: ``{"@context": {...}, "<dataset>":
+        [entities], ...}``) — one atomic multi-dataset commit via the
+        store's staged-rename transaction."""
+        n = int(rq.headers.get("Content-Length", "0"))
+        payload = json.loads(rq.rfile.read(n).decode()) if n else {}
+        if not isinstance(payload, dict):
+            return self._error(rq, 400, "transaction body must be an object")
+        dataset_entities = {}
+        for ds, objs in payload.items():
+            if ds == "@context":
+                continue
+            try:
+                rows = list(uda.decode_entities(objs or []))
+            except ValueError as exc:
+                return self._error(rq, 400, f"malformed entity batch: {exc}")
+            if rows:
+                dataset_entities[ds] = local_frame(
+                    self.store.spark, rows, uda.ROW_SCHEMA)
+        if dataset_entities:
+            try:
+                self.store.execute_transaction(dataset_entities)
+            except ValueError as exc:  # a name the store refuses
+                return self._error(rq, 400, str(exc))
+        self._reply(rq, 200, {})
+
+    # -- security (securityhandler.go) ------------------------------------
+
+    def _list_clients(self, rq) -> None:
+        # securityhandler.go:80-83
+        self._reply(rq, 200, self.security.list_clients())
+
+    def _register_client(self, rq) -> None:
+        # securityhandler.go:118-132 client registration
+        n = int(rq.headers.get("Content-Length", "0"))
+        info = json.loads(rq.rfile.read(n).decode()) if n else {}
+        try:
+            self.security.register_client(info)
+        except ValueError as exc:
+            return self._error(rq, 400, str(exc))
+        self._reply(rq, 200, {})
+
+    def _client_acl(self, rq, cid: str) -> None:
+        # securityhandler.go:134-140
+        self._reply(rq, 200, [
+            {"Resource": a.resource, "Action": a.action, "Deny": a.deny}
+            for a in self.security.get_acls(cid)])
+
+    def _set_client_acl(self, rq, cid: str) -> None:
+        # securityhandler.go:151-168 set client ACLs
+        n = int(rq.headers.get("Content-Length", "0") or 0)
+        acls = _parse_acls(
+            json.loads(rq.rfile.read(n).decode()) if n else [])
+        if acls is None:
+            return self._error(rq, 400, "malformed ACL list")
+        self.security.set_acls(cid, acls)
+        self._reply(rq, 200, {})
+
+    def _clear_client_acl(self, rq, cid: str) -> None:
+        # securityhandler.go:142-149
+        self.security.set_acls(cid, [])
+        self._reply(rq, 200, {})
 
     def _post_token(self, rq) -> None:
         from datahub_spark.security import AuthError
@@ -1036,178 +1038,158 @@ class UdaServer:
         self.security.set_acls(str(cid), acls)
         return self._reply(rq, 200, {})
 
-    def _route_put(self, rq) -> None:
-        if not self._authorize(rq):
-            return
-        try:
-            parts = [p for p in urlparse(rq.path).path.split("/") if p]
-            if len(parts) == 3 and parts[0] == "job":
-                return self._job_operate(rq, parts[1], parts[2])
-            if len(parts) == 2 and parts[0] == "content" \
-                    and self.content is not None:
-                n = int(rq.headers.get("Content-Length", "0"))
-                data = json.loads(rq.rfile.read(n).decode())
-                return self._reply(rq, 200, self.content.upsert(
-                    parts[1], data.get("data", data)))
-            self._error(rq, 404, "not found")
-        except Exception as exc:
-            self._error(rq, 500, str(exc))
+    # -- login providers (providerhandler.go) ------------------------------
 
-    def _route_patch(self, rq) -> None:
-        """PATCH /datasets/{name} = datasetUpdate (datasethandler.go:
-        the UpdateDatasetConfig carries the new ID/name)."""
-        if not self._authorize(rq):
-            return
-        try:
-            parts = [p for p in urlparse(rq.path).path.split("/") if p]
-            if len(parts) == 2 and parts[0] == "datasets":
-                ds = unquote(parts[1])
-                if self.store.dataset_config(ds) is None:
-                    return self._error(rq, 400, "Dataset does not exist")
-                n = int(rq.headers.get("Content-Length", "0"))
-                try:
-                    cfg = json.loads(rq.rfile.read(n).decode()) if n else {}
-                except json.JSONDecodeError:
-                    return self._error(
-                        rq, 400, "Could not parse update dataset payload")
-                new_name = cfg.get("ID") or cfg.get("id")
-                if not new_name:
-                    return self._error(
-                        rq, 400, "update dataset request without payload")
-                try:
-                    self.store.rename_dataset(ds, new_name)
-                except (KeyError, ValueError) as exc:
-                    return self._error(rq, 400, str(exc))
-                return self._reply(rq, 200, {})
-            self._error(rq, 404, "not found")
-        except Exception as exc:
-            self._error(rq, 500, str(exc))
+    def _list_providers(self, rq) -> None:
+        # providerhandler.go:81-94 (secrets masked)
+        self._reply(rq, 200, self.providers.list(mask=True))
 
-    def _route_delete(self, rq) -> None:
-        if not self._authorize(rq):
-            return
+    def _add_provider(self, rq) -> None:
+        # providerhandler.go:51-62 create
+        from datahub_spark.providers import ProviderConfig
+        n = int(rq.headers.get("Content-Length", "0"))
+        obj = json.loads(rq.rfile.read(n).decode()) if n else {}
         try:
-            parts = [p for p in urlparse(rq.path).path.split("/") if p]
-            if len(parts) == 2 and parts[0] == "jobs":
-                if self.scheduler is None:
-                    return self._error(rq, 503, "no job scheduler attached")
-                self.scheduler.unregister(parts[1])
-                self._job_configs.pop(parts[1], None)
-                return self._reply(rq, 200, {})
-            if len(parts) == 2 and parts[0] == "content" \
-                    and self.content is not None:
-                if not self.content.delete(parts[1]):
-                    return self._error(rq, 404, "no such content")
-                return self._reply(rq, 200, {})
-            if len(parts) == 4 and parts[:2] == ["security", "clients"] \
-                    and parts[3] == "acl" and self.security is not None:
-                # securityhandler.go:142-149
-                self.security.set_acls(unquote(parts[2]), [])
-                return self._reply(rq, 200, {})
-            if len(parts) == 3 and parts[:2] == ["provider", "login"] \
-                    and self.providers is not None:
-                # providerhandler.go:116-127
-                try:
-                    self.providers.delete(unquote(parts[2]))
-                except KeyError:
-                    return self._error(rq, 404, "no such login provider")
-                return self._reply(rq, 200, {})
-            if len(parts) == 2 and parts[0] == "datasets":
-                # deleteDatasetHandler (datasethandler.go:227-235)
-                ds = unquote(parts[1])
-                if self.store.dataset_config(ds) is None:
-                    return self._error(rq, 400, f"dataset {ds} not found")
-                self.store.delete_dataset(ds)
-                return self._reply(rq, 200, {})
-            if parts == ["datasets"]:
-                # deleteAllDatasets (datasethandler.go:237-244)
-                for ds in self.store.list_datasets():
-                    self.store.delete_dataset(ds)
-                return self._reply(rq, 200, {})
-            self._error(rq, 404, "not found")
-        except Exception as exc:
-            self._error(rq, 500, str(exc))
+            self.providers.add(ProviderConfig.from_json(obj))
+        except ValueError as exc:
+            return self._error(rq, 400, str(exc))
+        self._reply(rq, 200, {})
+
+    def _get_provider(self, rq, name: str) -> None:
+        # providerhandler.go:104-114
+        try:
+            cfg = self.providers.get_config(name, mask=True)
+        except KeyError:
+            return self._error(rq, 404, "no such login provider")
+        self._reply(rq, 200, cfg)
+
+    def _update_provider(self, rq, name: str) -> None:
+        # providerhandler.go:64-79 update (path name wins)
+        from datahub_spark.providers import ProviderConfig
+        n = int(rq.headers.get("Content-Length", "0"))
+        obj = json.loads(rq.rfile.read(n).decode()) if n else {}
+        obj.setdefault("name", name)  # path name wins
+        try:
+            self.providers.update(name, ProviderConfig.from_json(obj))
+        except KeyError:
+            return self._error(rq, 404, "no such login provider")
+        except ValueError as exc:
+            return self._error(rq, 400, str(exc))
+        self._reply(rq, 200, {})
+
+    def _delete_provider(self, rq, name: str) -> None:
+        # providerhandler.go:116-127
+        try:
+            self.providers.delete(name)
+        except KeyError:
+            return self._error(rq, 404, "no such login provider")
+        self._reply(rq, 200, {})
+
+    # -- content (contenthandler.go) ---------------------------------------
+
+    def _list_content(self, rq) -> None:
+        self._reply(rq, 200, self.content.list())
+
+    def _add_content(self, rq) -> None:
+        n = int(rq.headers.get("Content-Length", "0"))
+        data = json.loads(rq.rfile.read(n).decode())
+        cid = data.get("id")
+        if not cid:
+            return self._error(rq, 400, "content needs an id")
+        self._reply(rq, 201, self.content.upsert(cid, data.get("data", {})))
+
+    def _get_content(self, rq, cid: str) -> None:
+        item = self.content.get(cid)
+        if item is None:
+            return self._error(rq, 404, "no such content")
+        self._reply(rq, 200, item)
+
+    def _put_content(self, rq, cid: str) -> None:
+        n = int(rq.headers.get("Content-Length", "0"))
+        data = json.loads(rq.rfile.read(n).decode())
+        self._reply(rq, 200, self.content.upsert(cid, data.get("data", data)))
+
+    def _delete_content(self, rq, cid: str) -> None:
+        if not self.content.delete(cid):
+            return self._error(rq, 404, "no such content")
+        self._reply(rq, 200, {})
 
     # -- jobs API (jobshandler.go:48-61, joboperationhandler.go:41-47) ----
-
-    def _need_scheduler(self, rq):
-        if self.scheduler is None:
-            self._error(rq, 503, "no job scheduler attached")
-            return None
-        return self.scheduler
 
     def _jobs_add(self, rq) -> None:
         """POST /jobs — a reference JobConfiguration JSON registers (or
         replaces) a job; cron triggers schedule it."""
-        sched = self._need_scheduler(rq)
-        if sched is None:
-            return
         n = int(rq.headers.get("Content-Length", "0"))
         try:
             cfg = json.loads(rq.rfile.read(n).decode())
-            job = sched.register_config(self.store, cfg)
+            job = self.scheduler.register_config(self.store, cfg)
         except ValueError as exc:  # malformed config or a script that does not load
             return self._error(rq, 400, f"invalid job configuration: {exc}")
         self._job_configs[job.job_id] = cfg
         self._reply(rq, 201, {"id": job.job_id})
 
-    def _jobs_get(self, rq, parts: list[str]) -> None:
-        sched = self._need_scheduler(rq)
-        if sched is None:
-            return
-        from datahub_spark.jobs import lineage, lineage_for_dataset
+    def _list_jobs(self, rq) -> None:
+        self._reply(rq, 200, list(self._job_configs.values()))
 
-        if len(parts) == 2 and parts[0] == "lineage":
-            # GET /lineage/{dataset} (lineagehandler.go:14-29): per-
-            # dataset view; 404 when the dataset is not registered
-            # (the handler checks DsManager.GetDataset before building)
-            name = unquote(parts[1])
-            if name not in self.store.list_datasets():
-                return self._error(rq, 404, "dataset is not found")
-            return self._reply(
-                rq, 200, lineage_for_dataset(list(sched.jobs.values()), name))
-        if parts[0] == "lineage":
-            return self._reply(rq, 200, lineage(list(sched.jobs.values())))
-        if parts == ["jobs"]:
-            return self._reply(rq, 200, list(self._job_configs.values()))
-        if parts == ["jobs", "_", "schedules"]:
-            return self._reply(rq, 200, {
-                jid: spec.spec for jid, spec in sched.schedules.items()})
-        if parts == ["jobs", "_", "history"]:
-            return self._reply(rq, 200, {
-                jid: sched.state.history(jid) for jid in sched.jobs})
-        if parts == ["jobs", "_", "status"]:
-            # jobsListStatus (jobshandler.go:109-111): JobStatus rows
-            # for every currently-running job (scheduler.go:328-348)
-            running = sched.runner.raffle.running_jobs()
-            return self._reply(rq, 200, [
-                {"jobId": jid,
-                 "jobTitle": (self._job_configs.get(jid) or {}).get(
-                     "title", jid),
-                 "started": datetime.fromtimestamp(
-                     st["started"], timezone.utc).isoformat()}
-                for jid, st in sorted(running.items())])
-        if len(parts) == 2 and parts[0] == "jobs":
-            cfg = self._job_configs.get(parts[1])
-            if cfg is None:
-                return self._error(rq, 404, "no such job")
-            return self._reply(rq, 200, cfg)
-        if len(parts) == 3 and parts[0] == "job" and parts[2] == "status":
-            running = parts[1] in sched.runner.raffle.running_jobs()
-            return self._reply(
-                rq, 200, {"state": "Running" if running else "Stopped"})
-        self._error(rq, 404, "not found")
+    def _get_job(self, rq, job_id: str) -> None:
+        cfg = self._job_configs.get(job_id)
+        if cfg is None:
+            return self._error(rq, 404, "no such job")
+        self._reply(rq, 200, cfg)
+
+    def _delete_job(self, rq, job_id: str) -> None:
+        self.scheduler.unregister(job_id)
+        self._job_configs.pop(job_id, None)
+        self._reply(rq, 200, {})
+
+    def _job_schedules(self, rq) -> None:
+        self._reply(rq, 200, {
+            jid: spec.spec for jid, spec in self.scheduler.schedules.items()})
+
+    def _job_history(self, rq) -> None:
+        sched = self.scheduler
+        self._reply(rq, 200, {
+            jid: sched.state.history(jid) for jid in sched.jobs})
+
+    def _running_jobs(self, rq) -> None:
+        # jobsListStatus (jobshandler.go:109-111): JobStatus rows for
+        # every currently-running job (scheduler.go:328-348)
+        running = self.scheduler.runner.raffle.running_jobs()
+        self._reply(rq, 200, [
+            {"jobId": jid,
+             "jobTitle": (self._job_configs.get(jid) or {}).get("title", jid),
+             "started": datetime.fromtimestamp(
+                 st["started"], timezone.utc).isoformat()}
+            for jid, st in sorted(running.items())])
+
+    def _job_state(self, rq, job_id: str) -> None:
+        running = job_id in self.scheduler.runner.raffle.running_jobs()
+        self._reply(rq, 200, {"state": "Running" if running else "Stopped"})
+
+    def _lineage(self, rq) -> None:
+        from datahub_spark.jobs import lineage
+
+        self._reply(rq, 200, lineage(list(self.scheduler.jobs.values())))
+
+    def _dataset_lineage(self, rq, ds: str) -> None:
+        # GET /lineage/{dataset} (lineagehandler.go:14-29): per-dataset
+        # view; 404 when the dataset is not registered (the handler
+        # checks DsManager.GetDataset before building)
+        from datahub_spark.jobs import lineage_for_dataset
+
+        if ds not in self.store.list_datasets():
+            return self._error(rq, 404, "dataset is not found")
+        self._reply(rq, 200, lineage_for_dataset(
+            list(self.scheduler.jobs.values()), ds))
 
     def _job_operate(self, rq, job_id: str, op: str) -> None:
-        """PUT /job/{id}/run|pause|resume|reset
+        """PUT /job/{id}/run|pause|resume|reset|reset_meta|kill
         (joboperationhandler.go:41-46). ``run`` submits the job to the
         scheduler's runner — the same raffle cron and onchange runs draw
         tickets from — and waits on that run: 409 when no ticket is
         granted, 500 with the error when the run fails. Long pipelines
         belong on cron triggers."""
-        sched = self._need_scheduler(rq)
-        if sched is None:
-            return
+        sched = self.scheduler
         job = sched.jobs.get(job_id)
         if job is None:
             return self._error(rq, 404, "no such job")
@@ -1236,33 +1218,7 @@ class UdaServer:
             err = run.result().get("error")
             if err:
                 return self._error(rq, 500, err)
-        else:
-            return self._error(rq, 404, f"unknown operation {op}")
         self._reply(rq, 200, {"id": job_id, "operation": op})
-
-    def _post_transaction(self, rq) -> None:
-        """POST /transactions (txnhandler.go:54; wire format
-        streamparser.go:53: ``{"@context": {...}, "<dataset>":
-        [entities], ...}``) — one atomic multi-dataset commit via the
-        store's staged-rename transaction."""
-        n = int(rq.headers.get("Content-Length", "0"))
-        payload = json.loads(rq.rfile.read(n).decode()) if n else {}
-        if not isinstance(payload, dict):
-            return self._error(rq, 400, "transaction body must be an object")
-        dataset_entities = {}
-        for ds, objs in payload.items():
-            if ds == "@context":
-                continue
-            try:
-                rows = list(uda.decode_entities(objs or []))
-            except ValueError as exc:
-                return self._error(rq, 400, f"malformed entity batch: {exc}")
-            if rows:
-                dataset_entities[ds] = local_frame(
-                    self.store.spark, rows, uda.ROW_SCHEMA)
-        if dataset_entities:
-            self.store.execute_transaction(dataset_entities)
-        self._reply(rq, 200, {})
 
     # -- /query (queryhandler.go) -----------------------------------------
 
@@ -1390,6 +1346,8 @@ class UdaServer:
             result.append([token] if token else [])
         self._reply(rq, 200, result)
 
+    # -- entity writes (datasethandler.go:778-860) -------------------------
+
     # rows per DataFrame chunk cut from a streamed /entities POST body:
     # bounds the Python-side row list; each chunk ships to the JVM as a
     # LocalRelation before the next is accumulated
@@ -1418,7 +1376,10 @@ class UdaServer:
             "universal-data-api-full-sync-start", "") == "true"
         fs_end = rq.headers.get(
             "universal-data-api-full-sync-end", "") == "true"
-
+        try:  # refused before a lease, a WAL spool or the body is touched
+            S.check_dataset_name(ds)
+        except ValueError as exc:
+            return self._error(rq, 400, str(exc))
         try:
             # mirror processEntities (datasethandler.go:785-860): start a
             # lease on fsStart; while a sync is started, every write must
@@ -1495,3 +1456,171 @@ class UdaServer:
             self._error(rq, 409, str(exc))
         except GoneError as exc:
             self._error(rq, 410, str(exc))
+
+
+@dataclass
+class Route:
+    """One served operation. ``UdaServer._dispatch`` serves a request by
+    the first route whose method and path template match it, calling
+    ``handler(server, rq, *params)`` with the template's ``{name}``
+    segments percent-decoded; ``openapi.openapi_document`` describes the
+    same routes. ``service`` names the UdaServer attribute the route
+    needs attached; an ``open`` route skips the Bearer-token gate;
+    ``request``/``response`` name openapi component schemas."""
+    method: str
+    path: str
+    handler: Callable
+    tag: str
+    summary: str
+    service: str | None = None
+    request: str | None = None
+    response: str | None = None
+    open: bool = False
+    segments: tuple[str, ...] = field(init=False)
+
+    def __post_init__(self):
+        self.segments = tuple(p for p in self.path.split("/") if p)
+
+    def match(self, method: str, segments: list[str]) -> list[str] | None:
+        """The decoded path parameters when this route serves ``method``
+        on the path ``segments``, else None."""
+        if method != self.method or len(segments) != len(self.segments):
+            return None
+        params = []
+        for template, segment in zip(self.segments, segments):
+            if template.startswith("{"):
+                params.append(unquote(segment))
+            elif template != segment:
+                return None
+        return params
+
+
+# the answer of a route whose service is not attached; content and
+# security routes are then a plain route miss
+_DETACHED = {"scheduler": (503, "no job scheduler attached"),
+             "providers": (503, "no provider store attached")}
+
+_U = UdaServer
+_QUERY = "Entity lookup / graph traversal"
+_LEGACY_ACL = "Legacy admin-gated alias: set client ACL (client named in body)"
+_JOB_OPS = (("run", "Run now (waits for completion)"), ("pause", "Pause"),
+            ("resume", "Resume"), ("reset", "Reset continuation token"),
+            ("reset_meta", "Reset tracked-dependency watermarks"),
+            ("kill", "Cancel a running job"))
+
+ROUTES: tuple[Route, ...] = (
+    Route("GET", "/", _U._service_info, "server", "ServiceInfo",
+          response="ServiceInfo"),
+    Route("GET", "/health", _U._health, "server",
+          "Liveness (plain 'UP', no auth)", open=True),
+    Route("GET", "/api", _U._api, "server", "This OpenAPI document"),
+    Route("GET", "/namespaces", _U._namespaces, "namespaces",
+          "Namespace context", response="Context"),
+    Route("GET", "/query/namespace", _U._namespace_prefix, "namespaces",
+          "Prefix for an expansion URI (?expansion=)"),
+    Route("POST", "/query", _U._post_query, "query", _QUERY,
+          request="Query", response="QueryResponse"),
+    Route("GET", "/query", _U._post_query, "query",
+          _QUERY + " (same protocol as POST — the reference registers one "
+          "handler for both verbs)", request="Query", response="QueryResponse"),
+    Route("GET", "/datasets", _U._list_datasets, "dataset", "List datasets",
+          response="Datasets"),
+    Route("GET", "/datasets/{dataset}", _U._dataset_info, "dataset",
+          "Dataset info", response="DatasetInfo"),
+    Route("POST", "/datasets/{dataset}", _U._dataset_create, "dataset",
+          "Create dataset (?proxy=true / virtual via body)"),
+    Route("PATCH", "/datasets/{dataset}", _U._rename_dataset, "dataset",
+          "Rename dataset"),
+    Route("DELETE", "/datasets/{dataset}", _U._delete_dataset, "dataset",
+          "Delete dataset"),
+    Route("DELETE", "/datasets", _U._delete_datasets, "dataset",
+          "Delete ALL datasets"),
+    Route("GET", "/datasets/{dataset}/entities",
+          partial(_U._read_page, verb="entities"), "dataset",
+          "UDA entities page (?from=&limit=)", response="Entities"),
+    Route("POST", "/datasets/{dataset}/entities", _U._post_entities,
+          "dataset",
+          "Append entity batch (fullsync via universal-data-api headers)",
+          request="Entities"),
+    Route("GET", "/datasets/{dataset}/changes",
+          partial(_U._read_page, verb="changes"), "dataset",
+          "UDA changes page (?since=&limit=&latestOnly=&reverse=)",
+          response="Entities"),
+    Route("POST", "/transactions", _U._post_transaction, "dataset",
+          "Multi-dataset atomic write", request="TransactionRequest"),
+    Route("POST", "/compact", _U._compact, "operations",
+          "Compact a dataset (deduplication strategy)",
+          request="CompactionRequest"),
+    Route("GET", "/statistics", _U._statistics, "server", "Store statistics",
+          response="Statistics"),
+    Route("GET", "/statistics/{dataset}", _U._statistics, "server",
+          "Per-dataset statistics", response="Statistics"),
+    # jobs engine
+    Route("GET", "/jobs", _U._list_jobs, "jobs", "List job configurations",
+          "scheduler", response="Jobs"),
+    Route("POST", "/jobs", _U._jobs_add, "jobs", "Add or update a job",
+          "scheduler", request="Job", response="JobResponse"),
+    Route("GET", "/jobs/{jobid}", _U._get_job, "jobs", "Job configuration",
+          "scheduler", response="Job"),
+    Route("DELETE", "/jobs/{jobid}", _U._delete_job, "jobs", "Delete job",
+          "scheduler"),
+    Route("GET", "/jobs/_/schedules", _U._job_schedules, "jobs",
+          "Trigger schedules", "scheduler"),
+    Route("GET", "/jobs/_/history", _U._job_history, "jobs", "Run history",
+          "scheduler"),
+    Route("GET", "/jobs/_/status", _U._running_jobs, "jobs", "Running jobs",
+          "scheduler"),
+    Route("GET", "/job/{jobid}/status", _U._job_state, "operations",
+          "Running/Stopped state", "scheduler", response="JobStatus"),
+    *(Route("PUT", f"/job/{{jobid}}/{op}", partial(_U._job_operate, op=op),
+            "operations", summary, "scheduler") for op, summary in _JOB_OPS),
+    Route("GET", "/lineage", _U._lineage, "jobs", "Dataset lineage graph",
+          "scheduler"),
+    Route("GET", "/lineage/{dataset}", _U._dataset_lineage, "jobs",
+          "Per-dataset lineage view (edges touching the dataset)",
+          "scheduler"),
+    # content objects
+    Route("GET", "/content", _U._list_content, "content",
+          "List content objects", "content", response="Contents"),
+    Route("POST", "/content", _U._add_content, "content",
+          "Add content object", "content", request="Content"),
+    Route("GET", "/content/{contentId}", _U._get_content, "content",
+          "Content object", "content", response="Content"),
+    Route("PUT", "/content/{contentId}", _U._put_content, "content",
+          "Upsert content object", "content", request="Content"),
+    Route("DELETE", "/content/{contentId}", _U._delete_content, "content",
+          "Delete content object", "content"),
+    # security management; the token exchange is open: clients
+    # bootstrap their Bearer token here (manager.go:430)
+    Route("POST", "/security/token", _U._post_token, "security",
+          "OAuth2 client-credentials / JWT-bearer token grant (no auth)",
+          "security", open=True),
+    Route("GET", "/security/clients", _U._list_clients, "security",
+          "Registered node clients", "security"),
+    Route("POST", "/security/clients", _U._register_client, "security",
+          "Register node client (public key)", "security"),
+    Route("GET", "/security/clients/{clientid}/acl", _U._client_acl,
+          "security", "Client ACL", "security"),
+    Route("POST", "/security/clients/{clientid}/acl", _U._set_client_acl,
+          "security", "Set client ACL", "security"),
+    Route("DELETE", "/security/clients/{clientid}/acl", _U._clear_client_acl,
+          "security", "Clear client ACL", "security"),
+    Route("POST", "/security/clientclaims", _U._post_legacy_client_acl,
+          "security", _LEGACY_ACL, "security"),
+    Route("POST", "/security/clientacl", _U._post_legacy_client_acl,
+          "security", _LEGACY_ACL, "security"),
+    # login providers for outgoing connections
+    Route("GET", "/provider/logins", _U._list_providers, "providers",
+          "List login providers (secrets masked)", "providers",
+          response="LoginProviders"),
+    Route("POST", "/provider/logins", _U._add_provider, "providers",
+          "Add login provider", "providers", request="LoginProvider"),
+    Route("GET", "/provider/login/{providerName}", _U._get_provider,
+          "providers", "Login provider", "providers",
+          response="LoginProvider"),
+    Route("POST", "/provider/login/{providerName}", _U._update_provider,
+          "providers", "Update login provider", "providers",
+          request="LoginProvider"),
+    Route("DELETE", "/provider/login/{providerName}", _U._delete_provider,
+          "providers", "Delete login provider", "providers"),
+)

@@ -65,6 +65,16 @@ _VERSION_ORDER = ("recorded", "seq")
 # metadata is queryable and syncable like any other dataset
 CORE_DATASET = "core.Dataset"
 
+_SAFE_DATASET_NAME = re.compile(r"[A-Za-z0-9][A-Za-z0-9._~-]*")
+
+
+def check_dataset_name(name: str) -> None:
+    """Raise ValueError unless ``name`` can name a dataset: a dataset's
+    log partition and WAL spool are paths under the store root, so a
+    name is one path segment of a fixed, unescaped alphabet."""
+    if not _SAFE_DATASET_NAME.fullmatch(name):
+        raise ValueError(f"invalid dataset name: {name!r}")
+
 
 def _append_dataset_event(meta: dict, name: str, entry: dict,
                           tick: int, deleted: bool = False) -> None:
@@ -410,6 +420,7 @@ class EntityStore:
         transaction tick — a dataset implicitly created by a data write
         shares that write's tick, like the reference's single txn —
         instead of allocating a fresh one."""
+        check_dataset_name(name)
         entry = {"publicNamespaces": public_namespaces or []}
         if config:
             entry.update(config)
@@ -455,8 +466,6 @@ class EntityStore:
         if tick is not None:
             self._emit([CORE_DATASET], tick)
 
-    _SAFE_DATASET_NAME = re.compile(r"[A-Za-z0-9][A-Za-z0-9._~-]*")
-
     def rename_dataset(self, name: str, new_name: str) -> None:
         """UpdateDataset with a new ID (dsmanager.go:108-110).
 
@@ -467,8 +476,7 @@ class EntityStore:
         completes the move from it. Moving before the registry write
         would strand the data under a name the registry doesn't know."""
         new_name = (new_name or "").strip()
-        if not self._SAFE_DATASET_NAME.fullmatch(new_name):
-            raise ValueError(f"invalid dataset name: {new_name!r}")
+        check_dataset_name(new_name)
 
         if name == CORE_DATASET:
             raise ValueError(f"cannot update {CORE_DATASET}")
@@ -611,6 +619,8 @@ class EntityStore:
             raise ValueError(
                 f"{CORE_DATASET} is maintained by the store and cannot "
                 "be written directly")
+        for ds_name in dataset_entities:
+            check_dataset_name(ds_name)
         rec = recorded if recorded is not None else self.next_recorded()
         staged: list[tuple[str, str]] = []
         stage_root = os.path.join(self.root, f"_staging-{uuid.uuid4().hex}")
@@ -909,6 +919,7 @@ class WalIngest:
     """
 
     def __init__(self, store: "EntityStore", dataset: str):
+        check_dataset_name(dataset)
         self.store, self.dataset = store, dataset
         wal_dir = os.path.join(store.root, "wal")
         os.makedirs(wal_dir, exist_ok=True)

@@ -273,6 +273,36 @@ def test_scheduler_runs_in_lineage_order(spark, store, tmp_path):
     assert store.log(["stage2"]).count() == 4  # saw this tick's stage1 output
 
 
+def test_lineage_and_level_order_name_the_same_producers(spark, store, tmp_path):
+    """A union job and a MultiSource job: the datasets /lineage says each
+    reads are the sinks of the producers the scheduler runs before it."""
+    import datetime
+
+    sched = J.Scheduler(J.JobState(str(tmp_path / "state.json")))
+    for sink in ("a", "b", "main", "dep"):
+        sched.register(J.Job(f"make-{sink}", J.DatasetSource(store, "people"),
+                             J.DatasetSink(store, sink)), schedule="* * * * *")
+    sched.register(J.Job("union", J.UnionDatasetSource(
+        [J.DatasetSource(store, "a"), J.DatasetSource(store, "b")]),
+        J.DatasetSink(store, "u_out")), schedule="* * * * *")
+    sched.register(J.Job("multi", J.MultiSource(store, "main", [
+        J.Dependency("dep", [J.Join("main", "p:home", inverse=True)])]),
+        J.DatasetSink(store, "m_out")), schedule="* * * * *")
+    edges = J.lineage(list(sched.jobs.values()))
+    deps = sched._dep_graph()
+    for consumer, sink, reads in (("union", "u_out", {"a", "b"}),
+                                  ("multi", "m_out", {"main", "dep"})):
+        assert {e["From"] for e in edges if e["To"] == sink} == reads
+        assert {sched.jobs[p].sink.name for p in deps[consumer]} == reads
+    assert {"From": "dep", "To": "m_out", "Type": "transform-hop"} in edges
+    results = sched.run_due(datetime.datetime(2026, 1, 1, 12, 0))
+    order = [r["id"] for r in results]
+    assert all(r.get("error") is None for r in results), results
+    assert sorted(order[4:]) == ["multi", "union"]
+    # the consumers read this tick's producer output
+    assert store.log(["u_out"]).count() > 0 and store.log(["m_out"]).count() > 0
+
+
 def test_scheduler_detects_cycles(spark, store, tmp_path):
     import datetime
 

@@ -1042,13 +1042,13 @@ def test_health_root_and_namespace_query(served):
 def test_openapi_document_served_and_valid(spark, tmp_path):
     """GET /api (r10): a generated OAS3 document covering exactly the
     served routes — the machine-readable analogue of the reference's
-    api/datahub.oas3.yml. Structural validity via openapi.validate_oas3,
+    api/datahub.oas3.yml. Structural validity via openapi_spec_validator,
     coverage vs the reference's full path set, and a live probe of every
     documented GET route: the dispatcher must not answer with its
     route-miss marker ({"message": "not found"}), which would mean the
     document describes a route the server doesn't have."""
     from datahub_spark.content import ContentService
-    from datahub_spark.openapi import validate_oas3
+    from openapi_spec_validator import validate
     from datahub_spark.providers import ProviderStore
     from datahub_spark.security import SecurityManager
 
@@ -1074,7 +1074,7 @@ def test_openapi_document_served_and_valid(spark, tmp_path):
         with urllib.request.urlopen(req, timeout=30) as resp:
             assert resp.status == 200
             doc = json.loads(resp.read().decode())
-        validate_oas3(doc)
+        validate(doc)
 
         # every path of the reference document is served and documented
         reference_paths = {
@@ -1113,7 +1113,7 @@ def test_openapi_document_served_and_valid(spark, tmp_path):
         base2 = srv2.start()
         try:
             doc2 = _get(f"{base2}/api")
-            validate_oas3(doc2)
+            validate(doc2)
             assert "/jobs" not in doc2["paths"]
             assert "/content" not in doc2["paths"]
             assert "/security/token" not in doc2["paths"]
@@ -1369,5 +1369,237 @@ function transform_entities(entities) {
             assert by_transform[f"q:{n}"] == served, (start, inverse, scope)
         # the scope changes the answer: o:2's edge lives in orgs
         assert [t[2] for t in by_transform["q:1"]] == ["p:1"]
+    finally:
+        srv.stop()
+
+
+# -- the route table: dispatch and GET /api from one set of routes ---------
+
+def _full_server(store, tmp_path, **kw):
+    from datahub_spark.content import ContentService
+    from datahub_spark.providers import ProviderStore
+    from datahub_spark.security import SecurityManager
+
+    return UdaServer(
+        store, scheduler=J.Scheduler(J.JobState(str(tmp_path / "state.json"))),
+        content=ContentService(str(tmp_path / "content")),
+        security=SecurityManager(admin_client_secret="pw"),
+        providers=ProviderStore(security_manager=None), **kw)
+
+
+def _admin_headers(base):
+    st, tok = _post(f"{base}/security/token", {
+        "grant_type": "client_credentials",
+        "client_id": "admin", "client_secret": "pw"})
+    assert st == 200
+    return {"Authorization": f"Bearer {tok['access_token']}"}
+
+
+def _call(method, url, payload=None, headers=None):
+    data = None if payload is None else json.dumps(payload).encode()
+    req = urllib.request.Request(url, data=data, method=method,
+                                 headers={"Content-Type": "application/json",
+                                          **(headers or {})})
+    try:
+        with urllib.request.urlopen(req, timeout=60) as resp:
+            return resp.status, json.loads(resp.read().decode() or "null")
+    except urllib.error.HTTPError as exc:
+        return exc.code, json.loads(exc.read().decode() or "null")
+
+
+def test_api_documents_exactly_the_attached_routes(spark, tmp_path):
+    """The (method, path) set GET /api documents is the route table's
+    entries whose service is attached: everything on a server with every
+    service, the service-free routes on a bare UdaServer(store)."""
+    from datahub_spark.server import ROUTES
+
+    store = S.EntityStore(spark, str(tmp_path / "store"))
+    full, bare = _full_server(store, tmp_path), UdaServer(store)
+    for srv in (full, bare):
+        base = srv.start()
+        try:
+            headers = _admin_headers(base) if srv is full else {}
+            code, doc = _call("GET", f"{base}/api", headers=headers)
+            assert code == 200
+            served = {(m, p) for p, ops in doc["paths"].items() for m in ops}
+            attached = {(r.method.lower(), r.path) for r in ROUTES
+                        if r.service is None
+                        or getattr(srv, r.service) is not None}
+            assert served == attached
+        finally:
+            srv.stop()
+    assert len(attached) < len(ROUTES)  # the bare server drops some
+
+
+def test_openapi_validator_rejects_malformed_copies(spark, tmp_path):
+    """openapi_spec_validator rejects each structural fault on a copy of
+    the generated document; the faults it accepts (no paths, a path
+    without operations, a repeated template variable) are asserted on
+    both served documents directly."""
+    import copy
+    import re
+
+    from openapi_spec_validator import validate
+    from openapi_spec_validator.validation.exceptions import \
+        OpenAPIValidationError
+    from referencing.exceptions import Unresolvable
+
+    from datahub_spark.openapi import openapi_document
+
+    store = S.EntityStore(spark, str(tmp_path / "store"))
+    docs = [openapi_document(_full_server(store, tmp_path)),
+            openapi_document(UdaServer(store))]
+    methods = {"get", "put", "post", "delete", "patch"}
+    for doc in docs:
+        validate(doc)
+        assert doc["paths"]
+        assert all(methods & set(ops) for ops in doc["paths"].values())
+        for path in doc["paths"]:
+            names = re.findall(r"\{([^}]+)\}", path)
+            assert len(names) == len(set(names)), path
+
+    def info_get(d):
+        return d["paths"]["/datasets/{dataset}"]["get"]
+
+    faults = {
+        "bad version": lambda d: d.update(openapi="3.0"),
+        "no info.title": lambda d: d["info"].pop("title"),
+        "undeclared path param": lambda d: info_get(d).pop("parameters"),
+        "optional path param":
+            lambda d: info_get(d)["parameters"][0].update(required=False),
+        "no responses": lambda d: d["paths"]["/datasets"]["get"].pop(
+            "responses"),
+        "bad response code": lambda d: d["paths"]["/datasets"]["get"][
+            "responses"].update({"99": {"description": "x"}}),
+        "response without description": lambda d: d["paths"]["/datasets"][
+            "get"]["responses"]["200"].pop("description"),
+        "dangling $ref": lambda d: d["components"]["schemas"].pop("Error"),
+        "path without leading slash": lambda d: d["paths"].update(
+            {"datasets": d["paths"].pop("/datasets")}),
+    }
+    for name, fault in faults.items():
+        bad = copy.deepcopy(docs[0])
+        fault(bad)
+        with pytest.raises((OpenAPIValidationError, Unresolvable)):
+            validate(bad)
+            pytest.fail(f"accepted: {name}")
+
+
+def test_detached_services_answer_503_or_route_miss(spark, tmp_path):
+    """A bare server answers 503 on job and provider routes and the
+    route-miss 404 on content and security routes."""
+    srv = UdaServer(S.EntityStore(spark, str(tmp_path / "store")))
+    base = srv.start()
+    try:
+        assert _call("GET", f"{base}/jobs") == (
+            503, {"message": "no job scheduler attached"})
+        assert _call("DELETE", f"{base}/jobs/j")[0] == 503
+        assert _call("PUT", f"{base}/job/j/run", {})[0] == 503
+        assert _call("GET", f"{base}/provider/logins") == (
+            503, {"message": "no provider store attached"})
+        miss = (404, {"message": "not found"})
+        for method, path in (("GET", "/content"), ("POST", "/content"),
+                             ("DELETE", "/content/c"),
+                             ("GET", "/security/clients"),
+                             ("POST", "/security/token"),
+                             ("POST", "/security/clients/c/acl")):
+            assert _call(method, base + path, {} if method == "POST"
+                         else None) == miss, (method, path)
+    finally:
+        srv.stop()
+
+
+def test_secured_server_answers_401_before_404(spark, tmp_path):
+    from datahub_spark.security import SecurityManager
+
+    srv = UdaServer(S.EntityStore(spark, str(tmp_path / "store")),
+                    security=SecurityManager(admin_client_secret="pw"))
+    base = srv.start()
+    try:
+        assert _call("GET", f"{base}/no/such/route")[0] == 401
+        assert _call("DELETE", f"{base}/datasets")[0] == 401
+        assert _call("GET", f"{base}/no/such/route",
+                     headers=_admin_headers(base)) == (
+            404, {"message": "not found"})
+    finally:
+        srv.stop()
+
+
+def test_query_traversal_get_and_post_same_answer(served):
+    _, base = served
+    walk = {"startingEntities": ["e:1"], "predicate": "p:link"}
+    via_post = _call("POST", f"{base}/query", walk)
+    assert via_post[0] == 200 and via_post[1][1]
+    assert _call("GET", f"{base}/query", walk) == via_post
+
+
+def test_percent_encoded_dataset_name_reaches_one_dataset(spark, tmp_path):
+    """Every route decodes its path parameters once: create, write, read,
+    info and delete of /datasets/people%2Done all address people-one."""
+    srv = UdaServer(S.EntityStore(spark, str(tmp_path / "store")))
+    base = srv.start()
+    url = f"{base}/datasets/people%2Done"
+    try:
+        assert _call("POST", url, {})[0] == 200
+        assert _post(f"{url}/entities", _uda_batch(
+            {"id": "e:1", "props": {"p:name": "one"}}))[0] == 200
+        _, ents, _ = _split(_get(f"{url}/entities"))
+        assert [e["id"] for e in ents] == ["e:1"]
+        info = _get(url)
+        assert info["id"] == "core:people-one"
+        assert info["props"]["core:items"] == 1
+        assert _get(f"{base}/datasets") == [{"Name": "people-one"}]
+        assert _call("DELETE", url)[0] == 200
+        assert _get(f"{base}/datasets") == []
+    finally:
+        srv.stop()
+
+
+def test_dataset_names_that_leave_the_store_are_400(spark, tmp_path):
+    """A dataset name is one safe path segment: a transaction key, a
+    created name or a written name that would escape the store root
+    answers 400 and writes nothing."""
+    root = tmp_path / "a" / "b" / "c" / "d" / "store"
+    store = S.EntityStore(spark, str(root))
+    with pytest.raises(ValueError, match="invalid dataset name"):
+        store.create_dataset("a/b")
+    srv = UdaServer(store)
+    base = srv.start()
+    try:
+        code, body = _post(f"{base}/transactions", {
+            "@context": {"namespaces": {}},
+            "../../../escaped": [{"id": "e:1", "props": {}}]})
+        assert code == 400 and "invalid dataset name" in body["message"]
+        assert _call("POST", f"{base}/datasets/a%2Fb", {})[0] == 400
+        assert _post(f"{base}/datasets/..%2F..%2Fx/entities", _uda_batch(
+            {"id": "e:1"}))[0] == 400
+        assert _get(f"{base}/datasets") == []
+    finally:
+        srv.stop()
+    outside = [p for p in tmp_path.rglob("*")
+               if p.is_file() and root not in p.parents]
+    assert outside == []
+
+
+def test_jobs_post_malformed_source_entries_is_400(spark, tmp_path):
+    """A MultiSource dependency without ``dataset`` and a union entry
+    that is not an object answer 400 naming the key."""
+    store = S.EntityStore(spark, str(tmp_path / "store"))
+    srv = UdaServer(store, scheduler=J.Scheduler(
+        J.JobState(str(tmp_path / "state.json"))))
+    base = srv.start()
+    sink = {"Type": "DevNullSink"}
+    cases = [
+        ({"Type": "MultiSource", "Name": "m",
+          "Dependencies": [{"joins": []}]}, "'dataset'"),
+        ({"Type": "UnionDatasetSource", "DatasetSources": ["a"]},
+         "'DatasetSources'"),
+    ]
+    try:
+        for source, key in cases:
+            code, body = _post(f"{base}/jobs",
+                               {"id": "bad", "source": source, "sink": sink})
+            assert code == 400 and key in body["message"], (source, body)
+        assert _get(f"{base}/jobs") == []
     finally:
         srv.stop()
