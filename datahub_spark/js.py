@@ -14,10 +14,15 @@ delete, typeof, new), and a small standard library (String/Array methods,
 Object.keys/values/entries/assign, JSON, Math, parseInt/parseFloat,
 Array.isArray, console.log).
 
-Why an interpreter and not a JS runtime dependency: no JS engine exists
-in this container or JVM-side, and the transform dialect is tiny — the
-scale-relevant execution model is unchanged (scripts run batch-at-a-time
-inside mapInPandas, script.py). Entities are plain Python dicts
+Why an interpreter and not a JS runtime such as ``node``: the sandbox.
+The reference runs user scripts in goja, which has no I/O; an
+interpreter that knows only the transform vocabulary is the same kind of
+sandbox by construction — a script reaches no file, socket or process
+the host built-ins do not hand it. ``node`` has no such mode for user
+code: a script in a ``vm`` context reaches the host ``process`` through
+``this.constructor.constructor`` and can open connections. The transform
+dialect is tiny, and the scale-relevant execution model is unchanged
+(scripts run batch-at-a-time inside mapInPandas, script.py). Entities are plain Python dicts
 ({ID, Properties, References, ...}), so the host vocabulary
 (script.make_builtins) binds verbatim: JS member access /
 subscripting reads and mutates those dicts directly, which is exactly how

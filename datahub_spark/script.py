@@ -507,15 +507,16 @@ def build_lookup_index(*frames: DataFrame,
     (the limit+1 probe never materializes the oversized frame). Each
     frame is read as one partition: the rows go to the driver anyway,
     and a limit over many partitions scales its scan up one Spark job
-    at a time, where one partition collects in one job."""
+    at a time, where one partition collects in one job. Rows cross as
+    Arrow, which keeps each map's entry order as stored, as
+    ``EntityStore.log_rows`` does for folded files."""
     rows: list = []
     for df in frames:
         cols = [c for c in ENTITY_COLUMNS if c in df.columns]
-        collected = (df.select(*cols).coalesce(1)
-                     .limit(max_rows - len(rows) + 1).collect())
-        rows.extend(row.asDict() for row in collected)
+        rows.extend(df.select(*cols).coalesce(1)
+                    .limit(max_rows - len(rows) + 1).toArrow().to_pylist())
         if len(rows) > max_rows:
-            raise _index_too_big(max_rows)
+            raise IndexTooBig(max_rows)
     return fold_lookup_index({"by_id": {}, "inverse": {}, "changes": {}},
                              rows, max_rows)
 
@@ -528,13 +529,21 @@ def fold_lookup_index(index: dict, rows,
     ``index`` as it is, so a reader still holding it sees no change;
     untouched entities and edge lists are shared, not copied. The cap
     counts the versions ``index`` already holds, and ``rows`` is read
-    no further than one row past it."""
+    no further than one row past it.
+
+    A version whose stored props are NULL keeps ``Properties`` None, so a
+    served page can leave the field out as ``uda.to_uda_json`` does; the
+    script built-ins hand entities out through ``_copy``, which reads it
+    as ``{}``."""
     remaining = max_rows - sum(len(v) for v in index["changes"].values())
     ents: list = []
     for row in rows:
         if len(ents) >= remaining:
-            raise _index_too_big(max_rows)
-        ents.append(_row_to_entity(row))
+            raise IndexTooBig(max_rows)
+        ent = _row_to_entity(row)
+        if row.get("props") is None:
+            ent["Properties"] = None
+        ents.append(ent)
     added: dict = {}
     for ent in ents:
         added.setdefault(ent["Dataset"], []).append(ent)
@@ -546,13 +555,15 @@ def fold_lookup_index(index: dict, rows,
     return {"by_id": by_id, "inverse": inverse, "changes": changes}
 
 
-def _index_too_big(max_rows: int) -> ValueError:
-    return ValueError(
-        f"lookup index exceeds {max_rows} rows: Query/FindById "
-        "lookups are for dimension-sized datasets only — join "
-        "large datasets with transforms.enrich_via (a distributed "
-        "shuffle join) instead, or raise max_rows explicitly"
-    )
+class IndexTooBig(ValueError):
+    """The lookup index would hold more than its row cap."""
+
+    def __init__(self, max_rows: int):
+        super().__init__(
+            f"lookup index exceeds {max_rows} rows: Query/FindById "
+            "lookups are for dimension-sized datasets only — join "
+            "large datasets with transforms.enrich_via (a distributed "
+            "shuffle join) instead, or raise max_rows explicitly")
 
 
 def _version(ent: dict) -> tuple:

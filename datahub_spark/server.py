@@ -14,9 +14,13 @@ Endpoints (wire format: JSON array ``[@context, entity...,
        fullsync lease headers (universal-data-api-full-sync-start /
        -id / -end, datasethandler.go:778-780) with 409/410 semantics
 
-Execution model / scale: each page is ONE bounded Spark job — key-set
-pagination (order-by + strictly-after filter + limit, never a global
-offset), serialized to the wire by the uda codec (to_json, JVM-side).
+Execution model / scale: pages are key-set paginated (strictly after the
+token's position, never a global offset). While the store holds at most
+``index_max_rows`` versions, pages, ``entityId`` lookups and the dedup
+of plain writes are answered from the driver-held index that follows
+the store's commits (``UdaServer._query_index``), with no Spark job;
+past the cap each is ONE bounded Spark job (order-by + strictly-after
+filter + limit). Either way the rows are encoded by ``uda.encode_entity``.
 The HTTP pipe itself is the reference's own egress model (single-reader
 pull with continuation tokens); bulk 100 TB egress belongs on shared
 storage (parquet handoff), which peers on the same platform get for
@@ -33,6 +37,7 @@ jobs persist in JobState.
 from __future__ import annotations
 
 import base64
+import bisect
 import json
 import os
 import threading
@@ -141,6 +146,140 @@ def _tok_decode(token: str):
     return json.loads(base64.urlsafe_b64decode(token + pad).decode())
 
 
+_MAX_LIMIT = 2**31 - 1  # a Spark limit is an int
+
+
+def _limit(q: dict, default: int) -> int:
+    raw = q.get("limit")
+    try:
+        limit = default if raw is None else int(raw)
+    except ValueError:
+        limit = -1
+    if not 0 <= limit <= _MAX_LIMIT:
+        raise ValueError(f"limit must be an integer from 0 to {_MAX_LIMIT}")
+    return limit
+
+
+def _paging(q: dict, default_limit: int) -> tuple[int, object, str | None]:
+    """A dataset read's ``(limit, since, from)``, parsed once for both the
+    index and the Spark path: ``since`` is None, a bare recorded
+    watermark (int) or a ``(recorded, seq, id)`` position; ``from`` is
+    None or the last id served. Raises ValueError naming the bad
+    parameter."""
+    since, from_id = q.get("since") or None, q.get("from") or None
+    if since is not None:
+        try:
+            since = int(since)
+        except ValueError:
+            try:
+                since = tuple(_tok_decode(since))
+            except (ValueError, TypeError):
+                since = ()
+            if [type(v) for v in since] != [int, int, str]:
+                raise ValueError("bad since token") from None
+    if from_id is not None:
+        try:
+            from_id = _tok_decode(from_id)
+        except ValueError:
+            from_id = None
+        if not isinstance(from_id, str):
+            raise ValueError("bad from token")
+    return _limit(q, default_limit), since, from_id
+
+
+def _collect(df) -> list[dict]:
+    """A frame's rows as dicts. They cross as Arrow, which keeps each
+    map's entries in their stored order, as the index's rows do, so both
+    paths serve the same bytes."""
+    return df.toArrow().to_pylist()
+
+
+def _position(ent: dict) -> tuple:
+    return (ent["Recorded"], ent["Seq"], ent["ID"])
+
+
+def _row(ent: dict) -> dict:
+    """A lookup-index entity as the entity-column row a Spark read
+    returns."""
+    return {"id": ent["ID"], "recorded": ent["Recorded"], "seq": ent["Seq"],
+            "deleted": ent["IsDeleted"], "props": ent["Properties"],
+            "refs": ent["References"]}
+
+
+@dataclass(frozen=True)
+class _DatasetView:
+    """What the served routes read of one dataset in the lookup index."""
+    versions: list  # every version, by (recorded, seq, id)
+    latest: dict    # id -> its newest version, tombstones included
+    newest: list    # latest's values, by (recorded, seq, id)
+    alive: list     # latest's live values, by id
+
+    @classmethod
+    def of(cls, versions: list) -> "_DatasetView":
+        latest = {e["ID"]: e for e in versions}
+        newest = [e for e in versions if latest[e["ID"]] is e]
+        alive = sorted((e for e in newest if not e["IsDeleted"]), key=lambda e: e["ID"])
+        return cls(versions, latest, newest, alive)
+
+    def changes(self, since, limit: int, reverse: bool, latest_only: bool) -> list:
+        """One /changes page of versions after ``since`` (before it when
+        ``reverse``), found by bisection."""
+        versions = self.newest if latest_only else self.versions
+        key = (lambda e: e["Recorded"]) if isinstance(since, int) else _position
+        if reverse:
+            hi = len(versions) if since is None else bisect.bisect_left(versions, since, key=key)
+            return versions[max(hi - limit, 0):hi][::-1]
+        lo = 0 if since is None else bisect.bisect_right(versions, since, key=key)
+        return versions[lo:lo + limit]
+
+    def entities(self, from_id: str | None, limit: int) -> list:
+        lo = 0 if from_id is None else \
+            bisect.bisect_right(self.alive, from_id, key=lambda e: e["ID"])
+        return self.alive[lo:lo + limit]
+
+
+_NO_DATA = _DatasetView.of([])
+
+
+def _merged(views: dict, eid: str, datasets, merge: bool) -> dict | None:
+    """``eid`` looked up in the index as ``EntityStore.get_entity`` finds
+    it: its live latest partials folded in ``store._partial_cmp`` order
+    with ``merge_partials``' rules (a later non-NULL value wins a key), or
+    without ``merge`` the newest of them; None when none is live."""
+    alive = sorted((v.latest[eid] for ds, v in views.items()
+                    if eid in v.latest and not v.latest[eid]["IsDeleted"]
+                    and (not datasets or ds in datasets)),
+                   key=lambda e: (e["Recorded"], e["Seq"], e["Dataset"]))
+    if not alive:
+        return None
+    if not merge:
+        return _row(alive[-1])
+    props: dict = {}
+    refs: dict = {}
+    for ent in alive:
+        for acc, part in ((props, ent["Properties"]), (refs, ent["References"])):
+            for k, v in (part or {}).items():
+                if v is not None or k not in acc:
+                    acc[k] = v
+    return {"id": eid, "recorded": alive[-1]["Recorded"], "deleted": False,
+            "props": props, "refs": refs}
+
+
+def _differs(cur: dict | None, row: tuple) -> bool:
+    """Whether a decoded row (``uda.DECODED_SCHEMA`` order) differs from the
+    entity's current version ``cur`` (None: it has none)."""
+    _id, _rec, _seq, deleted, props, refs = row
+    return cur is None or S.payload_text(deleted, props, refs) != S.payload_text(
+        cur["IsDeleted"], cur["Properties"], cur["References"])
+
+
+@dataclass(frozen=True)
+class _IndexState:
+    index: dict | None  # None: the store holds more than the cap
+    files: set          # the log files it covers
+    views: dict         # dataset -> _DatasetView
+
+
 def _parse_acls(raw):
     """AccessControl list from a request body value, shared by the
     per-client ACL route and the legacy clientclaims/clientacl
@@ -228,9 +367,11 @@ class GoneError(Exception):
 
 class UdaServer:
     """Loopback ThreadingHTTPServer over an EntityStore. ``start()``
-    returns the base URL; requests run Spark jobs on the server's
-    (driver) thread pool — the SparkSession is thread-safe for job
-    submission."""
+    returns the base URL; requests run on the server's (driver) thread
+    pool, and those that need Spark jobs submit them from there — the
+    SparkSession is thread-safe for job submission. ``index_max_rows``
+    (``script.LOOKUP_INDEX_MAX_ROWS``) caps the driver-held lookup index
+    (``_query_index``); a store past it is served by Spark jobs."""
 
     def __init__(self, store: S.EntityStore,
                  nsmgr: NamespaceManager | None = None,
@@ -241,6 +382,8 @@ class UdaServer:
                  metrics=None, providers=None,
                  wal_writes: bool = False,
                  wal_flush_entities: int = 10_000):
+        from datahub_spark import script
+
         self.store = store
         # WAL-backed served writes (store.WalIngest): plain POST
         # /entities appends to a per-dataset fsync-durable spool and
@@ -270,14 +413,10 @@ class UdaServer:
         self._httpd: ThreadingHTTPServer | None = None
         self._thread: threading.Thread | None = None
         self._host, self._port = host, port
-        # /query lookup index as (store generation it covers, index, the
-        # log files it holds); every store event advances the generation
-        # under a lock of its own, so a writer never waits on a fold
-        self._index: tuple[int, dict, set[str]] | None = None
-        self._index_gen = 0
-        self._gen_lock = threading.Lock()
-        self._index_lock = threading.Lock()  # one build or fold at a time
-        store.add_listener(lambda _ds, _rec: self.invalidate_query_index())
+        # the lookup index and the log files it covers (_query_index)
+        self.index_max_rows = script.LOOKUP_INDEX_MAX_ROWS
+        self._index: _IndexState | None = None
+        self._index_lock = threading.Lock()  # one listing, fold or build at a time
         # jobs API (jobshandler.go / joboperationhandler.go): attach a
         # jobs.Scheduler to serve /jobs CRUD + /job/{id} operations
         self.scheduler = scheduler
@@ -377,9 +516,6 @@ class UdaServer:
 
     def _error(self, rq, code: int, message: str) -> None:
         self._reply(rq, code, {"message": message})
-
-    def _collect_json(self, df) -> list[str]:
-        return [r["json"] for r in uda.to_uda_json(df).collect()]
 
     # -- routing ----------------------------------------------------------
 
@@ -545,8 +681,12 @@ class UdaServer:
         cfg = self.store.dataset_config(ds)
         if cfg is None:
             return self._error(rq, 404, f"dataset {ds} not found")
-        n_items = S.latest(self.store.log([ds])).count() \
-            if self.store.has_data(ds) else 0
+        views = self._served_views(ds)
+        if views is not None:
+            n_items = len(views.get(ds, _NO_DATA).alive)
+        else:
+            n_items = S.latest(self.store.log([ds])).count() \
+                if self.store.has_data(ds) else 0
         self._reply(rq, 200, {
             "id": f"core:{ds}",
             "props": {"core:name": ds, "core:items": n_items},
@@ -568,13 +708,42 @@ class UdaServer:
             return self._proxy_read(rq, cfg["ProxyDatasetConfig"], verb, q)
         if "VirtualDatasetConfig" in cfg:
             return self._virtual_read(rq, ds, cfg["VirtualDatasetConfig"], q)
-        if verb == "changes":
-            return self._get_changes(rq, ds, q)
-        if "since" in q:
+        if verb == "entities" and "since" in q:
             # datasethandler.go:283
             return self._error(
                 rq, 400, "since parameter only supported for changes")
-        self._get_entities(rq, ds, q)
+        if verb == "entities" and q.get("reverse"):
+            # datasethandler.go:286-288
+            return self._error(
+                rq, 400, "reverse parameter only supported for changes")
+        try:
+            limit, since, from_id = _paging(q, self.default_limit)
+        except ValueError as exc:
+            return self._error(rq, 400, str(exc))
+        views = self._served_views(ds)
+        if verb == "changes":
+            # ?reverse=true walks the change-log newest-first
+            # (datasethandler.go:551,702-731): the same key-set
+            # continuation protocol, with the comparisons flipped
+            reverse = q.get("reverse", "") == "true"
+            latest_only = q.get("latestOnly", "") == "true"
+            if views is not None:
+                rows = [_row(e) for e in views.get(ds, _NO_DATA).changes(
+                    since, limit, reverse, latest_only)]
+            else:
+                rows = self._spark_changes(ds, since, limit, reverse, latest_only)
+            # continuation: the last served position; an empty page
+            # echoes the request token (no advancement = drained)
+            token = _tok_encode([rows[-1]["recorded"], rows[-1]["seq"], rows[-1]["id"]]) \
+                if rows else q.get("since", "")
+        else:
+            if views is not None:
+                rows = [_row(e) for e in views.get(ds, _NO_DATA).entities(from_id, limit)]
+            else:
+                rows = self._spark_entities(ds, from_id, limit)
+            token = _tok_encode(rows[-1]["id"]) if rows else q.get("from", "")
+        self._write_page(rq, ds, [uda.encode_entity(r) for r in rows], token,
+                         jsonld=self._wants_jsonld(rq, q))
 
     def _context(self, ds: str) -> dict:
         return self.store.dataset_context(ds, self.nsmgr)
@@ -619,85 +788,31 @@ class UdaServer:
                 node[key] = {"@id": value}
         return node
 
-    def _get_entities(self, rq, ds: str, q: dict) -> None:
-        if q.get("reverse"):
-            # datasethandler.go:286-288
-            return self._error(
-                rq, 400, "reverse parameter only supported for changes")
-        limit = int(q.get("limit", self.default_limit))
-        from_tok = q.get("from", "")
+    def _spark_entities(self, ds: str, from_id: str | None, limit: int) -> list[dict]:
         view = S.latest(self.store.log([ds]), include_deleted=False)
-        if from_tok:
-            try:
-                last_id = _tok_decode(from_tok)
-            except (ValueError, json.JSONDecodeError):
-                return self._error(rq, 400, "bad from token")
-            view = view.filter(F.col("id") > F.lit(last_id))
-        rows = view.orderBy("id").limit(limit)
-        objs = self._collect_json(rows)
-        # continuation: position after the last served entity; an empty
-        # page echoes the request token (no advancement = drained)
-        if objs:
-            last = json.loads(objs[-1])["id"]
-            token = _tok_encode(last)
-        else:
-            token = from_tok
-        self._write_page(rq, ds, objs, token,
-                         jsonld=self._wants_jsonld(rq, q))
+        if from_id is not None:
+            view = view.filter(F.col("id") > F.lit(from_id))
+        return _collect(view.orderBy("id").limit(limit))
 
-    def _get_changes(self, rq, ds: str, q: dict) -> None:
-        limit = int(q.get("limit", self.default_limit))
-        latest_only = q.get("latestOnly", "") == "true"
-        # ?reverse=true walks the change-log newest-first
-        # (datasethandler.go:551,702-731: the offset iterator is
-        # Inverse()d and the token pages further back) — same key-set
-        # continuation protocol here, with the comparisons flipped
-        reverse = q.get("reverse", "") == "true"
-        since = q.get("since", "")
+    def _spark_changes(self, ds: str, since, limit: int, reverse: bool,
+                       latest_only: bool) -> list[dict]:
         log = self.store.log([ds])
         if latest_only:
             log = S.latest(log, include_deleted=True)
-        pos = None
-        if since:
-            try:
-                pos = int(since)  # bare recorded watermark
-            except ValueError:
-                try:
-                    pos = _tok_decode(since)
-                except (ValueError, json.JSONDecodeError):
-                    return self._error(rq, 400, "bad since token")
-        if pos is not None:
-            if isinstance(pos, int):
-                log = log.filter(F.col("recorded") < pos if reverse
-                                 else F.col("recorded") > pos)
-            elif reverse:
-                r, s, i = pos
-                log = log.filter(
-                    (F.col("recorded") < r)
-                    | ((F.col("recorded") == r) & (F.col("seq") < s))
-                    | ((F.col("recorded") == r) & (F.col("seq") == s)
-                       & (F.col("id") < i)))
-            else:
-                r, s, i = pos
-                log = log.filter(
-                    (F.col("recorded") > r)
-                    | ((F.col("recorded") == r) & (F.col("seq") > s))
-                    | ((F.col("recorded") == r) & (F.col("seq") == s)
-                       & (F.col("id") > i)))
-        order = [F.col("recorded").desc(), F.col("seq").desc(),
-                 F.col("id").desc()] if reverse \
-            else [F.col("recorded"), F.col("seq"), F.col("id")]
-        page_df = log.orderBy(*order).limit(limit)
-        # one job yields both the wire rows and the position columns
-        wire = uda.to_uda_json(page_df, ["recorded", "seq", "id"]).collect()
-        objs = [r["json"] for r in wire]
-        if wire:
-            last = wire[-1]
-            token = _tok_encode([last["recorded"], last["seq"], last["id"]])
-        else:
-            token = since
-        self._write_page(rq, ds, objs, token,
-                         jsonld=self._wants_jsonld(rq, q))
+        if isinstance(since, int):
+            log = log.filter(F.col("recorded") < since if reverse
+                             else F.col("recorded") > since)
+        elif since is not None:
+            r, s, i = since
+            after = (lambda c, v: c < v) if reverse else (lambda c, v: c > v)
+            log = log.filter(
+                after(F.col("recorded"), r)
+                | ((F.col("recorded") == r) & after(F.col("seq"), s))
+                | ((F.col("recorded") == r) & (F.col("seq") == s)
+                   & after(F.col("id"), i)))
+        order = [F.col(c).desc() if reverse else F.col(c)
+                 for c in ("recorded", "seq", "id")]
+        return _collect(log.orderBy(*order).limit(limit))
 
     def _write_page(self, rq, ds: str, objs: list[str], token,
                     jsonld: bool = False) -> None:
@@ -808,7 +923,10 @@ class UdaServer:
             since = int(since_raw)
         except ValueError:
             since = since_raw
-        limit = int(q.get("limit", self.default_limit))
+        try:
+            limit = _limit(q, self.default_limit)
+        except ValueError as exc:
+            return self._error(rq, 400, str(exc))
         try:
             src = ScriptVirtualSource(self.store.spark, code,
                                       params=params, dataset=ds)
@@ -818,8 +936,7 @@ class UdaServer:
             page, token = src.read(since, limit)
         except Exception as exc:
             return self._error(rq, 500, f"virtual dataset script: {exc}")
-        objs = [r["json"] for r in uda.to_uda_json(page).collect()]
-        self._write_page(rq, ds, objs, token,
+        self._write_page(rq, ds, [uda.encode_entity(r) for r in _collect(page)], token,
                          jsonld=self._wants_jsonld(rq, q))
 
     def _dataset_create(self, rq, ds: str) -> None:
@@ -916,7 +1033,7 @@ class UdaServer:
                 return self._error(rq, 400, f"malformed entity batch: {exc}")
             if rows:
                 dataset_entities[ds] = local_frame(
-                    self.store.spark, rows, uda.ROW_SCHEMA)
+                    self.store.spark, rows, uda.DECODED_SCHEMA)
         if dataset_entities:
             try:
                 self.store.execute_transaction(dataset_entities)
@@ -1223,52 +1340,82 @@ class UdaServer:
     # -- /query (queryhandler.go) -----------------------------------------
 
     def _query_index(self) -> dict:
-        """Broadcast-style lookup index over the store's datasets for the
-        graph-query endpoint — the analogue of the reference resolving
-        queries against its local Badger store (queryhandler.go's
-        GetManyRelatedEntitiesBatch). Bounded by the script-surface row
-        cap: interactive graph queries are dimension-scale by
-        construction; set-oriented querying over big data belongs in the
-        engine's query operators, not an HTTP endpoint.
+        """Broadcast-style lookup index over the store's datasets — the
+        analogue of the reference answering queries, entity pages and
+        GetEntity merges from its local Badger indexes (store.go:666-1022,
+        dataset.go:891 and 1005). It serves /query traversals and query
+        scripts, and through ``_served_views``: /changes and /entities
+        pages, entityId lookups, the dedup of plain /entities POSTs and
+        the item count of GET /datasets/{ds}. Raises
+        ``script.IndexTooBig`` when the store holds more than
+        ``index_max_rows`` versions; the pages, lookups and dedup then
+        run as Spark jobs, and a traversal fails as it does in a query
+        script: interactive graph queries are dimension-scale by
+        construction, and set-oriented querying over big data belongs in
+        the engine's query operators, not an HTTP endpoint."""
+        from datahub_spark import script
 
-        The index follows the store's commits the way the reference keeps
-        its reference indexes current at write time (store.go:870-1022),
-        but lazily: a commit only advances a generation, and the next
-        call lists the registered datasets' log files and folds the
-        rows of the files it has not read yet (script.fold_lookup_index),
-        read on the driver without a Spark job, so several commits fold
-        in one pass, commits from another writer on the same root
-        included. When a file it holds is gone (compaction, dataset
-        delete or rename) it builds afresh from one ``store.log`` frame
-        instead. One build or fold runs at a time; a traversal scoped by
-        ``datasets`` reads the same index through ``Query``."""
+        index = self._fresh_index().index
+        if index is None:
+            raise script.IndexTooBig(self.index_max_rows)
+        return index
+
+    def _fresh_index(self) -> _IndexState:
+        """The index as of now. It is current when the log files it covers
+        equal a listing of the registered datasets' log files, which every
+        call makes, so commits through any store on the root, another
+        process's included, show with the next request. A commit only
+        adds files: the files not covered yet are read on the driver
+        without a Spark job and folded in (script.fold_lookup_index), so
+        several commits fold in one pass. When a covered file is gone
+        (compaction, dataset delete or rename) the index is built afresh
+        from one ``store.log`` frame. A store past the cap stays past it
+        until a covered file is gone, so it is not re-collected per
+        request. One listing, fold or build runs at a time."""
         from datahub_spark import script
 
         with self._index_lock:
-            gen = self._index_gen
-            if self._index is not None and self._index[0] == gen:
-                return self._index[1]
             names = self.store.list_datasets()
-            if self._index is not None:
-                _, index, held = self._index
-                files = self.store.log_files(names)
-                if held <= files:
-                    if files != held:
+            files = self.store.log_files(names)
+            state = self._index
+            if state is not None and state.files <= files:
+                if state.files == files:
+                    return state
+                index, held, known = state.index, files, state.views
+                if index is not None:
+                    try:
                         index = script.fold_lookup_index(
-                            index, self.store.log_rows(files - held))
-                    self._index = (gen, index, files)
-                    return index
-            frames, held = [], set()
-            if names:
-                frame = self.store.log(names)
-                frames, held = [frame], self.store.frame_files(frame, names)
-            index = script.build_lookup_index(*frames)
-            self._index = (gen, index, held)
-            return index
+                            index, self.store.log_rows(files - state.files),
+                            self.index_max_rows)
+                    except script.IndexTooBig:
+                        index = None
+            else:
+                frames, held = [], set()
+                if names:
+                    frame = self.store.log(names)
+                    frames, held = [frame], self.store.frame_files(frame, names)
+                try:
+                    index = script.build_lookup_index(
+                        *frames, max_rows=self.index_max_rows)
+                except script.IndexTooBig:
+                    index = None
+                known = {}
+            # a fold shares the versions lists of the datasets it left alone
+            views = {} if index is None else {
+                ds: known[ds] if ds in known and known[ds].versions is versions
+                else _DatasetView.of(versions)
+                for ds, versions in index["changes"].items()}
+            self._index = state = _IndexState(index, held, views)
+            return state
 
-    def invalidate_query_index(self) -> None:
-        with self._gen_lock:
-            self._index_gen += 1
+    def _served_views(self, ds: str | None = None) -> dict | None:
+        """The index's per-dataset views, or None where a Spark job
+        serves instead: past the cap, and for the ``core.Dataset``
+        meta-log, which the index does not hold."""
+        if ds == S.CORE_DATASET:
+            return None
+        state = self._fresh_index()
+        return None if state.index is None else state.views
 
     def _wire_entity(self, ent: dict | None, eid: str) -> dict:
         if ent is None:
@@ -1308,12 +1455,17 @@ class UdaServer:
         ctx = {"id": "@context", "namespaces": self.nsmgr.context()}
         if q.get("entityId"):
             eid = q["entityId"]
-            rows = self.store.get_entity(
-                eid, q.get("datasets") or None,
-                merge=not q.get("noPartialMerging", False)).collect()
-            if not rows:
+            datasets = q.get("datasets") or None
+            merge = not q.get("noPartialMerging", False)
+            views = None if datasets and S.CORE_DATASET in datasets \
+                else self._served_views()
+            if views is not None:
+                r = _merged(views, eid, datasets, merge)
+            else:
+                rows = _collect(self.store.get_entity(eid, datasets, merge=merge))
+                r = rows[0] if rows else None
+            if r is None:
                 return self._reply(rq, 200, [ctx, {"id": eid}])
-            r = rows[0]
             ent = {"id": r["id"], "recorded": r["recorded"],
                    "deleted": bool(r["deleted"]),
                    "props": dict(r["props"] or {}),
@@ -1425,14 +1577,21 @@ class UdaServer:
             # streamed chunks: a fullsync session appends each chunk as
             # it parses (its complete() unions them); a plain write
             # unions the chunk plans and commits ONCE — one atomic
-            # commit, flat parse memory; NULL recorded is stamped then
+            # commit, flat parse memory; NULL recorded is stamped then.
+            # Under the index cap a plain write drops the rows equal to
+            # the dataset's current version here, as store_entities'
+            # Spark dedup would (store.payload_text)
             plain: list = []
+            views = self._served_views() if session is None else None
+            current = None if views is None else views.get(ds, _NO_DATA).latest
             try:
                 for objs in self._body_chunks(rq):
                     rows = list(uda.decode_entities(objs))
                     if not rows:
                         continue
-                    chunk = local_frame(self.store.spark, rows, uda.ROW_SCHEMA)
+                    if current is not None:
+                        rows = [r for r in rows if _differs(current.get(r[0]), r)]
+                    chunk = local_frame(self.store.spark, rows, uda.DECODED_SCHEMA)
                     if session is not None:
                         session.append(chunk)
                     else:
@@ -1447,7 +1606,7 @@ class UdaServer:
                 batch = plain[0]
                 for b in plain[1:]:
                     batch = batch.unionByName(b)
-                self.store.store_entities(ds, batch)
+                self.store.store_entities(ds, batch, skip_unchanged=current is None)
             if fs_end:
                 session = self.leases.release(ds, fs_id)
                 session.complete()

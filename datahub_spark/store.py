@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datahub_spark import uda
-from datahub_spark.model import ENTITY_COLUMNS, ENTITY_SCHEMA
+from datahub_spark.model import ENTITY_SCHEMA
 from datahub_spark.session import local_frame
 
 # per-store-root in-process locks (threads sharing a driver); see
@@ -266,6 +266,18 @@ def payload_digest(deleted="deleted", props="props", refs="refs"):
         "",
     )
     return F.concat_ws("", F.col(deleted).cast("string"), props_s, refs_s)
+
+
+def payload_text(deleted: bool, props: dict | None, refs: dict | None) -> str:
+    """``payload_digest`` of one row held by the driver: the same string
+    (same separators, NULLs skipped the same way), so a write deduplicated
+    on the driver keeps exactly the rows the Spark dedup keeps."""
+    props_s = "\x02".join(sorted(
+        k if v is None else f"{k}\x01{v}" for k, v in (props or {}).items()))
+    refs_s = "\x02".join(sorted(
+        k if v is None else k + "\x01" + "\x03".join(x for x in v if x is not None)
+        for k, v in (refs or {}).items()))
+    return "\x04".join(("true" if deleted else "false", props_s, refs_s))
 
 
 def compact_deduplicate(df: DataFrame) -> DataFrame:
@@ -626,37 +638,32 @@ class EntityStore:
         stage_root = os.path.join(self.root, f"_staging-{uuid.uuid4().hex}")
         try:
             for ds_name, df in dataset_entities.items():
-                out = df
-                if "recorded" in out.columns:
-                    out = out.withColumn(
-                        "recorded",
-                        F.coalesce(F.col("recorded").cast("long"), F.lit(rec).cast("long")),
-                    )
-                else:
-                    out = out.withColumn("recorded", F.lit(rec).cast("long"))
-                if "deleted" in out.columns:
-                    out = out.withColumn("deleted", F.coalesce(F.col("deleted"), F.lit(False)))
-                else:
-                    out = out.withColumn("deleted", F.lit(False))
+                # one SQL projection, because each Column-API call is a
+                # JVM round trip that waits for the interpreter lock
+                # while a server answers other requests; ds_name passed
+                # check_dataset_name, so it is safe as a SQL literal
+                cols = df.columns
+                out = df.selectExpr(
+                    "id",
+                    f"coalesce(cast(recorded as bigint), {rec}L) as recorded"
+                    if "recorded" in cols else f"{rec}L as recorded",
+                    "cast(seq as bigint) as seq" if "seq" in cols else "cast(null as bigint) as seq",
+                    "coalesce(deleted, false) as deleted" if "deleted" in cols else "false as deleted",
+                    "props", "refs", f"'{ds_name}' as dataset")
                 # NULL seq backfill: deterministic (content-hashed, fixed
                 # xxhash64 seed — identical across runs and shuffle
                 # schedules, unlike monotonically_increasing_id) and
                 # ABOVE _SEQ_NULL_BASE, so backfilled rows order after
                 # every caller-provided seq in the batch instead of
                 # winning latest()'s tie-break by accident. Fully
-                # map-side: no window/agg pass over the batch.
-                backfill = (
-                    F.lit(_SEQ_NULL_BASE)
-                    + F.pmod(F.xxhash64(F.col("id"), F.col("recorded"), payload_digest()),
-                             F.lit(1 << 31))
-                ).cast("long")
-                if "seq" in out.columns:
-                    out = out.withColumn(
-                        "seq", F.coalesce(F.col("seq").cast("long"), backfill)
-                    )
-                else:
-                    out = out.withColumn("seq", backfill)
-                out = out.withColumn("dataset", F.lit(ds_name)).select(*ENTITY_COLUMNS)
+                # map-side: no window/agg pass over the batch. A seq
+                # column declared non-nullable needs none.
+                if "seq" not in cols or df.schema["seq"].nullable:
+                    out = out.withColumn("seq", F.coalesce(F.col("seq"), (
+                        F.lit(_SEQ_NULL_BASE)
+                        + F.pmod(F.xxhash64(F.col("id"), F.col("recorded"), payload_digest()),
+                                 F.lit(1 << 31))
+                    ).cast("long")))
                 stage = os.path.join(stage_root, ds_name)
                 out.write.mode("overwrite").parquet(stage)
                 staged.append((ds_name, stage))
@@ -776,10 +783,14 @@ class EntityStore:
         return changes(self.log([dataset]), since, latest_only)
 
     def get_entity(self, entity_id: str, datasets: list[str] | None = None, merge: bool = True) -> DataFrame:
-        """GetEntity (store.go:666): latest partials for one id, optionally
-        merged across datasets."""
+        """GetEntity (store.go:666): one id's live latest partials merged
+        across datasets, or with ``merge=False`` the newest of them in
+        ``_partial_cmp`` order (greatest recorded, seq, dataset)."""
         df = self.log(datasets).filter(F.col("id") == entity_id)
-        return merge_partials(df) if merge else latest(df)
+        if merge:
+            return merge_partials(df)
+        newest = [F.col(c).desc() for c in ("recorded", "seq", "dataset")]
+        return latest(df).orderBy(*newest).limit(1)
 
     # -- snapshot materialization ----------------------------------------------
 

@@ -19,7 +19,10 @@ module. The decode rules:
 ``decode_entities`` applies them to parsed wire objects at every
 ingress: served POSTs, ``/transactions``, the WAL spool, HTTP transform
 responses, and the ``/changes`` pages ``HttpDatasetSource`` and
-``ProxyDataset`` pull. ``to_uda_json`` encodes (JVM ``to_json``).
+``ProxyDataset`` pull. Two encoders write the same bytes:
+``encode_entity`` encodes one row held by the driver (served pages), and
+``to_uda_json`` encodes a frame's rows on the executors (JVM
+``to_json``; the jobs' HTTP sinks).
 Decoded rows become a frame through ``session.local_frame``: a
 LocalRelation built from an Arrow table, with no Python worker.
 """
@@ -27,12 +30,13 @@ LocalRelation built from an Arrow table, with no Python worker.
 from __future__ import annotations
 
 import json
+import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# decoded entity rows, in ``decode_entities`` tuple order
+# entity rows without their dataset, in ``decode_entities`` tuple order
 ROW_SCHEMA = T.StructType(
     [
         T.StructField("id", T.StringType()),
@@ -43,6 +47,11 @@ ROW_SCHEMA = T.StructType(
         T.StructField("refs", T.MapType(T.StringType(), T.ArrayType(T.StringType()))),
     ]
 )
+
+# the same, stating what decode_entities guarantees: ``seq`` is never
+# NULL, so a commit of decoded rows plans no NULL-seq backfill
+DECODED_SCHEMA = T.StructType(
+    [T.StructField(f.name, f.dataType, f.name != "seq") for f in ROW_SCHEMA.fields])
 
 _SKIP_IDS = ("@context", "@continuation")
 
@@ -62,7 +71,7 @@ def _mapping(obj: dict, key: str, eid) -> dict:
 
 def decode_entities(objs):
     """Parsed wire objects -> iterator of entity row tuples
-    ``(id, recorded, seq, deleted, props, refs)`` (``ROW_SCHEMA``),
+    ``(id, recorded, seq, deleted, props, refs)`` (``DECODED_SCHEMA``),
     following the module's decode rules. Raises ValueError naming the
     entity when its props or refs is not a JSON object."""
     for obj in objs:
@@ -75,6 +84,28 @@ def decode_entities(objs):
                 for k, v in _mapping(obj, "refs", eid).items()}
         yield (eid, obj.get("recorded"), 0 if seq is None else seq,
                obj.get("deleted") is True, props, refs)
+
+
+_ENCODER = json.JSONEncoder(ensure_ascii=False, separators=(",", ":"))
+# a JSON escape sequence; json writes a control character's hex digits
+# in lower case, Spark's to_json (Jackson) in upper case
+_ESCAPE = re.compile(r"\\(?:u(00[0-9a-f]{2})|.)")
+
+
+def encode_entity(row: dict) -> str:
+    """One entity row (a dict keyed by entity column; a map may be a dict
+    or a list of key/value pairs, as Arrow hands it over) -> its UDA JSON
+    object, byte for byte what ``to_uda_json`` writes for the row: NULL
+    fields are left out, NULL refs are written as ``{}``, map entries keep
+    their order, and non-ASCII text is written as is."""
+    obj = {k: row[k] for k in ("id", "recorded", "deleted") if row[k] is not None}
+    if row["props"] is not None:
+        obj["props"] = dict(row["props"])
+    obj["refs"] = dict(row["refs"] or ())
+    text = _ENCODER.encode(obj)
+    if "\\u00" not in text:
+        return text
+    return _ESCAPE.sub(lambda m: "\\u" + m[1].upper() if m[1] else m[0], text)
 
 
 def to_uda_json(df: DataFrame, extra_cols: list[str] | None = None) -> DataFrame:

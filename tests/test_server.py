@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from datahub_spark import jobs as J
 from datahub_spark import store as S
-from datahub_spark.script import SCRIPT_OUTPUT_SCHEMA
+from datahub_spark.script import LOOKUP_INDEX_MAX_ROWS, SCRIPT_OUTPUT_SCHEMA
 from datahub_spark.server import UdaServer
 
 
@@ -143,6 +143,35 @@ def test_changes_pagination_is_stable_mid_tick(served):
 def test_bad_since_token_is_400(served):
     _, base = served
     assert _req_status(f"{base}/datasets/d/changes?since=%21%21")[0] == 400
+
+
+@pytest.mark.parametrize("index_max_rows", [LOOKUP_INDEX_MAX_ROWS, 0])
+def test_malformed_paging_parameters_are_400_by_name(served, index_max_rows):
+    """limit, since and from are parsed before the index or the Spark
+    path is chosen (a cap of 0 forces Spark), so both refuse the same
+    values with a 400 that names the parameter."""
+    store, _ = served
+    srv = UdaServer(store)
+    srv.index_max_rows = index_max_rows
+    base = srv.start()
+    try:
+        _, _, entities_token = _split(_get(f"{base}/datasets/d/entities?limit=1"))
+        _, _, changes_token = _split(_get(f"{base}/datasets/d/changes?limit=1"))
+        for path, name in [
+            ("entities?limit=abc", "limit"), ("entities?limit=-1", "limit"),
+            ("changes?limit=1.5", "limit"), (f"changes?limit={2**31}", "limit"),
+            (f"changes?since={entities_token}", "since"),
+            (f"entities?from={changes_token}", "from"),
+            ("entities?from=%21%21", "from"),
+        ]:
+            req = urllib.request.Request(f"{base}/datasets/d/{path}")
+            with pytest.raises(urllib.error.HTTPError) as exc:
+                urllib.request.urlopen(req, timeout=30)
+            assert exc.value.code == 400, path
+            assert name in json.loads(exc.value.read())["message"], path
+        assert _split(_get(f"{base}/datasets/d/changes?limit=0"))[1] == []
+    finally:
+        srv.stop()
 
 
 def test_http_source_syncs_out_incrementally(served, spark, tmp_path):

@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from datahub_spark import store as S
+from datahub_spark import uda
 from datahub_spark.model import ENTITY_SCHEMA
 from tests.entity_fixtures import people_log, row
 
@@ -658,3 +659,17 @@ def test_core_dataset_as_job_source(spark, tmp_path):
     es.create_dataset("c")
     incr, _ = src.read(wm)
     assert {r["id"] for r in incr.collect()} == {"core:c"}
+
+
+def test_payload_text_is_payload_digest_on_the_driver(spark):
+    """The driver-side digest a served write deduplicates with equals the
+    Spark one, NULLs and empties included, so both keep the same rows."""
+    payloads = [
+        (False, {}, {}), (True, None, None), (False, {"p:a": None}, {"p:r": [None]}),
+        (False, {"p:a": ""}, {"p:r": []}), (False, {"p:b": "2", "p:a": "1é"},
+                                              {"p:r": ["y", None, "x"], "p:s": ["z"]}),
+    ]
+    frame = spark.createDataFrame([(f"e:{i}", 1, 0, *p) for i, p in enumerate(payloads)],
+                                  uda.ROW_SCHEMA)
+    got = {r["id"]: r["d"] for r in frame.select("id", S.payload_digest().alias("d")).collect()}
+    assert got == {f"e:{i}": S.payload_text(*p) for i, p in enumerate(payloads)}

@@ -1,7 +1,8 @@
 """UDA JSON wire format: refs must be REAL JSON arrays on the wire
 (streamparser.go list form), the decoder must accept both the list and
-the external scalar-CURIE form, and every ingress decodes a body to the
-same rows."""
+the external scalar-CURIE form, every ingress decodes a body to the
+same rows, and the driver-side encoder writes the bytes the JVM one
+does."""
 
 from __future__ import annotations
 
@@ -10,7 +11,11 @@ import threading
 import urllib.request
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+
 from datahub_spark import uda
+from datahub_spark.session import local_frame
 
 
 def _entities(spark):
@@ -163,3 +168,40 @@ def test_every_ingress_stores_the_same_rows(spark, tmp_path):
     # absent recorded stays NULL until a commit stamps its tick
     assert all(r["recorded"] is None for r in pulled)
     assert all(r["recorded"] is not None for rows in stored.values() for r in rows)
+
+
+# every control character, DEL, the JS line separators, an astral
+# character, JSON's own escapes, and text that reads like an escape
+AWKWARD = ("".join(map(chr, range(32))) + "\x7f\u2028\u2029é中\U0001F600"
+           + '"\\/' + "\\u001f\\\\u00e9")
+
+
+def _same_bytes(spark, rows) -> None:
+    """encode_entity over Arrow-collected rows == to_uda_json's bytes."""
+    frame = local_frame(spark, rows, uda.ROW_SCHEMA).unionByName(spark.createDataFrame(
+        [("n:1", 7, 0, False, None, None)], uda.ROW_SCHEMA))  # NULL props and refs
+    jvm = {r["id"]: r["json"] for r in uda.to_uda_json(frame, ["id"]).collect()}
+    driver = {r["id"]: uda.encode_entity(r) for r in frame.toArrow().to_pylist()}
+    assert driver == jvm
+
+
+def test_encode_entity_writes_to_uda_jsons_bytes(spark):
+    _same_bytes(spark, [
+        ("e:1", 5, 0, False, {"p:a": AWKWARD, "p:null": None, AWKWARD: "k", "p:b": ""},
+         {"p:r": ["x", None, AWKWARD], "p:empty": []}),
+        ("e:2", 6, 1, True, {}, {}),
+        (AWKWARD, 2**40, 3, False, {"p:z": "1", "p:a": "2"}, {"p:one": [None]}),
+    ])
+
+
+text = st.text(max_size=8)
+
+
+@settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
+@given(st.lists(st.tuples(
+    st.dictionaries(text, st.none() | text, max_size=3),
+    st.dictionaries(text, st.lists(st.none() | text, max_size=2), max_size=2),
+    st.booleans()), min_size=1, max_size=3))
+def test_encode_entity_matches_to_uda_json_on_any_text(spark, ents):
+    _same_bytes(spark, [(f"e:{i}", i, 0, deleted, props, refs)
+                        for i, (props, refs, deleted) in enumerate(ents)])
