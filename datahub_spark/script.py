@@ -42,8 +42,10 @@ from __future__ import annotations
 
 import base64
 import binascii
+import bisect
 import hashlib
 import uuid as _uuid
+from dataclasses import dataclass
 from typing import Iterator
 
 import pandas as pd
@@ -78,7 +80,11 @@ def _as_dict(v):
     return {k: val for k, val in v}
 
 
-def _row_to_entity(row: dict) -> dict:
+def _row_to_entity(row: dict | None) -> dict | None:
+    """An entity row as the dict entity the built-ins hand to scripts: a
+    fresh copy, so a script's edits stay in the script."""
+    if row is None:
+        return None
     refs = _as_dict(row.get("refs"))
     return {
         "ID": row.get("id"),
@@ -133,8 +139,8 @@ def make_builtins(namespaces: dict[str, str], index: dict | None = None,
                   txn_sink: list | None = None,
                   query_result_sink: list | None = None) -> dict:
     """The reference's transform built-ins over dict entities. ``index``
-    is the broadcast lookup payload: {"by_id": {id: entity},
-    "inverse": {(predicate, target_id): [source_id, ...]}}.
+    is the broadcast lookup index (``build_lookup_index``); its rows are
+    handed to the script as dict entities (``_row_to_entity``).
 
     ``txn_sink``: batch-buffered transaction shim. The reference's
     NewTransaction/ExecuteTransaction (transform.go:359-372,
@@ -147,19 +153,8 @@ def make_builtins(namespaces: dict[str, str], index: dict | None = None,
     ``query_result_sink``: same shape for WriteQueryResult
     (transform.go:322) — objects buffer and surface as rows."""
     ns = dict(namespaces)
-    by_id = (index or {}).get("by_id", {})
-    inverse = (index or {}).get("inverse", {})
-    changes = (index or {}).get("changes", {})
-    scoped: dict = {}
-
-    def _scope(datasets):
-        # (by_id, inverse) over only the named datasets' change rows —
-        # what build_lookup_index over those datasets' logs holds
-        key = tuple(sorted(set(datasets)))
-        if key not in scoped:
-            scoped[key] = _fold_latest(
-                {}, {}, (e for ds in key for e in changes.get(ds, [])))
-        return scoped[key]
+    index = index or _EMPTY_INDEX
+    scopes: dict = {}
 
     def _key(prefix, name):
         return f"{prefix}:{name}"
@@ -323,49 +318,13 @@ def make_builtins(namespaces: dict[str, str], index: dict | None = None,
     def FindById(entity_id):
         """ByID (transform.go): latest entity from the declared lookup
         datasets, or None."""
-        return _copy(by_id.get(entity_id))
+        return _row_to_entity(index["by_id"].get(entity_id))
 
     def Query(starting_entities, predicate, inverse_flag=False, datasets=None):
-        """transform.Query: [start, predicate, relatedEntity] triples.
-        Outgoing: follow refs[predicate] of each start (target entity from
-        the lookup index; bare {ID} stub if the target isn't indexed —
-        the reference returns open-world URIs the same way). Inverse:
-        entities whose refs[predicate] contains the start id. A predicate
-        of ``"*"`` (or None) traverses EVERY predicate, like the
-        reference's Via ``*`` (store.go ToRelatedFrom). ``datasets``
-        scopes both the start entities and the related ones to those
-        datasets, like the served traversal."""
-        ids, edges = _scope(datasets) if datasets else (by_id, inverse)
-        wildcard = predicate in (None, "*")
-        out = []
-        for start in starting_entities:
-            if inverse_flag:
-                if wildcard:
-                    hits = sorted(
-                        (p, src) for (p, tgt), srcs in edges.items()
-                        if tgt == start for src in srcs)
-                else:
-                    hits = [(predicate, src)
-                            for src in edges.get((predicate, start), [])]
-                for p, src in hits:
-                    out.append([start, p, _copy(ids.get(src))])
-            else:
-                ent = ids.get(start)
-                for p, targets in sorted(
-                        (ent or {}).get("References", {}).items()):
-                    if not wildcard and p != predicate:
-                        continue
-                    for target in targets:
-                        hit = ids.get(target)
-                        out.append([
-                            start, p,
-                            _copy(hit) if hit is not None else {
-                                "ID": target, "Recorded": None, "Seq": None,
-                                "IsDeleted": False, "Properties": {},
-                                "References": {}, "Dataset": None,
-                            },
-                        ])
-        return out
+        """transform.Query: [start, predicate, relatedEntity] triples
+        (``related``)."""
+        return [[start, p, _row_to_entity(row)] for start, p, row in related(
+            index, starting_entities, predicate, inverse_flag, datasets, scopes)]
 
     def GetDatasetChanges(dataset, since=0, limit=None):
         """DatasetChanges host fn: the declared lookup dataset's change
@@ -375,10 +334,9 @@ def make_builtins(namespaces: dict[str, str], index: dict | None = None,
         scale anti-pattern; this engine's equivalent is returning the
         entities (the sink commits one transaction per batch) or
         driver-side store.execute_transaction."""
-        rows = [
-            _copy(e) for e in changes.get(dataset, [])
-            if (e.get("Recorded") or 0) > since
-        ]
+        view = index["changes"].get(dataset, EMPTY_VIEW)
+        rows = [_row_to_entity(e) for e in view.versions
+                if (e["recorded"] or 0) > since]
         return rows[:limit] if limit is not None else rows
 
     def PagedQuery(params, page_size=None, callback=None):
@@ -432,15 +390,6 @@ def make_builtins(namespaces: dict[str, str], index: dict | None = None,
         "FindById": FindById, "Query": Query, "PagedQuery": PagedQuery,
         "GetDatasetChanges": GetDatasetChanges,
     }
-
-
-def _copy(ent):
-    if ent is None:
-        return None
-    out = dict(ent)
-    out["Properties"] = dict(ent.get("Properties") or {})
-    out["References"] = {k: list(v) for k, v in (ent.get("References") or {}).items()}
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -517,8 +466,7 @@ def build_lookup_index(*frames: DataFrame,
                     .limit(max_rows - len(rows) + 1).toArrow().to_pylist())
         if len(rows) > max_rows:
             raise IndexTooBig(max_rows)
-    return fold_lookup_index({"by_id": {}, "inverse": {}, "changes": {}},
-                             rows, max_rows)
+    return fold_lookup_index(_EMPTY_INDEX, rows, max_rows)
 
 
 def fold_lookup_index(index: dict, rows,
@@ -527,30 +475,26 @@ def fold_lookup_index(index: dict, rows,
     column) folded in — equal to build_lookup_index over the rows
     ``index`` came from plus ``rows``. Returns a new index and leaves
     ``index`` as it is, so a reader still holding it sees no change;
-    untouched entities and edge lists are shared, not copied. The cap
-    counts the versions ``index`` already holds, and ``rows`` is read
-    no further than one row past it.
+    untouched entities, edge lists and dataset views are shared, not
+    copied. The cap counts the versions ``index`` already holds, and
+    ``rows`` is read no further than one row past it.
 
-    A version whose stored props are NULL keeps ``Properties`` None, so a
-    served page can leave the field out as ``uda.to_uda_json`` does; the
-    script built-ins hand entities out through ``_copy``, which reads it
-    as ``{}``."""
+    An index is ``{"by_id": {id: row}, "inverse": {(predicate, target):
+    [id, ...]}, "changes": {dataset: DatasetView}}``; every row in it is
+    a ``stored_row``."""
     remaining = max_rows - sum(len(v) for v in index["changes"].values())
     ents: list = []
     for row in rows:
         if len(ents) >= remaining:
             raise IndexTooBig(max_rows)
-        ent = _row_to_entity(row)
-        if row.get("props") is None:
-            ent["Properties"] = None
-        ents.append(ent)
+        ents.append(stored_row(row))
     added: dict = {}
     for ent in ents:
-        added.setdefault(ent["Dataset"], []).append(ent)
+        added.setdefault(ent["dataset"], []).append(ent)
     changes = dict(index["changes"])
     for ds, new in added.items():
-        changes[ds] = sorted(changes.get(ds, []) + new,
-                             key=lambda e: (*_version(e), e["ID"] or ""))
+        changes[ds] = DatasetView.of(
+            sorted(changes.get(ds, EMPTY_VIEW).versions + new, key=_position))
     by_id, inverse = _fold_latest(index["by_id"], index["inverse"], ents)
     return {"by_id": by_id, "inverse": inverse, "changes": changes}
 
@@ -566,13 +510,136 @@ class IndexTooBig(ValueError):
             "shuffle join) instead, or raise max_rows explicitly")
 
 
-def _version(ent: dict) -> tuple:
-    return (ent["Recorded"] or 0, ent["Seq"] or 0)
+def stored_row(row: dict) -> dict:
+    """An entity row read from Spark or parquet as the lookup index and
+    the served routes hold it: keyed by entity column, maps as dicts
+    (Arrow hands them over as lists of key/value pairs) in their stored
+    entry order, NULLs as stored."""
+    out = {c: row.get(c) for c in ENTITY_COLUMNS}
+    for c in ("props", "refs"):
+        if out[c] is not None:
+            out[c] = dict(out[c])
+    return out
+
+
+def _version(row: dict) -> tuple:
+    return (row["recorded"] or 0, row["seq"] or 0)
+
+
+def _position(row: dict) -> tuple:
+    return (*_version(row), row["id"] or "")
+
+
+@dataclass(frozen=True)
+class DatasetView:
+    """One dataset's versions in the lookup index, with the orders the
+    served pages read them in."""
+    versions: list  # every version, by (recorded, seq, id)
+    latest: dict    # id -> its newest version, tombstones included
+    newest: list    # latest's values, by (recorded, seq, id)
+    alive: list     # latest's live values, by id
+
+    @classmethod
+    def of(cls, versions: list) -> "DatasetView":
+        latest = {e["id"]: e for e in versions}
+        newest = [e for e in versions if latest[e["id"]] is e]
+        alive = sorted((e for e in newest if not e["deleted"]), key=lambda e: e["id"] or "")
+        return cls(versions, latest, newest, alive)
+
+    def __len__(self) -> int:
+        return len(self.versions)
+
+    def changes(self, since, limit: int, reverse: bool, latest_only: bool) -> list:
+        """One /changes page of versions after ``since`` (None, a recorded
+        watermark or a (recorded, seq, id) position; before it when
+        ``reverse``), found by bisection."""
+        versions = self.newest if latest_only else self.versions
+        key = (lambda e: e["recorded"] or 0) if isinstance(since, int) else _position
+        if reverse:
+            hi = len(versions) if since is None else bisect.bisect_left(versions, since, key=key)
+            return versions[max(hi - limit, 0):hi][::-1]
+        lo = 0 if since is None else bisect.bisect_right(versions, since, key=key)
+        return versions[lo:lo + limit]
+
+    def entities(self, from_id: str | None, limit: int) -> list:
+        """One /entities page of live latest versions after ``from_id``."""
+        lo = 0 if from_id is None else \
+            bisect.bisect_right(self.alive, from_id, key=lambda e: e["id"] or "")
+        return self.alive[lo:lo + limit]
+
+
+EMPTY_VIEW = DatasetView.of([])
+_EMPTY_INDEX = {"by_id": {}, "inverse": {}, "changes": {}}
+
+
+def related(index: dict, starts, predicate, inverse: bool = False,
+            datasets=None, scopes: dict | None = None) -> list:
+    """transform.Query over the lookup index: ``[start, predicate, row]``
+    triples. Outgoing: follow refs[predicate] of each start to the
+    target's row, or a row holding only the id when the index does not
+    hold the target (the reference returns open-world URIs the same
+    way). Inverse: the rows whose refs[predicate] contains the start id.
+    A predicate of ``"*"`` (or None) traverses EVERY predicate, like the
+    reference's Via ``*`` (store.go ToRelatedFrom). ``datasets`` scopes
+    both the start entities and the related ones to those datasets, like
+    the served traversal: their latest versions are folded on first use
+    and kept in ``scopes``."""
+    if datasets:
+        key = tuple(sorted(set(datasets)))
+        scopes = {} if scopes is None else scopes
+        if key not in scopes:
+            views = index["changes"]
+            scopes[key] = _fold_latest({}, {}, (
+                e for ds in key for e in views.get(ds, EMPTY_VIEW).latest.values()))
+        ids, edges = scopes[key]
+    else:
+        ids, edges = index["by_id"], index["inverse"]
+    wildcard = predicate in (None, "*")
+    out = []
+    for start in starts:
+        if inverse:
+            if wildcard:
+                hits = sorted((p, src) for (p, tgt), srcs in edges.items()
+                              if tgt == start for src in srcs)
+            else:
+                hits = [(predicate, src) for src in edges.get((predicate, start), [])]
+            out.extend([start, p, ids[src]] for p, src in hits)
+            continue
+        refs = (ids.get(start) or {}).get("refs") or {}
+        for p, targets in sorted(refs.items()):
+            if wildcard or p == predicate:
+                out.extend([start, p, ids.get(t) or stored_row({"id": t})]
+                           for t in targets or ())
+    return out
+
+
+def lookup_entity(views: dict, eid: str, datasets=None, merge: bool = True) -> dict | None:
+    """``eid`` looked up in an index's dataset ``views`` (its
+    ``changes``) as ``EntityStore.get_entity`` finds it: its live latest
+    partials folded in ``store._partial_cmp`` order with
+    ``merge_partials``' rules (a later non-NULL value wins a key), or
+    without ``merge`` the newest of them; None when none is live."""
+    alive = sorted((v.latest[eid] for ds, v in views.items()
+                    if eid in v.latest and not v.latest[eid]["deleted"]
+                    and (not datasets or ds in datasets)),
+                   key=lambda e: (*_version(e), e["dataset"]))
+    if not alive:
+        return None
+    if not merge:
+        return alive[-1]
+    props: dict = {}
+    refs: dict = {}
+    for ent in alive:
+        for acc, part in ((props, ent["props"]), (refs, ent["refs"])):
+            for k, v in (part or {}).items():
+                if v is not None or k not in acc:
+                    acc[k] = v
+    return dict(alive[-1], deleted=False, props=props, refs=refs, dataset="*merged*")
 
 
 def _edges(ent: dict | None):
-    for pred, targets in ((ent or {}).get("References") or {}).items():
-        for t in targets:
+    for pred, targets in ((ent or {}).get("refs") or {}).items():
+        for t in targets or ():
             yield (pred, t)
 
 
@@ -585,11 +652,11 @@ def _fold_latest(by_id: dict, inverse: dict, ents) -> tuple[dict, dict]:
     by_id = dict(by_id)
     replaced: dict = {}
     for ent in ents:
-        prev = by_id.get(ent["ID"])
-        if prev is None or (*_version(ent), ent["Dataset"] or "") >= \
-                (*_version(prev), prev["Dataset"] or ""):
-            replaced.setdefault(ent["ID"], prev)
-            by_id[ent["ID"]] = ent
+        prev = by_id.get(ent["id"])
+        if prev is None or (*_version(ent), ent["dataset"] or "") >= \
+                (*_version(prev), prev["dataset"] or ""):
+            replaced.setdefault(ent["id"], prev)
+            by_id[ent["id"]] = ent
     added: dict = {}
     touched = set()
     for eid, prev in replaced.items():
@@ -638,10 +705,10 @@ def _index_digest(code: str, ns: dict, index: dict | None) -> str:
     h.update(code.encode())
     h.update(repr(sorted(ns.items())).encode())
     if index is not None:
-        h.update(repr(sorted(index["by_id"].items())).encode())
-        h.update(repr(sorted(index["inverse"].items())).encode())
-        h.update(repr(sorted(index["changes"].items(),
-                             key=lambda kv: repr(kv[0]))).encode())
+        versions = {ds: v.versions for ds, v in index["changes"].items()}
+        for part in (index["by_id"], index["inverse"], versions):
+            # keys by repr: an edge to a NULL ref element has a None target
+            h.update(repr(sorted(part.items(), key=lambda kv: repr(kv[0]))).encode())
     return h.hexdigest()
 
 

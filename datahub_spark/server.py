@@ -16,11 +16,14 @@ Endpoints (wire format: JSON array ``[@context, entity...,
 
 Execution model / scale: pages are key-set paginated (strictly after the
 token's position, never a global offset). While the store holds at most
-``index_max_rows`` versions, pages, ``entityId`` lookups and the dedup
-of plain writes are answered from the driver-held index that follows
-the store's commits (``UdaServer._query_index``), with no Spark job;
-past the cap each is ONE bounded Spark job (order-by + strictly-after
-filter + limit). Either way the rows are encoded by ``uda.encode_entity``.
+``index_max_rows`` versions, pages, ``entityId`` lookups, traversals and
+the dedup of plain writes are answered from the driver-held lookup index
+that follows the store's commits (``UdaServer._query_index``), with no
+Spark job: ``script.fold_lookup_index`` keeps each version as its stored
+row (``script.stored_row``) and each dataset's pages in a
+``script.DatasetView``. Past the cap each is ONE bounded Spark job
+(order-by + strictly-after filter + limit) whose rows ``_collect`` turns
+into the same stored rows. Either way ``uda.encode_entity`` writes them.
 The HTTP pipe itself is the reference's own egress model (single-reader
 pull with continuation tokens); bulk 100 TB egress belongs on shared
 storage (parquet handoff), which peers on the same platform get for
@@ -37,7 +40,6 @@ jobs persist in JobState.
 from __future__ import annotations
 
 import base64
-import bisect
 import json
 import os
 import threading
@@ -51,6 +53,7 @@ from urllib.parse import parse_qs, unquote, urlparse
 
 from pyspark.sql import functions as F
 
+from datahub_spark import script
 from datahub_spark import store as S
 from datahub_spark import uda
 from datahub_spark.namespaces import NamespaceManager
@@ -188,81 +191,10 @@ def _paging(q: dict, default_limit: int) -> tuple[int, object, str | None]:
 
 
 def _collect(df) -> list[dict]:
-    """A frame's rows as dicts. They cross as Arrow, which keeps each
-    map's entries in their stored order, as the index's rows do, so both
-    paths serve the same bytes."""
-    return df.toArrow().to_pylist()
-
-
-def _position(ent: dict) -> tuple:
-    return (ent["Recorded"], ent["Seq"], ent["ID"])
-
-
-def _row(ent: dict) -> dict:
-    """A lookup-index entity as the entity-column row a Spark read
-    returns."""
-    return {"id": ent["ID"], "recorded": ent["Recorded"], "seq": ent["Seq"],
-            "deleted": ent["IsDeleted"], "props": ent["Properties"],
-            "refs": ent["References"]}
-
-
-@dataclass(frozen=True)
-class _DatasetView:
-    """What the served routes read of one dataset in the lookup index."""
-    versions: list  # every version, by (recorded, seq, id)
-    latest: dict    # id -> its newest version, tombstones included
-    newest: list    # latest's values, by (recorded, seq, id)
-    alive: list     # latest's live values, by id
-
-    @classmethod
-    def of(cls, versions: list) -> "_DatasetView":
-        latest = {e["ID"]: e for e in versions}
-        newest = [e for e in versions if latest[e["ID"]] is e]
-        alive = sorted((e for e in newest if not e["IsDeleted"]), key=lambda e: e["ID"])
-        return cls(versions, latest, newest, alive)
-
-    def changes(self, since, limit: int, reverse: bool, latest_only: bool) -> list:
-        """One /changes page of versions after ``since`` (before it when
-        ``reverse``), found by bisection."""
-        versions = self.newest if latest_only else self.versions
-        key = (lambda e: e["Recorded"]) if isinstance(since, int) else _position
-        if reverse:
-            hi = len(versions) if since is None else bisect.bisect_left(versions, since, key=key)
-            return versions[max(hi - limit, 0):hi][::-1]
-        lo = 0 if since is None else bisect.bisect_right(versions, since, key=key)
-        return versions[lo:lo + limit]
-
-    def entities(self, from_id: str | None, limit: int) -> list:
-        lo = 0 if from_id is None else \
-            bisect.bisect_right(self.alive, from_id, key=lambda e: e["ID"])
-        return self.alive[lo:lo + limit]
-
-
-_NO_DATA = _DatasetView.of([])
-
-
-def _merged(views: dict, eid: str, datasets, merge: bool) -> dict | None:
-    """``eid`` looked up in the index as ``EntityStore.get_entity`` finds
-    it: its live latest partials folded in ``store._partial_cmp`` order
-    with ``merge_partials``' rules (a later non-NULL value wins a key), or
-    without ``merge`` the newest of them; None when none is live."""
-    alive = sorted((v.latest[eid] for ds, v in views.items()
-                    if eid in v.latest and not v.latest[eid]["IsDeleted"]
-                    and (not datasets or ds in datasets)),
-                   key=lambda e: (e["Recorded"], e["Seq"], e["Dataset"]))
-    if not alive:
-        return None
-    if not merge:
-        return _row(alive[-1])
-    props: dict = {}
-    refs: dict = {}
-    for ent in alive:
-        for acc, part in ((props, ent["Properties"]), (refs, ent["References"])):
-            for k, v in (part or {}).items():
-                if v is not None or k not in acc:
-                    acc[k] = v
-    return {"id": eid, "recorded": alive[-1]["Recorded"], "deleted": False,
-            "props": props, "refs": refs}
+    """A frame's rows as stored rows. They cross as Arrow, which keeps
+    each map's entries in their stored order, as the index's rows do, so
+    both paths serve the same bytes."""
+    return [script.stored_row(r) for r in df.toArrow().to_pylist()]
 
 
 def _differs(cur: dict | None, row: tuple) -> bool:
@@ -270,14 +202,13 @@ def _differs(cur: dict | None, row: tuple) -> bool:
     entity's current version ``cur`` (None: it has none)."""
     _id, _rec, _seq, deleted, props, refs = row
     return cur is None or S.payload_text(deleted, props, refs) != S.payload_text(
-        cur["IsDeleted"], cur["Properties"], cur["References"])
+        cur["deleted"], cur["props"], cur["refs"])
 
 
 @dataclass(frozen=True)
 class _IndexState:
     index: dict | None  # None: the store holds more than the cap
     files: set          # the log files it covers
-    views: dict         # dataset -> _DatasetView
 
 
 def _parse_acls(raw):
@@ -382,8 +313,6 @@ class UdaServer:
                  metrics=None, providers=None,
                  wal_writes: bool = False,
                  wal_flush_entities: int = 10_000):
-        from datahub_spark import script
-
         self.store = store
         # WAL-backed served writes (store.WalIngest): plain POST
         # /entities appends to a per-dataset fsync-durable spool and
@@ -506,13 +435,16 @@ class UdaServer:
 
     # -- helpers ----------------------------------------------------------
 
-    def _reply(self, rq, code: int, payload) -> None:
-        data = json.dumps(payload).encode()
+    @staticmethod
+    def _send(rq, code: int, data: bytes, ctype: str = "application/json") -> None:
         rq.send_response(code)
-        rq.send_header("Content-Type", "application/json")
+        rq.send_header("Content-Type", ctype)
         rq.send_header("Content-Length", str(len(data)))
         rq.end_headers()
         rq.wfile.write(data)
+
+    def _reply(self, rq, code: int, payload) -> None:
+        self._send(rq, code, json.dumps(payload).encode())
 
     def _error(self, rq, code: int, message: str) -> None:
         self._reply(rq, code, {"message": message})
@@ -604,12 +536,7 @@ class UdaServer:
     def _health(self, rq) -> None:
         # NewStatusHandler (web.go:136): plain "UP", and the auth
         # middleware skips /health (middleware.go:43-44)
-        data = b"UP"
-        rq.send_response(200)
-        rq.send_header("Content-Type", "text/plain")
-        rq.send_header("Content-Length", str(len(data)))
-        rq.end_headers()
-        rq.wfile.write(data)
+        self._send(rq, 200, b"UP", "text/plain")
 
     def _service_info(self, rq) -> None:
         # ServiceInfo (web.go:139-143)
@@ -683,7 +610,7 @@ class UdaServer:
             return self._error(rq, 404, f"dataset {ds} not found")
         views = self._served_views(ds)
         if views is not None:
-            n_items = len(views.get(ds, _NO_DATA).alive)
+            n_items = len(views.get(ds, script.EMPTY_VIEW).alive)
         else:
             n_items = S.latest(self.store.log([ds])).count() \
                 if self.store.has_data(ds) else 0
@@ -728,8 +655,8 @@ class UdaServer:
             reverse = q.get("reverse", "") == "true"
             latest_only = q.get("latestOnly", "") == "true"
             if views is not None:
-                rows = [_row(e) for e in views.get(ds, _NO_DATA).changes(
-                    since, limit, reverse, latest_only)]
+                rows = views.get(ds, script.EMPTY_VIEW).changes(
+                    since, limit, reverse, latest_only)
             else:
                 rows = self._spark_changes(ds, since, limit, reverse, latest_only)
             # continuation: the last served position; an empty page
@@ -738,7 +665,7 @@ class UdaServer:
                 if rows else q.get("since", "")
         else:
             if views is not None:
-                rows = [_row(e) for e in views.get(ds, _NO_DATA).entities(from_id, limit)]
+                rows = views.get(ds, script.EMPTY_VIEW).entities(from_id, limit)
             else:
                 rows = self._spark_entities(ds, from_id, limit)
             token = _tok_encode(rows[-1]["id"]) if rows else q.get("from", "")
@@ -831,12 +758,7 @@ class UdaServer:
                 + [json.dumps({"id": "@continuation", "token": token})]
             ) + "]"
             ctype = "application/json"
-        data = body.encode()
-        rq.send_response(200)
-        rq.send_header("Content-Type", ctype)
-        rq.send_header("Content-Length", str(len(data)))
-        rq.end_headers()
-        rq.wfile.write(data)
+        self._send(rq, 200, body.encode(), ctype)
 
     def _compact(self, rq) -> None:
         # compactionhandler.go:22-45
@@ -895,11 +817,7 @@ class UdaServer:
                 data = resp.read()
         except Exception as exc:
             return self._error(rq, 502, f"proxy fetch failed: {exc}")
-        rq.send_response(200)
-        rq.send_header("Content-Type", "application/json")
-        rq.send_header("Content-Length", str(len(data)))
-        rq.end_headers()
-        rq.wfile.write(data)
+        self._send(rq, 200, data)
 
     def _virtual_read(self, rq, ds: str, vcfg: dict, q: dict) -> None:
         """Served virtual dataset (virtualdataset.go; DOCUMENTATION.md:
@@ -910,8 +828,6 @@ class UdaServer:
         optional JSON body on the GET (the reference forwards any
         request JSON as the params argument); ``since`` is forwarded
         verbatim."""
-        from datahub_spark.script import ScriptVirtualSource
-
         code = vcfg.get("Transform") or vcfg.get("transform") or ""
         n = int(rq.headers.get("Content-Length", "0"))
         try:
@@ -928,8 +844,8 @@ class UdaServer:
         except ValueError as exc:
             return self._error(rq, 400, str(exc))
         try:
-            src = ScriptVirtualSource(self.store.spark, code,
-                                      params=params, dataset=ds)
+            src = script.ScriptVirtualSource(self.store.spark, code,
+                                             params=params, dataset=ds)
         except ValueError as exc:
             return self._error(rq, 400, f"virtual dataset script: {exc}")
         try:
@@ -960,15 +876,13 @@ class UdaServer:
                     rq, 400, "invalid proxy configuration provided")
             extra["ProxyDatasetConfig"] = pc
         elif cfg.get("VirtualDatasetConfig") is not None:
-            from datahub_spark.script import ScriptVirtualSource
-
             vc = cfg["VirtualDatasetConfig"]
             code = vc.get("Transform") or vc.get("transform")
             if not code:
                 return self._error(
                     rq, 400, "invalid virtual dataset configuration provided")
             try:  # a transform that does not load is refused at create
-                ScriptVirtualSource(self.store.spark, code)
+                script.ScriptVirtualSource(self.store.spark, code)
             except ValueError as exc:
                 return self._error(rq, 400, f"virtual dataset script: {exc}")
             extra["VirtualDatasetConfig"] = vc
@@ -1340,21 +1254,21 @@ class UdaServer:
     # -- /query (queryhandler.go) -----------------------------------------
 
     def _query_index(self) -> dict:
-        """Broadcast-style lookup index over the store's datasets — the
-        analogue of the reference answering queries, entity pages and
-        GetEntity merges from its local Badger indexes (store.go:666-1022,
-        dataset.go:891 and 1005). It serves /query traversals and query
-        scripts, and through ``_served_views``: /changes and /entities
-        pages, entityId lookups, the dedup of plain /entities POSTs and
-        the item count of GET /datasets/{ds}. Raises
+        """The lookup index over the store's datasets — the analogue of the
+        reference answering queries, entity pages and GetEntity merges
+        from its local Badger indexes (store.go:666-1022, dataset.go:891
+        and 1005). It holds every version as its stored row, with each
+        dataset's page orders in a ``script.DatasetView``
+        (``script.fold_lookup_index``). It serves /query traversals and
+        query scripts, and through ``_served_views``: /changes and
+        /entities pages, entityId lookups, the dedup of plain /entities
+        POSTs and the item count of GET /datasets/{ds}. Raises
         ``script.IndexTooBig`` when the store holds more than
         ``index_max_rows`` versions; the pages, lookups and dedup then
         run as Spark jobs, and a traversal fails as it does in a query
         script: interactive graph queries are dimension-scale by
         construction, and set-oriented querying over big data belongs in
         the engine's query operators, not an HTTP endpoint."""
-        from datahub_spark import script
-
         index = self._fresh_index().index
         if index is None:
             raise script.IndexTooBig(self.index_max_rows)
@@ -1369,19 +1283,17 @@ class UdaServer:
         without a Spark job and folded in (script.fold_lookup_index), so
         several commits fold in one pass. When a covered file is gone
         (compaction, dataset delete or rename) the index is built afresh
-        from one ``store.log`` frame. A store past the cap stays past it
-        until a covered file is gone, so it is not re-collected per
-        request. One listing, fold or build runs at a time."""
-        from datahub_spark import script
-
+        from one frame over exactly the listed files. A store past the cap
+        stays past it until a covered file is gone, so it is not
+        re-collected per request. One listing, fold or build runs at a
+        time."""
         with self._index_lock:
-            names = self.store.list_datasets()
-            files = self.store.log_files(names)
+            files = self.store.log_files(self.store.list_datasets())
             state = self._index
+            if state is not None and state.files == files:
+                return state
             if state is not None and state.files <= files:
-                if state.files == files:
-                    return state
-                index, held, known = state.index, files, state.views
+                index = state.index
                 if index is not None:
                     try:
                         index = script.fold_lookup_index(
@@ -1390,22 +1302,13 @@ class UdaServer:
                     except script.IndexTooBig:
                         index = None
             else:
-                frames, held = [], set()
-                if names:
-                    frame = self.store.log(names)
-                    frames, held = [frame], self.store.frame_files(frame, names)
+                frames = [self.store.log_frame(files)] if files else []
                 try:
                     index = script.build_lookup_index(
                         *frames, max_rows=self.index_max_rows)
                 except script.IndexTooBig:
                     index = None
-                known = {}
-            # a fold shares the versions lists of the datasets it left alone
-            views = {} if index is None else {
-                ds: known[ds] if ds in known and known[ds].versions is versions
-                else _DatasetView.of(versions)
-                for ds, versions in index["changes"].items()}
-            self._index = state = _IndexState(index, held, views)
+            self._index = state = _IndexState(index, files)
             return state
 
     def _served_views(self, ds: str | None = None) -> dict | None:
@@ -1414,16 +1317,8 @@ class UdaServer:
         meta-log, which the index does not hold."""
         if ds == S.CORE_DATASET:
             return None
-        state = self._fresh_index()
-        return None if state.index is None else state.views
-
-    def _wire_entity(self, ent: dict | None, eid: str) -> dict:
-        if ent is None:
-            return {"id": eid}
-        return {"id": ent.get("ID"), "recorded": ent.get("Recorded"),
-                "deleted": bool(ent.get("IsDeleted", False)),
-                "props": ent.get("Properties") or {},
-                "refs": ent.get("References") or {}}
+        index = self._fresh_index().index
+        return None if index is None else index["changes"]
 
     def _post_query(self, rq) -> None:
         """POST /query (queryhandler.go:142-265): three modes —
@@ -1439,12 +1334,10 @@ class UdaServer:
         if self.wal_writes:
             self.flush_wal()
         if "application/x-javascript-query" in ctype:
-            from datahub_spark import script as SC
-
             q = json.loads(body)
             index = self._query_index()
             try:
-                results = SC.run_query_script(
+                results = script.run_query_script(
                     None, q.get("query", ""),
                     namespaces=dict(self.nsmgr.context()), index=index)
             except ValueError as exc:
@@ -1452,7 +1345,7 @@ class UdaServer:
             return self._reply(rq, 200, results)
 
         q = json.loads(body)
-        ctx = {"id": "@context", "namespaces": self.nsmgr.context()}
+        ctx = json.dumps({"id": "@context", "namespaces": self.nsmgr.context()})
         if q.get("entityId"):
             eid = q["entityId"]
             datasets = q.get("datasets") or None
@@ -1460,20 +1353,12 @@ class UdaServer:
             views = None if datasets and S.CORE_DATASET in datasets \
                 else self._served_views()
             if views is not None:
-                r = _merged(views, eid, datasets, merge)
+                row = script.lookup_entity(views, eid, datasets, merge)
             else:
                 rows = _collect(self.store.get_entity(eid, datasets, merge=merge))
-                r = rows[0] if rows else None
-            if r is None:
-                return self._reply(rq, 200, [ctx, {"id": eid}])
-            ent = {"id": r["id"], "recorded": r["recorded"],
-                   "deleted": bool(r["deleted"]),
-                   "props": dict(r["props"] or {}),
-                   "refs": {k: list(v) for k, v in
-                            dict(r["refs"] or {}).items()}}
-            return self._reply(rq, 200, [ctx, ent])
-
-        from datahub_spark.script import make_builtins
+                row = rows[0] if rows else None
+            ent = json.dumps({"id": eid}) if row is None else uda.encode_entity(row)
+            return self._send(rq, 200, f"[{ctx},{ent}]".encode())
 
         limit = int(q.get("limit") or 0)
         offset = 0
@@ -1482,21 +1367,20 @@ class UdaServer:
             q = resume["q"]
             offset = resume["off"]
             limit = int(q.get("limit") or 0)
-        env = make_builtins(dict(self.nsmgr.context()), self._query_index())
-        triples = env["Query"](q.get("startingEntities") or [],
-                               q.get("predicate"),
-                               bool(q.get("inverse", False)),
-                               q.get("datasets"))
-        include_cont = limit > 0
+        triples = script.related(self._query_index(),
+                                 q.get("startingEntities") or [],
+                                 q.get("predicate"),
+                                 bool(q.get("inverse", False)),
+                                 q.get("datasets"))
         page = triples[offset:offset + limit] if limit else triples[:100]
-        wire = [[s, p, self._wire_entity(e, s)] for s, p, e in page]
-        result = [ctx, wire]
-        if include_cont:
+        parts = [ctx, "[" + ",".join(
+            f"[{json.dumps(s)},{json.dumps(p)},{uda.encode_entity(e)}]"
+            for s, p, e in page) + "]"]
+        if limit > 0:
             nxt = offset + len(page)
-            token = _tok_encode({"q": q, "off": nxt}) \
-                if nxt < len(triples) else ""
-            result.append([token] if token else [])
-        self._reply(rq, 200, result)
+            parts.append(json.dumps(
+                [_tok_encode({"q": q, "off": nxt})] if nxt < len(triples) else []))
+        self._send(rq, 200, ("[" + ",".join(parts) + "]").encode())
 
     # -- entity writes (datasethandler.go:778-860) -------------------------
 
@@ -1583,7 +1467,7 @@ class UdaServer:
             # Spark dedup would (store.payload_text)
             plain: list = []
             views = self._served_views() if session is None else None
-            current = None if views is None else views.get(ds, _NO_DATA).latest
+            current = None if views is None else views.get(ds, script.EMPTY_VIEW).latest
             try:
                 for objs in self._body_chunks(rq):
                     rows = list(uda.decode_entities(objs))
@@ -1591,7 +1475,8 @@ class UdaServer:
                         continue
                     if current is not None:
                         rows = [r for r in rows if _differs(current.get(r[0]), r)]
-                    chunk = local_frame(self.store.spark, rows, uda.DECODED_SCHEMA)
+                    # one partition: the commit writes one file per chunk
+                    chunk = local_frame(self.store.spark, rows, uda.DECODED_SCHEMA).coalesce(1)
                     if session is not None:
                         session.append(chunk)
                     else:

@@ -31,7 +31,6 @@ import re
 import shutil
 import threading
 import uuid
-from urllib.parse import unquote, urlparse
 
 try:  # POSIX cross-process lock; absent on some platforms
     import fcntl
@@ -241,43 +240,49 @@ def merge_partials(df: DataFrame, include_deleted: bool = False) -> DataFrame:
     return out
 
 
+# separators of the payload digest, and the text of a NULL ref element
+_KV, _ENTRY, _ELEM, _PART, _NULL_ELEM = "\x01", "\x02", "\x03", "\x04", "\x05"
+
+
 def payload_digest(deleted="deleted", props="props", refs="refs"):
     """Canonical string digest of an entity version's payload. Spark can't
     compare map columns directly, so equality checks go through this
-    deterministic serialization (sorted entries)."""
+    deterministic serialization (sorted entries). A NULL prop value or
+    ref list leaves its key alone; a NULL ref element is written as a
+    marker, so ``["x"]`` and ``["x", null]`` differ."""
     props_s = F.array_join(
         F.array_sort(
             F.transform(
                 F.map_entries(F.coalesce(F.col(props), F.map_from_arrays(
                     F.array().cast("array<string>"), F.array().cast("array<string>")))),
-                lambda e: F.concat_ws("", e["key"], e["value"]),
+                lambda e: F.concat_ws(_KV, e["key"], e["value"]),
             )
         ),
-        "",
+        _ENTRY,
     )
     refs_s = F.array_join(
         F.array_sort(
             F.transform(
                 F.map_entries(F.coalesce(F.col(refs), F.map_from_arrays(
                     F.array().cast("array<string>"), F.array().cast("array<array<string>>")))),
-                lambda e: F.concat_ws("", e["key"], F.array_join(e["value"], "")),
+                lambda e: F.concat_ws(_KV, e["key"], F.array_join(e["value"], _ELEM, _NULL_ELEM)),
             )
         ),
-        "",
+        _ENTRY,
     )
-    return F.concat_ws("", F.col(deleted).cast("string"), props_s, refs_s)
+    return F.concat_ws(_PART, F.col(deleted).cast("string"), props_s, refs_s)
 
 
 def payload_text(deleted: bool, props: dict | None, refs: dict | None) -> str:
     """``payload_digest`` of one row held by the driver: the same string
-    (same separators, NULLs skipped the same way), so a write deduplicated
+    (same separators, NULLs written the same way), so a write deduplicated
     on the driver keeps exactly the rows the Spark dedup keeps."""
-    props_s = "\x02".join(sorted(
-        k if v is None else f"{k}\x01{v}" for k, v in (props or {}).items()))
-    refs_s = "\x02".join(sorted(
-        k if v is None else k + "\x01" + "\x03".join(x for x in v if x is not None)
+    props_s = _ENTRY.join(sorted(
+        k if v is None else k + _KV + v for k, v in (props or {}).items()))
+    refs_s = _ENTRY.join(sorted(
+        k if v is None else k + _KV + _ELEM.join(_NULL_ELEM if x is None else x for x in v)
         for k, v in (refs or {}).items()))
-    return "\x04".join(("true" if deleted else "false", props_s, refs_s))
+    return _PART.join(("true" if deleted else "false", props_s, refs_s))
 
 
 def compact_deduplicate(df: DataFrame) -> DataFrame:
@@ -767,14 +772,13 @@ class EntityStore:
                     best = max(best, stats.max)
         return best
 
-    def frame_files(self, df: DataFrame, datasets: list[str]) -> set[str]:
-        """The files of ``datasets`` that ``df``, a frame over ``log()``,
-        reads: Spark lists them when the frame is made, so this is
-        exactly what collecting it returns, in log_files' form."""
-        dirs = {f"dataset={ds}" for ds in datasets}
-        paths = (unquote(urlparse(u).path) for u in df.inputFiles())
-        return {p for p in paths
-                if os.path.basename(os.path.dirname(p)) in dirs}
+    def log_frame(self, paths) -> DataFrame:
+        """The rows of exactly the log files ``paths`` (as log_files
+        returns them) as one frame, like ``log()``'s: the Spark twin of
+        log_rows."""
+        return (self.spark.read.schema(ENTITY_SCHEMA)
+                .option("basePath", os.path.abspath(self.log_dir))
+                .parquet(*sorted(paths)))
 
     def entities(self, dataset: str) -> DataFrame:
         return latest(self.log([dataset]))
@@ -843,9 +847,21 @@ class EntityStore:
         ``dataset=X.old-*`` rollback dirs under the log. Both are
         invisible to readers (never listed in the registry, never
         matched by the ``dataset=`` partition glob), so deleting them is
-        semantically a no-op. Returns the removed paths."""
+        semantically a no-op — except where a compaction crashed between
+        its two renames: a registered dataset whose partition is missing
+        gets its newest ``.old-*`` back first. Returns the removed
+        paths."""
         removed: list[str] = []
+        registered = set(self.list_datasets())
         with _root_lock(self.root):
+            olds = sorted((os.path.join(self.log_dir, n) for n in os.listdir(self.log_dir)
+                           if n.startswith("dataset=") and ".old-" in n),
+                          key=os.path.getmtime, reverse=True)
+            for old in olds:
+                part = old[:old.rindex(".old-")]
+                ds = os.path.basename(part)[len("dataset="):]
+                if ds in registered and not os.path.isdir(part):
+                    os.replace(old, part)
             for name in os.listdir(self.root):
                 if name.startswith("_compact-"):
                     path = os.path.join(self.root, name)
@@ -880,12 +896,13 @@ class EntityStore:
         stage = os.path.join(self.root, f"_compact-{uuid.uuid4().hex}")
         compacted.drop("dataset").write.mode("overwrite").parquet(stage)
         old = part + f".old-{uuid.uuid4().hex}"
-        os.replace(part, old)
-        try:
-            os.replace(stage, part)
-        except OSError:
-            os.replace(old, part)  # roll back
-            raise
+        with _root_lock(self.root):  # vacuum() never sees the gap between
+            os.replace(part, old)
+            try:
+                os.replace(stage, part)
+            except OSError:
+                os.replace(old, part)  # roll back
+                raise
         shutil.rmtree(old, ignore_errors=True)
         # no version is added: listeners get the store's current tick
         self._emit([dataset], self._read_meta()["counter"])

@@ -37,7 +37,7 @@ from datahub_spark.server import UdaServer
 from datahub_spark.session import local_frame
 
 WAIT_S = 30  # upper bound on any one wait; no test sleeps
-NULL = "NULL"  # an entity value that stores NULL props
+NULL = "NULL"  # an entity value that stores NULL props, or a NULL ref list
 
 
 def _props(value):
@@ -45,6 +45,8 @@ def _props(value):
 
 
 def _refs(refs):
+    if refs == NULL:
+        return {"p:r": None}
     return {"p:r": list(refs)} if refs else {}
 
 
@@ -348,9 +350,63 @@ def test_unmerged_lookup_is_the_newest_live_partial_on_both_paths(spark, tmp_pat
             srv.stop()
 
 
+def test_a_null_ref_list_is_served_as_stored_on_both_paths(spark, tmp_path):
+    """A stored NULL ref list (which a job's frame can write) is served as
+    ``null`` by the index and by the Spark path, in pages and in merged
+    and unmerged lookups."""
+    store = S.EntityStore(spark, str(tmp_path / "store"))
+    _commit(store, {"a": [("e:1", False, "x", NULL)], "b": [("e:1", False, "y", ["e:2"])]})
+    _commit(store, {"b": [("e:2", False, "z", NULL)]})
+    servers = [UdaServer(store), _capped(store)]
+    index, spark_path = [srv.start() for srv in servers]
+    try:
+        assert _served_bytes(index, ["a", "b"]) == _served_bytes(spark_path, ["a", "b"])
+        for base in (index, spark_path):
+            assert json.loads(_fetch(base, "/query", {"entityId": "e:2"}))[1]["refs"] == \
+                {"p:r": None}
+            assert b'"refs":{"p:r":null}' in _fetch(base, "/datasets/a/changes")
+    finally:
+        for srv in servers:
+            srv.stop()
+
+
+def test_a_null_ref_element_is_a_change_on_both_dedup_paths(spark, tmp_path):
+    """A served POST that only adds a NULL ref element — ["x"] to
+    ["x", null], or [] to [null] — commits a version, through the
+    index's dedup and through store_entities' (a cap of 0)."""
+    for name, make in (("index", UdaServer), ("spark", _capped)):
+        store = S.EntityStore(spark, str(tmp_path / name))
+        srv = make(store)
+        base = srv.start()
+        try:
+            for refs in ([["x"], ["x", None]], [[], [None]]):
+                for r in refs + refs[-1:]:  # the repeat is unchanged
+                    _fetch(base, "/datasets/d/entities", [{"id": "e:1", "refs": {"p:r": r}}])
+            got = [(r["refs"] or {}).get("p:r") for r in store.log(["d"]).orderBy("recorded").collect()]
+            assert got == [["x"], ["x", None], [], [None]], name
+        finally:
+            srv.stop()
+
+
+def test_a_served_post_commits_one_file(spark, tmp_path):
+    """A plain served POST stages its body chunk as one partition, so
+    each commit adds one file to the log."""
+    store = S.EntityStore(spark, str(tmp_path / "store"))
+    srv = UdaServer(store)
+    base = srv.start()
+    try:
+        for n in (1, 2):
+            _fetch(base, "/datasets/d/entities",
+                   [{"id": f"e:{i}", "props": {"p:v": str(n)}} for i in range(1000)])
+            assert len(store.log_files(["d"])) == n
+        assert store.log(["d"]).count() == 2000
+    finally:
+        srv.stop()
+
+
 ids = st.sampled_from(["e:0", "e:1", "e:2", "e:3"])
 entity = st.tuples(ids, st.booleans(), st.sampled_from(["x", "y", None, NULL]),
-                   st.lists(st.none() | ids, max_size=2))
+                   st.lists(st.none() | ids, max_size=2) | st.just(NULL))
 batch = st.lists(entity, min_size=1, max_size=4)
 names = st.sampled_from(["a", "b", "c"])
 step = st.one_of(
@@ -366,7 +422,7 @@ step = st.one_of(
 @given(st.lists(step, min_size=2, max_size=6), batch)
 @example(steps=[  # every kind of step at least once
     ("commit", {"a": [("e:0", False, "x", ["e:1"]), ("e:1", False, NULL, [None])],
-                "b": [("e:0", False, "x", ["e:2"])]}, None),
+                "b": [("e:0", False, "x", ["e:2"]), ("e:1", False, "y", NULL)]}, None),
     ("wal", "a", [("e:1", True, "y", []), ("e:2", False, None, ["e:0"])]),
     ("other", "b", [("e:0", False, None, ["e:1", "e:1"])]),
     ("post", "a", [("e:2", False, None, ["e:0"]), ("e:3", False, "x", []),
@@ -385,7 +441,7 @@ def test_followed_index_equals_a_fresh_build(spark, tmp_path_factory, monkeypatc
     serves the bytes and keeps the POSTed rows the Spark path does.
 
     The steps cover tombstones, NULL props and prop values, NULL ref
-    elements, partials of one id in several datasets, and POSTed rows
+    lists and elements, partials of one id in several datasets, and POSTed rows
     tied on (recorded, seq). A POST keeps one row per id, because the
     Spark path orders rows tied on (recorded, seq, id) arbitrarily."""
     root = str(tmp_path_factory.mktemp("followed"))

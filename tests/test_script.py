@@ -369,7 +369,7 @@ def test_lookup_index_ties_break_by_dataset_not_frame_order(spark):
     a = _entities(spark, [("x:1", 5, 1, False, {"p:v": "a"}, {"p:r": ["y:a"]}, "a")])
     b = _entities(spark, [("x:1", 5, 1, False, {"p:v": "b"}, {"p:r": ["y:b"]}, "b")])
     ab, ba = SC.build_lookup_index(a, b), SC.build_lookup_index(b, a)
-    assert ab["by_id"]["x:1"]["Properties"] == {"p:v": "b"}
+    assert ab["by_id"]["x:1"]["props"] == {"p:v": "b"}
     assert ab["by_id"] == ba["by_id"] and ab["inverse"] == ba["inverse"]
     assert list(ab["inverse"]) == [("p:r", "y:b")]
 
@@ -420,13 +420,34 @@ def test_fn_cache_is_content_keyed_and_bounded(spark, people):
 def test_fn_cache_key_covers_dataset_changes():
     # a scoped Query and GetDatasetChanges read the per-dataset change
     # rows, so two indexes that differ only there must not share a key
-    ent = {"ID": "x:1", "Recorded": 2, "Seq": 0, "IsDeleted": False,
-           "Properties": {}, "References": {}, "Dataset": "a"}
-    old = dict(ent, Recorded=1)
-    one = {"by_id": {"x:1": ent}, "inverse": {}, "changes": {"a": [ent]}}
-    two = {"by_id": {"x:1": ent}, "inverse": {}, "changes": {"a": [old, ent]}}
+    ent = {"id": "x:1", "recorded": 2, "seq": 0, "deleted": False,
+           "props": {}, "refs": {}, "dataset": "a"}
+    one = SC.fold_lookup_index(SC._EMPTY_INDEX, [ent])
+    two = SC.fold_lookup_index(SC._EMPTY_INDEX, [dict(ent, recorded=1), ent])
+    assert one["by_id"] == two["by_id"] and one["inverse"] == two["inverse"]
     code = "function transform_entities(es) { return es; }"
     assert SC._index_digest(code, {}, one) != SC._index_digest(code, {}, two)
+
+
+def test_lookup_rows_with_null_ref_elements_run(spark, people):
+    """A lookup row may hold a NULL ref element, whose edge has a None
+    target: the worker cache key still sorts the edges, and the script
+    sees the element as null."""
+    odd = _entities(spark, [("o:1", 1, 0, False, None, {"p:r": [None, "p:1"]}, "odd")])
+    code = """
+function transform_entities(entities) {
+    for (var e of entities) {
+        var hits = Query([GetId(e)], "p:r", true);
+        SetProperty(e, "p", "referrers", hits.length);
+        SetProperty(e, "p", "null_first", FindById("o:1").References["p:r"][0] === null);
+    }
+    return entities;
+}
+"""
+    out = {r["id"]: r["props"] for r in
+           SC.script_transform(people, code, lookup=[people, odd]).collect()}
+    assert out["p:1"]["p:referrers"] == "1" and out["p:2"]["p:referrers"] == "0"
+    assert out["p:1"]["p:null_first"] == "true"
 
 
 def test_library_never_executes_python_source():

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from datahub_spark import store as S
@@ -668,8 +670,52 @@ def test_payload_text_is_payload_digest_on_the_driver(spark):
         (False, {}, {}), (True, None, None), (False, {"p:a": None}, {"p:r": [None]}),
         (False, {"p:a": ""}, {"p:r": []}), (False, {"p:b": "2", "p:a": "1é"},
                                               {"p:r": ["y", None, "x"], "p:s": ["z"]}),
+        (False, {}, {"p:r": ["x"]}), (False, {}, {"p:r": ["x", None]}),
+        (False, {}, {"p:r": []}), (False, {}, {"p:r": [None]}), (False, {}, {"p:r": None}),
     ]
     frame = spark.createDataFrame([(f"e:{i}", 1, 0, *p) for i, p in enumerate(payloads)],
                                   uda.ROW_SCHEMA)
     got = {r["id"]: r["d"] for r in frame.select("id", S.payload_digest().alias("d")).collect()}
     assert got == {f"e:{i}": S.payload_text(*p) for i, p in enumerate(payloads)}
+    # a NULL ref element is a change: ["x"] -> ["x", null], [] -> [null]
+    assert len(set(got.values())) == len(payloads)
+    # rows without NULL elements keep the digest the seq backfill and
+    # compaction have always computed
+    assert got["e:1"] == "true\x04\x04" and got["e:5"] == "false\x04\x04p:r\x01x"
+
+
+class _Crash(BaseException):
+    """A process dying mid-operation: no handler runs."""
+
+
+def test_vacuum_after_a_crashed_compaction_keeps_every_row(spark, tmp_path, monkeypatch):
+    """A compaction that dies between its two renames leaves the dataset
+    without a partition; vacuum (startup GC) puts the old one back
+    before it removes the leftovers."""
+    es = S.EntityStore(spark, str(tmp_path / "store"))
+    for v in ("1", "1", "2"):
+        es.store_entities("d", spark.createDataFrame([row("x", 0, 0, False, {"a": v})],
+                                                     ENTITY_SCHEMA).drop("dataset", "recorded"),
+                          skip_unchanged=False)
+    before = sorted(map(tuple, es.log(["d"]).collect()))
+    replace = S.os.replace
+
+    def crash_on_swap(src, dst):
+        if "_compact-" in src:
+            raise _Crash()
+        return replace(src, dst)
+
+    monkeypatch.setattr(S.os, "replace", crash_on_swap)
+    try:
+        es.compact("d")
+        raise AssertionError("the compaction did not crash")
+    except _Crash:
+        pass
+    monkeypatch.setattr(S.os, "replace", replace)
+    assert not es.has_data("d")
+    removed = es.vacuum()
+    assert sorted(map(tuple, es.log(["d"]).collect())) == before
+    assert any("_compact-" in p for p in removed)
+    assert not [n for n in os.listdir(es.log_dir) if ".old-" in n]
+    es.compact("d")  # the restored partition compacts as usual
+    assert es.log(["d"]).count() == 2
