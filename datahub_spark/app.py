@@ -43,30 +43,22 @@ def compute_store_statistics(store: "S.EntityStore") -> dict:
     scheduled statistics updater walks every Badger key and caches
     counts + key/value sizes under a meta key,
     service/scheduler/statistics_update.go:43-99). The parquet analog
-    reads FOOTERS only — row counts and byte sizes per dataset come
-    from file metadata, no Spark job and no data scan, so the updater
-    stays cheap however large the store grows."""
+    reads FOOTERS only, of the files the store's state lists — row
+    counts and byte sizes per dataset come from file metadata, no Spark
+    job and no data scan, so the updater stays cheap however large the
+    store grows."""
     import pyarrow.parquet as pq
 
     out: dict = {"datasets": {}, "all": {"rows": 0, "bytes": 0, "files": 0}}
-    for ds in store.list_datasets():
-        part = os.path.join(store.log_dir, f"dataset={ds}")
-        rows = size = files = 0
-        try:
-            names = sorted(os.listdir(part))
-        except FileNotFoundError:
-            names = []
-        for fn in names:
-            if not fn.endswith(".parquet"):
-                continue
-            path = os.path.join(part, fn)
-            size += os.path.getsize(path)
-            rows += pq.read_metadata(path).num_rows
-            files += 1
-        out["datasets"][ds] = {"rows": rows, "bytes": size, "files": files}
+    state = store.state()
+    for ds in sorted(state.datasets):
+        paths = store.log_files([ds], at=state)
+        rows = sum(pq.read_metadata(p).num_rows for p in paths)
+        size = sum(os.path.getsize(p) for p in paths)
+        out["datasets"][ds] = {"rows": rows, "bytes": size, "files": len(paths)}
         out["all"]["rows"] += rows
         out["all"]["bytes"] += size
-        out["all"]["files"] += files
+        out["all"]["files"] += len(paths)
     return out
 
 

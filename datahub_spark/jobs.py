@@ -1009,10 +1009,6 @@ class FullSyncSession:
         for b in self._batches[1:]:
             snapshot = snapshot.unionByName(b)
         tombstones = None
-        # gate on committed FILES, not registry membership: a crash
-        # between commit renames and the registry write (ADVICE r2)
-        # leaves data readable while list_datasets() omits it — gating
-        # on the registry would silently skip tombstones then
         if self.store.has_data(self.dataset):
             old = latest(self.store.log([self.dataset]), include_deleted=False)
             tombstones = fullsync_tombstones(old, snapshot).drop("dataset")

@@ -208,6 +208,7 @@ def _differs(cur: dict | None, row: tuple) -> bool:
 @dataclass(frozen=True)
 class _IndexState:
     index: dict | None  # None: the store holds more than the cap
+    version: int        # the store entry it is current with
     files: set          # the log files it covers
 
 
@@ -345,7 +346,7 @@ class UdaServer:
         # the lookup index and the log files it covers (_query_index)
         self.index_max_rows = script.LOOKUP_INDEX_MAX_ROWS
         self._index: _IndexState | None = None
-        self._index_lock = threading.Lock()  # one listing, fold or build at a time
+        self._index_lock = threading.Lock()  # one fold or build at a time
         # jobs API (jobshandler.go / joboperationhandler.go): attach a
         # jobs.Scheduler to serve /jobs CRUD + /job/{id} operations
         self.scheduler = scheduler
@@ -1275,23 +1276,22 @@ class UdaServer:
         return index
 
     def _fresh_index(self) -> _IndexState:
-        """The index as of now. It is current when the log files it covers
-        equal a listing of the registered datasets' log files, which every
-        call makes, so commits through any store on the root, another
-        process's included, show with the next request. A commit only
-        adds files: the files not covered yet are read on the driver
-        without a Spark job and folded in (script.fold_lookup_index), so
-        several commits fold in one pass. When a covered file is gone
-        (compaction, dataset delete or rename) the index is built afresh
-        from one frame over exactly the listed files. A store past the cap
-        stays past it until a covered file is gone, so it is not
-        re-collected per request. One listing, fold or build runs at a
-        time."""
+        """The index as of the store's newest entry (``EntityStore.state``),
+        so commits through any store on the root, another process's
+        included, show with the next request. When entries added files
+        only, the files not covered yet are read on the driver without a
+        Spark job and folded in (script.fold_lookup_index), so several
+        commits fold in one pass. When a covered file is gone (compaction,
+        dataset delete or rename) the index is built afresh from the
+        state's ``log``. A store past the cap stays past it until a
+        covered file is gone, so it is not re-collected per request. One
+        fold or build runs at a time."""
         with self._index_lock:
-            files = self.store.log_files(self.store.list_datasets())
+            snap = self.store.state()
             state = self._index
-            if state is not None and state.files == files:
+            if state is not None and state.version == snap.version:
                 return state
+            files = self.store.log_files(at=snap)
             if state is not None and state.files <= files:
                 index = state.index
                 if index is not None:
@@ -1302,13 +1302,13 @@ class UdaServer:
                     except script.IndexTooBig:
                         index = None
             else:
-                frames = [self.store.log_frame(files)] if files else []
+                frames = [self.store.log(at=snap)] if files else []
                 try:
                     index = script.build_lookup_index(
                         *frames, max_rows=self.index_max_rows)
                 except script.IndexTooBig:
                     index = None
-            self._index = state = _IndexState(index, files)
+            self._index = state = _IndexState(index, snap.version, files)
             return state
 
     def _served_views(self, ds: str | None = None) -> dict | None:

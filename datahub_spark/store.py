@@ -10,6 +10,15 @@ Reference parity:
   - compaction 'deduplicate' strategy DOCUMENTATION.md:2349-2372
   - statistics endpoint               internal/server/statistics.go
 
+Commit protocol (Delta Lake's numbered commit files, VLDB 2020): every
+mutation publishes one entry ``root/commits/<n>.json``, hard-linked from a
+temp file so it appears whole and is never overwritten. It holds the tick,
+the registry changes (dataset configs, ``core.Dataset`` events) and per
+dataset the log files it adds (with their highest ``recorded``) and
+removes. The store's state is the fold of entries ``0..n``; a file under
+``log/`` is visible exactly while the fold lists it. Writers hold a lock
+from tick allocation to publish, so ticks become visible in order.
+
 Scale notes:
   * latest/point-in-time views are ONE aggregation using
     ``max_by(struct(...), (recorded, seq))`` — map-side partial agg
@@ -25,12 +34,14 @@ Scale notes:
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
 import shutil
 import threading
 import uuid
+from dataclasses import dataclass, field
 
 try:  # POSIX cross-process lock; absent on some platforms
     import fcntl
@@ -45,9 +56,11 @@ from datahub_spark.model import ENTITY_SCHEMA
 from datahub_spark.session import local_frame
 
 # per-store-root in-process locks (threads sharing a driver); see
-# EntityStore._mutate_meta
+# EntityStore._writer
 _ROOT_LOCKS: dict[str, threading.Lock] = {}
 _ROOT_LOCKS_GUARD = threading.Lock()
+# the roots whose writer locks the current thread holds
+_WRITING = threading.local()
 
 
 def _root_lock(root: str) -> threading.Lock:
@@ -75,19 +88,13 @@ def check_dataset_name(name: str) -> None:
         raise ValueError(f"invalid dataset name: {name!r}")
 
 
-def _append_dataset_event(meta: dict, name: str, entry: dict,
-                          tick: int, deleted: bool = False) -> None:
-    """Record a dataset lifecycle event in the registry sidecar (inside
-    the _mutate_meta critical section — atomic with the registry change
-    it describes). The ``core.Dataset`` log is materialized from these
-    events on read (core_dataset_log); the catalog is driver-bounded by
-    nature, so the event list stays tiny at any corpus scale."""
-    cfg = {k: v for k, v in (entry or {}).items()
-           if k != "renamedFrom" and v}
-    meta.setdefault("dataset_events", []).append({
-        "name": name, "recorded": tick, "deleted": bool(deleted),
-        "cfg": cfg,
-    })
+def _dataset_event(name: str, cfg: dict, tick: int, deleted: bool = False) -> dict:
+    """A dataset lifecycle event, published in the entry of the registry
+    change it describes. The ``core.Dataset`` log is materialized from
+    these events on read (core_dataset_log); the catalog is driver-bounded
+    by nature, so the event list stays tiny at any corpus scale."""
+    return {"name": name, "recorded": tick, "deleted": bool(deleted),
+            "cfg": {k: v for k, v in cfg.items() if v}}
 
 
 def _dataset_event_row(ev: dict, seq: int) -> tuple:
@@ -132,8 +139,7 @@ def latest(df: DataFrame, include_deleted: bool = False, key: tuple[str, ...] = 
     caller knows every entity has exactly one version (a freshly ingested
     snapshot; the store tracks this per dataset), the per-key aggregation
     — a full shuffle of the widest columns — is provably the identity and
-    is skipped. At 100 TB of static reference data this removes the
-    biggest shuffle in every read."""
+    is skipped."""
     if single_version:
         return df if include_deleted else df.filter(~F.col("deleted"))
     row = F.max_by(F.struct(*[F.col(c) for c in df.columns]), _order_key(df))
@@ -309,9 +315,7 @@ def retention_gc(df: DataFrame, horizon: int) -> DataFrame:
     Survivors decompose exactly into (a) rows above the horizon — a
     pushed-down filter, no shuffle — and (b) each entity's newest row
     when that row itself is at/below the horizon — the codebase's own
-    ``latest`` max_by HashAggregate. No Window: the previous
-    formulation's max-over-partition shuffled AND sorted every full-width
-    row, the last full-sort in a maintenance path."""
+    ``latest`` max_by HashAggregate, with no Window sort."""
     horizon = int(horizon)
     fresh = df.filter(F.col("recorded") > F.lit(horizon))
     newest_old = latest(df, include_deleted=True) \
@@ -325,7 +329,7 @@ def clean_deleted(df: DataFrame) -> DataFrame:
     nothing remains to serve for them, so their history is garbage.
     (The reference's dataset-level purge — entities of datasets in
     ``store.deletedDatasets`` — is handled eagerly by
-    ``EntityStore.delete_dataset``, which removes the log partition.)
+    ``EntityStore.delete_dataset``, which removes the dataset's files.)
 
     max_by aggregation over a NARROW (key + deleted flag) projection,
     then a co-partitioned left_anti join back onto the log — no window
@@ -355,29 +359,123 @@ def dataset_stats(df: DataFrame) -> DataFrame:
     return per.unionByName(allrow)
 
 
+# staging directories under the root, for commits and compactions alike
+_STAGING = "_staging-"
+
+
+@dataclass(frozen=True)
+class StoreState:
+    """The fold of entries 0..version: the registry (name -> config), the
+    ``core.Dataset`` events, and each dataset's visible log files (name ->
+    highest ``recorded``). Never mutated, so readers can hold one."""
+
+    version: int = -1
+    tick: int = 0
+    datasets: dict = field(default_factory=dict)
+    events: tuple = ()
+    files: dict = field(default_factory=dict)
+
+
+def _fold(state: StoreState, entries: list[dict]) -> StoreState:
+    datasets, files, events = dict(state.datasets), dict(state.files), list(state.events)
+    for entry in entries:
+        for name, cfg in entry["registry"].items():
+            if cfg is None:
+                datasets.pop(name, None)
+            else:
+                datasets[name] = cfg
+        events.extend(entry["events"])
+        for ds, names in entry["remove"].items():
+            gone = set(names)
+            files[ds] = {fn: top for fn, top in files.get(ds, {}).items() if fn not in gone}
+        for ds, added in entry["add"].items():
+            files[ds] = {**files.get(ds, {}), **added}
+    return StoreState(state.version + len(entries),
+                      entries[-1]["tick"] if entries else state.tick,
+                      datasets, tuple(events), {ds: f for ds, f in files.items() if f})
+
+
+def _read_entries(commits_dir: str, start: int) -> list[dict]:
+    """The entries numbered ``start`` on, up to the first number not
+    published yet."""
+    out: list[dict] = []
+    while True:
+        try:
+            with open(os.path.join(commits_dir, f"{start + len(out)}.json")) as f:
+                out.append(json.load(f))
+        except FileNotFoundError:
+            return out
+
+
+def _max_recorded_in(path: str) -> int:
+    """Highest ``recorded`` in a parquet log file, from the column
+    statistics in its footer. A row group written without statistics
+    counts as nothing, which can only lower the value."""
+    import pyarrow.parquet as pq
+
+    meta = pq.read_metadata(path)
+    col = meta.schema.names.index("recorded")
+    best = 0
+    for i in range(meta.num_row_groups):
+        stats = meta.row_group(i).column(col).statistics
+        if stats is not None and stats.has_min_max:
+            best = max(best, stats.max)
+    return best
+
+
+def _legacy_entry(registry_path: str, log_dir: str) -> dict:
+    """Entry 0 of a store written before the commit log: the registry
+    file (a tick-0 create per dataset without events) and every file under
+    ``log/``. A rename or compaction stopped midway there is refused."""
+    with open(registry_path) as f:
+        meta = json.load(f)
+    for name, cfg in meta["datasets"].items():
+        if "renamedFrom" in cfg:
+            raise ValueError(f"{registry_path}: the rename to {name} did not finish")
+    files = {}
+    for part in sorted(os.listdir(log_dir)):
+        path = os.path.join(log_dir, part)
+        if ".old-" in part:
+            raise ValueError(f"{path}: left by a compaction that did not finish")
+        if part.startswith("dataset="):
+            files[part[len("dataset="):]] = {
+                fn: _max_recorded_in(os.path.join(path, fn))
+                for fn in sorted(os.listdir(path)) if fn.endswith(".parquet")}
+    events = list(meta.get("dataset_events") or [])
+    seen = {ev["name"] for ev in events}
+    events += [{"name": name, "recorded": 0, "deleted": False, "cfg": cfg}
+               for name, cfg in sorted(meta["datasets"].items()) if name not in seen]
+    return {"tick": meta["counter"], "registry": meta["datasets"], "events": events,
+            "add": {ds: f for ds, f in files.items() if f}}
+
+
 class EntityStore:
     """Persistent parquet-backed store (dataset partition per dataset).
 
-    Layout: ``root/log/dataset=<name>/*.parquet`` plus a JSON sidecar for
-    dataset registry + namespace context, mirroring the reference's
-    dsmanager (internal/server/dsmanager.go) at file granularity.
-    Appends are new parquet files: immutable, concurrent-reader safe.
+    Layout: ``root/log/dataset=<name>/*.parquet`` plus the commit entries
+    ``root/commits/<n>.json`` (the registry of the reference's dsmanager,
+    internal/server/dsmanager.go, is folded from them). Every read takes
+    one ``state()``, so it sees each commit whole or not at all.
     """
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
         self.log_dir = os.path.join(root, "log")
-        self.meta_path = os.path.join(root, "datasets.json")
+        self.commits_dir = os.path.join(root, "commits")
         os.makedirs(self.log_dir, exist_ok=True)
-        if not os.path.exists(self.meta_path):
-            self._write_meta({"datasets": {}, "counter": 0})
-        else:
-            self._recover_renames()
+        os.makedirs(self.commits_dir, exist_ok=True)
+        self._state = StoreState()
+        self._state_mu = threading.Lock()
         # event bus (internal/server/events_test.go): listeners fire after
         # a committed write, with (dataset, recorded); the scheduler wires
         # onchange jobs here. In-process analogue of the dataset topics.
         self._listeners: list = []
+        legacy = os.path.join(root, "datasets.json")
+        if os.path.exists(legacy) and self.state().version < 0:
+            with self._writer() as state:
+                if state.version < 0:
+                    self._publish(state, **_legacy_entry(legacy, self.log_dir))
 
     def add_listener(self, fn) -> None:
         """Register fn(dataset: str, recorded: int), called after commit;
@@ -390,174 +488,163 @@ class EntityStore:
             for ds in datasets:
                 fn(ds, recorded)
 
-    # -- registry ------------------------------------------------------------
+    # -- commit log ------------------------------------------------------------
 
-    def _read_meta(self) -> dict:
-        with open(self.meta_path) as f:
-            return json.load(f)
+    def state(self) -> StoreState:
+        """The cached fold, extended by any entries published since."""
+        with self._state_mu:
+            new = _read_entries(self.commits_dir, self._state.version + 1)
+            if new:
+                self._state = _fold(self._state, new)
+            return self._state
 
-    def _write_meta(self, meta: dict) -> None:
-        tmp = self.meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, self.meta_path)
-
-    def _mutate_meta(self, fn):
-        """Serialized read-modify-write of the registry sidecar. The
-        reference holds a store-wide lock for registry/tick mutations
-        (concurrent_contextual_store_test.go is its pin); here the
-        critical section is guarded by a per-root process lock (all
-        EntityStore instances over the same root share it) plus flock on
-        a sidecar lockfile, so concurrent jobs in one driver — or two
-        driver processes on a shared filesystem that honors flock —
-        can't lose a dataset registration or share a transaction tick.
-        Returns fn's result."""
+    @contextlib.contextmanager
+    def _writer(self):
+        """Hold the writer locks and yield the current state, like the
+        reference's store-wide lock (concurrent_contextual_store_test.go):
+        a per-root process lock plus flock on a lockfile, so threads and
+        driver processes publish one at a time. Re-entrant per thread."""
+        held = getattr(_WRITING, "roots", frozenset())
+        key = os.path.abspath(self.root)
+        if key in held:  # this thread holds them already
+            yield self.state()
+            return
         with _root_lock(self.root):
-            lockfile = os.path.join(self.root, ".meta.lock")
-            fd = os.open(lockfile, os.O_CREAT | os.O_RDWR)
+            fd = os.open(os.path.join(self.root, ".lock"), os.O_CREAT | os.O_RDWR)
             try:
                 if fcntl is not None:
                     fcntl.flock(fd, fcntl.LOCK_EX)
-                meta = self._read_meta()
-                result = fn(meta)
-                self._write_meta(meta)
-                return result
+                _WRITING.roots = held | {key}
+                yield self.state()
             finally:
+                _WRITING.roots = held
                 os.close(fd)  # releases the flock
 
+    def _publish(self, state: StoreState, tick: int, registry: dict | None = None,
+                 events=(), add: dict | None = None,
+                 remove: dict | None = None) -> StoreState:
+        """Publish entry ``state.version + 1`` under ``_writer`` (which
+        yielded ``state``); the files in ``add`` are already placed."""
+        entry = {"tick": tick, "registry": registry or {}, "events": list(events),
+                 "add": add or {}, "remove": remove or {}}
+        tmp = os.path.join(self.commits_dir, f".tmp-{uuid.uuid4().hex}")
+        with open(tmp, "w") as f:
+            json.dump(entry, f)
+            f.flush()
+            os.fsync(f.fileno())
+        try:
+            os.link(tmp, os.path.join(self.commits_dir, f"{state.version + 1}.json"))
+        finally:
+            os.unlink(tmp)
+        return self.state()
+
+    def _partition(self, dataset: str) -> str:
+        return os.path.join(self.log_dir, f"dataset={dataset}")
+
+    def _place(self, stage: str, dataset: str, prefix: str = "") -> dict[str, int]:
+        """Move a staged write's parquet files into the dataset's partition,
+        unlisted until published; returns the entry's ``add``."""
+        dest = self._partition(dataset)
+        os.makedirs(dest, exist_ok=True)
+        placed = {}
+        for fn in sorted(os.listdir(stage)):
+            if fn.endswith(".parquet"):
+                placed[prefix + fn] = _max_recorded_in(os.path.join(stage, fn))
+                os.replace(os.path.join(stage, fn), os.path.join(dest, prefix + fn))
+        return placed
+
+    def _unlink(self, dataset: str, names) -> None:
+        """Unlink files an entry removed, and the partition once empty."""
+        part = self._partition(dataset)
+        for fn in names:
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(os.path.join(part, fn))
+        with contextlib.suppress(OSError):
+            os.rmdir(part)
+
+    # -- registry ------------------------------------------------------------
+
     def create_dataset(self, name: str, public_namespaces: list[str] | None = None,
-                       config: dict | None = None,
-                       _tick: int | None = None) -> None:
+                       config: dict | None = None) -> None:
         """Register a dataset; ``config`` carries the reference's
         CreateDatasetConfig extras (ProxyDatasetConfig /
         VirtualDatasetConfig, dsmanager.go:102-106) in the registry.
         A NEW registration also appends a create event to the
-        ``core.Dataset`` meta-log (dsmanager.go:150-160). ``_tick``
-        (internal) records the event at an already-allocated
-        transaction tick — a dataset implicitly created by a data write
-        shares that write's tick, like the reference's single txn —
-        instead of allocating a fresh one."""
+        ``core.Dataset`` meta-log (dsmanager.go:150-160)."""
         check_dataset_name(name)
         entry = {"publicNamespaces": public_namespaces or []}
         if config:
             entry.update(config)
-
-        def step(meta):
-            if name in meta["datasets"] or name == CORE_DATASET:
-                return None
-            meta["datasets"][name] = entry
-            if _tick is None:
-                meta["counter"] += 1
-                tick = meta["counter"]
-            else:
-                tick = _tick
-            _append_dataset_event(meta, name, entry, tick)
-            return tick
-
-        tick = self._mutate_meta(step)
-        if tick is not None:
-            self._emit([CORE_DATASET], tick)
+        with self._writer() as state:
+            if name in state.datasets or name == CORE_DATASET:
+                return
+            tick = state.tick + 1
+            self._publish(state, tick, registry={name: entry},
+                          events=[_dataset_event(name, entry, tick)])
+        self._emit([CORE_DATASET], tick)
 
     def dataset_config(self, name: str) -> dict | None:
         """The registry entry for ``name`` (None when unknown)."""
-        return self._read_meta()["datasets"].get(name)
+        return self.state().datasets.get(name)
 
     def delete_dataset(self, name: str) -> None:
-        """Unregister + drop the log partition; tombstones the dataset's
-        ``core.Dataset`` entity (dsmanager.go:280-289). Deleting the
-        meta-dataset itself is refused (dsmanager.go:242-244)."""
+        """Unregister the dataset and remove its files in one entry, which
+        tombstones its ``core.Dataset`` entity (dsmanager.go:280-289).
+        The meta-dataset itself is refused (dsmanager.go:242-244)."""
         if name == CORE_DATASET:
             raise ValueError(f"cannot delete {CORE_DATASET}")
-
-        def step(meta):
-            entry = meta["datasets"].pop(name, None)
-            if entry is None:
-                return None
-            meta["counter"] += 1
-            _append_dataset_event(meta, name, entry, meta["counter"],
-                                  deleted=True)
-            return meta["counter"]
-
-        tick = self._mutate_meta(step)
-        shutil.rmtree(os.path.join(self.log_dir, f"dataset={name}"), ignore_errors=True)
-        if tick is not None:
-            self._emit([CORE_DATASET], tick)
-
-    def rename_dataset(self, name: str, new_name: str) -> None:
-        """UpdateDataset with a new ID (dsmanager.go:108-110).
-
-        Crash-safe ordering: the registry is committed FIRST (with a
-        ``renamedFrom`` marker), the log partition is moved second, and
-        the marker is cleared last. A crash between the steps leaves the
-        marker in place; ``_recover_renames`` (run on every store open)
-        completes the move from it. Moving before the registry write
-        would strand the data under a name the registry doesn't know."""
-        new_name = (new_name or "").strip()
-        check_dataset_name(new_name)
-
-        if name == CORE_DATASET:
-            raise ValueError(f"cannot update {CORE_DATASET}")
-
-        def step1(meta):
-            if name not in meta["datasets"]:
-                raise KeyError(name)
-            if new_name in meta["datasets"] or new_name == CORE_DATASET:
-                raise ValueError(f"dataset {new_name} already exists")
-            entry = meta["datasets"].pop(name)
-            entry["renamedFrom"] = name
-            meta["datasets"][new_name] = entry
-            # core entity follows the rename: tombstone the old id, then
-            # recreate under the new one (dsmanager.go:209-233)
-            meta["counter"] += 1
-            _append_dataset_event(meta, name, entry, meta["counter"],
-                                  deleted=True)
-            meta["counter"] += 1
-            _append_dataset_event(meta, new_name, entry, meta["counter"])
-            return meta["counter"]
-
-        tick = self._mutate_meta(step1)
-        src = os.path.join(self.log_dir, f"dataset={name}")
-        dst = os.path.join(self.log_dir, f"dataset={new_name}")
-        if os.path.isdir(src) and not os.path.isdir(dst):
-            shutil.move(src, dst)
-        self._mutate_meta(
-            lambda meta: meta["datasets"].get(new_name, {}).pop(
-                "renamedFrom", None))
+        with self._writer() as state:
+            cfg = state.datasets.get(name)
+            if cfg is None:
+                return
+            files = state.files.get(name, {})
+            tick = state.tick + 1
+            self._publish(state, tick, registry={name: None},
+                          events=[_dataset_event(name, cfg, tick, deleted=True)],
+                          remove={name: sorted(files)})
+            self._unlink(name, files)
         self._emit([CORE_DATASET], tick)
 
-    def _recover_renames(self) -> None:
-        """Finish any rename whose directory move was interrupted: an
-        entry still carrying ``renamedFrom`` moves its old partition
-        under the new name (if not already moved), then drops the
-        marker. Idempotent; runs under the registry lock."""
-        def fix(meta):
-            for new_name, entry in meta["datasets"].items():
-                old = entry.pop("renamedFrom", None)
-                if not old:
-                    continue
-                src = os.path.join(self.log_dir, f"dataset={old}")
-                dst = os.path.join(self.log_dir, f"dataset={new_name}")
-                if os.path.isdir(src) and not os.path.isdir(dst):
-                    shutil.move(src, dst)
-
-        self._mutate_meta(fix)
+    def rename_dataset(self, name: str, new_name: str) -> None:
+        """UpdateDataset with a new ID (dsmanager.go:108-110): the files
+        are hard-linked under the new partition, then one entry moves
+        them and the registry entry."""
+        new_name = (new_name or "").strip()
+        check_dataset_name(new_name)
+        if name == CORE_DATASET:
+            raise ValueError(f"cannot update {CORE_DATASET}")
+        with self._writer() as state:
+            cfg = state.datasets.get(name)
+            if cfg is None:
+                raise KeyError(name)
+            if new_name in state.datasets or new_name == CORE_DATASET:
+                raise ValueError(f"dataset {new_name} already exists")
+            files = state.files.get(name, {})
+            moved = {}
+            for fn, top in files.items():
+                # a fresh name: a file name is never listed twice in the log
+                link = f"{uuid.uuid4().hex}.parquet"
+                os.makedirs(self._partition(new_name), exist_ok=True)
+                os.link(os.path.join(self._partition(name), fn),
+                        os.path.join(self._partition(new_name), link))
+                moved[link] = top
+            # core entity follows the rename: tombstone the old id, then
+            # recreate under the new one (dsmanager.go:209-233)
+            tick = state.tick + 2
+            self._publish(state, tick, registry={name: None, new_name: cfg},
+                          events=[_dataset_event(name, cfg, tick - 1, deleted=True),
+                                  _dataset_event(new_name, cfg, tick)],
+                          add={new_name: moved}, remove={name: sorted(files)})
+            self._unlink(name, files)
+        self._emit([CORE_DATASET], tick)
 
     def list_datasets(self) -> list[str]:
-        return sorted(self._read_meta()["datasets"])
+        return sorted(self.state().datasets)
 
     def has_data(self, dataset: str) -> bool:
-        """True iff committed log files exist for the dataset — robust to
-        the crash window between the commit renames and the registry
-        write (execute_transaction): data can be readable while the
-        dataset is briefly absent from list_datasets(). Consumers that
-        gate on prior state (fullsync tombstones, write-time dedup) must
-        use this, not registry membership, or a crash in that window
-        silently skips their diff against the existing data."""
-        part = os.path.join(self.log_dir, f"dataset={dataset}")
-        try:
-            return any(fn.endswith(".parquet") for fn in os.listdir(part))
-        except FileNotFoundError:
-            return False
+        """True iff the dataset has visible log files. Consumers that gate
+        on prior state (fullsync tombstones, write-time dedup) use this."""
+        return dataset in self.state().files
 
     def dataset_context(self, name: str, nsmgr=None) -> dict:
         """The dataset's ``@context`` object (DOCUMENTATION.md:187-245):
@@ -566,20 +653,12 @@ class EntityStore:
         from datahub_spark.namespaces import NamespaceManager
 
         nsmgr = nsmgr or NamespaceManager()
-        meta = self._read_meta()["datasets"].get(name, {})
+        meta = self.state().datasets.get(name, {})
         public = meta.get("publicNamespaces") or []
         namespaces = nsmgr.context()
         if public:
             namespaces = {p: e for p, e in namespaces.items() if e in public}
         return {"id": "@context", "namespaces": namespaces}
-
-    def next_recorded(self) -> int:
-        """Monotonic txn-time analogue. Allocation is serialized
-        (_mutate_meta), so concurrent transactions get distinct ticks."""
-        def bump(meta):
-            meta["counter"] += 1
-            return meta["counter"]
-        return self._mutate_meta(bump)
 
     # -- writes ----------------------------------------------------------------
 
@@ -592,8 +671,17 @@ class EntityStore:
         different'): rows whose (deleted, props, refs) payload equals the
         entity's current version are dropped before the append — one
         left-join against the latest view's digests, so repeated
-        idempotent syncs don't grow the version log."""
-        if skip_unchanged and self.has_data(dataset):
+        idempotent syncs don't grow the version log. The writer locks are
+        held from the dedup's read to the commit, so it compares against
+        the versions the commit lands on."""
+        with self._writer():
+            return self.execute_transaction(
+                {dataset: self._changed(dataset, df) if skip_unchanged else df}, recorded)
+
+    def _changed(self, dataset: str, df: DataFrame) -> DataFrame:
+        """The rows of ``df`` whose payload differs from their entity's
+        current version in ``dataset``."""
+        if self.has_data(dataset):
             # Digest only the log rows whose ids appear in the incoming
             # batch (semi-join BEFORE latest/digest): an append of K
             # entities against an N-entity log reads/aggregates O(K)
@@ -614,17 +702,15 @@ class EntityStore:
                 .filter(F.col("_cur").isNull() | (F.col("_cur") != F.col("_new")))
                 .drop("_cur", "_new")
             )
-        return self.execute_transaction({dataset: df}, recorded)
+        return df
 
     def execute_transaction(self, dataset_entities: dict[str, DataFrame], recorded: int | None = None) -> int:
-        """Multi-dataset write (store.go:1707 ExecuteTransaction): stage
-        every dataset's files (all Spark work happens here), then commit
-        with fast per-file atomic renames in one tight loop, and only then
-        update the registry. A failure during staging leaves no visible
-        state; the commit window itself is metadata-only renames — a crash
-        inside it can expose a subset of datasets' new files (the reference
-        holds a store-wide lock for true cross-dataset atomicity; a
-        distributed analogue would use a table format's commit protocol).
+        """Multi-dataset write (store.go:1707 ExecuteTransaction), visible
+        whole or not at all: under the writer locks it allocates the tick,
+        stages every dataset's files (all Spark work happens here), places
+        them and publishes one entry that adds them and registers new
+        datasets. A crash before the publish leaves only unlisted files
+        for ``vacuum``. An explicit ``recorded`` keeps the tick.
 
         Rows with NULL recorded/seq/deleted (e.g. from
         ``unionByName(allowMissingColumns=True)``) are coalesced to the
@@ -638,80 +724,75 @@ class EntityStore:
                 "be written directly")
         for ds_name in dataset_entities:
             check_dataset_name(ds_name)
-        rec = recorded if recorded is not None else self.next_recorded()
-        staged: list[tuple[str, str]] = []
-        stage_root = os.path.join(self.root, f"_staging-{uuid.uuid4().hex}")
+        stage_root = os.path.join(self.root, f"{_STAGING}{uuid.uuid4().hex}")
         try:
-            for ds_name, df in dataset_entities.items():
-                # one SQL projection, because each Column-API call is a
-                # JVM round trip that waits for the interpreter lock
-                # while a server answers other requests; ds_name passed
-                # check_dataset_name, so it is safe as a SQL literal
-                cols = df.columns
-                out = df.selectExpr(
-                    "id",
-                    f"coalesce(cast(recorded as bigint), {rec}L) as recorded"
-                    if "recorded" in cols else f"{rec}L as recorded",
-                    "cast(seq as bigint) as seq" if "seq" in cols else "cast(null as bigint) as seq",
-                    "coalesce(deleted, false) as deleted" if "deleted" in cols else "false as deleted",
-                    "props", "refs", f"'{ds_name}' as dataset")
-                # NULL seq backfill: deterministic (content-hashed, fixed
-                # xxhash64 seed — identical across runs and shuffle
-                # schedules, unlike monotonically_increasing_id) and
-                # ABOVE _SEQ_NULL_BASE, so backfilled rows order after
-                # every caller-provided seq in the batch instead of
-                # winning latest()'s tie-break by accident. Fully
-                # map-side: no window/agg pass over the batch. A seq
-                # column declared non-nullable needs none.
-                if "seq" not in cols or df.schema["seq"].nullable:
-                    out = out.withColumn("seq", F.coalesce(F.col("seq"), (
-                        F.lit(_SEQ_NULL_BASE)
-                        + F.pmod(F.xxhash64(F.col("id"), F.col("recorded"), payload_digest()),
-                                 F.lit(1 << 31))
-                    ).cast("long")))
-                stage = os.path.join(stage_root, ds_name)
-                out.write.mode("overwrite").parquet(stage)
-                staged.append((ds_name, stage))
-            for ds_name, stage in staged:
-                dest = os.path.join(self.log_dir, f"dataset={ds_name}")
-                os.makedirs(dest, exist_ok=True)
-                for fn in os.listdir(stage):
-                    if fn.endswith(".parquet"):
-                        os.replace(os.path.join(stage, fn), os.path.join(dest, f"{rec}-{fn}"))
-            for ds_name in dataset_entities:
-                self.create_dataset(ds_name, _tick=rec)
+            with self._writer() as state:
+                tick = state.tick if recorded is not None else state.tick + 1
+                rec = tick if recorded is None else recorded
+                for ds_name, df in dataset_entities.items():
+                    # one SQL projection, because each Column-API call is a
+                    # JVM round trip that waits for the interpreter lock
+                    # while a server answers other requests; ds_name passed
+                    # check_dataset_name, so it is safe as a SQL literal
+                    cols = df.columns
+                    out = df.selectExpr(
+                        "id",
+                        f"coalesce(cast(recorded as bigint), {rec}L) as recorded"
+                        if "recorded" in cols else f"{rec}L as recorded",
+                        "cast(seq as bigint) as seq" if "seq" in cols else "cast(null as bigint) as seq",
+                        "coalesce(deleted, false) as deleted" if "deleted" in cols else "false as deleted",
+                        "props", "refs", f"'{ds_name}' as dataset")
+                    # NULL seq backfill: deterministic (content-hashed, fixed
+                    # xxhash64 seed — identical across runs and shuffle
+                    # schedules, unlike monotonically_increasing_id) and
+                    # ABOVE _SEQ_NULL_BASE, so backfilled rows order after
+                    # every caller-provided seq in the batch instead of
+                    # winning latest()'s tie-break by accident. Fully
+                    # map-side: no window/agg pass over the batch. A seq
+                    # column declared non-nullable needs none.
+                    if "seq" not in cols or df.schema["seq"].nullable:
+                        out = out.withColumn("seq", F.coalesce(F.col("seq"), (
+                            F.lit(_SEQ_NULL_BASE)
+                            + F.pmod(F.xxhash64(F.col("id"), F.col("recorded"), payload_digest()),
+                                     F.lit(1 << 31))
+                        ).cast("long")))
+                    out.write.mode("overwrite").parquet(os.path.join(stage_root, ds_name))
+                add = {ds_name: self._place(os.path.join(stage_root, ds_name), ds_name, f"{rec}-")
+                       for ds_name in dataset_entities}
+                created = {ds_name: {"publicNamespaces": []} for ds_name in dataset_entities
+                           if ds_name not in state.datasets}
+                self._publish(state, tick, registry=created, add=add,
+                              events=[_dataset_event(n, cfg, rec) for n, cfg in created.items()])
         finally:
             shutil.rmtree(stage_root, ignore_errors=True)
+        if created:
+            self._emit([CORE_DATASET], rec)
         self._emit(list(dataset_entities), rec)
         return rec
 
     # -- reads -----------------------------------------------------------------
 
-    def core_dataset_log(self) -> DataFrame:
+    def core_dataset_log(self, at: StoreState | None = None) -> DataFrame:
         """The ``core.Dataset`` meta-log as an entity change DataFrame:
         one version per recorded lifecycle event (create / rename
-        tombstone+create / delete tombstone), plus synthesized tick-0
-        creates for datasets registered before event tracking existed.
-        Composes with latest()/changes()/paging/jobs like any dataset."""
-        meta = self._read_meta()
-        events = list(meta.get("dataset_events") or [])
-        seen = {ev["name"] for ev in events}
-        for name in sorted(meta["datasets"]):
-            if name not in seen and name != CORE_DATASET:
-                events.append({"name": name, "recorded": 0,
-                               "deleted": False,
-                               "cfg": meta["datasets"][name]})
-        rows = [_dataset_event_row(ev, i) for i, ev in enumerate(events)]
+        tombstone+create / delete tombstone). Composes with
+        latest()/changes()/paging/jobs like any dataset."""
+        rows = [_dataset_event_row(ev, i) for i, ev in enumerate((at or self.state()).events)]
         return local_frame(self.spark, rows, ENTITY_SCHEMA)
 
-    def log(self, datasets: list[str] | None = None) -> DataFrame:
+    def log(self, datasets: list[str] | None = None, at: StoreState | None = None) -> DataFrame:
+        """The versions of ``datasets`` (all when empty) visible in state
+        ``at`` (default: current): the partition directories filtered on
+        ``_metadata.file_name``, which prunes the listing at planning, so
+        an unlisted file is never opened. Names are unique in the log."""
         # the meta-dataset is served from the registry's event list when
         # addressed explicitly; whole-log scans stay purely physical so
         # analytics over the stored corpus never mix in catalog rows
+        state = at or self.state()
         if datasets and CORE_DATASET in datasets:
             phys = [d for d in datasets if d != CORE_DATASET]
-            core = self.core_dataset_log()
-            return core.unionByName(self.log(phys)) if phys else core
+            core = self.core_dataset_log(state)
+            return core.unionByName(self.log(phys, state)) if phys else core
         df = (
             self.spark.read.schema(ENTITY_SCHEMA)
             .option("basePath", self.log_dir)
@@ -719,23 +800,18 @@ class EntityStore:
         )
         if datasets:
             df = df.filter(F.col("dataset").isin(datasets))  # partition pruning
-        return df
+        names = [fn for ds in (datasets or state.files) for fn in state.files.get(ds, ())]
+        return df.filter(F.col("_metadata.file_name").isin(names))
 
-    def log_files(self, datasets: list[str]) -> set[str]:
-        """Absolute paths of the committed log files of ``datasets``, one
-        directory listing each. A commit only adds files; compaction,
-        delete and rename replace or remove them, so a path still listed
-        holds the rows it held when it was first read."""
-        out: set[str] = set()
-        for ds in datasets:
-            part = os.path.join(os.path.abspath(self.log_dir), f"dataset={ds}")
-            try:
-                names = os.listdir(part)
-            except FileNotFoundError:
-                continue
-            out.update(os.path.join(part, fn) for fn in names
-                       if fn.endswith(".parquet"))
-        return out
+    def log_files(self, datasets: list[str] | None = None,
+                  at: StoreState | None = None) -> set[str]:
+        """Absolute paths of the log files of ``datasets`` (all when None)
+        visible in state ``at`` (default: current)."""
+        state = at or self.state()
+        log_dir = os.path.abspath(self.log_dir)
+        return {os.path.join(log_dir, f"dataset={ds}", fn)
+                for ds in (state.files if datasets is None else datasets)
+                for fn in state.files.get(ds, ())}
 
     def log_rows(self, paths):
         """The rows of exactly the log files ``paths`` (as log_files
@@ -752,33 +828,12 @@ class EntityStore:
                 yield row
 
     def max_recorded(self, datasets: list[str]) -> int:
-        """Highest ``recorded`` committed to ``datasets``, 0 when nothing
-        is: read on the driver from the column statistics in the log
-        files' parquet footers (``core.Dataset`` from the registry's
-        events), so it runs no Spark job. A row group written without
-        statistics counts as nothing, which can only lower the value."""
-        import pyarrow.parquet as pq
-
-        best = 0
-        if CORE_DATASET in datasets:
-            events = self._read_meta().get("dataset_events") or []
-            best = max((int(ev["recorded"]) for ev in events), default=0)
-        for path in self.log_files(datasets):
-            meta = pq.read_metadata(path)
-            col = meta.schema.names.index("recorded")
-            for i in range(meta.num_row_groups):
-                stats = meta.row_group(i).column(col).statistics
-                if stats is not None and stats.has_min_max:
-                    best = max(best, stats.max)
-        return best
-
-    def log_frame(self, paths) -> DataFrame:
-        """The rows of exactly the log files ``paths`` (as log_files
-        returns them) as one frame, like ``log()``'s: the Spark twin of
-        log_rows."""
-        return (self.spark.read.schema(ENTITY_SCHEMA)
-                .option("basePath", os.path.abspath(self.log_dir))
-                .parquet(*sorted(paths)))
+        """Highest ``recorded`` committed to ``datasets`` (0: none), from
+        the state's per-file maxima and events; it reads no file."""
+        state = self.state()
+        best = max((int(ev["recorded"]) for ev in state.events), default=0) \
+            if CORE_DATASET in datasets else 0
+        return max([best, *(top for ds in datasets for top in state.files.get(ds, {}).values())])
 
     def entities(self, dataset: str) -> DataFrame:
         return latest(self.log([dataset]))
@@ -840,88 +895,94 @@ class EntityStore:
 
     def vacuum(self) -> list[str]:
         """Startup garbage collection (GC_ON_STARTUP, app.go's
-        GarbageCollector over Badger's value log). The parquet analog of
-        "reclaim dead space without changing visible data" is removing
-        the leftovers of compactions that crashed between staging and
-        swap: ``_compact-*`` staging dirs under the root and
-        ``dataset=X.old-*`` rollback dirs under the log. Both are
-        invisible to readers (never listed in the registry, never
-        matched by the ``dataset=`` partition glob), so deleting them is
-        semantically a no-op — except where a compaction crashed between
-        its two renames: a registered dataset whose partition is missing
-        gets its newest ``.old-*`` back first. Returns the removed
+        GarbageCollector): under the writer locks, remove what no entry
+        makes visible — staging directories and entry temp files of
+        crashed writes, and log files no entry lists. Returns the removed
         paths."""
         removed: list[str] = []
-        registered = set(self.list_datasets())
-        with _root_lock(self.root):
-            olds = sorted((os.path.join(self.log_dir, n) for n in os.listdir(self.log_dir)
-                           if n.startswith("dataset=") and ".old-" in n),
-                          key=os.path.getmtime, reverse=True)
-            for old in olds:
-                part = old[:old.rindex(".old-")]
-                ds = os.path.basename(part)[len("dataset="):]
-                if ds in registered and not os.path.isdir(part):
-                    os.replace(old, part)
+        with self._writer() as state:
             for name in os.listdir(self.root):
-                if name.startswith("_compact-"):
-                    path = os.path.join(self.root, name)
-                    shutil.rmtree(path, ignore_errors=True)
-                    removed.append(path)
-            for name in os.listdir(self.log_dir):
-                if ".old-" in name and name.startswith("dataset="):
-                    path = os.path.join(self.log_dir, name)
-                    shutil.rmtree(path, ignore_errors=True)
-                    removed.append(path)
+                if name.startswith(_STAGING):
+                    removed.append(os.path.join(self.root, name))
+                    shutil.rmtree(removed[-1], ignore_errors=True)
+            for name in os.listdir(self.commits_dir):
+                if name.startswith(".tmp-"):
+                    removed.append(os.path.join(self.commits_dir, name))
+                    os.unlink(removed[-1])
+            for part in os.listdir(self.log_dir):
+                listed = state.files.get(part[len("dataset="):], {})
+                for fn in os.listdir(os.path.join(self.log_dir, part)):
+                    if fn.endswith(".parquet") and fn not in listed:
+                        removed.append(os.path.join(self.log_dir, part, fn))
+                        os.unlink(removed[-1])
         return removed
 
     def compact(self, dataset: str, gc_horizon: int | None = None,
                 clean_deleted_entities: bool = False) -> None:
         """Physical compaction (DOCUMENTATION.md:2349): apply the
-        'deduplicate' strategy view to the dataset's log and atomically
-        swap the rewritten files in. It drops successive identical
+        'deduplicate' strategy view to the dataset's log and replace its
+        files with the rewritten ones. It drops successive identical
         versions; a gc_horizon additionally drops non-newest versions
         recorded at or before the horizon; ``clean_deleted_entities``
         additionally purges every version of entities whose latest state
         is a tombstone (garbagecollector.go Cleandeleted, run by the
-        reference's scheduled_gc). Readers are never exposed to partial
-        state: the new files are staged, then the partition directory is
-        swapped with two renames."""
-        log = self.log([dataset])
-        compacted = compact_deduplicate(log)
+        reference's scheduled_gc). The rewrite of one state's files is
+        staged without the writer locks; one entry then swaps exactly
+        those files, so a commit landing meanwhile stays. When another
+        entry removed any of them first, the rewrite is dropped."""
+        state = self.state()
+        read = state.files.get(dataset)
+        if not read:
+            return
+        compacted = compact_deduplicate(self.log([dataset], state))
         if gc_horizon is not None:
             compacted = retention_gc(compacted, gc_horizon)
         if clean_deleted_entities:
             compacted = clean_deleted(compacted)
-        part = os.path.join(self.log_dir, f"dataset={dataset}")
-        stage = os.path.join(self.root, f"_compact-{uuid.uuid4().hex}")
-        compacted.drop("dataset").write.mode("overwrite").parquet(stage)
-        old = part + f".old-{uuid.uuid4().hex}"
-        with _root_lock(self.root):  # vacuum() never sees the gap between
-            os.replace(part, old)
-            try:
-                os.replace(stage, part)
-            except OSError:
-                os.replace(old, part)  # roll back
-                raise
-        shutil.rmtree(old, ignore_errors=True)
-        # no version is added: listeners get the store's current tick
-        self._emit([dataset], self._read_meta()["counter"])
+        stage = os.path.join(self.root, f"{_STAGING}{uuid.uuid4().hex}")
+        try:
+            compacted.drop("dataset").write.mode("overwrite").parquet(stage)
+            with self._writer() as state:
+                if not read.keys() <= state.files.get(dataset, {}).keys():
+                    return
+                # no version is added: listeners get the store's current tick
+                self._publish(state, state.tick, add={dataset: self._place(stage, dataset)},
+                              remove={dataset: sorted(read)})
+                self._unlink(dataset, read)
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
+        self._emit([dataset], state.tick)
 
     def backup(self, dest: str) -> None:
-        """Backup (internal/server/backup.go analogue): the store is an
-        immutable file log + one registry sidecar, so a consistent backup
-        is a plain copy — files are never rewritten after commit."""
-        os.makedirs(dest, exist_ok=True)
-        shutil.copy2(self.meta_path, os.path.join(dest, "datasets.json"))
-        dst_log = os.path.join(dest, "log")
-        shutil.copytree(self.log_dir, dst_log, dirs_exist_ok=True)
+        """Backup (internal/server/backup.go analogue): the entries and
+        the files they list, copied under the writer locks."""
+        with self._writer() as state:
+            shutil.copytree(self.commits_dir, os.path.join(dest, "commits"), dirs_exist_ok=True,
+                            ignore=lambda _d, names: [n for n in names if n.startswith(".")])
+            _copy_files(self.log_dir, os.path.join(dest, "log"), state)
 
     @classmethod
     def restore(cls, spark: SparkSession, backup_dir: str, root: str) -> "EntityStore":
-        os.makedirs(root, exist_ok=True)
-        shutil.copy2(os.path.join(backup_dir, "datasets.json"), os.path.join(root, "datasets.json"))
-        shutil.copytree(os.path.join(backup_dir, "log"), os.path.join(root, "log"), dirs_exist_ok=True)
-        return cls(spark, root)
+        """The store at ``root`` replaced by the backup's entries and the
+        files they list; whatever else the root held is vacuumed."""
+        src = os.path.join(backup_dir, "commits")
+        commits = os.path.join(root, "commits")
+        shutil.rmtree(commits, ignore_errors=True)
+        shutil.copytree(src, commits)
+        _copy_files(os.path.join(backup_dir, "log"), os.path.join(root, "log"),
+                    _fold(StoreState(), _read_entries(src, 0)))
+        store = cls(spark, root)
+        store.vacuum()
+        return store
+
+
+def _copy_files(src_log: str, dest_log: str, state: StoreState) -> None:
+    """Copy the log files ``state`` lists from one log directory to another."""
+    for ds, files in state.files.items():
+        os.makedirs(os.path.join(dest_log, f"dataset={ds}"), exist_ok=True)
+        for fn in files:
+            shutil.copy2(os.path.join(src_log, f"dataset={ds}", fn),
+                         os.path.join(dest_log, f"dataset={ds}", fn))
 
 
 class WalIngest:

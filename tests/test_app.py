@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 import urllib.request
@@ -114,15 +115,15 @@ def test_vacuum_removes_only_orphans(spark, tmp_path):
         [("e:1", None, 0, False, {"p:a": "1"}, None, None)],
         SCRIPT_OUTPUT_SCHEMA).drop("dataset")
     store.store_entities("d", df)
-    # plant crashed-compaction leftovers
-    orphan_stage = os.path.join(store.root, "_compact-deadbeef")
-    orphan_old = os.path.join(store.log_dir, "dataset=d.old-deadbeef")
+    # plant a crashed write's staging dir and a log file no entry lists
+    orphan_stage = os.path.join(store.root, "_staging-deadbeef")
+    orphan_file = os.path.join(store.log_dir, "dataset=d", "7-part-deadbeef.parquet")
     os.makedirs(orphan_stage)
-    os.makedirs(orphan_old)
+    shutil.copy(sorted(store.log_files(["d"]))[0], orphan_file)
     removed = store.vacuum()
-    assert sorted(removed) == sorted([orphan_stage, orphan_old])
+    assert sorted(removed) == sorted([orphan_stage, orphan_file])
     assert not os.path.exists(orphan_stage)
-    assert not os.path.exists(orphan_old)
+    assert not os.path.exists(orphan_file)
     # live data untouched
     assert store.log(["d"]).count() == 1
     assert store.vacuum() == []
@@ -237,8 +238,7 @@ def test_tick_fires_cron_jobs_and_backup(spark, tmp_path):
     assert [r["id"] for r in results] == ["copy"]
     assert "error" not in results[0]
     assert inst.store.log(["out"]).count() == 1
-    assert os.path.exists(os.path.join(str(tmp_path / "bak"),
-                                       "datasets.json"))
+    assert os.path.exists(os.path.join(str(tmp_path / "bak"), "commits", "0.json"))
     # same minute: neither the job nor the backup re-fires
     assert inst.tick(datetime(2026, 8, 14, 12, 0, 40)) == []
     assert inst._backup_last == datetime(2026, 8, 14, 12, 0)

@@ -1,7 +1,7 @@
 """The served lookup index follows the store's commits
-(``UdaServer._query_index``): every request lists the registered
-datasets' log files, and when the index covers fewer of them it folds
-the rows of the new ones in (``script.fold_lookup_index``) instead of
+(``UdaServer._query_index``): every request reads the store's state,
+and when the index covers fewer of its log files it folds the rows of
+the new ones in (``script.fold_lookup_index``) instead of
 re-collecting the store. Under ``index_max_rows`` it serves /query
 traversals and scripts, /changes and /entities pages, entityId lookups,
 the dedup of plain /entities POSTs and GET /datasets/{ds}'s item count.
@@ -243,19 +243,21 @@ ARROW_ROW_SCHEMA = to_arrow_schema(uda.ROW_SCHEMA)
 def _drop_in(store, ds: str, name: str, eid: str) -> None:
     """Commit one version of ``eid`` to ``ds`` without Spark, the way
     execute_transaction makes a commit visible: a complete parquet file
-    renamed into the dataset's partition."""
-    staged = os.path.join(store.root, f"staged-{name}.parquet")
-    pq.write_table(pa.Table.from_pylist(
-        [{"id": eid, "recorded": 1, "seq": 0, "deleted": False,
-          "props": [("p:v", name)], "refs": [("p:r", ["hub"])]}],
-        schema=ARROW_ROW_SCHEMA), staged)
-    os.replace(staged, os.path.join(store.log_dir, f"dataset={ds}", f"{name}.parquet"))
+    placed in the dataset's partition, then one published entry that
+    lists it."""
+    with store._writer() as state:
+        path = os.path.join(store.log_dir, f"dataset={ds}", f"{name}.parquet")
+        pq.write_table(pa.Table.from_pylist(
+            [{"id": eid, "recorded": 1, "seq": 0, "deleted": False,
+              "props": [("p:v", name)], "refs": [("p:r", ["hub"])]}],
+            schema=ARROW_ROW_SCHEMA), path)
+        store._publish(state, state.tick, add={ds: {f"{name}.parquet": 1}})
 
 
 def test_no_commit_is_lost_under_contention(spark, tmp_path):
     """More threads than cores each commit and then query, all at once.
     Commits are made without Spark, so after the first build only the
-    listing check and the folds run. A fold that lost a file would leave
+    state check and the folds run. A fold that lost a file would leave
     a thread without its own commit, or the final index short."""
     store = S.EntityStore(spark, str(tmp_path / "store"))
     _commit(store, {"d": [("e:0", False, "a", ["hub"])]})

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from datahub_spark import store as S
 from datahub_spark import uda
 from datahub_spark.model import ENTITY_SCHEMA
-from tests.entity_fixtures import people_log, row
+from tests.entity_fixtures import legacy_store, people_log, row
 
 
 def test_latest_picks_max_version_and_drops_tombstones(spark):
@@ -258,31 +258,41 @@ def test_null_seq_backfill_deterministic_and_above_explicit(spark, tmp_path):
     assert s1["b"] != s1["c"]
 
 
-def test_has_data_survives_registry_crash_window(spark, tmp_path):
-    """ADVICE r2: a crash between commit renames and the registry write
-    leaves files readable while list_datasets() omits the dataset; prior-
-    state gates (fullsync tombstones, write-time dedup) must see them."""
+def test_has_data_survives_registry_crash_window(spark, tmp_path, monkeypatch):
+    """A commit that dies after moving its files into the partition but
+    before publishing its entry changes nothing: its files stay unlisted,
+    so the registry, has_data and reads agree, and prior-state gates
+    (fullsync tombstones, write-time dedup) see exactly the committed
+    data."""
     es = S.EntityStore(spark, str(tmp_path / "s"))
-    batch = spark.createDataFrame(
-        [("a", False, {"p:v": "x"}, None)],
-        "id string, deleted boolean, props map<string,string>, refs map<string,array<string>>",
-    )
-    es.store_entities("d", batch)
-    # simulate the crash window: files committed, registry entry lost
-    meta = es._read_meta()
-    meta["datasets"].pop("d")
-    es._write_meta(meta)
-    assert "d" not in es.list_datasets()
-    assert es.has_data("d")
-    # fullsync against the crashed dataset still tombstones the survivor
+    schema = "id string, deleted boolean, props map<string,string>, refs map<string,array<string>>"
+    es.store_entities("d", spark.createDataFrame([("a", False, {"p:v": "x"}, None)], schema))
+    link = S.os.link
+
+    def crash_on_publish(src, dst):
+        if dst.endswith(".json"):
+            raise _Crash()
+        return link(src, dst)
+
+    monkeypatch.setattr(S.os, "link", crash_on_publish)
+    for ds, eid in (("d", "c"), ("new", "n")):
+        try:
+            es.store_entities(ds, spark.createDataFrame([(eid, False, {"p:v": "z"}, None)], schema))
+            raise AssertionError("the commit did not crash")
+        except _Crash:
+            pass
+    monkeypatch.setattr(S.os, "link", link)
+    assert es.list_datasets() == ["d"] and es.has_data("d") and not es.has_data("new")
+    assert {r["id"] for r in es.log().collect()} == {"a"}
+    # fullsync against the dataset tombstones the survivor, and the
+    # crashed commit's row never appears
     from datahub_spark.jobs import FullSyncSession
 
     fs = FullSyncSession(es, "d")
-    fs.append(spark.createDataFrame(
-        [("b", False, {"p:v": "y"}, None)],
-        "id string, deleted boolean, props map<string,string>, refs map<string,array<string>>"))
+    fs.append(spark.createDataFrame([("b", False, {"p:v": "y"}, None)], schema))
     fs.complete()
     rows = {r["id"]: r for r in S.latest(es.log(["d"]), include_deleted=True).collect()}
+    assert set(rows) == {"a", "b"}
     assert rows["a"]["deleted"] is True and rows["b"]["deleted"] is False
 
 
@@ -450,13 +460,12 @@ def test_wal_rotation_never_clobbers_leftover_spool(spark, tmp_path):
     w.close()
 
 
-def test_rename_dataset_validates_and_survives_crash(spark, tmp_path):
-    """ADVICE r7: rename commits the registry BEFORE moving the log
-    partition (a crash between them must not strand data under an
-    unregistered name), and the new name is validated."""
-    import json
+def test_rename_dataset_validates_and_survives_crash(spark, tmp_path, monkeypatch):
+    """ADVICE r7: a rename is one entry, so a crash before its publish
+    leaves the dataset under its old name with all its data (the files
+    linked under the new name stay unlisted until vacuum removes them),
+    and the new name is validated."""
     import os
-    import shutil
 
     from datahub_spark.store import EntityStore
     from tests.entity_fixtures import row
@@ -475,26 +484,32 @@ def test_rename_dataset_validates_and_survives_crash(spark, tmp_path):
             pass
     assert es.list_datasets() == ["d"]  # untouched by refused renames
 
-    # simulate the crash window: registry committed (renamedFrom marker
-    # present) but the directory move never happened
-    with open(es.meta_path) as f:
-        meta = json.load(f)
-    entry = meta["datasets"].pop("d")
-    entry["renamedFrom"] = "d"
-    meta["datasets"]["d2"] = entry
-    with open(es.meta_path, "w") as f:
-        json.dump(meta, f)
-    assert os.path.isdir(os.path.join(es.log_dir, "dataset=d"))
+    # crash after linking the files under the new name, before the publish
+    link = S.os.link
 
-    # a fresh open completes the move from the marker
+    def crash_on_publish(src, dst):
+        if dst.endswith(".json"):
+            raise _Crash()
+        return link(src, dst)
+
+    monkeypatch.setattr(S.os, "link", crash_on_publish)
+    try:
+        es.rename_dataset("d", "d2")
+        raise AssertionError("the rename did not crash")
+    except _Crash:
+        pass
+    monkeypatch.setattr(S.os, "link", link)
+    assert os.listdir(os.path.join(es.log_dir, "dataset=d2"))
+
+    # a fresh open sees the dataset whole under its old name
     es2 = EntityStore(spark, root)
-    assert es2.list_datasets() == ["d2"]
-    assert not os.path.isdir(os.path.join(es2.log_dir, "dataset=d"))
-    assert {r["id"] for r in es2.log(["d2"]).collect()} == {"e:1"}
-    with open(es2.meta_path) as f:
-        assert "renamedFrom" not in json.load(f)["datasets"]["d2"]
+    assert es2.list_datasets() == ["d"]
+    assert {r["id"] for r in es2.log(["d"]).collect()} == {"e:1"}
+    assert es2.log(["d2"]).count() == 0 and not es2.has_data("d2")
+    assert es2.vacuum() and not os.listdir(os.path.join(es2.log_dir, "dataset=d2"))
 
-    # the normal path still renames end-to-end
+    # the rename then runs end-to-end
+    es2.rename_dataset("d", "d2")
     es2.rename_dataset("d2", "d3")
     assert es2.list_datasets() == ["d3"]
     assert {r["id"] for r in es2.log(["d3"]).collect()} == {"e:1"}
@@ -636,12 +651,12 @@ def test_core_dataset_guards_and_backfill(spark, tmp_path):
         es.rename_dataset("d", S.CORE_DATASET)
     with pytest.raises(ValueError, match="cannot be written"):
         es.execute_transaction({S.CORE_DATASET: es.log(["d"])})
-    # a pre-event-tracking registry (no dataset_events) still yields a
-    # synthesized create at tick 0 for every registered dataset
-    meta = es._read_meta()
-    meta.pop("dataset_events", None)
-    es._write_meta(meta)
-    rows = es.log([S.CORE_DATASET]).collect()
+    # a store written before the commit log whose registry kept no
+    # dataset_events yields a synthesized create at tick 0 for every
+    # registered dataset
+    legacy = str(tmp_path / "legacy")
+    legacy_store(legacy, {"datasets": {"d": {"publicNamespaces": []}}, "counter": 0})
+    rows = S.EntityStore(spark, legacy).log([S.CORE_DATASET]).collect()
     assert [(r["id"], r["recorded"], r["deleted"]) for r in rows] == \
         [("core:d", 0, False)]
 
@@ -689,33 +704,37 @@ class _Crash(BaseException):
 
 
 def test_vacuum_after_a_crashed_compaction_keeps_every_row(spark, tmp_path, monkeypatch):
-    """A compaction that dies between its two renames leaves the dataset
-    without a partition; vacuum (startup GC) puts the old one back
-    before it removes the leftovers."""
+    """A compaction that dies after placing its rewritten files but before
+    publishing its entry changes no visible row: the old files stay
+    listed and the new ones unlisted, and vacuum (startup GC) removes
+    only the unlisted ones."""
     es = S.EntityStore(spark, str(tmp_path / "store"))
     for v in ("1", "1", "2"):
         es.store_entities("d", spark.createDataFrame([row("x", 0, 0, False, {"a": v})],
                                                      ENTITY_SCHEMA).drop("dataset", "recorded"),
                           skip_unchanged=False)
     before = sorted(map(tuple, es.log(["d"]).collect()))
-    replace = S.os.replace
+    listed = es.log_files(["d"])
+    link = S.os.link
 
-    def crash_on_swap(src, dst):
-        if "_compact-" in src:
+    def crash_on_publish(src, dst):
+        if dst.endswith(".json"):
             raise _Crash()
-        return replace(src, dst)
+        return link(src, dst)
 
-    monkeypatch.setattr(S.os, "replace", crash_on_swap)
+    monkeypatch.setattr(S.os, "link", crash_on_publish)
     try:
         es.compact("d")
         raise AssertionError("the compaction did not crash")
     except _Crash:
         pass
-    monkeypatch.setattr(S.os, "replace", replace)
-    assert not es.has_data("d")
-    removed = es.vacuum()
+    monkeypatch.setattr(S.os, "link", link)
+    assert es.has_data("d")
     assert sorted(map(tuple, es.log(["d"]).collect())) == before
-    assert any("_compact-" in p for p in removed)
-    assert not [n for n in os.listdir(es.log_dir) if ".old-" in n]
-    es.compact("d")  # the restored partition compacts as usual
+    removed = es.vacuum()
+    assert removed and all(os.path.dirname(p) == os.path.join(es.log_dir, "dataset=d")
+                           for p in removed)
+    assert sorted(map(tuple, es.log(["d"]).collect())) == before
+    assert es.log_files(["d"]) == listed
+    es.compact("d")  # the dataset compacts as usual
     assert es.log(["d"]).count() == 2
