@@ -377,8 +377,12 @@ class StoreState:
 
 
 def _fold(state: StoreState, entries: list[dict]) -> StoreState:
+    """``state`` advanced by ``entries``; an entry marked ``reset`` (a
+    restore or a backup) replaces the state instead of changing it."""
     datasets, files, events = dict(state.datasets), dict(state.files), list(state.events)
     for entry in entries:
+        if entry.get("reset"):
+            datasets, files, events = {}, {}, []
         for name, cfg in entry["registry"].items():
             if cfg is None:
                 datasets.pop(name, None)
@@ -407,6 +411,22 @@ def _read_entries(commits_dir: str, start: int) -> list[dict]:
             return out
 
 
+def _write_entry(path: str, put, **entry) -> None:
+    """Write ``entry`` to a temp file beside ``path`` and ``put`` it there:
+    ``os.link`` publishes and fails if the number is taken, ``os.replace``
+    overwrites. Either way the entry appears whole."""
+    tmp = os.path.join(os.path.dirname(path), f".tmp-{uuid.uuid4().hex}")
+    with open(tmp, "w") as f:
+        json.dump(entry, f)
+        f.flush()
+        os.fsync(f.fileno())
+    try:
+        put(tmp, path)
+    finally:
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(tmp)
+
+
 def _max_recorded_in(path: str) -> int:
     """Highest ``recorded`` in a parquet log file, from the column
     statistics in its footer. A row group written without statistics
@@ -423,10 +443,16 @@ def _max_recorded_in(path: str) -> int:
     return best
 
 
-def _legacy_entry(registry_path: str, log_dir: str) -> dict:
-    """Entry 0 of a store written before the commit log: the registry
-    file (a tick-0 create per dataset without events) and every file under
-    ``log/``. A rename or compaction stopped midway there is refused."""
+# the registry file of a store written before the commit log
+_LEGACY_REGISTRY = "datasets.json"
+
+
+def _legacy_entry(root: str) -> dict:
+    """Entry 0 of a store (or backup) at ``root`` written before the
+    commit log: the registry file (a tick-0 create per dataset without
+    events) and every file under ``log/``. A rename or compaction stopped
+    midway there is refused."""
+    registry_path, log_dir = os.path.join(root, _LEGACY_REGISTRY), os.path.join(root, "log")
     with open(registry_path) as f:
         meta = json.load(f)
     for name, cfg in meta["datasets"].items():
@@ -446,7 +472,7 @@ def _legacy_entry(registry_path: str, log_dir: str) -> dict:
     events += [{"name": name, "recorded": 0, "deleted": False, "cfg": cfg}
                for name, cfg in sorted(meta["datasets"].items()) if name not in seen]
     return {"tick": meta["counter"], "registry": meta["datasets"], "events": events,
-            "add": {ds: f for ds, f in files.items() if f}}
+            "add": {ds: f for ds, f in files.items() if f}, "remove": {}}
 
 
 class EntityStore:
@@ -471,11 +497,10 @@ class EntityStore:
         # a committed write, with (dataset, recorded); the scheduler wires
         # onchange jobs here. In-process analogue of the dataset topics.
         self._listeners: list = []
-        legacy = os.path.join(root, "datasets.json")
-        if os.path.exists(legacy) and self.state().version < 0:
+        if os.path.exists(os.path.join(root, _LEGACY_REGISTRY)) and self.state().version < 0:
             with self._writer() as state:
                 if state.version < 0:
-                    self._publish(state, **_legacy_entry(legacy, self.log_dir))
+                    self._publish(state, **_legacy_entry(root))
 
     def add_listener(self, fn) -> None:
         """Register fn(dataset: str, recorded: int), called after commit;
@@ -503,7 +528,9 @@ class EntityStore:
         """Hold the writer locks and yield the current state, like the
         reference's store-wide lock (concurrent_contextual_store_test.go):
         a per-root process lock plus flock on a lockfile, so threads and
-        driver processes publish one at a time. Re-entrant per thread."""
+        driver processes publish one at a time. Re-entrant per thread:
+        ``store_entities`` holds them across its dedup and the
+        ``execute_transaction`` it hands the kept rows to."""
         held = getattr(_WRITING, "roots", frozenset())
         key = os.path.abspath(self.root)
         if key in held:  # this thread holds them already
@@ -520,22 +547,34 @@ class EntityStore:
                 _WRITING.roots = held
                 os.close(fd)  # releases the flock
 
+    @contextlib.contextmanager
+    def _stage(self):
+        """A fresh staging directory under the root, removed after use.
+        It is flocked while in use, and ``vacuum`` removes only one it can
+        lock, so a live write's stage survives a concurrent vacuum."""
+        while True:
+            path = os.path.join(self.root, f"{_STAGING}{uuid.uuid4().hex}")
+            os.makedirs(path)
+            fd = os.open(path, os.O_RDONLY)
+            if fcntl is not None:
+                fcntl.flock(fd, fcntl.LOCK_SH)
+            if os.path.isdir(path):
+                break
+            os.close(fd)  # a vacuum removed it before the flock
+        try:
+            yield path
+        finally:
+            shutil.rmtree(path, ignore_errors=True)
+            os.close(fd)
+
     def _publish(self, state: StoreState, tick: int, registry: dict | None = None,
-                 events=(), add: dict | None = None,
-                 remove: dict | None = None) -> StoreState:
+                 events=(), add: dict | None = None, remove: dict | None = None,
+                 reset: bool = False) -> StoreState:
         """Publish entry ``state.version + 1`` under ``_writer`` (which
         yielded ``state``); the files in ``add`` are already placed."""
-        entry = {"tick": tick, "registry": registry or {}, "events": list(events),
-                 "add": add or {}, "remove": remove or {}}
-        tmp = os.path.join(self.commits_dir, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(entry, f)
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, os.path.join(self.commits_dir, f"{state.version + 1}.json"))
-        finally:
-            os.unlink(tmp)
+        _write_entry(os.path.join(self.commits_dir, f"{state.version + 1}.json"), os.link,
+                     tick=tick, registry=registry or {}, events=list(events),
+                     add=add or {}, remove=remove or {}, reset=reset)
         return self.state()
 
     def _partition(self, dataset: str) -> str:
@@ -673,10 +712,16 @@ class EntityStore:
         left-join against the latest view's digests, so repeated
         idempotent syncs don't grow the version log. The writer locks are
         held from the dedup's read to the commit, so it compares against
-        the versions the commit lands on."""
-        with self._writer():
-            return self.execute_transaction(
-                {dataset: self._changed(dataset, df) if skip_unchanged else df}, recorded)
+        the versions the commit lands on; ``df`` is written to a staging
+        directory before them, so the caller's pipeline (a job's source
+        reads and transforms) does not run under them."""
+        if not skip_unchanged:
+            return self.execute_transaction({dataset: df}, recorded)
+        with self._stage() as stage:
+            df.write.parquet(os.path.join(stage, "batch"))
+            batch = self.spark.read.parquet(os.path.join(stage, "batch"))
+            with self._writer():
+                return self.execute_transaction({dataset: self._changed(dataset, batch)}, recorded)
 
     def _changed(self, dataset: str, df: DataFrame) -> DataFrame:
         """The rows of ``df`` whose payload differs from their entity's
@@ -707,10 +752,12 @@ class EntityStore:
     def execute_transaction(self, dataset_entities: dict[str, DataFrame], recorded: int | None = None) -> int:
         """Multi-dataset write (store.go:1707 ExecuteTransaction), visible
         whole or not at all: under the writer locks it allocates the tick,
-        stages every dataset's files (all Spark work happens here), places
-        them and publishes one entry that adds them and registers new
-        datasets. A crash before the publish leaves only unlisted files
-        for ``vacuum``. An explicit ``recorded`` keeps the tick.
+        stages every dataset's files, places them and publishes one entry
+        that adds them and registers new datasets. A crash before the
+        publish leaves only unlisted files for ``vacuum``. An explicit
+        ``recorded`` keeps the tick. The frames are evaluated under the
+        locks, so they should hold rows already computed (driver-held,
+        cached or staged), not a job's pipeline.
 
         Rows with NULL recorded/seq/deleted (e.g. from
         ``unionByName(allowMissingColumns=True)``) are coalesced to the
@@ -724,8 +771,7 @@ class EntityStore:
                 "be written directly")
         for ds_name in dataset_entities:
             check_dataset_name(ds_name)
-        stage_root = os.path.join(self.root, f"{_STAGING}{uuid.uuid4().hex}")
-        try:
+        with self._stage() as stage:
             with self._writer() as state:
                 tick = state.tick if recorded is not None else state.tick + 1
                 rec = tick if recorded is None else recorded
@@ -756,15 +802,13 @@ class EntityStore:
                             + F.pmod(F.xxhash64(F.col("id"), F.col("recorded"), payload_digest()),
                                      F.lit(1 << 31))
                         ).cast("long")))
-                    out.write.mode("overwrite").parquet(os.path.join(stage_root, ds_name))
-                add = {ds_name: self._place(os.path.join(stage_root, ds_name), ds_name, f"{rec}-")
+                    out.write.parquet(os.path.join(stage, ds_name))
+                add = {ds_name: self._place(os.path.join(stage, ds_name), ds_name, f"{rec}-")
                        for ds_name in dataset_entities}
                 created = {ds_name: {"publicNamespaces": []} for ds_name in dataset_entities
                            if ds_name not in state.datasets}
                 self._publish(state, tick, registry=created, add=add,
                               events=[_dataset_event(n, cfg, rec) for n, cfg in created.items()])
-        finally:
-            shutil.rmtree(stage_root, ignore_errors=True)
         if created:
             self._emit([CORE_DATASET], rec)
         self._emit(list(dataset_entities), rec)
@@ -896,25 +940,19 @@ class EntityStore:
     def vacuum(self) -> list[str]:
         """Startup garbage collection (GC_ON_STARTUP, app.go's
         GarbageCollector): under the writer locks, remove what no entry
-        makes visible — staging directories and entry temp files of
-        crashed writes, and log files no entry lists. Returns the removed
-        paths."""
+        makes visible — staging directories of crashed writes (not the
+        flocked ones of live writes), entry temp files, and log files no
+        entry lists. Returns the removed paths."""
         removed: list[str] = []
         with self._writer() as state:
             for name in os.listdir(self.root):
-                if name.startswith(_STAGING):
+                if name.startswith(_STAGING) and _remove_abandoned(os.path.join(self.root, name)):
                     removed.append(os.path.join(self.root, name))
-                    shutil.rmtree(removed[-1], ignore_errors=True)
             for name in os.listdir(self.commits_dir):
                 if name.startswith(".tmp-"):
                     removed.append(os.path.join(self.commits_dir, name))
                     os.unlink(removed[-1])
-            for part in os.listdir(self.log_dir):
-                listed = state.files.get(part[len("dataset="):], {})
-                for fn in os.listdir(os.path.join(self.log_dir, part)):
-                    if fn.endswith(".parquet") and fn not in listed:
-                        removed.append(os.path.join(self.log_dir, part, fn))
-                        os.unlink(removed[-1])
+            removed += _sweep(self.log_dir, state)
         return removed
 
     def compact(self, dataset: str, gc_horizon: int | None = None,
@@ -939,50 +977,104 @@ class EntityStore:
             compacted = retention_gc(compacted, gc_horizon)
         if clean_deleted_entities:
             compacted = clean_deleted(compacted)
-        stage = os.path.join(self.root, f"{_STAGING}{uuid.uuid4().hex}")
-        try:
-            compacted.drop("dataset").write.mode("overwrite").parquet(stage)
+        with self._stage() as stage:
+            compacted.drop("dataset").write.parquet(os.path.join(stage, dataset))
             with self._writer() as state:
                 if not read.keys() <= state.files.get(dataset, {}).keys():
                     return
                 # no version is added: listeners get the store's current tick
-                self._publish(state, state.tick, add={dataset: self._place(stage, dataset)},
-                              remove={dataset: sorted(read)})
+                self._publish(state, state.tick, remove={dataset: sorted(read)},
+                              add={dataset: self._place(os.path.join(stage, dataset), dataset)})
                 self._unlink(dataset, read)
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
         self._emit([dataset], state.tick)
 
     def backup(self, dest: str) -> None:
-        """Backup (internal/server/backup.go analogue): the entries and
-        the files they list, copied under the writer locks."""
-        with self._writer() as state:
-            shutil.copytree(self.commits_dir, os.path.join(dest, "commits"), dirs_exist_ok=True,
-                            ignore=lambda _d, names: [n for n in names if n.startswith(".")])
-            _copy_files(self.log_dir, os.path.join(dest, "log"), state)
+        """Backup (internal/server/backup.go analogue): the state as one
+        ``reset`` entry, ``dest/commits/0.json``, and the files it lists,
+        hard-linked into a stage under the writer locks and copied after
+        them. Files ``dest`` already holds are kept, unlisted ones removed;
+        ``dest`` holds a whole backup, the old or the new, at every step."""
+        with self._stage() as pinned:
+            with self._writer() as state:
+                _copy_files(self.log_dir, pinned, state, os.link)
+            _copy_files(pinned, os.path.join(dest, "log"), state, shutil.copy2)
+        commits = os.path.join(dest, "commits")
+        for d in (commits, os.path.join(dest, "log")):
+            os.makedirs(d, exist_ok=True)
+        for name in os.listdir(commits):
+            if name != "0.json":
+                os.unlink(os.path.join(commits, name))
+        _write_entry(os.path.join(commits, "0.json"), os.replace, reset=True, tick=state.tick,
+                     registry=state.datasets, events=list(state.events), add=state.files,
+                     remove={})
+        _sweep(os.path.join(dest, "log"), state)
 
     @classmethod
     def restore(cls, spark: SparkSession, backup_dir: str, root: str) -> "EntityStore":
-        """The store at ``root`` replaced by the backup's entries and the
-        files they list; whatever else the root held is vacuumed."""
-        src = os.path.join(backup_dir, "commits")
-        commits = os.path.join(root, "commits")
-        shutil.rmtree(commits, ignore_errors=True)
-        shutil.copytree(src, commits)
-        _copy_files(os.path.join(backup_dir, "log"), os.path.join(root, "log"),
-                    _fold(StoreState(), _read_entries(src, 0)))
+        """The store at ``root`` set to the backup's state by one ``reset``
+        entry (the tick never goes back) once the files it lists are
+        copied in; the rest is vacuumed. The backup, in either layout, is
+        read before the root is touched."""
+        commits = os.path.join(backup_dir, "commits")
+        if os.path.isdir(commits):
+            saved = _fold(StoreState(), _read_entries(commits, 0))
+        elif os.path.exists(os.path.join(backup_dir, _LEGACY_REGISTRY)):
+            saved = _fold(StoreState(), [_legacy_entry(backup_dir)])
+        else:
+            raise FileNotFoundError(f"{backup_dir}: not a store backup")
         store = cls(spark, root)
+        with store._writer() as state:
+            _copy_files(os.path.join(backup_dir, "log"), store.log_dir, saved, shutil.copy2)
+            store._publish(state, max(state.tick, saved.tick), reset=True, registry=saved.datasets,
+                           events=saved.events, add=saved.files)
         store.vacuum()
         return store
 
 
-def _copy_files(src_log: str, dest_log: str, state: StoreState) -> None:
-    """Copy the log files ``state`` lists from one log directory to another."""
+def _copy_files(src_log: str, dest_log: str, state: StoreState, copy) -> None:
+    """``copy`` each log file ``state`` lists from one log directory to
+    another through a temp name, so a file under its own name is whole.
+    One already there with the same size is kept: names are unique and
+    files immutable."""
     for ds, files in state.files.items():
-        os.makedirs(os.path.join(dest_log, f"dataset={ds}"), exist_ok=True)
+        part = os.path.join(dest_log, f"dataset={ds}")
+        os.makedirs(part, exist_ok=True)
         for fn in files:
-            shutil.copy2(os.path.join(src_log, f"dataset={ds}", fn),
-                         os.path.join(dest_log, f"dataset={ds}", fn))
+            src, dst = os.path.join(src_log, f"dataset={ds}", fn), os.path.join(part, fn)
+            if not os.path.exists(dst) or os.path.getsize(dst) != os.path.getsize(src):
+                # a dot name: Spark's listing skips it, vacuum's sweep removes it
+                tmp = os.path.join(part, f".{uuid.uuid4().hex}.parquet")
+                copy(src, tmp)
+                os.replace(tmp, dst)
+
+
+def _sweep(log_dir: str, state: StoreState) -> list[str]:
+    """Remove the parquet files under ``log_dir`` that ``state`` does not
+    list; returns their paths."""
+    removed = []
+    for part in os.listdir(log_dir):
+        listed = state.files.get(part[len("dataset="):], {})
+        for fn in os.listdir(os.path.join(log_dir, part)):
+            if fn.endswith(".parquet") and fn not in listed:
+                removed.append(os.path.join(log_dir, part, fn))
+                os.unlink(removed[-1])
+    return removed
+
+
+def _remove_abandoned(stage: str) -> bool:
+    """Remove the staging directory ``stage`` unless a live write holds
+    its flock (see EntityStore._stage); True when removed."""
+    fd = os.open(stage, os.O_RDONLY)
+    try:
+        if fcntl is not None:
+            try:
+                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            except BlockingIOError:
+                return False
+        shutil.rmtree(stage, ignore_errors=True)
+        return True
+    finally:
+        os.close(fd)
 
 
 class WalIngest:

@@ -1,8 +1,9 @@
 """Deterministic interleavings of store operations.
 
-``Interleaving`` holds one operation just before one of the
-``os.replace``/``os.link`` calls that put files into a log partition,
-and runs others against the same store until
+``Interleaving`` holds one operation just before it takes the store's
+lock, or just before one of the ``os.replace``/``os.link`` calls that
+put files into a log partition, and runs others against the same store
+until
 each finishes or has to wait for the store's lock. The tests then
 release the held operation and check what every reader saw.
 """
@@ -56,6 +57,8 @@ class Interleaving:
             monkeypatch.setattr(os, name, self._gated(getattr(os, name)))
 
     def __enter__(self):
+        if threading.current_thread() is self._held and self._nth == 0:
+            self._stop()
         if not self._lock.acquire(blocking=False):
             self.waited.set()
             self._lock.acquire()
@@ -69,14 +72,18 @@ class Interleaving:
             if threading.current_thread() is self._held and "dataset=" in str(dst):
                 self._calls += 1
                 if self._calls == self._nth:
-                    self._reached.set()
-                    assert self._go.wait(WAIT_S), "the held operation was never released"
+                    self._stop()
             return call(src, dst, *a, **kw)
         return gated
 
+    def _stop(self):
+        self._reached.set()
+        assert self._go.wait(WAIT_S), "the held operation was never released"
+
     def hold(self, fn, nth: int = 1) -> Task:
         """Start ``fn`` and return once it waits before its ``nth``
-        replace/link into a log partition, or has finished without it."""
+        replace/link into a log partition (``nth=0``: before it takes
+        the store's lock), or has finished without it."""
         task = Task(fn)
         self._held, self._nth, self._calls = task.thread, nth, 0
         self._reached.clear()

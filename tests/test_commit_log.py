@@ -11,15 +11,17 @@ import json
 import os
 import re
 import shutil
+import time
 import uuid
 
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from datahub_spark import store as S
 from tests.entity_fixtures import LEGACY_REGISTRY, LEGACY_ROWS, legacy_store
-from tests.interleave import Interleaving
+from tests.interleave import WAIT_S, Interleaving, Task
 
 SCHEMA = "id string, deleted boolean, props map<string,string>, refs map<string,array<string>>"
 
@@ -113,6 +115,36 @@ def test_a_delete_racing_a_commit_removes_its_rows(spark, tmp_path, monkeypatch)
     assert not os.path.exists(os.path.join(es.log_dir, "dataset=a"))
 
 
+def test_a_writes_pipeline_runs_before_the_store_lock(spark, tmp_path, monkeypatch):
+    """A job sink's frame is its whole pipeline; evaluating it must not
+    hold the lock every other writer needs."""
+    root = str(tmp_path / "s")
+    es = S.EntityStore(spark, root)
+    started, go = str(tmp_path / "started"), str(tmp_path / "go")
+
+    @F.udf("string")
+    def slow(eid):
+        open(started, "w").close()
+        while not os.path.exists(go):
+            time.sleep(0.05)
+        return eid
+
+    gate = Interleaving(monkeypatch, root)
+    job = Task(lambda: es.store_entities("a", _batch(spark, [("x", "1")]).withColumn("id", slow("id"))))
+    job.thread.start()
+    deadline = time.monotonic() + WAIT_S
+    while not os.path.exists(started) and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert os.path.exists(started), "the job's pipeline never ran"
+    served = gate.run(lambda: es.execute_transaction({"b": _batch(spark, [("y", "2")])}))
+    finished = served.done.is_set()
+    open(go, "w").close()
+    job.join()
+    served.join()
+    assert finished, "a write waited for another write's pipeline"
+    assert (_ids(es.log(["a"])), _ids(es.log(["b"]))) == ({"x"}, {"y"})
+
+
 OPS = ("commit", "compact", "rename", "read")
 pairs = st.lists(
     st.tuples(st.sampled_from(OPS), st.sampled_from(OPS + (None,)),
@@ -195,6 +227,21 @@ def test_vacuum_removes_staging_and_unlisted_files_only(spark, tmp_path):
     assert es.vacuum() == []
 
 
+def test_a_vacuum_during_a_compaction_keeps_its_rewrite(spark, tmp_path, monkeypatch):
+    root = str(tmp_path / "s")
+    es = S.EntityStore(spark, root)
+    for v in ("1", "1", "2"):
+        es.store_entities("a", _batch(spark, [("x", v), ("y", v)]), skip_unchanged=False)
+    before = sorted(map(tuple, S.latest(es.log()).collect()))
+    gate = Interleaving(monkeypatch, root)
+    compaction = gate.hold(lambda: es.compact("a"), nth=0)  # staged, not published
+    es.vacuum()
+    gate.release()
+    compaction.join()
+    assert sorted(map(tuple, S.latest(es.log()).collect())) == before
+    assert es.log(["a"]).count() == 4  # the repeated version compacted away
+
+
 def test_restore_over_a_non_empty_root_keeps_only_the_backup(spark, tmp_path):
     src = S.EntityStore(spark, str(tmp_path / "src"))
     src.store_entities("keep", _batch(spark, [("k1", "v")]))
@@ -206,6 +253,55 @@ def test_restore_over_a_non_empty_root_keeps_only_the_backup(spark, tmp_path):
     assert restored.list_datasets() == ["keep"]
     assert _ids(restored.log(["keep"])) == {"k1"}
     assert _ids(restored.log()) == {"k1"}
+
+
+def test_a_bad_backup_leaves_the_root_as_it_was(spark, tmp_path):
+    root = str(tmp_path / "dst")
+    S.EntityStore(spark, root).store_entities("keep", _batch(spark, [("k1", "v")]))
+    os.makedirs(tmp_path / "empty")
+    for bad in (tmp_path / "missing", tmp_path / "empty"):
+        with pytest.raises(FileNotFoundError, match="not a store backup"):
+            S.EntityStore.restore(spark, str(bad), root)
+    es = S.EntityStore(spark, root)
+    es.vacuum()
+    assert _ids(es.log(["keep"])) == {"k1"}
+
+
+def test_a_backup_written_before_the_commit_log_restores(spark, tmp_path):
+    legacy_store(str(tmp_path / "bak"))
+    root = str(tmp_path / "dst")
+    other = S.EntityStore(spark, root)
+    for i in range(5):
+        other.store_entities("other", _batch(spark, [("o1", str(i))]))
+    tick = other.state().tick
+    es = S.EntityStore.restore(spark, str(tmp_path / "bak"), root)
+    assert es.list_datasets() == ["city", "people"]
+    assert sorted((r["dataset"], r["id"], r["recorded"]) for r in es.log().collect()) == \
+        sorted((ds, eid, rec) for ds, rows in LEGACY_ROWS.items() for eid, rec, _p in rows)
+    assert es.max_recorded(["city"]) == 4
+    assert tick > LEGACY_REGISTRY["counter"] and es.state().tick == tick  # never goes back
+
+
+def test_a_reused_backup_location_holds_only_the_last_backup(spark, tmp_path):
+    bak = str(tmp_path / "bak")
+    first = S.EntityStore(spark, str(tmp_path / "first"))
+    for i in range(3):
+        first.store_entities("a", _batch(spark, [(f"a{i}", "v")]))
+    first.backup(bak)
+    # a restore and a re-init both start a shorter history at the location
+    restored = S.EntityStore.restore(spark, bak, str(tmp_path / "restored"))
+    restored.compact("a")
+    restored.backup(bak)
+    assert _ids(S.EntityStore.restore(spark, bak, str(tmp_path / "r1")).log()) == {"a0", "a1", "a2"}
+    fresh = S.EntityStore(spark, str(tmp_path / "fresh"))
+    fresh.store_entities("b", _batch(spark, [("b0", "v")]))
+    fresh.backup(bak)
+    again = S.EntityStore.restore(spark, bak, str(tmp_path / "r2"))
+    assert again.list_datasets() == ["b"]
+    assert _ids(again.log()) == {"b0"}
+    # the location keeps exactly the files its entry lists
+    kept = {fn for _d, _s, files in os.walk(os.path.join(bak, "log")) for fn in files}
+    assert kept == {os.path.basename(p) for p in fresh.log_files()}
 
 
 def test_a_store_written_before_the_commit_log_opens(spark, tmp_path):
